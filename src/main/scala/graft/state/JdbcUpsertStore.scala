@@ -146,7 +146,11 @@ class JdbcUpsertStore(url: String, driverClass: String =
   private def upsert(delta: DataFrame, target: String, temp: String,
       keys: Seq[String], adds: Seq[String], epoch: Option[Long]): Unit = {
     if (delta.isEmpty) return
-    // K2: batch delta → temp table (executors write over JDBC).
+    // K2: batch delta → temp table over JDBC. The runner's deltas are
+    // driver-local frames (rolled up from its one collected batch
+    // aggregate), so the emptiness probe above runs no Spark job and the
+    // write is one LocalTableScan job, ≤ defaultParallelism tasks; any
+    // other frame writes from its executors the same way.
     // Key columns must be VARCHAR, not Derby's default CLOB mapping for
     // StringType — CLOB can't join against the VARCHAR PKs in MERGE.
     // batchsize 10k (default 1000) amortizes the per-statement round
@@ -187,24 +191,16 @@ class JdbcUpsertStore(url: String, driverClass: String =
     * fence themselves out). */
   override def applyDeltas(merchantDelta: DataFrame,
       custMerchantDelta: DataFrame, genderDelta: DataFrame,
-      epochId: Option[Long] = None): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = JdbcUpsertStore.upsertEc
-    val fs = Seq(
-      Future(upsert(merchantDelta, "merchant_summary", "temp_mts_updates",
-        Seq("merchant_id"), Seq("total_transactions"), epochId)),
-      Future(upsert(custMerchantDelta, "customer_merchant_summary", "temp_cms_updates",
+      epochId: Option[Long] = None): Unit =
+    JdbcUpsertStore.concurrently(Seq(
+      () => upsert(merchantDelta, "merchant_summary", "temp_mts_updates",
+        Seq("merchant_id"), Seq("total_transactions"), epochId),
+      () => upsert(custMerchantDelta, "customer_merchant_summary", "temp_cms_updates",
         Seq("customer_id", "merchant_id"),
-        Seq("transaction_count", "total_amount_sum"), epochId)),
-      Future(upsert(genderDelta, "merchant_gender_summary", "temp_mgs_updates",
+        Seq("transaction_count", "total_amount_sum"), epochId),
+      () => upsert(genderDelta, "merchant_gender_summary", "temp_mgs_updates",
         Seq("merchant_id"),
         Seq("male_transaction_count", "female_transaction_count"), epochId)))
-    // await ALL before propagating the first failure: no upsert is left
-    // racing a caller that believes the batch is finished
-    val results = fs.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-    results.collectFirst { case scala.util.Failure(e) => throw e }
-  }
 
   private def read(spark: SparkSession, table: String): DataFrame =
     spark.read.jdbc(url, table, props)
@@ -301,17 +297,27 @@ class JdbcUpsertStore(url: String, driverClass: String =
 
 object JdbcUpsertStore {
 
-  /** Shared 3-thread pool for the concurrent per-table upserts (daemon:
-    * never blocks JVM exit). Three is exact — there are three state
-    * tables; a wider pool would only contend on the Spark scheduler. */
-  private[state] lazy val upsertEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(3,
-        (r: Runnable) => {
-          val t = new Thread(r, "graft-state-upsert")
-          t.setDaemon(true)
-          t
-        }))
+  /** Runs each task on a daemon thread started by the caller, waits for
+    * ALL of them — no upsert is left racing a caller that believes the
+    * batch is finished — then rethrows the first failure in task order.
+    * Threads started per call inherit the caller's Spark local
+    * properties (job group, description, `streaming.sql.batchId`); a
+    * shared pool's threads keep those of whichever caller first created
+    * them, so cancelling a later query's job group would miss its
+    * upserts and listeners would file them under the wrong batch. */
+  private[state] def concurrently(tasks: Seq[() => Unit]): Unit = {
+    val failures = new Array[Throwable](tasks.size)
+    val threads = tasks.zipWithIndex.map { case (task, i) =>
+      val t = new Thread(() =>
+        try task() catch { case e: Throwable => failures(i) = e },
+        "graft-state-upsert")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    threads.foreach(_.join())
+    failures.find(_ != null).foreach(e => throw e)
+  }
 
   /** Embedded Derby store under the given directory. */
   def derby(dir: String): JdbcUpsertStore = {

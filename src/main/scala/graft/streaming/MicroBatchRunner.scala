@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
@@ -13,19 +14,26 @@ import scala.jdk.CollectionConverters._
   * ("Mechanism Y.py":100-313) re-expressed Spark-first.
   *
   * Per micro-batch (foreachBatch):
-  *   1. empty-batch guard ("Mechanism Y.py":124-134)
-  *   2. three per-batch aggregates (A1/A2/A3) → additive state upsert
-  *      (K2/K3 via [[StateStore]])
+  *   1. one finest-grain aggregation pass (customer, merchant, gender),
+  *      collected to the driver; an empty result is the empty-batch
+  *      guard ("Mechanism Y.py":124-134)
+  *   2. the three per-batch deltas (A1/A2/A3) roll up from it on the
+  *      driver ([[MicroBatchRunner.rollUp]]) and go to the additive state
+  *      upsert (K2/K3 via [[StateStore]]) as local frames
   *   3. enrichment join against the static importance dim (J1) and the
   *      cached percentile thresholds (A4/J2), with the reference's
   *      missing-weight fallback ("Mechanism Y.py":236-237)
-  *   4. the three pattern queries over cumulative state (§2.11)
+  *   4. the three pattern queries over cumulative state (§2.11); the
+  *      state reads are left unpersisted so each pattern's filters push
+  *      into its own JDBC scan
   *   5. detections → driver buffer → 50-row single-file CSV flushes
   *      (S6/K4, "Mechanism Y.py":268-277)
   *
   * Kept reference semantics: PatId2/3 re-emit all qualifying state every
   * batch; detections are collected to the driver (bounded by state size,
-  * a reference parity choice — SURVEY.md §2.11). Fixed vs the reference:
+  * a reference parity choice — SURVEY.md §2.11). The batch aggregate is
+  * collected too: it holds at most one row per input row, and a batch
+  * is one chunk file. Fixed vs the reference:
   * upserts can be epoch-fenced (idempotent = true), and `scaleMode`
   * switches the three per-batch state reads from full-table to keyed
   * ([[StateStore.merchantSummaryFor]] etc., pruned to the merchants the
@@ -80,37 +88,33 @@ class MicroBatchRunner(
     * a streaming query (SURVEY.md §7 step 3: process_batch as a pure-ish
     * function of (batch, state)). */
   def processBatch(batch: DataFrame, epochId: Long): Unit = {
-    if (batch.isEmpty) return                         // empty-batch guard
-    currentEpoch = epochId
+    // persisted before the aggregation: the aggregate (which doubles as
+    // the empty-batch check) and the enrichment join below both read it
     batch.persist()
     try {
-      val epoch = if (idempotent) Some(epochId) else None
-
-      // One finest-grain pass over the batch; the three state deltas
-      // roll up from it (the reference aggregates the batch three times
-      // — "Mechanism Y.py":142, 167, 187; the gender pivot becomes the
-      // conditional aggregation SURVEY.md §2.5 A3 recommends at scale;
-      // the pivot+P11-repair form itself is oracle-checked in
-      // RelOps.aggGenderPivot).
+      // One finest-grain pass over the batch, collected to the driver
+      // like the parity detection buffer: at most one row per input row,
+      // and a batch is one chunk file (maxFilesPerTrigger = 1). The
+      // reference aggregates the batch three times
+      // ("Mechanism Y.py":142, 167, 187); here the three state deltas
+      // roll up from this one result on the driver ([[rollUp]]) and reach
+      // the store as local frames — no Spark rollup job per delta. The
+      // gender pivot is a conditional count (SURVEY.md §2.5 A3); the
+      // pivot+P11-repair form itself is oracle-checked in
+      // RelOps.aggGenderPivot.
       val fin = batch.groupBy(col("customer"), col("merchant"), col("gender"))
         .agg(count(lit(1)).as("cnt"),
           sum(col("amount").cast(DecimalType(18, 2))).as("amt"))
-        .persist()
-      val mDelta = fin.groupBy(col("merchant").as("merchant_id"))
-        .agg(sum(col("cnt")).as("total_transactions"))
-      val cmDelta = fin.groupBy(
-          col("customer").as("customer_id"), col("merchant").as("merchant_id"))
-        .agg(sum(col("cnt")).as("transaction_count"),
-          sum(col("amt")).as("total_amount_sum"))
-      val gDelta = fin.groupBy(col("merchant").as("merchant_id"))
-        .agg(
-          sum(when(col("gender") === "M", col("cnt")).otherwise(0L))
-            .as("male_transaction_count"),
-          sum(when(col("gender") === "F", col("cnt")).otherwise(0L))
-            .as("female_transaction_count"))
+        .collect()
+      if (fin.isEmpty) return                         // empty-batch guard
+      currentEpoch = epochId
+      val epoch = if (idempotent) Some(epochId) else None
 
-      store.applyDeltas(mDelta, cmDelta, gDelta, epoch)
-      fin.unpersist()
+      val (mDelta, cmDelta, gDelta) = rollUp(fin)
+      def local(rows: Seq[Row], schema: StructType) =
+        spark.createDataFrame(rows.asJava, schema)
+      store.applyDeltas(local(mDelta, merchantStateSchema),
+        local(cmDelta, custMerchantStateSchema), local(gDelta, genderStateSchema), epoch)
 
       // J1 enrichment + J2 low-weight with percentile-miss fallback
       val enriched = batch.join(importance
@@ -131,13 +135,16 @@ class MicroBatchRunner(
         .distinct()
 
       // State reads: scale mode prunes every read to the merchants this
-      // batch touched (a bounded driver-side key list — ≤ batch rows);
-      // parity mode keeps the reference's full re-read. Both survive a
-      // transient store failure via the S5 empty-frame fallback.
+      // batch touched (taken from the collected aggregate — ≤ batch
+      // rows); parity mode keeps the reference's full re-read. Both
+      // survive a transient store failure via the S5 empty-frame
+      // fallback. Do not persist them: each pattern's filters and
+      // columns push into its own JDBC scan (e.g. PatId2's
+      // `transaction_count >= 3`) only while the read stays unpersisted;
+      // a persisted read ships the whole table every batch.
       val (ms, cms, gs) =
         if (scaleMode) {
-          val mids = batch.select(col("merchant")).distinct()
-            .collect().map(_.getString(0)).toSeq
+          val mids = fin.map(_.getString(1)).distinct.toSeq
           (stateOrEmpty(merchantStateSchema)(store.merchantSummaryFor(spark, mids)),
             stateOrEmpty(custMerchantStateSchema)(store.custMerchantSummaryFor(spark, mids)),
             stateOrEmpty(genderStateSchema)(store.genderSummaryFor(spark, mids)))
@@ -147,27 +154,21 @@ class MicroBatchRunner(
             stateOrEmpty(genderStateSchema)(store.genderSummary(spark)))
         }
 
-      // cms feeds TWO patterns (PatId1 + PatId2) and ms/gs one each:
-      // persist the state reads so each JDBC scan runs once per batch,
-      // not once per consuming subtree of the detection union
-      Seq(ms, cms, gs).foreach(_.persist())
-      try {
-        val tick = clock()
-        val detections = Patterns.unionDetections(Seq(
-          Patterns.patId1(ms, cms, lowWeight, cfg, tick),
-          Patterns.patId2(cms, cfg, tick),
-          Patterns.patId3(gs, cfg, tick)))
+      val tick = clock()
+      val detections = Patterns.unionDetections(Seq(
+        Patterns.patId1(ms, cms, lowWeight, cfg, tick),
+        Patterns.patId2(cms, cfg, tick),
+        Patterns.patId3(gs, cfg, tick)))
 
-        if (scaleMode) flushDistributed(detections, epochId)
-        else {
-          buffer ++= detections.collect()
-          while (buffer.length >= detectionBatchSize) {
-            val chunk = buffer.take(detectionBatchSize).toList
-            buffer.remove(0, detectionBatchSize)
-            flush(chunk)
-          }
+      if (scaleMode) flushDistributed(detections, epochId)
+      else {
+        buffer ++= detections.collect()
+        while (buffer.length >= detectionBatchSize) {
+          val chunk = buffer.take(detectionBatchSize).toList
+          buffer.remove(0, detectionBatchSize)
+          flush(chunk)
         }
-      } finally Seq(ms, cms, gs).foreach(_.unpersist())
+      }
     } finally batch.unpersist()
   }
 
@@ -269,6 +270,34 @@ object MicroBatchRunner {
     StructField("merchant_id", StringType),
     StructField("male_transaction_count", LongType),
     StructField("female_transaction_count", LongType)))
+
+  /** The three state deltas — rows of [[merchantStateSchema]],
+    * [[custMerchantStateSchema]] and [[genderStateSchema]] — rolled up on
+    * the driver from a batch's collected finest-grain aggregate rows
+    * (customer, merchant, gender, cnt: Long, amt: decimal or null).
+    * Exact, with Spark `sum` semantics: Long counts, BigDecimal amount
+    * sums, a sum over null amounts only stays null, and a gender other
+    * than "M"/"F" (null included) adds to neither gender count. Keys
+    * may be null; they group like Spark's null group key. */
+  private[graft] def rollUp(fin: Iterable[Row]): (Seq[Row], Seq[Row], Seq[Row]) = {
+    val m = mutable.LinkedHashMap.empty[String, Long]
+    val cm = mutable.LinkedHashMap.empty[(String, String), (Long, java.math.BigDecimal)]
+    val g = mutable.LinkedHashMap.empty[String, (Long, Long)]
+    fin.foreach { r =>
+      val (customer, merchant, gender, n, amt) =
+        (r.getString(0), r.getString(1), r.getString(2), r.getLong(3), r.getDecimal(4))
+      m(merchant) = m.getOrElse(merchant, 0L) + n
+      val (cnt, sum) = cm.getOrElse((customer, merchant), (0L, null))
+      cm((customer, merchant)) =
+        (cnt + n, if (sum == null) amt else if (amt == null) sum else sum.add(amt))
+      val (male, female) = g.getOrElse(merchant, (0L, 0L))
+      g(merchant) = (male + (if (gender == "M") n else 0L),
+        female + (if (gender == "F") n else 0L))
+    }
+    (m.toSeq.map { case (k, n) => Row(k, n) },
+      cm.toSeq.map { case ((c, k), (n, amt)) => Row(c, k, n, amt) },
+      g.toSeq.map { case (k, (male, female)) => Row(k, male, female) })
+  }
 
   val detectionSchema: StructType = StructType(Seq(
     StructField("YStartTime", StringType),

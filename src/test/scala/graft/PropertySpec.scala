@@ -1,8 +1,10 @@
 package graft
 
 import graft.ingest.ChunkFeeder
-import graft.state.JdbcUpsertStore
-import org.apache.spark.sql.Row
+import graft.ops.Patterns
+import graft.state.{JdbcUpsertStore, StateStore}
+import graft.streaming.MicroBatchRunner
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
@@ -80,6 +82,105 @@ class PropertySpec extends AnyFunSuite {
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         val want = data.groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
         assert(got == want, s"seed $seed")
+      } finally store.close()
+    }
+  }
+
+  /** Random micro-batches in the stream schema: few keys so pairs
+    * repeat, null amounts and null genders, and pair (c0, m0) under both
+    * genders. With `keepAPairAmount` every (customer, merchant) pair of a
+    * batch keeps a non-null amount: a sum over nulls only is null, which
+    * the state tables' NOT NULL DDL rejects. */
+  private def txBatches(seed: Long, batches: Int, keepAPairAmount: Boolean): Seq[Seq[Row]] = {
+    val rowGen = for {
+      c <- Gen.choose(0, 5); m <- Gen.choose(0, 3)
+      gender <- Gen.oneOf(Some("M"), Some("F"), None)
+      cents <- Gen.frequency(1 -> Gen.const(None), 3 -> Gen.choose(1L, 999999L).map(Some(_)))
+    } yield (s"c$c", s"m$m", gender.orNull, cents)
+    (0 until batches).map { b =>
+      val raw = sample(Gen.listOfN(60, rowGen), seed * 100 + b) ++
+        Seq(("c0", "m0", "M", Some(1000L)), ("c0", "m0", "F", Some(2050L)))
+      val priced = raw.filter(_._4.isDefined).map(r => (r._1, r._2)).toSet
+      raw.map { case (c, m, gender, cents) =>
+        val amount = if (keepAPairAmount && !priced((c, m))) Some(100L) else cents
+        Row(0, c, "3", gender, "28007", m, "28007", "es_food",
+          amount.map(a => Double.box(a / 100.0)).orNull, 0)
+      }
+    }
+  }
+
+  private def txFrame(rows: Seq[Row]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, MicroBatchRunner.txStreamSchema)
+  }
+
+  /** The three state tables as Spark's groupBy computes them over `tx`. */
+  private def sparkState(tx: DataFrame): (DataFrame, DataFrame, DataFrame) = (
+    tx.groupBy(col("merchant")).agg(count(lit(1))),
+    tx.groupBy(col("customer"), col("merchant"))
+      .agg(count(lit(1)), sum(col("amount").cast(DecimalType(18, 2)))),
+    tx.groupBy(col("merchant")).agg(
+      sum(when(col("gender") === "M", 1L).otherwise(0L)),
+      sum(when(col("gender") === "F", 1L).otherwise(0L))))
+
+  /** Row values compared by value: decimals of any scale, nulls kept. */
+  private def rowSet(rows: Seq[Row]): Set[Seq[Any]] =
+    rows.map(_.toSeq.map {
+      case d: java.math.BigDecimal => BigDecimal(d)
+      case v => v
+    }).toSet
+
+  private def runner(store: StateStore, scale: Boolean): MicroBatchRunner = {
+    import scala.jdk.CollectionConverters._
+    val importance = spark.createDataFrame(
+      Seq(Row("c0", "m0", "es_food", 1.0)).asJava,
+      StructType(Seq(StructField("customer", StringType), StructField("merchant", StringType),
+        StructField("category", StringType), StructField("weight", DoubleType))))
+    new MicroBatchRunner(spark, store, importance,
+      java.nio.file.Files.createTempDirectory("graft-rollup").toString,
+      clock = () => Patterns.FixedClock, scaleMode = scale)
+  }
+
+  test("driver delta rollup == Spark groupBy per batch, null-only sums included, both modes") {
+    // records each batch's deltas; reads fail, so the runner takes its
+    // empty-state fallback and the test sees the deltas alone
+    final class RecordingStore extends StateStore {
+      val deltas = scala.collection.mutable.ArrayBuffer.empty[Seq[Set[Seq[Any]]]]
+      override def applyDeltas(m: DataFrame, cm: DataFrame, g: DataFrame,
+          epochId: Option[Long]): Unit =
+        deltas += Seq(m, cm, g).map(d => rowSet(d.collect().toSeq))
+      private def noReads = throw new IllegalStateException("no state reads")
+      override def merchantSummary(s: SparkSession): DataFrame = noReads
+      override def custMerchantSummary(s: SparkSession): DataFrame = noReads
+      override def genderSummary(s: SparkSession): DataFrame = noReads
+    }
+    for (scale <- Seq(false, true); seed <- 1L to 3L) {
+      val batches = txBatches(seed, 2, keepAPairAmount = false)
+      val store = new RecordingStore
+      val r = runner(store, scale)
+      batches.zipWithIndex.foreach { case (b, i) => r.processBatch(txFrame(b), i.toLong) }
+      val want = batches.map { b =>
+        val (m, cm, g) = sparkState(txFrame(b))
+        Seq(m, cm, g).map(d => rowSet(d.collect().toSeq))
+      }
+      assert(want.exists(_(1).exists(_(3) == null)), s"seed $seed draws no null-only sum")
+      assert(store.deltas.toSeq == want, s"scale=$scale seed $seed")
+    }
+  }
+
+  test("state after random batches through processBatch == Spark groupBy of all rows, both modes") {
+    for (scale <- Seq(false, true); seed <- 1L to 2L) {
+      val batches = txBatches(seed, 3, keepAPairAmount = true)
+      val store = JdbcUpsertStore.derbyMemory(s"rollup$seed-$scale-${System.nanoTime()}")
+      try {
+        val r = runner(store, scale)
+        batches.zipWithIndex.foreach { case (b, i) => r.processBatch(txFrame(b), i.toLong) }
+        val (m, cm, g) = sparkState(txFrame(batches.flatten))
+        Seq(store.merchantSummary(spark) -> m, store.custMerchantSummary(spark) -> cm,
+            store.genderSummary(spark) -> g).foreach { case (got, want) =>
+          assert(rowSet(got.collect().toSeq) == rowSet(want.collect().toSeq),
+            s"scale=$scale seed $seed")
+        }
       } finally store.close()
     }
   }

@@ -188,4 +188,50 @@ class StateSpec extends AnyFunSuite {
       assert(gotM.exceptAll(m).isEmpty && m.exceptAll(gotM).isEmpty)
     } finally store.close()
   }
+
+  test("upserts run under their caller's job group, not a pooled thread's stale one") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+    val sc = spark.sparkContext
+    // (job group, is an upsert job) per job, in submission order
+    val jobs = new LinkedBlockingQueue[(String, Boolean)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.put((
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>"),
+        e.stageInfos.exists(_.details.contains("JdbcUpsertStore"))))
+    }
+    def inGroup(group: String)(body: => Unit): Unit = {
+      @volatile var failure: Throwable = null
+      val t = new Thread(() =>
+        try { sc.setJobGroup(group, group); body }
+        catch { case e: Throwable => failure = e })
+      t.start(); t.join()
+      if (failure != null) throw failure
+    }
+    /** Groups of the upsert jobs `body` runs in `group`. A barrier job
+      * follows it: the listener bus delivers in order, so once the
+      * barrier shows, every earlier job has too. */
+    def upsertGroups(group: String)(body: => Unit): Seq[String] = {
+      inGroup(group)(body)
+      inGroup(s"barrier-$group")(sc.parallelize(Seq(1)).count())
+      Iterator.continually(Option(jobs.poll(60, TimeUnit.SECONDS))
+          .getOrElse(fail("listener bus stalled")))
+        .takeWhile(_._1 != s"barrier-$group")
+        .collect { case (g, true) => g }.toSeq
+    }
+    val store = freshStore("groups")
+    sc.addSparkListener(listener)
+    try {
+      val (m, cm, g) = deltas(txWithBucket(3).filter(col("b") === 0))
+      for (caller <- Seq("graft-caller-a", "graft-caller-b")) {
+        val groups = upsertGroups(caller)(store.applyDeltas(m, cm, g))
+        assert(groups.nonEmpty, caller)
+        assert(groups.forall(_ == caller), s"$caller's upserts ran as $groups")
+      }
+    } finally {
+      sc.removeSparkListener(listener)
+      store.close()
+    }
+  }
 }

@@ -227,6 +227,50 @@ class StreamingSpec extends AnyFunSuite {
     assert(scaled == parity)
   }
 
+  test("parity detection plan: pattern filters push into the state scans, no cached JDBC read") {
+    import org.apache.spark.sql.execution.{QueryExecution, RowDataSourceScanExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+    val plans = new LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.put(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.put(qe)
+    }
+    val base = Files.createTempDirectory("graft-plan").toString
+    val store = JdbcUpsertStore.derby(s"$base/derby")
+    spark.listenerManager.register(listener)
+    val executed = try {
+      new MicroBatchRunner(spark, store, Tables.importance(spark, sf),
+        s"$base/out", clock = () => Patterns.FixedClock).processBatch(refTx(), 0L)
+      // a barrier action: the listener bus delivers in order, so once it
+      // shows, every action processBatch ran has too
+      spark.range(1).toDF("graft_plan_barrier").collect()
+      Iterator.continually(Option(plans.poll(60, TimeUnit.SECONDS))
+          .getOrElse(fail("listener bus stalled")))
+        .takeWhile(!_.analyzed.output.exists(_.name == "graft_plan_barrier")).toList
+    } finally {
+      spark.listenerManager.unregister(listener)
+      store.close()
+    }
+    object Aqe extends AdaptiveSparkPlanHelper
+    val cmsScans = executed.flatMap(qe => Aqe.collect(qe.executedPlan) {
+      case s: RowDataSourceScanExec
+          if s.relation.toString.contains("customer_merchant_summary") => s
+    })
+    val pushed = cmsScans.map(_.metadata.getOrElse("PushedFilters", ""))
+    val cfg = Patterns.DefaultConfig
+    assert(pushed.exists(_.contains(s"GreaterThan(TRANSACTION_COUNT,${cfg.custTxThreshold})")),
+      pushed)
+    assert(pushed.exists(_.contains(s"GreaterThanOrEqual(TRANSACTION_COUNT,${cfg.childTxMin})")),
+      pushed)
+    val cachedJdbc = executed.flatMap(_.withCachedData.collect {
+      case r: InMemoryRelation if r.cacheBuilder.cachedPlan.toString.contains("JDBCRelation") => r
+    })
+    assert(cachedJdbc.isEmpty, cachedJdbc)
+  }
+
   test("scale mode: detections write distributed (no driver buffer), files sized to the batch contract") {
     val base = Files.createTempDirectory("graft-scale-sink").toString
     val store = JdbcUpsertStore.derby(s"$base/derby")
