@@ -169,7 +169,8 @@ object Decontam {
       // the joined rows are already distinct per (doc_id, bench_id, h)
       // and the two aggregates are equal by construction. countDistinct
       // planned a second expand/aggregate layer over the joined postings
-      // for zero change (r22; DecontamSpec pins the equality).
+      // for zero change (r22; LlmOpsSpec "decontam: shared-gram count
+      // matches a brute-force set intersection" pins the equality).
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
       .select(col("doc_id"), col("bench_id"), col("n_shared"),

@@ -2,14 +2,15 @@ package graft.state
 
 import java.sql.{Connection, DriverManager}
 import java.util.Properties
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** JDBC-backed state store mirroring the reference's PostgreSQL channel
-  * ("Mechanism Y.py":136-218): per batch, (K2) write the aggregate delta
-  * to a temp table with df.write.jdbc, (K3) merge it into the target with
-  * one set-based additive upsert statement on the driver's plain JDBC
-  * connection, (S4) read state back with spark.read.jdbc.
+  * ("Mechanism Y.py":136-218): per batch, (K2) batch-insert the
+  * aggregate delta into a temp table and (K3) merge it into the target
+  * with one set-based additive upsert statement — both on the driver's
+  * own JDBC connection, all three tables in one transaction, no Spark
+  * job ([[applyDeltas]]) — and (S4) read state back with
+  * spark.read.jdbc. The store makes no Spark JDBC writes.
   *
   * Runs on embedded Derby (ships with Spark — no extra dependency) with
   * ANSI `MERGE INTO`; a `jdbc:postgresql:` URL selects the reference's
@@ -42,7 +43,7 @@ class JdbcUpsertStore(url: String, driverClass: String =
     try f(c) finally c.close()
   }
 
-  private def exec(c: Connection, sql: String): Unit = {
+  private def exec(c: Connection, sql: String): Int = {
     val st = c.createStatement()
     try st.executeUpdate(sql) finally st.close()
   }
@@ -71,7 +72,9 @@ class JdbcUpsertStore(url: String, driverClass: String =
     probe(name.toUpperCase) || probe(name.toLowerCase)
   }
 
-  /** DDL per sql/postgres_tables.sql:3-25 (types mapped to Derby). */
+  /** DDL per sql/postgres_tables.sql:3-25 (types mapped to Derby), plus
+    * each missing temp table, with its target's column types and the
+    * quoted lowercase column names [[UpsertDialect]]'s merge expects. */
   def init(): Unit = withConn { c =>
     if (!tableExists(c, "MERCHANT_SUMMARY")) {
       exec(c, """CREATE TABLE merchant_summary (
@@ -95,19 +98,18 @@ class JdbcUpsertStore(url: String, driverClass: String =
         epoch_id BIGINT NOT NULL,
         PRIMARY KEY (table_name, epoch_id))""")
     }
+    for (t <- JdbcUpsertStore.tables if !tableExists(c, t.temp)) {
+      val cols = t.keys.map(k => s"${q2(k)} VARCHAR(255)") ++
+        t.adds.map { case (a, ddl) => s"${q2(a)} $ddl" } :+ s"${q2("last_updated")} TIMESTAMP"
+      exec(c, s"CREATE TABLE ${t.temp} (${cols.mkString(", ")})")
+    }
   }
 
   /** Idempotence fence: record (table, epoch) via the dialect's
-    * conditional insert; false if already applied. Runs on the SAME
-    * connection/transaction as the merge — see [[upsert]]. */
+    * conditional insert; false if already applied. Runs in the SAME
+    * transaction as the merge — see [[applyDeltas]]. */
   private def fence(c: Connection, table: String, epoch: Option[Long]): Boolean =
-    epoch match {
-      case None => true
-      case Some(e) =>
-        val st = c.createStatement()
-        try st.executeUpdate(dialect.fenceSql(table, e)) == 1
-        finally st.close()
-    }
+    epoch.forall(e => exec(c, dialect.fenceSql(table, e)) == 1)
 
   /** The merge statement this store will execute — dialect-selected from
     * the URL (Derby/ANSI → MERGE INTO; jdbc:postgresql: → the reference's
@@ -120,87 +122,79 @@ class JdbcUpsertStore(url: String, driverClass: String =
   private[graft] def fenceStatement(table: String, epoch: Long): String =
     dialect.fenceSql(table, epoch)
 
-  /** Coerce a delta to the target tables' declared column types
-    * (postgres_tables.sql: DECIMAL(18,2) sums) BEFORE the temp-table
-    * write. Without this, a delta that arrives as a wider decimal —
-    * e.g. sum(sum(DECIMAL(18,2))) = DECIMAL(38,2) from a two-level
-    * rollup — hits Spark's DerbyDialect cap, which maps precision>31 to
-    * DECIMAL(31, max(scale-(precision-31), 0)) = DECIMAL(31,0) and
-    * silently TRUNCATES the cents in the temp table (caught by
-    * NativeStateSpec parity against the in-operator state backend). */
-  private def coerce(delta: DataFrame): DataFrame =
-    delta.schema.fields.foldLeft(delta) { (df, f) =>
-      f.dataType match {
-        case d: org.apache.spark.sql.types.DecimalType if d.precision > 18 =>
-          // Narrow the precision but PRESERVE the source scale: a
-          // hardcoded (18,2) would silently shave sub-cent digits off any
-          // future finer-scaled delta column (and under non-ANSI casting
-          // an overflow becomes NULL, not an error). Today's sum columns
-          // are scale 2, so this is (18,2) in practice.
-          df.withColumn(f.name, col(f.name).cast(
-            org.apache.spark.sql.types.DecimalType(18, math.min(d.scale, 18))))
-        case _ => df
-      }
-    }
-
-  private def upsert(delta: DataFrame, target: String, temp: String,
-      keys: Seq[String], adds: Seq[String], epoch: Option[Long]): Unit = {
-    if (delta.isEmpty) return
-    // K2: batch delta → temp table over JDBC. The runner's deltas are
-    // driver-local frames (rolled up from its one collected batch
-    // aggregate), so the emptiness probe above runs no Spark job and the
-    // write is one LocalTableScan job, ≤ defaultParallelism tasks; any
-    // other frame writes from its executors the same way.
-    // Key columns must be VARCHAR, not Derby's default CLOB mapping for
-    // StringType — CLOB can't join against the VARCHAR PKs in MERGE.
-    // batchsize 10k (default 1000) amortizes the per-statement round
-    // trip; truncate-on-overwrite reuses the table instead of paying a
-    // DROP/CREATE DDL round per micro-batch.
-    coerce(delta).withColumn("last_updated", current_timestamp())
-      .write.mode("overwrite")
-      .option("truncate", "true")
-      .option("batchsize", "10000")
-      .option("createTableColumnTypes",
-        keys.map(k => s"$k VARCHAR(255)").mkString(", "))
-      .jdbc(url, temp, props)
-    // K3: fence + one set-based additive merge, committed ATOMICALLY.
-    // Two autocommitted statements would lose the delta forever if the
-    // process died between them (epoch fenced out, merge never applied);
-    // one transaction makes a crash replayable.
-    withConn { c =>
-      c.setAutoCommit(false)
-      try {
-        if (fence(c, target, epoch))
-          exec(c, dialect.mergeSql(target, temp, keys, adds))
-        c.commit()
-      } catch {
-        case e: Throwable =>
-          try c.rollback() catch { case _: java.sql.SQLException => () }
-          throw e
-      }
+  /** One connection, one transaction: commits if `f` returns, rolls back
+    * and rethrows if it throws. */
+  private def inTransaction(f: Connection => Unit): Unit = withConn { c =>
+    c.setAutoCommit(false)
+    try { f(c); c.commit() }
+    catch {
+      case e: Throwable =>
+        try c.rollback() catch { case _: java.sql.SQLException => () }
+        throw e
     }
   }
 
-  /** The three upserts touch disjoint (target, temp) table pairs on
-    * separate connections, so they run CONCURRENTLY — the serial form
-    * made the state round-trip the pipeline's throughput ceiling (three
-    * temp-writes + merges back-to-back per micro-batch). Failure
-    * semantics stay clean because the fence is per (table, epoch): if
-    * one table's merge fails mid-batch, the others commit, and a replay
-    * of the same epoch applies only the failed table (the committed ones
-    * fence themselves out). */
+  /** Batched INSERT of `rows` (values in `cols` order, quoted column
+    * names) into `table`, one round trip per 10k rows. A null binds as a
+    * VARCHAR null: only key values can be null here. */
+  private def insertRows(c: Connection, table: String, cols: Seq[String],
+      rows: Seq[Seq[Any]]): Unit = {
+    val ps = c.prepareStatement(s"INSERT INTO $table (${cols.map(q2).mkString(", ")}) " +
+      s"VALUES (${cols.map(_ => "?").mkString(", ")})")
+    try rows.grouped(10000).foreach { group =>
+      group.foreach { values =>
+        values.zipWithIndex.foreach {
+          case (null, i) => ps.setNull(i + 1, java.sql.Types.VARCHAR)
+          case (v, i) => ps.setObject(i + 1, v)
+        }
+        ps.addBatch()
+      }
+      ps.executeBatch()
+    } finally ps.close()
+  }
+
+  /** `delta.collect()` naming this store as the call site of its jobs:
+    * AQE submits stages from pool threads whose stacks name only Spark,
+    * but the call site travels with the caller's local properties. */
+  private def collectAsStore(delta: DataFrame, table: String): Array[Row] = {
+    val sc = delta.sparkSession.sparkContext
+    val keys = Seq("callSite.short", "callSite.long")
+    val saved = keys.map(sc.getLocalProperty)
+    keys.foreach(sc.setLocalProperty(_, s"JdbcUpsertStore.applyDeltas: $table delta"))
+    try delta.collect() finally keys.zip(saved).foreach { case (k, v) => sc.setLocalProperty(k, v) }
+  }
+
+  /** One batch's three upserts on the caller's thread, over one
+    * connection in ONE transaction. Each delta is collected first (the
+    * runner's driver-local frames collect without a Spark job); then, per
+    * non-empty delta: the epoch fence, (K2) clear the temp table and
+    * batch-insert the rows with one `last_updated` per batch, (K3) the
+    * additive merge. A null additive value binds as 0, the reference's
+    * `COALESCE(…, 0)` ("Mechanism Y.py":178), so a pair whose amounts are
+    * all null cannot fail the NOT NULL sum. One commit makes the batch
+    * all-or-nothing across the three tables, so a replayed epoch applies
+    * all of it. */
   override def applyDeltas(merchantDelta: DataFrame,
       custMerchantDelta: DataFrame, genderDelta: DataFrame,
-      epochId: Option[Long] = None): Unit =
-    JdbcUpsertStore.concurrently(Seq(
-      () => upsert(merchantDelta, "merchant_summary", "temp_mts_updates",
-        Seq("merchant_id"), Seq("total_transactions"), epochId),
-      () => upsert(custMerchantDelta, "customer_merchant_summary", "temp_cms_updates",
-        Seq("customer_id", "merchant_id"),
-        Seq("transaction_count", "total_amount_sum"), epochId),
-      () => upsert(genderDelta, "merchant_gender_summary", "temp_mgs_updates",
-        Seq("merchant_id"),
-        Seq("male_transaction_count", "female_transaction_count"), epochId)))
+      epochId: Option[Long] = None): Unit = {
+    val staged = JdbcUpsertStore.tables.zip(Seq(merchantDelta, custMerchantDelta, genderDelta))
+      .map { case (t, delta) => (t, delta.schema, collectAsStore(delta, t.target)) }
+      .filter(_._3.nonEmpty)
+    if (staged.isEmpty) return
+    val lastUpdated = new java.sql.Timestamp(System.currentTimeMillis())
+    inTransaction { c =>
+      for ((t, schema, rows) <- staged if fence(c, t.target, epochId)) {
+        exec(c, s"DELETE FROM ${t.temp}")
+        val keyIdx = t.keys.map(schema.fieldIndex)
+        val addIdx = t.adds.map(a => schema.fieldIndex(a._1))
+        insertRows(c, t.temp, t.columns, rows.toSeq.map { r =>
+          keyIdx.map(r.get) ++ addIdx.map(i => if (r.isNullAt(i)) 0 else r.get(i)) :+
+            lastUpdated
+        })
+        exec(c, dialect.mergeSql(t.target, t.temp, t.keys, t.adds.map(_._1)))
+      }
+    }
+  }
 
   private def read(spark: SparkSession, table: String): DataFrame =
     spark.read.jdbc(url, table, props)
@@ -219,8 +213,8 @@ class JdbcUpsertStore(url: String, driverClass: String =
     *   - ≤ [[semiJoinKeyThreshold]] keys: IN-lists split into ~250-key
     *     groups, one scan partition each — a 1k-merchant batch reads
     *     over 4 parallel connections without building a giant statement.
-    *   - wider batches: the key set is written to a keys temp table
-    *     (same executor-write channel as the deltas) and the remote
+    *   - wider batches: the key set is batch-inserted into a keys temp
+    *     table (same driver-side insert as the deltas) and the remote
     *     query SEMI-JOINS it — statement size stays O(1) no matter how
     *     many keys, and the DB drives the lookup from its PK index
     *     instead of parsing a megabyte IN-list. */
@@ -245,12 +239,12 @@ class JdbcUpsertStore(url: String, driverClass: String =
       // (the runner materializes every pruned read within its batch),
       // and a too-early drop fails LOUDLY (table not found), never with
       // wrong rows.
-      import spark.implicits._
       val keysTable = s"temp_read_keys_${keysTableSeq.incrementAndGet()}"
-      distinctIds.toDF("k")
-        .write.mode("overwrite")
-        .option("createTableColumnTypes", "k VARCHAR(255)")
-        .jdbc(url, keysTable, props)
+      dropKeysTable(keysTable) // left behind by an earlier store that was never closed
+      inTransaction { c =>
+        exec(c, s"CREATE TABLE $keysTable (${q2("k")} VARCHAR(255))")
+        insertRows(c, keysTable, Seq("k"), distinctIds.map(Seq(_)))
+      }
       keysTables.addFirst(keysTable)
       while (keysTables.size() > keysTableRetention)
         dropKeysTable(keysTables.pollLast())
@@ -272,7 +266,7 @@ class JdbcUpsertStore(url: String, driverClass: String =
       catch { case _: java.sql.SQLException => () } // already gone
     }
 
-  // Spark's JDBC writer creates temp-table columns with quoted
+  // temp-table columns are created and inserted with quoted
   // (case-preserved) identifiers — same quoting contract as the merge
   private def q2(c: String): String = "\"" + c + "\""
 
@@ -297,27 +291,23 @@ class JdbcUpsertStore(url: String, driverClass: String =
 
 object JdbcUpsertStore {
 
-  /** Runs each task on a daemon thread started by the caller, waits for
-    * ALL of them — no upsert is left racing a caller that believes the
-    * batch is finished — then rethrows the first failure in task order.
-    * Threads started per call inherit the caller's Spark local
-    * properties (job group, description, `streaming.sql.batchId`); a
-    * shared pool's threads keep those of whichever caller first created
-    * them, so cancelling a later query's job group would miss its
-    * upserts and listeners would file them under the wrong batch. */
-  private[state] def concurrently(tasks: Seq[() => Unit]): Unit = {
-    val failures = new Array[Throwable](tasks.size)
-    val threads = tasks.zipWithIndex.map { case (task, i) =>
-      val t = new Thread(() =>
-        try task() catch { case e: Throwable => failures(i) = e },
-        "graft-state-upsert")
-      t.setDaemon(true)
-      t.start()
-      t
-    }
-    threads.foreach(_.join())
-    failures.find(_ != null).foreach(e => throw e)
+  /** A state table's upsert shape: key columns, additive columns with
+    * their DDL types (sql/postgres_tables.sql), and the temp table its
+    * deltas are staged in. */
+  private final case class UpsertTable(target: String, temp: String,
+      keys: Seq[String], adds: Seq[(String, String)]) {
+    def columns: Seq[String] = keys ++ adds.map(_._1) :+ "last_updated"
   }
+
+  /** The three state tables, in [[StateStore.applyDeltas]] argument order. */
+  private val tables: Seq[UpsertTable] = Seq(
+    UpsertTable("merchant_summary", "temp_mts_updates", Seq("merchant_id"),
+      Seq("total_transactions" -> "BIGINT")),
+    UpsertTable("customer_merchant_summary", "temp_cms_updates",
+      Seq("customer_id", "merchant_id"),
+      Seq("transaction_count" -> "BIGINT", "total_amount_sum" -> "DECIMAL(18,2)")),
+    UpsertTable("merchant_gender_summary", "temp_mgs_updates", Seq("merchant_id"),
+      Seq("male_transaction_count" -> "BIGINT", "female_transaction_count" -> "BIGINT")))
 
   /** Embedded Derby store under the given directory. */
   def derby(dir: String): JdbcUpsertStore = {

@@ -9,10 +9,10 @@ package graft.state
   * selected from the JDBC URL so pointing the store at the reference's
   * RDS emits the reference's exact statement shape.
   *
-  * Column references on the temp-table side are quoted: Spark's JDBC
-  * writer creates the temp table with quoted (case-preserved, lowercase)
-  * identifiers, so unquoted refs would canonicalize differently (Derby:
-  * uppercase) and miss.
+  * Column references on the temp-table side are quoted:
+  * [[JdbcUpsertStore.init]] creates the temp tables with quoted
+  * (case-preserved, lowercase) column names, so unquoted refs would
+  * canonicalize differently (Derby: uppercase) and miss.
   */
 sealed trait UpsertDialect {
   /** One set-based additive merge of `temp` into `target`: keys match →

@@ -19,7 +19,9 @@ import scala.jdk.CollectionConverters._
   *      guard ("Mechanism Y.py":124-134)
   *   2. the three per-batch deltas (A1/A2/A3) roll up from it on the
   *      driver ([[MicroBatchRunner.rollUp]]) and go to the additive state
-  *      upsert (K2/K3 via [[StateStore]]) as local frames
+  *      upsert (K2/K3 via [[StateStore]]) as local frames; the JDBC store
+  *      collects them without a Spark job and writes all three over its
+  *      own connection in one transaction
   *   3. enrichment join against the static importance dim (J1) and the
   *      cached percentile thresholds (A4/J2), with the reference's
   *      missing-weight fallback ("Mechanism Y.py":236-237)
@@ -98,7 +100,7 @@ class MicroBatchRunner(
       // reference aggregates the batch three times
       // ("Mechanism Y.py":142, 167, 187); here the three state deltas
       // roll up from this one result on the driver ([[rollUp]]) and reach
-      // the store as local frames — no Spark rollup job per delta. The
+      // the store as local frames — no Spark rollup or write job. The
       // gender pivot is a conditional count (SURVEY.md §2.5 A3); the
       // pivot+P11-repair form itself is oracle-checked in
       // RelOps.aggGenderPivot.
@@ -276,9 +278,10 @@ object MicroBatchRunner {
     * the driver from a batch's collected finest-grain aggregate rows
     * (customer, merchant, gender, cnt: Long, amt: decimal or null).
     * Exact, with Spark `sum` semantics: Long counts, BigDecimal amount
-    * sums, a sum over null amounts only stays null, and a gender other
-    * than "M"/"F" (null included) adds to neither gender count. Keys
-    * may be null; they group like Spark's null group key. */
+    * sums, a sum over null amounts only stays null (the JDBC store adds
+    * it as 0), and a gender other than "M"/"F" (null included) adds to
+    * neither gender count. Keys may be null; they group like Spark's
+    * null group key. */
   private[graft] def rollUp(fin: Iterable[Row]): (Seq[Row], Seq[Row], Seq[Row]) = {
     val m = mutable.LinkedHashMap.empty[String, Long]
     val cm = mutable.LinkedHashMap.empty[(String, String), (Long, java.math.BigDecimal)]

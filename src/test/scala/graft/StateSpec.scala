@@ -1,8 +1,9 @@
 package graft
 
 import graft.state.JdbcUpsertStore
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Derby-backed state store: additive merge semantics (K2/K3/J5/A7) and
@@ -50,9 +51,10 @@ class StateSpec extends AnyFunSuite {
   }
 
   test("a wide-decimal delta keeps its cents (DerbyDialect precision>31 cap)") {
-    // sum(sum(DECIMAL(18,2))) = DECIMAL(38,2): without the store-side
-    // coercion to the DDL's DECIMAL(18,2), Spark's DerbyDialect maps the
-    // temp column to DECIMAL(31,0) and the cents vanish
+    // sum(sum(DECIMAL(18,2))) = DECIMAL(38,2): the temp table takes the
+    // DDL's DECIMAL(18,2) from init, not the delta's type (a temp column
+    // typed from the delta through Spark's DerbyDialect was
+    // DECIMAL(31,0), and the cents vanished)
     val store = freshStore("widecents")
     try {
       import spark.implicits._
@@ -67,6 +69,27 @@ class StateSpec extends AnyFunSuite {
         .filter(col("customer_id") === "c1")
         .select(col("total_amount_sum").cast("string")).collect()
       assert(got.map(_.getString(0)).toSeq == Seq("246.90"))
+    } finally store.close()
+  }
+
+  test("a null-only amount sum adds 0: inserts as 0.00, then adds 0") {
+    // a (customer, merchant) pair whose amounts are all null has a null
+    // delta sum (Spark `sum`); the NOT NULL total_amount_sum must not
+    // fail the batch — the reference's COALESCE(…, 0) ("Mechanism Y.py":178)
+    val store = freshStore("nullsum")
+    try {
+      import spark.implicits._
+      val nullSum = Seq(("c1", "m1", 1L, Option.empty[BigDecimal]))
+        .toDF("customer_id", "merchant_id", "transaction_count", "total_amount_sum")
+        .withColumn("total_amount_sum", col("total_amount_sum").cast(DecimalType(18, 2)))
+      val (m, _, g) = deltas(txWithBucket(2).filter(col("b") === 0).limit(1))
+      def pair() = store.custMerchantSummary(spark).filter(col("customer_id") === "c1")
+        .select(col("transaction_count"), col("total_amount_sum").cast("string"))
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+      store.applyDeltas(m, nullSum, g)
+      assert(pair() == Seq((1L, "0.00")))
+      store.applyDeltas(m, nullSum, g) // on the existing row: adds 0
+      assert(pair() == Seq((2L, "0.00")))
     } finally store.close()
   }
 
@@ -138,6 +161,20 @@ class StateSpec extends AnyFunSuite {
         .map(_.getString(0)).toSet == some.toSet)
       assert(store.merchantSummaryFor(spark, Nil).isEmpty)
     } finally store.close()
+  }
+
+  test("semi-join keys tables left by a store that was never closed do not break the next one") {
+    val url = s"jdbc:derby:target/derby-test-keysleft-${System.nanoTime()};create=true"
+    val first = new JdbcUpsertStore(url, semiJoinKeyThreshold = 0)
+    first.init()
+    val (m, cm, g) = deltas(txWithBucket(1))
+    first.applyDeltas(m, cm, g)
+    val some = m.select("merchant_id").collect().map(_.getString(0)).toSeq.take(3)
+    assert(first.merchantSummaryFor(spark, some).count() == 3) // its keys table stays
+    val next = new JdbcUpsertStore(url, semiJoinKeyThreshold = 0) // same key-table names
+    next.init()
+    try assert(next.merchantSummaryFor(spark, some).count() == 3)
+    finally next.close()
   }
 
   test("dialect golden strings: postgresql URL → ON CONFLICT, Derby → MERGE INTO") {
@@ -229,6 +266,53 @@ class StateSpec extends AnyFunSuite {
         assert(groups.nonEmpty, caller)
         assert(groups.forall(_ == caller), s"$caller's upserts ran as $groups")
       }
+    } finally {
+      sc.removeSparkListener(listener)
+      store.close()
+    }
+  }
+
+  test("applyDeltas on driver-local frames starts no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+    import graft.streaming.MicroBatchRunner._
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val group = "graft-local-deltas"
+    val barrier = s"barrier-$group"
+    // job group per started job, in submission order
+    val jobs = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.put(
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>"))
+    }
+    def local(rows: Seq[Row], schema: StructType) = spark.createDataFrame(rows.asJava, schema)
+    val m = local(Seq(Row("m1", 3L), Row("m2", 1L)), merchantStateSchema)
+    val cm = local(Seq(Row("c1", "m1", 3L, new java.math.BigDecimal("12.34")),
+      Row("c2", "m2", 1L, new java.math.BigDecimal("5.00"))), custMerchantStateSchema)
+    val g = local(Seq(Row("m1", 2L, 1L), Row("m2", 0L, 1L)), genderStateSchema)
+    val store = freshStore("localjobs")
+    sc.addSparkListener(listener)
+    try {
+      @volatile var failure: Throwable = null
+      val t = new Thread(() =>
+        try {
+          sc.setJobGroup(group, group)
+          store.applyDeltas(m, cm, g, Some(1L))
+          // the listener bus delivers in order: once this barrier job
+          // shows, every job applyDeltas started has shown too
+          sc.setJobGroup(barrier, barrier)
+          sc.parallelize(Seq(1)).count()
+        } catch { case e: Throwable => failure = e })
+      t.start(); t.join()
+      if (failure != null) throw failure
+      val started = Iterator.continually(Option(jobs.poll(60, TimeUnit.SECONDS))
+          .getOrElse(fail("listener bus stalled")))
+        .takeWhile(_ != barrier).count(_ == group)
+      assert(started == 0, s"applyDeltas started $started Spark jobs")
+      assert(store.merchantSummary(spark).collect().map(r => r.getString(0) -> r.getLong(1))
+        .toMap == Map("m1" -> 3L, "m2" -> 1L))
     } finally {
       sc.removeSparkListener(listener)
       store.close()
