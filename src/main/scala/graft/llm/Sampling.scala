@@ -507,7 +507,7 @@ object Sampling {
       // data-contract bound made loud: strata are hex-nibble prefixes, so
       // the collect is ≤ 16^nibbles rows by construction — a violation
       // means the stratum derivation changed, not that the data grew
-      require(counts.length <= (1 << (4 * stratumNibbles)),
+      require(counts.length <= BigInt(16).pow(stratumNibbles),
         s"epochShuffle stratum rollup returned ${counts.length} rows, " +
           s"over the 16^$stratumNibbles bound the driver-side fold relies on")
       var acc = 0L
@@ -582,7 +582,7 @@ object Sampling {
         .collect().map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
       // same hex-nibble contract as epochShuffle's offsets: ≤ 16^nibbles
       // rows by construction; degrade loudly, never as a driver OOM
-      require(counts.length <= (1 << (4 * stratumNibbles)),
+      require(counts.length <= BigInt(16).pow(stratumNibbles),
         s"corpusShards stratum rollup returned ${counts.length} rows, " +
           s"over the 16^$stratumNibbles bound the driver-side fold relies on")
       var acc = 0L

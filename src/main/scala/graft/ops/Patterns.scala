@@ -115,6 +115,55 @@ object Patterns {
   def unionDetections(dfs: Seq[DataFrame]): DataFrame =
     dfs.map(_.na.fill("")).reduce(_ unionByName _)
 
+  // ---- streaming detection stage, shared by both state backends ----
+
+  /** J1/J2 of the streaming stage ("Mechanism Y.py":68-89, 221-239).
+    * Caches the static importance dim and its per-(merchant, category)
+    * `percentile_approx` thresholds once, and returns the per-batch
+    * step: the distinct (customer, merchant) pairs of `pairs` (columns
+    * customer, merchant, category) whose importance weight sits below
+    * their group's threshold. The reference's missing-threshold fallback
+    * (weight < 2.0 when p_weight is null, ":236-237") cannot fire here:
+    * the thresholds aggregate the same dim the weight joins from, so a
+    * non-null weight always has a non-null p_weight in its group, and
+    * both joins may be inner. Batch mode's [[lowWeightDetectionPairs]]
+    * stays separate: it uses exact `percentile` for oracle parity. */
+  def streamLowWeightPairs(importanceDim: DataFrame,
+      cfg: Config = DefaultConfig): DataFrame => DataFrame = {
+    val dim = importanceDim.cache()
+    val importance = dim
+      .withColumnRenamed("customer", "i_customer")
+      .withColumnRenamed("merchant", "i_merchant")
+      .withColumnRenamed("category", "i_category")
+    val thresholds = dim
+      .groupBy(col("merchant").as("merchant_key"), col("category").as("category_key"))
+      .agg(expr(s"percentile_approx(weight, ${cfg.detectionPercentile}, 10000)")
+        .as("p_weight"))
+      .cache()
+    pairs => {
+      val enriched = pairs.join(importance,
+        pairs("customer") === col("i_customer") &&
+          pairs("merchant") === col("i_merchant") &&
+          pairs("category") === col("i_category"))
+      enriched.join(thresholds,
+          enriched("merchant") === thresholds("merchant_key") &&
+          enriched("category") === thresholds("category_key"))
+        .filter(col("weight") < col("p_weight"))
+        .select(col("customer"), col("merchant"))
+        .distinct()
+    }
+  }
+
+  /** PatId1–3 over one batch's view of the cumulative state, unioned
+    * ("Mechanism Y.py":221-260). */
+  def detections(merchantSummary: DataFrame, custMerchantSummary: DataFrame,
+      genderSummary: DataFrame, lowWeightPairs: DataFrame, cfg: Config,
+      clock: Clock): DataFrame =
+    unionDetections(Seq(
+      patId1(merchantSummary, custMerchantSummary, lowWeightPairs, cfg, clock),
+      patId2(custMerchantSummary, cfg, clock),
+      patId3(genderSummary, cfg, clock)))
+
   // ---- batch-mode wiring over testdata (state = whole-history agg) ----
 
   /** ONE pass over the fact join at the finest grain every consumer

@@ -23,11 +23,14 @@ import scala.jdk.CollectionConverters._
   *      collects them without a Spark job and writes all three over its
   *      own connection in one transaction
   *   3. enrichment join against the static importance dim (J1) and the
-  *      cached percentile thresholds (A4/J2), with the reference's
-  *      missing-weight fallback ("Mechanism Y.py":236-237)
-  *   4. the three pattern queries over cumulative state (§2.11); the
-  *      state reads are left unpersisted so each pattern's filters push
-  *      into its own JDBC scan
+  *      cached percentile thresholds (A4/J2), shared with
+  *      [[NativeStatePipeline]] ([[Patterns.streamLowWeightPairs]]). The
+  *      reference's missing-threshold fallback ("Mechanism Y.py":236-237)
+  *      cannot fire: the thresholds aggregate the same dim the weight
+  *      joins from, so a non-null weight always has a non-null threshold
+  *   4. the three pattern queries over cumulative state (§2.11,
+  *      [[Patterns.detections]]); the state reads are left unpersisted so
+  *      each pattern's filters push into its own JDBC scan
   *   5. detections → driver buffer → 50-row single-file CSV flushes
   *      (S6/K4, "Mechanism Y.py":268-277)
   *
@@ -44,10 +47,10 @@ import scala.jdk.CollectionConverters._
   * PatId2/3 re-emit is keyed to the batch's merchants too: for touched
   * merchants the detections are identical to parity mode; untouched
   * merchants simply aren't re-announced every batch. Scale mode also
-  * replaces the driver-side detection buffer with a distributed sink
-  * ([[flushDistributed]]): detections write straight from executors, so
-  * neither state size nor detection volume ever funnels through the
-  * driver.
+  * replaces the driver-side detection buffer with the distributed sink
+  * [[MicroBatchRunner.writeDetections]] (the native backend's too):
+  * detections write straight from executors, so neither state size nor
+  * detection volume ever funnels through the driver.
   */
 class MicroBatchRunner(
     spark: SparkSession,
@@ -56,21 +59,12 @@ class MicroBatchRunner(
     outDir: String,
     cfg: Patterns.Config = Patterns.DefaultConfig,
     clock: () => Patterns.Clock = () => MicroBatchRunner.wallClock(),
-    detectionBatchSize: Int = 50,
     idempotent: Boolean = false,
-    fallbackWeight: Double = 2.0,
     scaleMode: Boolean = false) {
 
   import MicroBatchRunner._
 
-  // Static setup queries, cached once like the reference's
-  // CustomerImportance + percentile precompute ("Mechanism Y.py":68-89).
-  private val importance = importanceDim.cache()
-  private val percentiles = importance
-    .groupBy(col("merchant").as("merchant_key"), col("category").as("category_key"))
-    .agg(expr(s"percentile_approx(weight, ${cfg.detectionPercentile}, 10000)")
-      .as("p_weight"))
-    .cache()
+  private val lowWeight = Patterns.streamLowWeightPairs(importanceDim, cfg)
 
   private val buffer = ArrayBuffer[Row]()
   private var currentEpoch = -1L
@@ -118,24 +112,6 @@ class MicroBatchRunner(
       store.applyDeltas(local(mDelta, merchantStateSchema),
         local(cmDelta, custMerchantStateSchema), local(gDelta, genderStateSchema), epoch)
 
-      // J1 enrichment + J2 low-weight with percentile-miss fallback
-      val enriched = batch.join(importance
-          .withColumnRenamed("customer", "i_customer")
-          .withColumnRenamed("merchant", "i_merchant")
-          .withColumnRenamed("category", "i_category"),
-        batch("customer") === col("i_customer") &&
-          batch("merchant") === col("i_merchant") &&
-          batch("category") === col("i_category"), "left_outer")
-      val lowWeight = enriched.join(percentiles,
-          enriched("merchant") === percentiles("merchant_key") &&
-          enriched("category") === percentiles("category_key"), "left_outer")
-        .filter(
-          (col("p_weight").isNotNull && col("weight") < col("p_weight")) ||
-          (col("p_weight").isNull && col("weight").isNotNull &&
-            col("weight") < lit(fallbackWeight)))
-        .select(col("customer"), col("merchant"))
-        .distinct()
-
       // State reads: scale mode prunes every read to the merchants this
       // batch touched (taken from the collected aggregate — ≤ batch
       // rows); parity mode keeps the reference's full re-read. Both
@@ -156,43 +132,17 @@ class MicroBatchRunner(
             stateOrEmpty(genderStateSchema)(store.genderSummary(spark)))
         }
 
-      val tick = clock()
-      val detections = Patterns.unionDetections(Seq(
-        Patterns.patId1(ms, cms, lowWeight, cfg, tick),
-        Patterns.patId2(cms, cfg, tick),
-        Patterns.patId3(gs, cfg, tick)))
-
-      if (scaleMode) flushDistributed(detections, epochId)
+      val detections = Patterns.detections(ms, cms, gs, lowWeight(batch), cfg, clock())
+      if (scaleMode) writeDetections(detections, outDir, epochId)
       else {
         buffer ++= detections.collect()
-        while (buffer.length >= detectionBatchSize) {
-          val chunk = buffer.take(detectionBatchSize).toList
-          buffer.remove(0, detectionBatchSize)
+        while (buffer.length >= DetectionFileRows) {
+          val chunk = buffer.take(DetectionFileRows).toList
+          buffer.remove(0, DetectionFileRows)
           flush(chunk)
         }
       }
     } finally batch.unpersist()
-  }
-
-  /** Scale-mode detection sink: executors write the epoch's detections
-    * directly — the rows never visit the driver (parity mode's
-    * `collect()` buffer is bounded by state size, which at 100 TB is
-    * exactly the thing that grows). One dir per epoch, restart-safe
-    * naming like [[flush]], partition count sized so files hold
-    * ~detectionBatchSize rows (the reference's 50-row contract becomes
-    * approximate: round-robin fills partitions evenly; exact 50-row
-    * chunking across batches is inherently a driver-serial operation). */
-  private def flushDistributed(detections: DataFrame, epochId: Long): Unit = {
-    detections.persist()
-    try {
-      val n = detections.count()
-      if (n > 0) {
-        val files = ((n + detectionBatchSize - 1) / detectionBatchSize).toInt
-        val uuid8 = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-        detections.repartition(files).write.option("header", "true")
-          .csv(s"$outDir/detections_batch_${epochId}_$uuid8")
-      }
-    } finally detections.unpersist()
   }
 
   /** Trailing flush of a final partial file ("Mechanism Y.py" leaves the
@@ -204,37 +154,18 @@ class MicroBatchRunner(
       flush(chunk)
     }
 
-  /** Restart-safe flush: dirs are named `detections_batch_<epoch>_<uuid8>`
-    * like the reference ("Mechanism Y.py":274) and written errorifexists —
-    * a restarted run can never clobber a prior run's detections (a
-    * sequence-numbered overwrite would restart at 0 and silently replace
-    * them). */
-  private def flush(rows: Seq[Row]): Unit = {
-    val df = spark.createDataFrame(rows.asJava, detectionSchema)
-    val uuid8 = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    df.coalesce(1).write.option("header", "true")
-      .csv(s"$outDir/detections_batch_${currentEpoch}_$uuid8")
-  }
+  /** Parity-mode flush: one single-file CSV dir per buffered chunk of
+    * exactly [[DetectionFileRows]] rows (the remainder excepted). */
+  private def flush(rows: Seq[Row]): Unit =
+    spark.createDataFrame(rows.asJava, detectionSchema)
+      .coalesce(1).write.option("header", "true")
+      .csv(detectionDir(outDir, currentEpoch))
 
-  /** S3 + K5: file-stream source (1 file per trigger ⇒ ≤ chunk-size rows
-    * per batch) into foreachBatch. cleanSource stays disabled like the
-    * reference ("Mechanism Y.py":106-107) — the checkpoint tracks
-    * processed files. */
+  /** S3 + K5: the chunk stream into foreachBatch. */
   def start(inputDir: String, checkpointDir: String,
       triggerInterval: String = "30 seconds"): StreamingQuery =
-    spark.readStream
-      .format("csv")
-      .schema(txStreamSchema)
-      .option("header", "true")
-      .option("escape", "\"") // feeder writes RFC4180 doubled quotes
-      .option("maxFilesPerTrigger", 1)
-      .load(inputDir)
-      .writeStream
-      .foreachBatch((b: DataFrame, id: Long) => processBatch(b, id))
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .start()
+    startBatches(chunkStream(spark, inputDir), checkpointDir, triggerInterval)(
+      processBatch)
 }
 
 object MicroBatchRunner {
@@ -309,6 +240,63 @@ object MicroBatchRunner {
     StructField("ActionType", StringType),
     StructField("CustomerName", StringType),
     StructField("MerchantId", StringType)))
+
+  /** The reference's rows-per-detection-file contract
+    * ("Mechanism Y.py":268-277): exact in parity mode's driver buffer,
+    * the per-file target of the distributed sink. */
+  private[streaming] val DetectionFileRows = 50
+
+  /** Restart-safe detection dir: `detections_batch_<epoch>_<uuid8>` like
+    * the reference ("Mechanism Y.py":274), written errorifexists — a
+    * restarted run can never clobber a prior run's detections (a
+    * sequence-numbered overwrite would restart at 0 and silently replace
+    * them). */
+  private def detectionDir(outDir: String, epochId: Long): String = {
+    val uuid8 = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
+    s"$outDir/detections_batch_${epochId}_$uuid8"
+  }
+
+  /** Distributed per-epoch detection sink (scale mode and the native
+    * backend): executors write the epoch's detections directly — the
+    * rows never visit the driver (parity mode's `collect()` buffer is
+    * bounded by state size, which at 100 TB is exactly the thing that
+    * grows). One dir per epoch, files sized ~[[DetectionFileRows]] rows
+    * (round-robin fills partitions evenly; exact 50-row chunking across
+    * batches is inherently a driver-serial operation). */
+  private[streaming] def writeDetections(detections: DataFrame, outDir: String,
+      epochId: Long): Unit = {
+    detections.persist()
+    try {
+      val n = detections.count()
+      if (n > 0)
+        detections.repartition(((n + DetectionFileRows - 1) / DetectionFileRows).toInt)
+          .write.option("header", "true").csv(detectionDir(outDir, epochId))
+    } finally detections.unpersist()
+  }
+
+  /** S3: the chunk-CSV file stream on `session` (one file per trigger ⇒
+    * ≤ chunk-size rows per batch). cleanSource stays disabled like the
+    * reference ("Mechanism Y.py":106-107) — the checkpoint tracks
+    * processed files. */
+  private[streaming] def chunkStream(session: SparkSession, inputDir: String): DataFrame =
+    session.readStream
+      .format("csv")
+      .schema(txStreamSchema)
+      .option("header", "true")
+      .option("escape", "\"") // feeder writes RFC4180 doubled quotes
+      .option("maxFilesPerTrigger", 1)
+      .load(inputDir)
+
+  /** K5: run `perBatch` on every micro-batch of `stream` on a
+    * processing-time trigger. */
+  private[streaming] def startBatches(stream: DataFrame, checkpointDir: String,
+      triggerInterval: String)(perBatch: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .foreachBatch(perBatch)
+      .outputMode("update")
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.ProcessingTime(triggerInterval))
+      .start()
 
   /** IST wall-clock strings, the reference's timestamp contract
     * ("Mechanism Y.py":112-113). */

@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{
   GroupState, GroupStateTimeout, MapState, OutputMode, StatefulProcessor,
-  StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+  StreamingQuery, TimeMode, TimerValues, TTLConfig, ValueState}
 import org.apache.spark.sql.types.DecimalType
 
 /** The SURVEY.md §2.5 A7 "native option": the three running state tables
@@ -29,8 +29,12 @@ import org.apache.spark.sql.types.DecimalType
   *     rows of the merchants this batch touched — the same frame
   *     scale-mode's pruned JDBC read pays a DB round-trip for, now a
   *     zero-IO side effect of updating state
-  *   → the three pattern queries + distributed detection sink
-  *     (same [[Patterns]] code paths as the JDBC-backed runner).
+  *   → the three pattern queries + distributed detection sink: the
+  *     same [[Patterns.streamLowWeightPairs]] / [[Patterns.detections]]
+  *     stage and [[MicroBatchRunner.writeDetections]] sink as the
+  *     JDBC-backed runner's scale mode. The reference's missing-threshold
+  *     fallback ("Mechanism Y.py":236-237) cannot fire here either: the
+  *     thresholds aggregate the same dim the weight joins from.
   *
   * 100 TB story: state lives partitioned by merchant across executors in
   * the checkpointed state store (RocksDB-backed on a real cluster via
@@ -65,21 +69,12 @@ class NativeStatePipeline(
     stateDir: String,
     cfg: Patterns.Config = Patterns.DefaultConfig,
     clock: () => Patterns.Clock = () => MicroBatchRunner.wallClock(),
-    detectionBatchSize: Int = 50,
-    fallbackWeight: Double = 2.0,
     api: NativeStatePipeline.StateApi = NativeStatePipeline.FlatMapGroups,
     compactEvery: Int = 16) {
 
   import NativeStatePipeline._
 
-  // Same static setup as MicroBatchRunner: importance dim + percentile
-  // thresholds cached once ("Mechanism Y.py":68-89).
-  private val importance = importanceDim.cache()
-  private val percentiles = importance
-    .groupBy(col("merchant").as("merchant_key"), col("category").as("category_key"))
-    .agg(expr(s"percentile_approx(weight, ${cfg.detectionPercentile}, 10000)")
-      .as("p_weight"))
-    .cache()
+  private val lowWeight = Patterns.streamLowWeightPairs(importanceDim, cfg)
 
   // appends since the last compaction — empty batches don't append, so
   // the trigger counts actual log growth, not epoch ids
@@ -87,9 +82,11 @@ class NativeStatePipeline(
 
   /** Per-epoch detection pass over the stateful operator's output. */
   private[graft] def processStateBatch(out: DataFrame, epochId: Long): Unit = {
-    if (out.isEmpty) return
+    // persisted before the empty probe, so the stateful operator runs
+    // once per epoch, inside the persisted pass
     out.persist()
     try {
+      if (out.isEmpty) return
       // audit/readout change-log: cumulative state rows for this epoch's
       // touched merchants (the "b" batch-pair rows are per-batch only),
       // one epoch partition per append so compaction can retire exactly
@@ -113,50 +110,15 @@ class NativeStatePipeline(
         .select(col("merchant_id"),
           col("c1").as("male_transaction_count"),
           col("c2").as("female_transaction_count"))
-
       // J1/J2 over the batch's distinct (customer, merchant, category)
       // triples — weight comes from the importance dim, so the distinct
-      // triples carry everything lowWeight needs (same percentile-miss
-      // fallback as MicroBatchRunner)
+      // triples carry everything the low-weight step needs
       val pairs = out.filter(col("rowType") === "b")
         .select(col("customer_id").as("customer"),
           col("merchant_id").as("merchant"), col("category"))
-      val enriched = pairs.join(importance
-          .withColumnRenamed("customer", "i_customer")
-          .withColumnRenamed("merchant", "i_merchant")
-          .withColumnRenamed("category", "i_category"),
-        pairs("customer") === col("i_customer") &&
-          pairs("merchant") === col("i_merchant") &&
-          pairs("category") === col("i_category"), "left_outer")
-      val lowWeight = enriched.join(percentiles,
-          enriched("merchant") === percentiles("merchant_key") &&
-          enriched("category") === percentiles("category_key"), "left_outer")
-        .filter(
-          (col("p_weight").isNotNull && col("weight") < col("p_weight")) ||
-          (col("p_weight").isNull && col("weight").isNotNull &&
-            col("weight") < lit(fallbackWeight)))
-        .select(col("customer"), col("merchant"))
-        .distinct()
 
-      val tick = clock()
-      val detections = Patterns.unionDetections(Seq(
-        Patterns.patId1(ms, cms, lowWeight, cfg, tick),
-        Patterns.patId2(cms, cfg, tick),
-        Patterns.patId3(gs, cfg, tick)))
-
-      // distributed detection sink, same contract as
-      // MicroBatchRunner.flushDistributed: executors write directly,
-      // restart-safe unique naming, files sized ~detectionBatchSize
-      detections.persist()
-      try {
-        val n = detections.count()
-        if (n > 0) {
-          val files = ((n + detectionBatchSize - 1) / detectionBatchSize).toInt
-          val uuid8 = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-          detections.repartition(files).write.option("header", "true")
-            .csv(s"$outDir/detections_batch_${epochId}_$uuid8")
-        }
-      } finally detections.unpersist()
+      MicroBatchRunner.writeDetections(
+        Patterns.detections(ms, cms, gs, lowWeight(pairs), cfg, clock()), outDir, epochId)
     } finally out.unpersist()
   }
 
@@ -179,13 +141,7 @@ class NativeStatePipeline(
       case _ => spark
     }
     import qSession.implicits._
-    val src = qSession.readStream
-      .format("csv")
-      .schema(MicroBatchRunner.txStreamSchema)
-      .option("header", "true")
-      .option("escape", "\"")
-      .option("maxFilesPerTrigger", 1)
-      .load(inputDir)
+    val src = MicroBatchRunner.chunkStream(qSession, inputDir)
       .select(col("customer"), col("merchant"), col("gender"),
         col("category"), col("amount"))
       .as[Tx]
@@ -199,13 +155,8 @@ class NativeStatePipeline(
           .transformWithState(new MerchantProcessor(),
             TimeMode.None(), OutputMode.Update())
     }
-    out.writeStream
-      .foreachBatch((b: Dataset[StateOut], id: Long) =>
-        processStateBatch(b.toDF(), id))
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .start()
+    MicroBatchRunner.startBatches(out.toDF(), checkpointDir, triggerInterval)(
+      processStateBatch)
   }
 }
 

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.llm.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** STREAMING SOURCE-DRIFT MONITOR — the live form of
   * [[graft.llm.TextOps.sourceDrift]]: per-(source, term) token counts
@@ -34,7 +33,6 @@ object StreamingDrift {
   def driftOfStream(stream: DataFrame, top: DataFrame, sources: DataFrame,
       topN: Int = 100, alpha: Double = 0.5): DataFrame = {
     val spark = stream.sparkSession
-    val name = "sdrift_" + java.util.UUID.randomUUID().toString.replace("-", "")
     // r21: (1) fan the single-file micro-batch out BEFORE the tokenize
     // (the streamingNearDupQuery rationale — the scan arrives as one
     // partition and the per-row tokenize+explode would run
@@ -46,36 +44,17 @@ object StreamingDrift {
     // the count-state shuffle is scoped to the data-sized width
     // (measured with the wm query: width 8→2 cut the per-batch commit
     // floor ~26%); counts are exact longs, so the result is
-    // partitioning-invariant (same oracle row set). Scratch checkpoint
-    // on tmpfs like the near-dup replays: a run-to-completion memory
-    // sink has zero recovery value, so its offset/commit fsyncs should
-    // not pay disk.
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    val ckpt = StreamingNearDup.ephemeralCheckpoint(name)
-    val q =
-      try stream
+    // partitioning-invariant (same oracle row set). The converged state
+    // (≤ topN·|sources| rows) comes back as a local frame.
+    val local = BoundedRun.collect(spark, "sdrift_", "complete",
+        Seq("spark.sql.shuffle.partitions" -> "2")) {
+      stream
         .repartition(spark.sparkContext.defaultParallelism)
         .select(col("source"), explode(TextOps.tokens(col("text"))).as("term"))
         .join(broadcast(top.select(col("term"))), Seq("term")) // stream-static
         .groupBy(col("source"), col("term"))
         .agg(count(lit(1)).as("cs"))
-        .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", ckpt)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    try q.awaitTermination()
-    finally {
-      q.stop()
-      StreamingNearDup.dropEphemeralCheckpoint(spark, ckpt)
     }
-    // materialize the tiny converged state (≤ topN·|sources| rows) and
-    // drop the memory-sink view — repeated cold runs must not accumulate
-    // orphaned driver-memory tables
-    val state = spark.table(name)
-    val rows = java.util.Arrays.asList(state.collect(): _*)
-    val local = spark.createDataFrame(rows, state.schema)
-    spark.catalog.dropTempView(name)
     TextOps.psiOverTop(local, top, sources, topN, alpha)
   }
 

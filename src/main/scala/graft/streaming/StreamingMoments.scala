@@ -3,7 +3,6 @@ package graft.streaming
 import graft.llm.Vectors
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** STREAMING EMBEDDING COVARIANCE — the live form of
   * [[graft.llm.Vectors.embCovariance]]: the quantized moment sums
@@ -36,35 +35,16 @@ object StreamingMoments {
     * unpivot of the final 1-row state. */
   def covarianceOfStream(stream: DataFrame, p: Int = 8): DataFrame = {
     val spark = stream.sparkSession
-    val name = "smom_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val aggs = Vectors.momentAggs(p)
     // r21: global agg → ONE group, but the stateful exchange still
     // instantiates a state store per shuffle partition, all but one
     // empty and each paying the per-commit floor — scope to the
     // data-sized width (the state is ~37 longs). Long addition is
     // order-free, so the converged state is partitioning-invariant.
-    // Scratch checkpoint on tmpfs (run-to-completion memory sink).
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    val ckpt = StreamingNearDup.ephemeralCheckpoint(name)
-    val q =
-      try Vectors.momentQuantize(stream, p)
-        .agg(aggs.head, aggs.tail: _*)
-        .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", ckpt)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    try q.awaitTermination()
-    finally {
-      q.stop()
-      StreamingNearDup.dropEphemeralCheckpoint(spark, ckpt)
+    val local = BoundedRun.collect(spark, "smom_", "complete",
+        Seq("spark.sql.shuffle.partitions" -> "2")) {
+      Vectors.momentQuantize(stream, p).agg(aggs.head, aggs.tail: _*)
     }
-    // materialize the 1-row converged state and drop the memory-sink
-    // view — repeated cold runs must not leak driver-memory tables
-    val state = spark.table(name)
-    val rows = java.util.Arrays.asList(state.collect(): _*)
-    val local = spark.createDataFrame(rows, state.schema)
-    spark.catalog.dropTempView(name)
     Vectors.momentStatsToCov(local, p)
   }
 

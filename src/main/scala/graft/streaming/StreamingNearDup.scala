@@ -3,7 +3,7 @@ package graft.streaming
 import graft.llm.Dedup
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** STREAMING near-duplicate detection — the realtime-ingest form of
   * [[graft.llm.Dedup.dedupSimhash]]: every arriving document is checked
@@ -259,7 +259,6 @@ object StreamingNearDup extends Serializable {
     // attribution (Caches.release before the pass) re-pays the stream
     graft.Caches.memo(spark, s"streaming_neardup:$dir:$maxDist") {
       val schema = graft.Tables.documents(spark, dir).schema
-      val name = "snd_q_" + java.util.UUID.randomUUID().toString.replace("-", "")
       // the file source wants a DIRECTORY; scope the listing to the one
       // table file with a glob filter
       val stream = spark.readStream.schema(schema)
@@ -286,34 +285,11 @@ object StreamingNearDup extends Serializable {
       val widthQ = math.max(2L, math.min(
         spark.sparkContext.defaultParallelism.toLong,
         (nDocsQ * Dedup.bandScheme(maxDist)._1 + 249999L) / 250000L)).toInt
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", widthQ.toString)
-      val ckpt = ephemeralCheckpoint(name)
-      val q =
-        try nearDupStream(stream, maxDist)
-          .writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try {
-        q.awaitTermination()
-        // SPARK_GRAFT_STREAM_DEBUG=1: dump per-micro-batch progress —
-        // the cold-attribution loop (batch count × per-batch floor)
-        if (sys.env.get("SPARK_GRAFT_STREAM_DEBUG").contains("1"))
-          q.recentProgress.foreach(p => println(p.json))
-      } finally {
-        q.stop()
-        dropEphemeralCheckpoint(spark, ckpt)
+      BoundedRun.collect(spark, "snd_q_", "append",
+          Seq("spark.sql.shuffle.partitions" -> widthQ.toString),
+          _.select(col("ida"), col("idb"), col("hamming")).distinct()) {
+        nearDupStream(stream, maxDist).toDF()
       }
-      // materialize the bounded pair set and drop the memory-sink view
-      // — cold reruns must not accumulate driver-memory tables
-      val state = spark.table(name)
-        .select(col("ida"), col("idb"), col("hamming"))
-        .distinct()
-      val rows = java.util.Arrays.asList(state.collect(): _*)
-      val local = spark.createDataFrame(rows, state.schema)
-      spark.catalog.dropTempView(name)
-      local
     }
 
   /** The registered WATERMARKED bounded query: the documents table fed
@@ -347,7 +323,6 @@ object StreamingNearDup extends Serializable {
       latenessSec: Long = 600L): DataFrame =
     graft.Caches.memo(spark,
         s"streaming_neardup_wm:$dir:$maxDist:$nChunks:$stepSec:$latenessSec") {
-      val name = "snd_wm_" + java.util.UUID.randomUUID().toString.replace("-", "")
       // fan-out width sized to the BATCH, not the machine: each trigger
       // carries one C-doc chunk, and repartitioning a 50-doc batch to 32
       // partitions schedules 32 near-empty tasks per batch — at
@@ -409,106 +384,48 @@ object StreamingNearDup extends Serializable {
       val stateWidth = math.max(2L, math.min(
         spark.sparkContext.defaultParallelism.toLong,
         (nDocs * nBands + 249999L) / 250000L)).toInt
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      val checkKey = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-      val prevCheck = spark.conf.get(checkKey)
-      // TWO watermark nodes exist (input sigs + emitted pairs), and the
-      // default multipleWatermarkPolicy=min takes the global watermark
-      // from the LAGGING pair-side node — whose max event time is the
-      // newest pair emitted so far, a data-dependent value that would
-      // make eviction timing (and the oracle) depend on which batches
-      // happened to emit pairs (measured: 199 vs 193 pairs at sf0.01).
-      // Pair event times never exceed input event times, so policy=max
-      // pins the global watermark to the INPUT node exactly: wm before
-      // batch k = maxTs(batches < k) − delay, the closed form the
-      // oracle replays. No input row is ever late under it (ts is
-      // monotone in doc_id across chunks).
-      val wmKey = "spark.sql.streaming.multipleWatermarkPolicy"
-      val prevWm = spark.conf.get(wmKey)
-      // NO-DATA micro-batches off. MEASURED (r20, progress logs at
-      // nChunks=20): under Trigger.AvailableNow this run schedules
-      // exactly ONE trailing no-data batch after the last data batch —
-      // not one per data batch as the r19 note assumed — so disabling
-      // them saves a single batch's floor, not half the run (the
-      // interleaved r20 A/B read no difference beyond host noise; the
-      // r19 90.6→55.6 c100 cut came entirely from the batch-sized
-      // fan-out/state width and checkpoint-retention fixes). Kept OFF
-      // because it is still strictly correct here: both operators emit
-      // only on ARRIVALS (fMGWS pairs a new doc against stored members;
-      // dropDuplicatesWithinWatermark emits first-seen immediately), so
-      // the trailing no-data batch could only evict state the run is
-      // about to discard — the emitted pair set is invariant
-      // (StreamingNearDupSpec pins it; the c100 leg's 1,865-row truth
-      // is unchanged).
-      val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-      val prevNd = spark.conf.get(ndKey)
-      // a scratch checkpoint retains nothing worth recovering: keeping
-      // the default 100 batches of offset/commit/state history makes
-      // every batch's log maintenance list-and-purge a growing dir
-      val retainKey = "spark.sql.streaming.minBatchesToRetain"
-      val prevRetain = spark.conf.get(retainKey)
-      spark.conf.set("spark.sql.shuffle.partitions", stateWidth.toString)
-      spark.conf.set(checkKey, "false")
-      spark.conf.set(wmKey, "max")
-      spark.conf.set(ndKey, "false")
-      spark.conf.set(retainKey, "2")
-      val ckpt = ephemeralCheckpoint(name)
-      val q =
-        try nearDupStreamWatermarked(stream, maxDist,
-            s"$latenessSec seconds", latenessSec * 1000L)
-          .writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        finally {
-          spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-          spark.conf.set(checkKey, prevCheck)
-          spark.conf.set(wmKey, prevWm)
-          spark.conf.set(ndKey, prevNd)
-          spark.conf.set(retainKey, prevRetain)
-        }
-      try {
-        q.awaitTermination()
-        if (sys.env.get("SPARK_GRAFT_STREAM_DEBUG").contains("1"))
-          q.recentProgress.foreach(p => println(p.json))
-      } finally {
-        q.stop()
-        dropEphemeralCheckpoint(spark, ckpt)
+      BoundedRun.collect(spark, "snd_wm_", "append", Seq(
+          "spark.sql.shuffle.partitions" -> stateWidth.toString,
+          "spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false",
+          // TWO watermark nodes exist (input sigs + emitted pairs), and
+          // the default multipleWatermarkPolicy=min takes the global
+          // watermark from the LAGGING pair-side node — whose max event
+          // time is the newest pair emitted so far, a data-dependent
+          // value that would make eviction timing (and the oracle)
+          // depend on which batches happened to emit pairs (measured:
+          // 199 vs 193 pairs at sf0.01). Pair event times never exceed
+          // input event times, so policy=max pins the global watermark
+          // to the INPUT node exactly: wm before batch k =
+          // maxTs(batches < k) − delay, the closed form the oracle
+          // replays. No input row is ever late under it (ts is monotone
+          // in doc_id across chunks).
+          "spark.sql.streaming.multipleWatermarkPolicy" -> "max",
+          // NO-DATA micro-batches off. MEASURED (r20, progress logs at
+          // nChunks=20): under Trigger.AvailableNow this run schedules
+          // exactly ONE trailing no-data batch after the last data batch
+          // — not one per data batch as the r19 note assumed — so
+          // disabling them saves a single batch's floor, not half the
+          // run (the interleaved r20 A/B read no difference beyond host
+          // noise; the r19 90.6→55.6 c100 cut came entirely from the
+          // batch-sized fan-out/state width and checkpoint-retention
+          // fixes). Kept OFF because it is still strictly correct here:
+          // both operators emit only on ARRIVALS (fMGWS pairs a new doc
+          // against stored members; dropDuplicatesWithinWatermark emits
+          // first-seen immediately), so the trailing no-data batch could
+          // only evict state the run is about to discard — the emitted
+          // pair set is invariant (StreamingNearDupSpec pins it; the
+          // c100 leg's 1,865-row truth is unchanged).
+          "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
+          // a scratch checkpoint retains nothing worth recovering:
+          // keeping the default 100 batches of offset/commit/state
+          // history makes every batch's log maintenance list-and-purge a
+          // growing dir
+          "spark.sql.streaming.minBatchesToRetain" -> "2"),
+          _.select(col("ida"), col("idb"), col("hamming")).distinct()) {
+        nearDupStreamWatermarked(stream, maxDist,
+          s"$latenessSec seconds", latenessSec * 1000L)
       }
-      val state = spark.table(name)
-        .select(col("ida"), col("idb"), col("hamming"))
-        .distinct()
-      val rows = java.util.Arrays.asList(state.collect(): _*)
-      val local = spark.createDataFrame(rows, state.schema)
-      spark.catalog.dropTempView(name)
-      local
     }
-
-  /** Checkpoint location for a BOUNDED run-to-completion replay (memory
-    * sink, rebuilt from scratch every run): the checkpoint has zero
-    * recovery value — the recovery story is "re-run the query" — yet
-    * every micro-batch pays offset-log, commit-log, and state-delta
-    * fsyncs into it, which at high batch counts IS the wall (the c100
-    * leg's profile: ~110 ms/batch of metadata writes + ~16 delta
-    * commits). Scratch checkpoints therefore go to RAM-backed tmpfs
-    * when the host has one, falling back to the JVM tmpdir. An
-    * UNBOUNDED production ingest must keep its checkpoint on durable
-    * storage — this helper is only for replays whose sink is rebuilt
-    * per run. */
-  private[streaming] def ephemeralCheckpoint(name: String): String = {
-    val shm = new java.io.File("/dev/shm")
-    val base =
-      if (shm.isDirectory && shm.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    s"$base/graft_ckpt/$name"
-  }
-
-  private[streaming] def dropEphemeralCheckpoint(spark: SparkSession,
-      ckpt: String): Unit =
-    try {
-      val p = new org.apache.hadoop.fs.Path(ckpt)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(p, true)
-    } catch { case _: java.io.IOException => () }
 
   /** Dense-id chunk files for the watermarked feed: C consecutive
     * doc_ids per chunk, published as exactly `parts` parquet files per

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.llm.TextOps
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** STREAMING TOKEN-QUOTA GATE — the online admission form of the
   * token-budget curation step ([[graft.llm.Sampling.tokenBudgetMix]] is
@@ -94,7 +94,6 @@ object StreamingQuotaGate extends Serializable {
       quota: Long = 800L): DataFrame =
     graft.Caches.memo(spark, s"streaming_quota_gate:$dir:$quota") {
       val schema = graft.Tables.documents(spark, dir).schema
-      val name = "sqg_q_" + java.util.UUID.randomUUID().toString.replace("-", "")
       val stream = spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")
         .parquet(dir)
@@ -107,31 +106,12 @@ object StreamingQuotaGate extends Serializable {
         .repartition(spark.sparkContext.defaultParallelism)
       // state is ONE long per source (20 here): scope the stateful
       // shuffle to the data-sized width instead of 32 near-empty state
-      // stores each paying the per-commit floor; scratch checkpoint on
-      // tmpfs (zero recovery value in a run-to-completion replay).
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "2")
-      val ckpt = StreamingNearDup.ephemeralCheckpoint(name)
-      val q =
-        try admissions(stream, quota).toDF()
-          .writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination()
-      finally {
-        q.stop()
-        StreamingNearDup.dropEphemeralCheckpoint(spark, ckpt)
+      // stores each paying the per-commit floor.
+      BoundedRun.collect(spark, "sqg_q_", "append",
+          Seq("spark.sql.shuffle.partitions" -> "2"),
+          _.select(col("doc_id"), col("source"), col("n_toks"), col("cum_tokens"))) {
+        admissions(stream, quota).toDF()
       }
-      // materialize the bounded admitted set and drop the memory-sink
-      // view — cold reruns must not accumulate driver-memory tables
-      val state = spark.table(name)
-        .select(col("doc_id"), col("source"), col("n_toks"),
-          col("cum_tokens"))
-      val rows = java.util.Arrays.asList(state.collect(): _*)
-      val local = spark.createDataFrame(rows, state.schema)
-      spark.catalog.dropTempView(name)
-      local
     }
 
   def quotaGateSql(quota: Long = 800L): String =

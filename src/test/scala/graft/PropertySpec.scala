@@ -192,6 +192,61 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("streaming low-weight pairs == brute-force reference rule, missing-threshold fallback included") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    // few keys so groups repeat; a third of the weights null, group
+    // (m3, k1) null only; batch customers c6/c7 have no importance row
+    val impGen = for {
+      c <- Gen.choose(0, 5); m <- Gen.choose(0, 3); k <- Gen.choose(0, 1)
+      w <- Gen.frequency(1 -> Gen.const(None), 2 -> Gen.choose(0, 40).map(i => Some(i / 10.0)))
+    } yield (s"c$c", s"m$m", s"k$k", if (m == 3 && k == 1) None else w)
+    val pairGen = for {
+      c <- Gen.choose(0, 7); m <- Gen.choose(0, 3); k <- Gen.choose(0, 1)
+    } yield (s"c$c", s"m$m", s"k$k")
+    val impSchema = StructType(Seq(StructField("customer", StringType),
+      StructField("merchant", StringType), StructField("category", StringType),
+      StructField("weight", DoubleType)))
+    val cfg = Patterns.Config(detectionPercentile = 0.5)
+    val fallbackWeight = 2.0 // the reference's ("Mechanism Y.py":236-237)
+    for (seed <- 1L to 4L) {
+      val imp = sample(Gen.listOfN(40, impGen), seed)
+      val pairs = sample(Gen.listOfN(30, pairGen), seed + 100)
+      val impDf = spark.createDataFrame(imp.map { case (c, m, k, w) =>
+        Row(c, m, k, w.map(Double.box).orNull) }.asJava, impSchema)
+      val got = Patterns.streamLowWeightPairs(impDf, cfg)(
+          pairs.toDF("customer", "merchant", "category"))
+        .as[(String, String)].collect().toSet
+      // the reference's thresholds: percentile_approx per group
+      val pWeight = impDf.groupBy("merchant", "category")
+        .agg(expr(s"percentile_approx(weight, ${cfg.detectionPercentile}, 10000)"))
+        .collect().map(r => (r.getString(0), r.getString(1)) ->
+          (if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
+      val groupWeights = imp.groupBy(r => (r._2, r._3)).view
+        .mapValues(_.flatMap(_._4)).toMap
+      groupWeights.foreach { case (g, ws) =>
+        assert(pWeight(g).forall(ws.contains) && pWeight(g).isEmpty == ws.isEmpty,
+          s"seed $seed group $g: threshold ${pWeight(g)} of $ws")
+      }
+      // J1 left join + J2 left join + the rule with its fallback clause
+      val want = (for {
+        (c, m, k) <- pairs
+        weight <- imp.collect { case (`c`, `m`, `k`, w) => w }
+        p = pWeight.get((m, k)).flatten
+        if (p.isDefined && weight.exists(_ < p.get)) ||
+          (p.isEmpty && weight.isDefined && weight.get < fallbackWeight)
+      } yield (c, m)).toSet
+      assert(got == want, s"seed $seed")
+      assert(want.nonEmpty, s"seed $seed draws no low-weight pair")
+      assert(pairs.exists(p => !imp.exists(i => (i._1, i._2, i._3) == p)),
+        s"seed $seed draws no batch row without an importance row")
+      assert(groupWeights.exists(_._2.isEmpty), s"seed $seed draws no all-null group")
+      assert(groupWeights.exists { case (g, ws) =>
+        ws.nonEmpty && imp.exists(i => (i._2, i._3) == g && i._4.isEmpty)
+      }, s"seed $seed draws no null weight beside a non-null one")
+    }
+  }
+
   test("bpe token count laws over random text: bounds, whitespace additivity, case folding") {
     import graft.functions.BpeTokenCount
     val wordGen = Gen.oneOf(
@@ -361,7 +416,7 @@ class PropertySpec extends AnyFunSuite {
   test("epoch shuffle == naive global (md5, doc_id) ordinal on random corpora, any stratum width") {
     import spark.implicits._
     val word = Gen.oneOf("alpha", "beta", "gamma", "delta", "eps")
-    for (seed <- 1L to 3L; nibbles <- Seq(1, 2, 3)) {
+    for (seed <- 1L to 3L; nibbles <- Seq(1, 2, 3, 8)) {
       val texts = sample(Gen.listOfN(50, Gen.listOfN(4, word).map(_.mkString(" "))), seed)
       val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong * 7, t, "s") }
       val dir = java.nio.file.Files.createTempDirectory("graft-ep").toString
