@@ -1,8 +1,10 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** The reference's three fraud-detection pattern queries
   * ("Mechanism Y.py":223-244, README.md:206-214) as composable
@@ -69,8 +71,7 @@ object Patterns {
   def patId1(merchantSummary: DataFrame, custMerchantSummary: DataFrame,
       lowWeightPairs: DataFrame, cfg: Config = DefaultConfig,
       clock: Clock = FixedClock): DataFrame = {
-    val active = merchantSummary
-      .filter(col("total_transactions") > cfg.merchantTxThreshold)
+    val active = activeMerchants(merchantSummary, cfg)
       .select(col("merchant_id").as("upg_mid"))
     val highTx = custMerchantSummary
       .filter(col("transaction_count") > cfg.custTxThreshold)
@@ -116,51 +117,100 @@ object Patterns {
     dfs.map(_.na.fill("")).reduce(_ unionByName _)
 
   // ---- streaming detection stage, shared by both state backends ----
+  //
+  // J1/J2 are a pure function of the static importance dim, so the
+  // low-weight (customer, merchant, category) triples are computed once
+  // per dim and held on the driver ([[LowWeightSet]]). A batch only
+  // looks its own triples up in them: on the driver when the batch is
+  // there too (the JDBC runner), else by a semi-join against the set as
+  // a local frame (the native backend).
 
-  /** J1/J2 of the streaming stage ("Mechanism Y.py":68-89, 221-239).
-    * Caches the static importance dim and its per-(merchant, category)
-    * `percentile_approx` thresholds once, and returns the per-batch
-    * step: the distinct (customer, merchant) pairs of `pairs` (columns
-    * customer, merchant, category) whose importance weight sits below
-    * their group's threshold. The reference's missing-threshold fallback
-    * (weight < 2.0 when p_weight is null, ":236-237") cannot fire here:
-    * the thresholds aggregate the same dim the weight joins from, so a
-    * non-null weight always has a non-null p_weight in its group, and
-    * both joins may be inner. Batch mode's [[lowWeightDetectionPairs]]
-    * stays separate: it uses exact `percentile` for oracle parity. */
-  def streamLowWeightPairs(importanceDim: DataFrame,
-      cfg: Config = DefaultConfig): DataFrame => DataFrame = {
-    val dim = importanceDim.cache()
-    val importance = dim
-      .withColumnRenamed("customer", "i_customer")
-      .withColumnRenamed("merchant", "i_merchant")
-      .withColumnRenamed("category", "i_category")
-    val thresholds = dim
+  /** The low-weight triples of one importance dim, on the driver. Keys
+    * have the dim's own types ([[keySchema]]); a batch key must be cast
+    * to them before a lookup, as the J1 join's type coercion would. */
+  final class LowWeightSet private[Patterns] (val keySchema: StructType,
+      val triples: Set[(Any, Any, Any)]) {
+    def contains(customer: Any, merchant: Any, category: Any): Boolean =
+      triples((customer, merchant, category))
+  }
+
+  /** J1/J2 of the streaming stage ("Mechanism Y.py":68-89, 221-239),
+    * computed once: the distinct (customer, merchant, category) triples
+    * of `importanceDim` whose weight sits below the per-(merchant,
+    * category) `percentile_approx` threshold, collected to the driver.
+    * Triples with a null key are dropped: no join ever matches them.
+    * The reference's missing-threshold fallback (weight < 2.0 when
+    * p_weight is null, ":236-237") cannot fire here: the thresholds
+    * aggregate the same dim the weight comes from, so a non-null weight
+    * always has a non-null p_weight in its group. Batch mode's
+    * [[lowWeightDetectionPairs]] stays separate: it uses exact
+    * `percentile` for oracle parity. */
+  def lowWeightSet(importanceDim: DataFrame, cfg: Config = DefaultConfig): LowWeightSet = {
+    val keys = Seq("customer", "merchant", "category")
+    val thresholds = importanceDim
       .groupBy(col("merchant").as("merchant_key"), col("category").as("category_key"))
       .agg(expr(s"percentile_approx(weight, ${cfg.detectionPercentile}, 10000)")
         .as("p_weight"))
-      .cache()
-    pairs => {
-      val enriched = pairs.join(importance,
-        pairs("customer") === col("i_customer") &&
-          pairs("merchant") === col("i_merchant") &&
-          pairs("category") === col("i_category"))
-      enriched.join(thresholds,
-          enriched("merchant") === thresholds("merchant_key") &&
-          enriched("category") === thresholds("category_key"))
-        .filter(col("weight") < col("p_weight"))
-        .select(col("customer"), col("merchant"))
-        .distinct()
-    }
+    val low = importanceDim.join(thresholds,
+        importanceDim("merchant") === thresholds("merchant_key") &&
+        importanceDim("category") === thresholds("category_key"))
+      .filter(col("weight") < col("p_weight"))
+      .select(keys.map(importanceDim(_)): _*)
+      .na.drop()
+      .distinct()
+    new LowWeightSet(low.schema, low.collect().map(r => (r.get(0), r.get(1), r.get(2))).toSet)
+  }
+
+  /** The per-batch J1/J2 step over a [[lowWeightSet]] computed once:
+    * the distinct (customer, merchant) pairs of `pairs` (columns
+    * customer, merchant, category) that are low-weight triples, as a
+    * left-semi join against the set's broadcast local frame. */
+  def streamLowWeightPairs(importanceDim: DataFrame,
+      cfg: Config = DefaultConfig): DataFrame => DataFrame = {
+    val set = lowWeightSet(importanceDim, cfg)
+    val low = importanceDim.sparkSession.createDataFrame(
+      set.triples.toSeq.map { case (c, m, k) => Row(c, m, k) }.asJava, set.keySchema)
+    pairs => pairs.join(broadcast(low),
+        pairs("customer") === low("customer") && pairs("merchant") === low("merchant") &&
+          pairs("category") === low("category"), "left_semi")
+      .select(col("customer"), col("merchant"))
+      .distinct()
+  }
+
+  /** Merchants past PatId1's volume threshold: at most one row per
+    * merchant, small enough to collect for [[patId1Local]]. */
+  def activeMerchants(merchantSummary: DataFrame, cfg: Config = DefaultConfig): DataFrame =
+    merchantSummary.filter(col("total_transactions") > cfg.merchantTxThreshold)
+
+  /** [[patId1]] with both small sides on the driver: the ids of the
+    * [[activeMerchants]] and the batch's low-weight (customer, merchant)
+    * pairs. Same rows as the two joins: a pair of the customer-merchant
+    * summary is detected when it is one of the low-weight pairs of an
+    * active merchant, so the joins become one hash-set filter (`InSet`)
+    * on the summary scan. No join means no broadcast, and so no Spark
+    * job, for the small sides. The `coalesce(1)` lets the distinct run
+    * without an exchange; it costs no parallelism on a one-partition
+    * JDBC read, and the filter keeps at most one row per candidate pair
+    * (the summary's key). */
+  def patId1Local(custMerchantSummary: DataFrame, activeMerchantIds: Set[Any],
+      lowWeightPairs: Iterable[(Any, Any)], cfg: Config = DefaultConfig,
+      clock: Clock = FixedClock): DataFrame = {
+    val candidates = lowWeightPairs.filter(p => activeMerchantIds(p._2)).toSeq
+      .map { case (c, m) => struct(lit(c).as("customer_id"), lit(m).as("merchant_id")) }
+    custMerchantSummary
+      .filter(col("transaction_count") > cfg.custTxThreshold &&
+        struct(col("customer_id"), col("merchant_id")).isin(candidates: _*))
+      .coalesce(1)
+      .select(detection("PatId1", "UPGRADE", col("customer_id"), col("merchant_id"), clock): _*)
+      .distinct()
   }
 
   /** PatId1–3 over one batch's view of the cumulative state, unioned
-    * ("Mechanism Y.py":221-260). */
-  def detections(merchantSummary: DataFrame, custMerchantSummary: DataFrame,
-      genderSummary: DataFrame, lowWeightPairs: DataFrame, cfg: Config,
-      clock: Clock): DataFrame =
-    unionDetections(Seq(
-      patId1(merchantSummary, custMerchantSummary, lowWeightPairs, cfg, clock),
+    * ("Mechanism Y.py":221-260); PatId1 comes built, by [[patId1]] or
+    * [[patId1Local]]. */
+  def detections(patId1Detections: DataFrame, custMerchantSummary: DataFrame,
+      genderSummary: DataFrame, cfg: Config, clock: Clock): DataFrame =
+    unionDetections(Seq(patId1Detections,
       patId2(custMerchantSummary, cfg, clock),
       patId3(genderSummary, cfg, clock)))
 

@@ -153,17 +153,6 @@ class JdbcUpsertStore(url: String, driverClass: String =
     } finally ps.close()
   }
 
-  /** `delta.collect()` naming this store as the call site of its jobs:
-    * AQE submits stages from pool threads whose stacks name only Spark,
-    * but the call site travels with the caller's local properties. */
-  private def collectAsStore(delta: DataFrame, table: String): Array[Row] = {
-    val sc = delta.sparkSession.sparkContext
-    val keys = Seq("callSite.short", "callSite.long")
-    val saved = keys.map(sc.getLocalProperty)
-    keys.foreach(sc.setLocalProperty(_, s"JdbcUpsertStore.applyDeltas: $table delta"))
-    try delta.collect() finally keys.zip(saved).foreach { case (k, v) => sc.setLocalProperty(k, v) }
-  }
-
   /** One batch's three upserts on the caller's thread, over one
     * connection in ONE transaction. Each delta is collected first (the
     * runner's driver-local frames collect without a Spark job); then, per
@@ -178,7 +167,10 @@ class JdbcUpsertStore(url: String, driverClass: String =
       custMerchantDelta: DataFrame, genderDelta: DataFrame,
       epochId: Option[Long] = None): Unit = {
     val staged = JdbcUpsertStore.tables.zip(Seq(merchantDelta, custMerchantDelta, genderDelta))
-      .map { case (t, delta) => (t, delta.schema, collectAsStore(delta, t.target)) }
+      .map { case (t, delta) =>
+        (t, delta.schema, graft.CallSite.named(delta.sparkSession,
+          s"JdbcUpsertStore.applyDeltas: ${t.target} delta")(delta.collect()))
+      }
       .filter(_._3.nonEmpty)
     if (staged.isEmpty) return
     val lastUpdated = new java.sql.Timestamp(System.currentTimeMillis())

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.CallSite
 import graft.ops.Patterns
 import graft.state.StateStore
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -13,32 +14,42 @@ import scala.jdk.CollectionConverters._
 /** Mechanism-Y analog: the Structured Streaming micro-batch pipeline
   * ("Mechanism Y.py":100-313) re-expressed Spark-first.
   *
-  * Per micro-batch (foreachBatch):
-  *   1. one finest-grain aggregation pass (customer, merchant, gender),
-  *      collected to the driver; an empty result is the empty-batch
-  *      guard ("Mechanism Y.py":124-134)
-  *   2. the three per-batch deltas (A1/A2/A3) roll up from it on the
-  *      driver ([[MicroBatchRunner.rollUp]]) and go to the additive state
-  *      upsert (K2/K3 via [[StateStore]]) as local frames; the JDBC store
-  *      collects them without a Spark job and writes all three over its
-  *      own connection in one transaction
-  *   3. enrichment join against the static importance dim (J1) and the
-  *      cached percentile thresholds (A4/J2), shared with
-  *      [[NativeStatePipeline]] ([[Patterns.streamLowWeightPairs]]). The
-  *      reference's missing-threshold fallback ("Mechanism Y.py":236-237)
-  *      cannot fire: the thresholds aggregate the same dim the weight
-  *      joins from, so a non-null weight always has a non-null threshold
+  * Per micro-batch (foreachBatch); in parity mode three Spark jobs run
+  * besides the flush writes — the batch read, the active merchants and
+  * the detections:
+  *   1. one read of the batch: a projection collected to the driver, with
+  *      no persist and no Spark aggregate; an empty result is the
+  *      empty-batch guard ("Mechanism Y.py":124-134)
+  *   2. the three per-batch deltas (A1/A2/A3) roll up from the collected
+  *      rows on the driver ([[MicroBatchRunner.rollUp]]) and go to the
+  *      additive state upsert (K2/K3 via [[StateStore]]) as local frames;
+  *      the JDBC store collects them without a Spark job and writes all
+  *      three over its own connection in one transaction
+  *   3. J1/J2 on the driver: each row's (customer, merchant, category),
+  *      cast to the importance dim's key types, is looked up in the
+  *      low-weight set [[Patterns.lowWeightSet]] computes once per dim,
+  *      percentile thresholds (A4) included. [[NativeStatePipeline]]
+  *      semi-joins its batch against the same set
+  *      ([[Patterns.streamLowWeightPairs]]). The reference's
+  *      missing-threshold fallback ("Mechanism Y.py":236-237) cannot
+  *      fire: the thresholds aggregate the same dim the weight comes
+  *      from, so a non-null weight always has a non-null threshold
   *   4. the three pattern queries over cumulative state (§2.11,
-  *      [[Patterns.detections]]); the state reads are left unpersisted so
-  *      each pattern's filters push into its own JDBC scan
+  *      [[Patterns.detections]]) in one job: the active merchants are
+  *      collected first (≤ one row per merchant), so that with the
+  *      batch's low-weight pairs PatId1 is a hash-set filter on the
+  *      summary scan ([[Patterns.patId1Local]]), with no join and no
+  *      shuffle. The state reads are left unpersisted so each pattern's
+  *      filters push into its own JDBC scan
   *   5. detections → driver buffer → 50-row single-file CSV flushes
   *      (S6/K4, "Mechanism Y.py":268-277)
   *
+  * Every job names its step as its call site ([[graft.CallSite]]).
+  *
   * Kept reference semantics: PatId2/3 re-emit all qualifying state every
   * batch; detections are collected to the driver (bounded by state size,
-  * a reference parity choice — SURVEY.md §2.11). The batch aggregate is
-  * collected too: it holds at most one row per input row, and a batch
-  * is one chunk file. Fixed vs the reference:
+  * a reference parity choice — SURVEY.md §2.11). The batch is collected
+  * too: a batch is one chunk file. Fixed vs the reference:
   * upserts can be epoch-fenced (idempotent = true), and `scaleMode`
   * switches the three per-batch state reads from full-table to keyed
   * ([[StateStore.merchantSummaryFor]] etc., pruned to the merchants the
@@ -64,7 +75,7 @@ class MicroBatchRunner(
 
   import MicroBatchRunner._
 
-  private val lowWeight = Patterns.streamLowWeightPairs(importanceDim, cfg)
+  private val lowWeight = Patterns.lowWeightSet(importanceDim, cfg)
 
   private val buffer = ArrayBuffer[Row]()
   private var currentEpoch = -1L
@@ -80,69 +91,82 @@ class MicroBatchRunner(
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     }
 
+  private def local(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
+  private def named[T](step: String)(body: => T): T =
+    CallSite.named(spark, s"MicroBatchRunner.$step")(body)
+
   /** The per-batch pipeline; public so batch-mode tests drive it without
     * a streaming query (SURVEY.md §7 step 3: process_batch as a pure-ish
     * function of (batch, state)). */
   def processBatch(batch: DataFrame, epochId: Long): Unit = {
-    // persisted before the aggregation: the aggregate (which doubles as
-    // the empty-batch check) and the enrichment join below both read it
-    batch.persist()
-    try {
-      // One finest-grain pass over the batch, collected to the driver
-      // like the parity detection buffer: at most one row per input row,
-      // and a batch is one chunk file (maxFilesPerTrigger = 1). The
-      // reference aggregates the batch three times
-      // ("Mechanism Y.py":142, 167, 187); here the three state deltas
-      // roll up from this one result on the driver ([[rollUp]]) and reach
-      // the store as local frames — no Spark rollup or write job. The
-      // gender pivot is a conditional count (SURVEY.md §2.5 A3); the
-      // pivot+P11-repair form itself is oracle-checked in
-      // RelOps.aggGenderPivot.
-      val fin = batch.groupBy(col("customer"), col("merchant"), col("gender"))
-        .agg(count(lit(1)).as("cnt"),
-          sum(col("amount").cast(DecimalType(18, 2))).as("amt"))
-        .collect()
-      if (fin.isEmpty) return                         // empty-batch guard
-      currentEpoch = epochId
-      val epoch = if (idempotent) Some(epochId) else None
+    // The batch's one read: a projection collected to the driver like
+    // the parity detection buffer — a batch is one chunk file
+    // (maxFilesPerTrigger = 1). Columns: customer, merchant, gender,
+    // amount, then the low-weight lookup keys — the batch's customer,
+    // merchant and category cast to the importance dim's key types, the
+    // coercion the reference's J1 join applies ("Mechanism Y.py":221).
+    val rows = named("processBatch: batch read")(batch.select(
+      Seq(col("customer"), col("merchant"), col("gender"),
+        col("amount").cast(DecimalType(18, 2))) ++
+        lowWeight.keySchema.map(f => col(f.name).cast(f.dataType)): _*).collect())
+    if (rows.isEmpty) return                          // empty-batch guard
+    currentEpoch = epochId
+    val epoch = if (idempotent) Some(epochId) else None
 
-      val (mDelta, cmDelta, gDelta) = rollUp(fin)
-      def local(rows: Seq[Row], schema: StructType) =
-        spark.createDataFrame(rows.asJava, schema)
-      store.applyDeltas(local(mDelta, merchantStateSchema),
-        local(cmDelta, custMerchantStateSchema), local(gDelta, genderStateSchema), epoch)
+    // The reference aggregates the batch three times ("Mechanism
+    // Y.py":142, 167, 187); here the three state deltas roll up from the
+    // collected rows on the driver ([[rollUp]]) and reach the store as
+    // local frames — no Spark aggregate or write job. The gender pivot is
+    // a conditional count (SURVEY.md §2.5 A3); the pivot+P11-repair form
+    // itself is oracle-checked in RelOps.aggGenderPivot.
+    val (mDelta, cmDelta, gDelta) = rollUp(rows)
+    store.applyDeltas(local(mDelta, merchantStateSchema),
+      local(cmDelta, custMerchantStateSchema), local(gDelta, genderStateSchema), epoch)
 
-      // State reads: scale mode prunes every read to the merchants this
-      // batch touched (taken from the collected aggregate — ≤ batch
-      // rows); parity mode keeps the reference's full re-read. Both
-      // survive a transient store failure via the S5 empty-frame
-      // fallback. Do not persist them: each pattern's filters and
-      // columns push into its own JDBC scan (e.g. PatId2's
-      // `transaction_count >= 3`) only while the read stays unpersisted;
-      // a persisted read ships the whole table every batch.
-      val (ms, cms, gs) =
-        if (scaleMode) {
-          val mids = fin.map(_.getString(1)).distinct.toSeq
-          (stateOrEmpty(merchantStateSchema)(store.merchantSummaryFor(spark, mids)),
-            stateOrEmpty(custMerchantStateSchema)(store.custMerchantSummaryFor(spark, mids)),
-            stateOrEmpty(genderStateSchema)(store.genderSummaryFor(spark, mids)))
-        } else {
-          (stateOrEmpty(merchantStateSchema)(store.merchantSummary(spark)),
-            stateOrEmpty(custMerchantStateSchema)(store.custMerchantSummary(spark)),
-            stateOrEmpty(genderStateSchema)(store.genderSummary(spark)))
-        }
+    // J1/J2: the batch's (customer, merchant) pairs whose triple is in
+    // the low-weight set, looked up on the driver
+    val lowWeightPairs = rows.iterator
+      .filter(r => lowWeight.contains(r.get(4), r.get(5), r.get(6)))
+      .map(r => (r.get(0), r.get(1))).toSet
 
-      val detections = Patterns.detections(ms, cms, gs, lowWeight(batch), cfg, clock())
-      if (scaleMode) writeDetections(detections, outDir, epochId)
-      else {
-        buffer ++= detections.collect()
-        while (buffer.length >= DetectionFileRows) {
-          val chunk = buffer.take(DetectionFileRows).toList
-          buffer.remove(0, DetectionFileRows)
-          flush(chunk)
-        }
+    // State reads: scale mode prunes every read to the merchants this
+    // batch touched (≤ batch rows); parity mode keeps the reference's
+    // full re-read. Both survive a transient store failure via the S5
+    // empty-frame fallback. Do not persist them: each pattern's filters
+    // and columns push into its own JDBC scan (e.g. PatId2's
+    // `transaction_count >= 3`) only while the read stays unpersisted; a
+    // persisted read ships the whole table every batch.
+    val (ms, cms, gs) =
+      if (scaleMode) {
+        val mids = rows.map(_.getString(1)).distinct.toSeq
+        (stateOrEmpty(merchantStateSchema)(store.merchantSummaryFor(spark, mids)),
+          stateOrEmpty(custMerchantStateSchema)(store.custMerchantSummaryFor(spark, mids)),
+          stateOrEmpty(genderStateSchema)(store.genderSummaryFor(spark, mids)))
+      } else {
+        (stateOrEmpty(merchantStateSchema)(store.merchantSummary(spark)),
+          stateOrEmpty(custMerchantStateSchema)(store.custMerchantSummary(spark)),
+          stateOrEmpty(genderStateSchema)(store.genderSummary(spark)))
       }
-    } finally batch.unpersist()
+    // PatId1's merchant side, collected (≤ one row per merchant): with
+    // it and the low-weight pairs on the driver, PatId1 is one filter
+    // on the summary scan whatever the size of the state
+    val active = named("processBatch: active merchants")(
+      Patterns.activeMerchants(ms, cfg).select(col("merchant_id")).collect())
+      .map(_.get(0)).toSet
+    val now = clock()
+    val detections = Patterns.detections(
+      Patterns.patId1Local(cms, active, lowWeightPairs, cfg, now), cms, gs, cfg, now)
+    if (scaleMode) named("processBatch: detections")(writeDetections(detections, outDir, epochId))
+    else {
+      buffer ++= named("processBatch: detections")(detections.collect())
+      while (buffer.length >= DetectionFileRows) {
+        val chunk = buffer.take(DetectionFileRows).toList
+        buffer.remove(0, DetectionFileRows)
+        flush(chunk)
+      }
+    }
   }
 
   /** Trailing flush of a final partial file ("Mechanism Y.py" leaves the
@@ -156,10 +180,10 @@ class MicroBatchRunner(
 
   /** Parity-mode flush: one single-file CSV dir per buffered chunk of
     * exactly [[DetectionFileRows]] rows (the remainder excepted). */
-  private def flush(rows: Seq[Row]): Unit =
-    spark.createDataFrame(rows.asJava, detectionSchema)
+  private def flush(rows: Seq[Row]): Unit = named("flush: detection file")(
+    local(rows, detectionSchema)
       .coalesce(1).write.option("header", "true")
-      .csv(detectionDir(outDir, currentEpoch))
+      .csv(detectionDir(outDir, currentEpoch)))
 
   /** S3 + K5: the chunk stream into foreachBatch. */
   def start(inputDir: String, checkpointDir: String,
@@ -206,27 +230,27 @@ object MicroBatchRunner {
 
   /** The three state deltas — rows of [[merchantStateSchema]],
     * [[custMerchantStateSchema]] and [[genderStateSchema]] — rolled up on
-    * the driver from a batch's collected finest-grain aggregate rows
-    * (customer, merchant, gender, cnt: Long, amt: decimal or null).
+    * the driver from a batch's collected rows (customer, merchant,
+    * gender, amount: decimal or null, …), one row per transaction.
     * Exact, with Spark `sum` semantics: Long counts, BigDecimal amount
     * sums, a sum over null amounts only stays null (the JDBC store adds
     * it as 0), and a gender other than "M"/"F" (null included) adds to
     * neither gender count. Keys may be null; they group like Spark's
     * null group key. */
-  private[graft] def rollUp(fin: Iterable[Row]): (Seq[Row], Seq[Row], Seq[Row]) = {
+  private[graft] def rollUp(rows: Iterable[Row]): (Seq[Row], Seq[Row], Seq[Row]) = {
     val m = mutable.LinkedHashMap.empty[String, Long]
     val cm = mutable.LinkedHashMap.empty[(String, String), (Long, java.math.BigDecimal)]
     val g = mutable.LinkedHashMap.empty[String, (Long, Long)]
-    fin.foreach { r =>
-      val (customer, merchant, gender, n, amt) =
-        (r.getString(0), r.getString(1), r.getString(2), r.getLong(3), r.getDecimal(4))
-      m(merchant) = m.getOrElse(merchant, 0L) + n
+    rows.foreach { r =>
+      val (customer, merchant, gender, amt) =
+        (r.getString(0), r.getString(1), r.getString(2), r.getDecimal(3))
+      m(merchant) = m.getOrElse(merchant, 0L) + 1L
       val (cnt, sum) = cm.getOrElse((customer, merchant), (0L, null))
       cm((customer, merchant)) =
-        (cnt + n, if (sum == null) amt else if (amt == null) sum else sum.add(amt))
+        (cnt + 1L, if (sum == null) amt else if (amt == null) sum else sum.add(amt))
       val (male, female) = g.getOrElse(merchant, (0L, 0L))
-      g(merchant) = (male + (if (gender == "M") n else 0L),
-        female + (if (gender == "F") n else 0L))
+      g(merchant) = (male + (if (gender == "M") 1L else 0L),
+        female + (if (gender == "F") 1L else 0L))
     }
     (m.toSeq.map { case (k, n) => Row(k, n) },
       cm.toSeq.map { case ((c, k), (n, amt)) => Row(c, k, n, amt) },

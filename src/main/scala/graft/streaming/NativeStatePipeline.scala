@@ -117,8 +117,10 @@ class NativeStatePipeline(
         .select(col("customer_id").as("customer"),
           col("merchant_id").as("merchant"), col("category"))
 
+      val now = clock()
       MicroBatchRunner.writeDetections(
-        Patterns.detections(ms, cms, gs, lowWeight(pairs), cfg, clock()), outDir, epochId)
+        Patterns.detections(Patterns.patId1(ms, cms, lowWeight(pairs), cfg, now),
+          cms, gs, cfg, now), outDir, epochId)
     } finally out.unpersist()
   }
 

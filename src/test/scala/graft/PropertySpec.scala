@@ -247,6 +247,111 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("parity detections after each random batch == plain-Scala reference rules, Long- and String-keyed dims") {
+    import scala.jdk.CollectionConverters._
+    val cfg = Patterns.Config(merchantTxThreshold = 15L, custTxThreshold = 1L,
+      detectionPercentile = 0.5, childTxMin = 2L, childAvgMax = 4000.0, deiFemaleMin = 1L)
+    val clock = Patterns.FixedClock
+    // the dim: customers 0-5, merchants 0-3, categories k0/k1, a quarter
+    // of the weights null; batches also draw customers 6-7, which have
+    // no importance row
+    val impGen = for {
+      c <- Gen.choose(0, 5); m <- Gen.choose(0, 3); k <- Gen.choose(0, 1)
+      w <- Gen.frequency(1 -> Gen.const(None), 3 -> Gen.choose(0, 40).map(i => Some(i / 10.0)))
+    } yield (c, m, s"k$k", w)
+    // (customer, merchant, category, gender, amount in cents); merchant
+    // traffic is skewed so they cross PatId1's volume threshold in
+    // different batches (m3 never does)
+    val rowGen = for {
+      c <- Gen.choose(0, 7); zero <- Gen.frequency(4 -> false, 1 -> true)
+      m <- Gen.frequency(6 -> 0, 3 -> 1, 2 -> 2, 1 -> 3); k <- Gen.choose(0, 1)
+      gender <- Gen.oneOf(Some("M"), Some("F"), None)
+      cents <- Gen.frequency(1 -> Gen.const(None), 4 -> Gen.choose(1L, 999999L).map(Some(_)))
+    } yield (c, zero, m, s"k$k", gender.orNull, cents)
+    val fired = scala.collection.mutable.Map.empty[(Boolean, String), Int].withDefaultValue(0)
+    for (longKeys <- Seq(true, false); seed <- 1L to 2L) {
+      val imp = sample(Gen.listOfN(30, impGen), seed)
+      // Long keys: batch ids are numeric strings, some with a leading
+      // zero, so the lookup must cast them as the J1 join does ("07" is
+      // customer 7); String keys: the dim holds the batch's own strings
+      def custId(c: Int, zero: Boolean) = if (longKeys) (if (zero) s"0$c" else s"$c") else s"c$c"
+      def merchId(m: Int) = if (longKeys) s"$m" else s"m$m"
+      val (keyType, dimRows) =
+        if (longKeys) (LongType, imp.map { case (c, m, k, w) =>
+          Row(c.toLong, m.toLong, k, w.map(Double.box).orNull) })
+        else (StringType, imp.map { case (c, m, k, w) =>
+          Row(s"c$c", s"m$m", k, w.map(Double.box).orNull) })
+      val dim = spark.createDataFrame(dimRows.asJava, StructType(Seq(
+        StructField("customer", keyType), StructField("merchant", keyType),
+        StructField("category", StringType), StructField("weight", DoubleType))))
+
+      // the reference rules in plain Scala: per-(merchant, category)
+      // nearest-rank percentile of the non-null weights, and a triple is
+      // low-weight when one of its dim rows weighs less
+      val pWeight = imp.groupBy(i => (i._2, i._3)).view.mapValues { g =>
+        val ws = g.flatMap(_._4).sorted
+        ws.lift(math.max(math.ceil(cfg.detectionPercentile * ws.length).toInt - 1, 0))
+      }.toMap
+      val lowTriples = imp.collect { case (c, m, k, Some(w)) if pWeight((m, k)).exists(w < _) =>
+        (c, m, k) }.toSet
+      def isLow(customer: String, merchant: String, k: String): Boolean = {
+        val (c, m) = if (longKeys) (customer.toInt, merchant.toInt)
+          else (customer.stripPrefix("c").toInt, merchant.stripPrefix("m").toInt)
+        lowTriples((c, m, k))
+      }
+
+      val store = JdbcUpsertStore.derbyMemory(s"detect$seed-$longKeys-${System.nanoTime()}")
+      val outDir = java.nio.file.Files.createTempDirectory("graft-detect").toString
+      try {
+        val runner = new MicroBatchRunner(spark, store, dim, outDir, cfg, () => clock)
+        val seen = scala.collection.mutable.Set.empty[String]
+        var history = Seq.empty[(String, String, String, String, Option[Long])]
+        for (b <- 0 until 4) {
+          val batch = sample(Gen.listOfN(40, rowGen), seed * 100 + b).map {
+            case (c, zero, m, k, gender, cents) => (custId(c, zero), merchId(m), k, gender, cents)
+          }
+          runner.processBatch(txFrame(batch.map { case (c, m, k, gender, cents) =>
+            Row(0, c, "3", gender, "28007", m, "28007", k,
+              cents.map(a => Double.box(a / 100.0)).orNull, 0)
+          }), b.toLong)
+          runner.flushRemainder()
+          val dirs = new java.io.File(outDir).listFiles().map(_.toString).filterNot(seen)
+          seen ++= dirs
+          val got = if (dirs.isEmpty) Seq.empty
+            else spark.read.option("header", "true").csv(dirs: _*).collect().toSeq
+              .map(_.toSeq.map(v => Option(v).fold("")(_.toString)))
+
+          history ++= batch
+          val ms = history.groupBy(_._2).view.mapValues(_.length.toLong).toMap
+          val cms = history.groupBy(r => (r._1, r._2)).view.mapValues { rs =>
+            (rs.length.toLong, rs.flatMap(_._5).sum)
+          }.toMap
+          val gs = history.groupBy(_._2).view.mapValues { rs =>
+            (rs.count(_._4 == "M").toLong, rs.count(_._4 == "F").toLong)
+          }.toMap
+          def det(id: String, action: String, c: String, m: String) =
+            Seq(clock.ystart, clock.now, id, action, c, m)
+          val lowPairs = batch.collect { case (c, m, k, _, _) if isLow(c, m, k) => (c, m) }.toSet
+          val want =
+            lowPairs.toSeq.collect { case (c, m)
+                if ms(m) > cfg.merchantTxThreshold && cms((c, m))._1 > cfg.custTxThreshold =>
+              det("PatId1", "UPGRADE", c, m) } ++
+            cms.toSeq.collect { case ((c, m), (n, cents))
+                if n >= cfg.childTxMin && cents / 100.0 / n < cfg.childAvgMax =>
+              det("PatId2", "CHILD", c, m) } ++
+            gs.toSeq.collect { case (m, (male, female))
+                if female < male && female > cfg.deiFemaleMin =>
+              det("PatId3", "DEI-NEEDED", "", m) }
+          def sorted(rows: Seq[Seq[String]]) = rows.sortBy(_.mkString("\u0000"))
+          assert(sorted(got) == sorted(want), s"longKeys=$longKeys seed $seed batch $b")
+          want.foreach(r => fired((longKeys, r(2))) += 1)
+        }
+      } finally store.close()
+    }
+    for (longKeys <- Seq(true, false); id <- Seq("PatId1", "PatId2", "PatId3"))
+      assert(fired((longKeys, id)) > 0, s"longKeys=$longKeys: $id never fires")
+  }
+
   test("bpe token count laws over random text: bounds, whitespace additivity, case folding") {
     import graft.functions.BpeTokenCount
     val wordGen = Gen.oneOf(

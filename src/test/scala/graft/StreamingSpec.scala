@@ -271,6 +271,84 @@ class StreamingSpec extends AnyFunSuite {
     assert(cachedJdbc.isEmpty, cachedJdbc)
   }
 
+  /** One parity `processBatch` over the whole of `refTx()` on a fresh
+    * store: the call site of every Spark job it starts, in submission
+    * order, and the executed plan of every action.
+    * The batch is cached and counted first, so its own lineage starts
+    * no job inside the window. */
+  private def parityBatchJobs(): (Seq[String], Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+    val sc = spark.sparkContext
+    val barrier = "graft-job-barrier"
+    // (job group, call site) per job; a job started without a named
+    // call site shows its newest stage's name, which is Spark's own
+    val jobs = new LinkedBlockingQueue[(String, String)]()
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        jobs.put((props.map(_.getProperty("spark.jobGroup.id", "")).getOrElse(""),
+          props.flatMap(p => Option(p.getProperty("callSite.short")))
+            .getOrElse(e.stageInfos.maxBy(_.stageId).name)))
+      }
+    }
+    val plans = new LinkedBlockingQueue[QueryExecution]()
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.put(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.put(qe)
+    }
+    val base = Files.createTempDirectory("graft-jobs").toString
+    val store = JdbcUpsertStore.derby(s"$base/derby")
+    val batch = refTx().cache()
+    try {
+      batch.count()
+      val runner = new MicroBatchRunner(spark, store, Tables.importance(spark, sf),
+        s"$base/out", clock = () => Patterns.FixedClock)
+      sc.addSparkListener(jobListener)
+      spark.listenerManager.register(planListener)
+      try {
+        runner.processBatch(batch, 0L)
+        // the listener buses deliver in order: once the barrier shows,
+        // every job and action of processBatch has too
+        sc.setJobGroup(barrier, barrier)
+        try spark.range(1).toDF(barrier).collect() finally sc.clearJobGroup()
+      } finally {
+        sc.removeSparkListener(jobListener)
+        spark.listenerManager.unregister(planListener)
+      }
+      def drain[T](q: LinkedBlockingQueue[T])(isBarrier: T => Boolean): List[T] =
+        Iterator.continually(Option(q.poll(60, TimeUnit.SECONDS))
+            .getOrElse(fail("listener bus stalled")))
+          .takeWhile(!isBarrier(_)).toList
+      (drain(jobs)(_._1 == barrier).map(_._2),
+        drain(plans)(_.analyzed.output.exists(_.name == barrier)).map(_.executedPlan))
+    } finally {
+      batch.unpersist()
+      store.close()
+    }
+  }
+
+  test("parity processBatch: every Spark job names the runner or the store as its call site") {
+    val (jobs, _) = parityBatchJobs()
+    assert(jobs.nonEmpty)
+    val unnamed = jobs.filterNot(n =>
+      n.startsWith("MicroBatchRunner.") || n.startsWith("JdbcUpsertStore."))
+    assert(unnamed.isEmpty, s"jobs without a graft call site: $unnamed")
+  }
+
+  test("parity processBatch: at most 3 Spark jobs besides its flush writes, no sort-merge join") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    val (jobs, plans) = parityBatchJobs()
+    val nonFlush = jobs.filterNot(_.startsWith("MicroBatchRunner.flush"))
+    assert(nonFlush.length <= 3, s"${nonFlush.length} jobs besides the flush writes: $nonFlush")
+    object Aqe extends AdaptiveSparkPlanHelper
+    val smj = plans.flatMap(p => Aqe.collect(p) { case j: SortMergeJoinExec => j })
+    assert(smj.isEmpty, smj.mkString("\n"))
+  }
+
   test("scale mode: detections write distributed (no driver buffer), files sized to the batch contract") {
     val base = Files.createTempDirectory("graft-scale-sink").toString
     val store = JdbcUpsertStore.derby(s"$base/derby")
