@@ -21,7 +21,8 @@ import org.apache.spark.sql.functions._
   * store entirely with [[NativeStatePipeline]] (state in Spark's own
   * checkpointed state store via flatMapGroupsWithState); `tws` is the
   * same pipeline on the `transformWithState` API (per-entry MapState on
-  * RocksDB) — the modes give an apples-to-apples throughput ladder.
+  * RocksDB) — the modes give an apples-to-apples throughput ladder. The
+  * native modes read their state tables back from the query's checkpoint.
   *
   * Prints per-batch progress, final state-table sizes, detection file
   * inventory, and end-to-end throughput.
@@ -34,6 +35,8 @@ object PipelineDemo {
     val mode = if (args.length > 3) args(3) else "parity"
     val scaleMode = mode == "scale"
     val nativeMode = mode == "native" || mode == "tws"
+    val api = if (mode == "tws") NativeStatePipeline.TransformWithStateApi
+      else NativeStatePipeline.FlatMapGroups
 
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
@@ -76,10 +79,7 @@ object PipelineDemo {
 
     println(s"[mechanism-y] mode: $mode")
     val secs = if (nativeMode) {
-      val pipeline = new NativeStatePipeline(spark, importanceDim,
-        s"$base/out", s"$base/state",
-        api = if (mode == "tws") NativeStatePipeline.TransformWithStateApi
-          else NativeStatePipeline.FlatMapGroups)
+      val pipeline = new NativeStatePipeline(spark, importanceDim, s"$base/out", api = api)
       val q = pipeline.start(s"$base/in", s"$base/cp", triggerInterval = "1 second")
       q.processAllAvailable()
       q.stop()
@@ -97,9 +97,9 @@ object PipelineDemo {
     println(f"[mechanism-y] processed $nRows rows in $secs%.1f s " +
       f"(${nRows / secs}%.0f rows/s end-to-end incl. feed + state round-trips)")
     val stateTables = if (nativeMode) Seq(
-        "merchant_summary" -> NativeStatePipeline.merchantSummary(spark, s"$base/state"),
-        "customer_merchant_summary" -> NativeStatePipeline.custMerchantSummary(spark, s"$base/state"),
-        "merchant_gender_summary" -> NativeStatePipeline.genderSummary(spark, s"$base/state"))
+        "merchant_summary" -> NativeStatePipeline.merchantSummary(spark, s"$base/cp", api),
+        "customer_merchant_summary" -> NativeStatePipeline.custMerchantSummary(spark, s"$base/cp", api),
+        "merchant_gender_summary" -> NativeStatePipeline.genderSummary(spark, s"$base/cp", api))
       else Seq(
         "merchant_summary" -> store.merchantSummary(spark),
         "customer_merchant_summary" -> store.custMerchantSummary(spark),

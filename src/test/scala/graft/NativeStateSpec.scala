@@ -5,6 +5,7 @@ import graft.ingest.ChunkFeeder
 import graft.ops.Patterns
 import graft.state.JdbcUpsertStore
 import graft.streaming.{MicroBatchRunner, NativeStatePipeline}
+import graft.streaming.NativeStatePipeline.{FlatMapGroups, TransformWithStateApi}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -56,8 +57,7 @@ class NativeStateSpec extends AnyFunSuite {
 
       // native fMGWS pipeline over the SAME chunk files, own checkpoint
       val native = new NativeStatePipeline(spark, Tables.importance(spark, sf),
-        s"$base/out-native", s"$base/state-native",
-        clock = () => Patterns.FixedClock)
+        s"$base/out-native", clock = () => Patterns.FixedClock)
       val q2 = native.start(s"$base/in", s"$base/cp-native", "1 second")
       q2.processAllAvailable(); q2.stop()
 
@@ -68,15 +68,15 @@ class NativeStateSpec extends AnyFunSuite {
 
       // state parity, all three tables
       assert(sameRows(
-        NativeStatePipeline.merchantSummary(spark, s"$base/state-native"),
+        NativeStatePipeline.merchantSummary(spark, s"$base/cp-native", FlatMapGroups),
         store.merchantSummary(spark)))
       val castAmt = (df: DataFrame) => df.withColumn("total_amount_sum",
         col("total_amount_sum").cast(DecimalType(28, 2)))
       assert(sameRows(
-        castAmt(NativeStatePipeline.custMerchantSummary(spark, s"$base/state-native")),
+        castAmt(NativeStatePipeline.custMerchantSummary(spark, s"$base/cp-native", FlatMapGroups)),
         castAmt(store.custMerchantSummary(spark))))
       assert(sameRows(
-        NativeStatePipeline.genderSummary(spark, s"$base/state-native"),
+        NativeStatePipeline.genderSummary(spark, s"$base/cp-native", FlatMapGroups),
         store.genderSummary(spark)))
     } finally store.close()
   }
@@ -87,12 +87,12 @@ class NativeStateSpec extends AnyFunSuite {
     ChunkFeeder.feed(tx, s"$base/in", chunkSize = 2000)
 
     val fmgws = new NativeStatePipeline(spark, Tables.importance(spark, sf),
-      s"$base/out-fmgws", s"$base/state-fmgws", clock = () => Patterns.FixedClock)
+      s"$base/out-fmgws", clock = () => Patterns.FixedClock)
     val q1 = fmgws.start(s"$base/in", s"$base/cp-fmgws", "1 second")
     q1.processAllAvailable(); q1.stop()
 
     val tws = new NativeStatePipeline(spark, Tables.importance(spark, sf),
-      s"$base/out-tws", s"$base/state-tws", clock = () => Patterns.FixedClock,
+      s"$base/out-tws", clock = () => Patterns.FixedClock,
       api = NativeStatePipeline.TransformWithStateApi)
     val q2 = tws.start(s"$base/in", s"$base/cp-tws", "1 second")
     q2.processAllAvailable(); q2.stop()
@@ -100,101 +100,14 @@ class NativeStateSpec extends AnyFunSuite {
     assert(detections(s"$base/out-fmgws").nonEmpty)
     assert(detections(s"$base/out-tws") == detections(s"$base/out-fmgws"))
     assert(sameRows(
-      NativeStatePipeline.merchantSummary(spark, s"$base/state-tws"),
-      NativeStatePipeline.merchantSummary(spark, s"$base/state-fmgws")))
+      NativeStatePipeline.merchantSummary(spark, s"$base/cp-tws", TransformWithStateApi),
+      NativeStatePipeline.merchantSummary(spark, s"$base/cp-fmgws", FlatMapGroups)))
     assert(sameRows(
-      NativeStatePipeline.custMerchantSummary(spark, s"$base/state-tws"),
-      NativeStatePipeline.custMerchantSummary(spark, s"$base/state-fmgws")))
+      NativeStatePipeline.custMerchantSummary(spark, s"$base/cp-tws", TransformWithStateApi),
+      NativeStatePipeline.custMerchantSummary(spark, s"$base/cp-fmgws", FlatMapGroups)))
     assert(sameRows(
-      NativeStatePipeline.genderSummary(spark, s"$base/state-tws"),
-      NativeStatePipeline.genderSummary(spark, s"$base/state-fmgws")))
-  }
-
-  test("change-log compaction: readout unchanged, scans only snapshot + tail") {
-    val base = Files.createTempDirectory("graft-compact").toString
-    val tx = refTx().cache()
-    ChunkFeeder.feed(tx, s"$base/in", chunkSize = 500) // many epochs
-
-    // control: no compaction
-    val ctl = new NativeStatePipeline(spark, Tables.importance(spark, sf),
-      s"$base/out-ctl", s"$base/state-ctl", clock = () => Patterns.FixedClock,
-      compactEvery = 0)
-    val q1 = ctl.start(s"$base/in", s"$base/cp-ctl", "1 second")
-    q1.processAllAvailable(); q1.stop()
-
-    // compacting pipeline over the same input
-    val cmp = new NativeStatePipeline(spark, Tables.importance(spark, sf),
-      s"$base/out-cmp", s"$base/state-cmp", clock = () => Patterns.FixedClock,
-      compactEvery = 3)
-    val q2 = cmp.start(s"$base/in", s"$base/cp-cmp", "1 second")
-    q2.processAllAvailable(); q2.stop()
-
-    // the readout is identical across all three tables
-    assert(sameRows(
-      NativeStatePipeline.merchantSummary(spark, s"$base/state-cmp"),
-      NativeStatePipeline.merchantSummary(spark, s"$base/state-ctl")))
-    assert(sameRows(
-      NativeStatePipeline.custMerchantSummary(spark, s"$base/state-cmp"),
-      NativeStatePipeline.custMerchantSummary(spark, s"$base/state-ctl")))
-    assert(sameRows(
-      NativeStatePipeline.genderSummary(spark, s"$base/state-cmp"),
-      NativeStatePipeline.genderSummary(spark, s"$base/state-ctl")))
-
-    // folded epochs are GONE from the log: at most compactEvery-1 tail
-    // partitions remain, and a snapshot exists
-    def epochDirs(dir: String) = Option(new java.io.File(dir).listFiles())
-      .getOrElse(Array()).filter(f => f.isDirectory && f.getName.startsWith("epoch="))
-    val ctlEpochs = epochDirs(s"$base/state-ctl/log").length
-    val cmpEpochs = epochDirs(s"$base/state-cmp/log").length
-    assert(ctlEpochs > 3, s"control should have many epochs, had $ctlEpochs")
-    assert(cmpEpochs < 3, s"compacted tail should be < compactEvery, had $cmpEpochs")
-    val snaps = Option(new java.io.File(s"$base/state-cmp/snapshot").listFiles())
-      .getOrElse(Array()).filter(f => f.isDirectory && f.getName.startsWith("v="))
-    assert(snaps.length == 1, "exactly one snapshot version survives")
-    // detections are unaffected by compaction
-    assert(detections(s"$base/out-cmp") == detections(s"$base/out-ctl"))
-    // compact() is idempotent: a second run changes nothing
-    val before = NativeStatePipeline.merchantSummary(spark, s"$base/state-cmp").collect().toSet
-    NativeStatePipeline.compact(spark, s"$base/state-cmp")
-    val after = NativeStatePipeline.merchantSummary(spark, s"$base/state-cmp").collect().toSet
-    assert(after == before)
-  }
-
-  test("a torn snapshot (no _SUCCESS) is ignored by readout and compaction") {
-    // compact()'s snapshot overwrite is not atomic: a crash mid-write
-    // leaves a newest v=N dir without its completion marker while the
-    // rows it was folding survive in the previous snapshot + log. The
-    // readout must IGNORE the torn dir — preferring it for being newest
-    // silently drops every row folded into the previous snapshot (the
-    // log no longer has them). Regression for the fix in
-    // completeSnapshots.
-    val base = Files.createTempDirectory("graft-torn").toString
-    val tx = refTx().cache()
-    ChunkFeeder.feed(tx, s"$base/in", chunkSize = 500)
-    val p = new NativeStatePipeline(spark, Tables.importance(spark, sf),
-      s"$base/out", s"$base/state", clock = () => Patterns.FixedClock,
-      compactEvery = 3)
-    val q = p.start(s"$base/in", s"$base/cp", "1 second")
-    q.processAllAvailable(); q.stop()
-    val before = NativeStatePipeline
-      .merchantSummary(spark, s"$base/state").collect().toSet
-    assert(before.nonEmpty)
-    // fabricate the torn newest snapshot: a data-less dir with a stray
-    // part file and NO _SUCCESS
-    val torn = new java.io.File(s"$base/state/snapshot/v=999999")
-    torn.mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(torn.getPath, "part-00000.parquet"),
-      Array[Byte](0, 1, 2, 3))
-    val after = NativeStatePipeline
-      .merchantSummary(spark, s"$base/state").collect().toSet
-    assert(after == before,
-      "readout changed after a torn snapshot appeared — torn dir not ignored")
-    // compaction still folds correctly with the torn dir present
-    NativeStatePipeline.compact(spark, s"$base/state")
-    val after2 = NativeStatePipeline
-      .merchantSummary(spark, s"$base/state").collect().toSet
-    assert(after2 == before)
+      NativeStatePipeline.genderSummary(spark, s"$base/cp-tws", TransformWithStateApi),
+      NativeStatePipeline.genderSummary(spark, s"$base/cp-fmgws", FlatMapGroups)))
   }
 
   test("TWS pipeline does not leak the RocksDB provider conf into the caller's session") {
@@ -204,14 +117,14 @@ class NativeStateSpec extends AnyFunSuite {
     val tx = refTx().limit(1000).cache()
     ChunkFeeder.feed(tx, s"$base/in", chunkSize = 1000)
     val tws = new NativeStatePipeline(spark, Tables.importance(spark, sf),
-      s"$base/out", s"$base/state", clock = () => Patterns.FixedClock,
+      s"$base/out", clock = () => Patterns.FixedClock,
       api = NativeStatePipeline.TransformWithStateApi)
     val q = tws.start(s"$base/in", s"$base/cp", "1 second")
     q.processAllAvailable(); q.stop()
     assert(spark.conf.getOption(key) == before,
       "starting a TWS query must not mutate the shared session conf")
     // state actually landed (the cloned session really ran RocksDB)
-    assert(NativeStatePipeline.merchantSummary(spark, s"$base/state")
+    assert(NativeStatePipeline.merchantSummary(spark, s"$base/cp", TransformWithStateApi)
       .agg(sum(col("total_transactions"))).collect()(0).getLong(0) == tx.count())
   }
 
@@ -222,22 +135,22 @@ class NativeStateSpec extends AnyFunSuite {
 
     ChunkFeeder.feed(half, s"$base/in", chunkSize = 1000)
     val p1 = new NativeStatePipeline(spark, Tables.importance(spark, sf),
-      s"$base/out", s"$base/state", clock = () => Patterns.FixedClock,
+      s"$base/out", clock = () => Patterns.FixedClock,
       api = NativeStatePipeline.TransformWithStateApi)
     val q1 = p1.start(s"$base/in", s"$base/cp", "1 second")
     q1.processAllAvailable(); q1.stop()
-    val afterFirst = NativeStatePipeline.merchantSummary(spark, s"$base/state")
+    val afterFirst = NativeStatePipeline.merchantSummary(spark, s"$base/cp", TransformWithStateApi)
       .agg(sum(col("total_transactions"))).collect()(0).getLong(0)
     assert(afterFirst == half.count())
 
     // a BRAND-NEW pipeline on the same checkpoint resumes RocksDB state
     ChunkFeeder.feed(tx, s"$base/in", chunkSize = 1000)
     val p2 = new NativeStatePipeline(spark, Tables.importance(spark, sf),
-      s"$base/out", s"$base/state", clock = () => Patterns.FixedClock,
+      s"$base/out", clock = () => Patterns.FixedClock,
       api = NativeStatePipeline.TransformWithStateApi)
     val q2 = p2.start(s"$base/in", s"$base/cp", "1 second")
     q2.processAllAvailable(); q2.stop()
-    val afterSecond = NativeStatePipeline.merchantSummary(spark, s"$base/state")
+    val afterSecond = NativeStatePipeline.merchantSummary(spark, s"$base/cp", TransformWithStateApi)
       .agg(sum(col("total_transactions"))).collect()(0).getLong(0)
     assert(afterSecond == afterFirst + tx.count())
   }
@@ -249,21 +162,89 @@ class NativeStateSpec extends AnyFunSuite {
 
     ChunkFeeder.feed(half, s"$base/in", chunkSize = 1000)
     val p1 = new NativeStatePipeline(spark, Tables.importance(spark, sf),
-      s"$base/out", s"$base/state", clock = () => Patterns.FixedClock)
+      s"$base/out", clock = () => Patterns.FixedClock)
     val q1 = p1.start(s"$base/in", s"$base/cp", "1 second")
     q1.processAllAvailable(); q1.stop()
-    val afterFirst = NativeStatePipeline.merchantSummary(spark, s"$base/state")
+    val afterFirst = NativeStatePipeline.merchantSummary(spark, s"$base/cp", FlatMapGroups)
       .agg(sum(col("total_transactions"))).collect()(0).getLong(0)
     assert(afterFirst == half.count())
 
     // a BRAND-NEW pipeline on the same checkpoint resumes the state
     ChunkFeeder.feed(tx, s"$base/in", chunkSize = 1000)
     val p2 = new NativeStatePipeline(spark, Tables.importance(spark, sf),
-      s"$base/out", s"$base/state", clock = () => Patterns.FixedClock)
+      s"$base/out", clock = () => Patterns.FixedClock)
     val q2 = p2.start(s"$base/in", s"$base/cp", "1 second")
     q2.processAllAvailable(); q2.stop()
-    val afterSecond = NativeStatePipeline.merchantSummary(spark, s"$base/state")
+    val afterSecond = NativeStatePipeline.merchantSummary(spark, s"$base/cp", FlatMapGroups)
       .agg(sum(col("total_transactions"))).collect()(0).getLong(0)
     assert(afterSecond == afterFirst + tx.count())
+  }
+
+  /** The Spark jobs the stream itself starts in one native run of at
+    * least 18 one-chunk epochs: the call site of each job carrying
+    * `streaming.sql.batchId`, by batch id. */
+  private def nativeRunJobs(api: NativeStatePipeline.StateApi): Map[Long, Seq[String]] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    val sc = spark.sparkContext
+    val barrier = "graft-job-barrier"
+    val jobs = new ConcurrentLinkedQueue[(Long, String)]()
+    val barrierSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        def prop(k: String) = props.flatMap(p => Option(p.getProperty(k)))
+        if (prop("spark.jobGroup.id").contains(barrier)) barrierSeen.countDown()
+        prop("streaming.sql.batchId").foreach(id => jobs.add(id.toLong ->
+          prop("callSite.short").getOrElse(e.stageInfos.maxBy(_.stageId).name)))
+      }
+    }
+    val base = Files.createTempDirectory("graft-native-jobs").toString
+    val tx = refTx().cache()
+    val chunks = ChunkFeeder.feed(tx, s"$base/in", chunkSize = (tx.count() / 18).toInt)
+    val p = new NativeStatePipeline(spark, Tables.importance(spark, sf),
+      s"$base/out", clock = () => Patterns.FixedClock, api = api)
+    sc.addSparkListener(listener)
+    try {
+      val q = p.start(s"$base/in", s"$base/cp", "0 seconds")
+      q.processAllAvailable(); q.stop()
+      // the listener bus delivers in order: once the barrier shows, every
+      // job of the run has too
+      sc.setJobGroup(barrier, barrier)
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      assert(barrierSeen.await(60, TimeUnit.SECONDS), "listener bus stalled")
+    } finally {
+      sc.removeSparkListener(listener)
+      tx.unpersist()
+    }
+    val byBatch = jobs.toArray(Array.empty[(Long, String)]).toSeq.groupMap(_._1)(_._2)
+    assert(chunks >= 18 && byBatch.size == chunks,
+      s"${byBatch.size} epochs for $chunks one-chunk files")
+    byBatch
+  }
+
+  private lazy val runJobs = Seq(FlatMapGroups, TransformWithStateApi)
+    .map(api => api -> nativeRunJobs(api)).toMap
+
+  test("native epoch: every Spark job of the stream names NativeStatePipeline as its call site") {
+    for ((api, byBatch) <- runJobs) {
+      val unnamed = byBatch.values.flatten.filterNot(_.startsWith("NativeStatePipeline."))
+      assert(unnamed.isEmpty, s"$api: jobs without a NativeStatePipeline call site: $unnamed")
+    }
+  }
+
+  test("native epoch: at most 6 Spark jobs in every epoch of a run of 18 or more one-chunk epochs") {
+    for ((api, byBatch) <- runJobs; (batchId, jobs) <- byBatch)
+      assert(jobs.length <= 6, s"$api epoch $batchId ran ${jobs.length} jobs: $jobs")
+  }
+
+  test("readout on a checkpoint with no committed batch fails and names the checkpoint") {
+    val cp = Files.createTempDirectory("graft-native-nocommit").toString
+    for (api <- Seq(FlatMapGroups, TransformWithStateApi)) {
+      val e = intercept[Exception](
+        NativeStatePipeline.merchantSummary(spark, cp, api).collect())
+      assert(e.getMessage.contains("STDS_COMMITTED_BATCH_UNAVAILABLE"), e.getMessage)
+      assert(e.getMessage.contains(cp), e.getMessage)
+    }
   }
 }
