@@ -1,7 +1,9 @@
 package graft.ingest
 
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row}
+import scala.jdk.CollectionConverters._
 
 /** Mechanism-X analog (mechanism_x/mechanism_x.py): slice a transaction
   * table into fixed-size CSV chunk files dropped into a watched directory
@@ -32,6 +34,36 @@ object ChunkFeeder {
     case other => other.toString
   }
 
+  /** Publish `bytes` as `dir/name` through the hidden `.<name>.tmp` and a
+    * rename, so no lister (the file-stream source, a glob) sees a
+    * half-written file. Called on the driver and on executors. */
+  private[graft] def publish(fs: FileSystem, dir: Path, name: String,
+      bytes: Array[Byte]): Unit = {
+    val tmp = new Path(dir, s".$name.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(bytes) finally out.close()
+    val dst = new Path(dir, name)
+    // rename reports failure by returning false; a swallowed false would
+    // leave the file as a hidden .tmp no lister sees
+    if (!fs.rename(tmp, dst))
+      throw new java.io.IOException(s"publish rename failed: $tmp -> $dst")
+  }
+
+  /** Chunk file `part` of a feed, in the reference name scheme
+    * (mechanism_x.py:80-82): <prefix>_<YYYYMMDD_HHMMSS>_<uuid8>_part<n>.csv
+    * — the ts+uuid make two feeds into one directory unique, so the
+    * stream's seen-file checkpoint log never confuses a refeed with an
+    * already-consumed chunk. */
+  private def publishChunk(fs: FileSystem, dir: Path, namePrefix: String, part: Int,
+      header: String, rows: Seq[Row]): Unit = {
+    val uuid8 = java.util.UUID.randomUUID().toString.split("-")(0)
+    val body = (header +: rows.map(row =>
+      (0 until row.length).map(i => csvEscape(row.get(i))).mkString(",")))
+      .mkString("", "\n", "\n")
+    publish(fs, dir, f"${namePrefix}_${chunkTimestamp()}_${uuid8}_part$part%05d.csv",
+      body.getBytes(StandardCharsets.UTF_8))
+  }
+
   /** Write ceil(n/chunkSize) chunk files; returns the number written.
     * intervalMs > 0 paces uploads like the reference's 1/s sleep.
     * The writes go through the Hadoop FileSystem API, so `outDir` may
@@ -39,49 +71,18 @@ object ChunkFeeder {
     * reference's boto3 upload target (mechanism_x.py:80-82). */
   def feed(df: DataFrame, outDir: String, chunkSize: Int = 10000,
       intervalMs: Long = 0L, namePrefix: String = "transactions_chunk"): Int = {
-    val dir = new org.apache.hadoop.fs.Path(outDir)
+    val dir = new Path(outDir)
     val fs = dir.getFileSystem(
       df.sparkSession.sparkContext.hadoopConfiguration)
     fs.setWriteChecksum(false) // no .crc sidecars in the watched dir
     fs.mkdirs(dir)
     val header = df.columns.mkString(",")
-    val it = df.toLocalIterator()
     var part = 0
-    val buf = new scala.collection.mutable.ArrayBuffer[String](chunkSize)
-    def flush(): Unit = if (buf.nonEmpty) {
-      // reference name scheme (mechanism_x.py:80-82):
-      // <prefix>_<YYYYMMDD_HHMMSS>_<uuid8>_part<n>.csv — the ts+uuid make
-      // two feeds into one directory unique, so the stream's seen-file
-      // checkpoint log never confuses a refeed with an already-consumed
-      // chunk. The timestamp is IST wall-clock (mechanism_x.py:48 uses
-      // the reference's Asia/Kolkata runtime zone).
-      val ts = chunkTimestamp()
-      val uuid8 = java.util.UUID.randomUUID().toString.split("-")(0)
-      val name = f"${namePrefix}_${ts}_${uuid8}_part$part%05d.csv"
-      val body = (header +: buf).mkString("", "\n", "\n")
-      // write-then-rename so the file-stream source never lists a
-      // half-written file (on an object store the tmp object is already
-      // invisible until close; the rename keeps one code path)
-      val tmp = new org.apache.hadoop.fs.Path(dir, s".$name.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(body.getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      val dst = new org.apache.hadoop.fs.Path(dir, name)
-      // FileSystem.rename reports failure by returning false (the old
-      // Files.move threw) — a swallowed false leaves the chunk as a
-      // hidden .tmp the stream source never lists: a silently truncated feed
-      if (!fs.rename(tmp, dst))
-        throw new java.io.IOException(s"chunk publish rename failed: $tmp -> $dst")
-      buf.clear()
+    df.toLocalIterator().asScala.grouped(chunkSize).foreach { rows =>
+      publishChunk(fs, dir, namePrefix, part, header, rows)
       part += 1
       if (intervalMs > 0) Thread.sleep(intervalMs)
     }
-    while (it.hasNext) {
-      val row = it.next()
-      buf += (0 until row.length).map(i => csvEscape(row.get(i))).mkString(",")
-      if (buf.length >= chunkSize) flush()
-    }
-    flush()
     part
   }
 
@@ -128,24 +129,12 @@ object ChunkFeeder {
         // (bounded by chunkSize rows) restores table order within the file
         val rows = it.toArray.sortBy(_._2._1)
         if (rows.nonEmpty) {
-          val chunkId = rows.head._1
-          val body = (header +: rows.toSeq.map { case (_, (_, row)) =>
-            (0 until row.length).map(i => csvEscape(row.get(i))).mkString(",")
-          }).mkString("", "\n", "\n")
-          val uuid8 = java.util.UUID.randomUUID().toString.split("-")(0)
-          val name = f"${namePrefix}_${chunkTimestamp()}_${uuid8}_part$chunkId%05d.csv"
-          val conf = new org.apache.hadoop.conf.Configuration()
-          val dir = new org.apache.hadoop.fs.Path(outDir)
-          val fs = dir.getFileSystem(conf)
+          val dir = new Path(outDir)
+          val fs = dir.getFileSystem(new org.apache.hadoop.conf.Configuration())
           fs.setWriteChecksum(false) // no .crc sidecars in the watched dir
           fs.mkdirs(dir)
-          val tmp = new org.apache.hadoop.fs.Path(dir, s".$name.tmp")
-          val out = fs.create(tmp, true)
-          try out.write(body.getBytes(StandardCharsets.UTF_8))
-          finally out.close()
-          val dst = new org.apache.hadoop.fs.Path(dir, name)
-          if (!fs.rename(tmp, dst))
-            throw new java.io.IOException(s"chunk publish rename failed: $tmp -> $dst")
+          publishChunk(fs, dir, namePrefix, rows.head._1, header,
+            rows.toSeq.map { case (_, (_, row)) => row })
         }
       }
       nChunks

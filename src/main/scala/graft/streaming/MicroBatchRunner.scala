@@ -1,12 +1,18 @@
 package graft.streaming
 
 import graft.CallSite
+import graft.ingest.ChunkFeeder
 import graft.ops.Patterns
 import graft.state.StateStore
+import java.nio.charset.StandardCharsets
+import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
@@ -15,8 +21,7 @@ import scala.jdk.CollectionConverters._
   * ("Mechanism Y.py":100-313) re-expressed Spark-first.
   *
   * Per micro-batch (foreachBatch); in parity mode three Spark jobs run
-  * besides the flush writes — the batch read, the active merchants and
-  * the detections:
+  * in all — the batch read, the active merchants and the detections:
   *   1. one read of the batch: a projection collected to the driver, with
   *      no persist and no Spark aggregate; an empty result is the
   *      empty-batch guard ("Mechanism Y.py":124-134)
@@ -42,7 +47,7 @@ import scala.jdk.CollectionConverters._
   *      shuffle. The state reads are left unpersisted so each pattern's
   *      filters push into its own JDBC scan
   *   5. detections → driver buffer → 50-row single-file CSV flushes
-  *      (S6/K4, "Mechanism Y.py":268-277)
+  *      (S6/K4, "Mechanism Y.py":268-277), each with no Spark job
   *
   * Every job names its step as its call site ([[graft.CallSite]]).
   *
@@ -180,10 +185,8 @@ class MicroBatchRunner(
 
   /** Parity-mode flush: one single-file CSV dir per buffered chunk of
     * exactly [[DetectionFileRows]] rows (the remainder excepted). */
-  private def flush(rows: Seq[Row]): Unit = named("flush: detection file")(
-    local(rows, detectionSchema)
-      .coalesce(1).write.option("header", "true")
-      .csv(detectionDir(outDir, currentEpoch)))
+  private def flush(rows: Seq[Row]): Unit =
+    writeDetectionFile(spark, rows, detectionDir(outDir, currentEpoch))
 
   /** S3 + K5: the chunk stream into foreachBatch. */
   def start(inputDir: String, checkpointDir: String,
@@ -278,6 +281,29 @@ object MicroBatchRunner {
   private def detectionDir(outDir: String, epochId: Long): String = {
     val uuid8 = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
     s"$outDir/detections_batch_${epochId}_$uuid8"
+  }
+
+  /** The dir `coalesce(1).write.option("header", "true").csv(dir)` writes,
+    * byte for byte, with no Spark job: one `part-00000-<uuid>-c000.csv`
+    * from Spark's own CSV generator, published through the FileSystem of
+    * `dir`, then `_SUCCESS`. Fails if `dir` exists, like `errorifexists`. */
+  private[graft] def writeDetectionFile(spark: SparkSession, rows: Seq[Row],
+      dir: String): Unit = {
+    val path = new Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(path))
+      throw new FileAlreadyExistsException(s"detection dir already exists: $path")
+    val csv = new java.io.StringWriter()
+    val gen = new UnivocityGenerator(detectionSchema, csv, new CSVOptions(
+      Map("header" -> "true"), false, spark.conf.get("spark.sql.session.timeZone")))
+    gen.writeHeaders()
+    rows.foreach(r => gen.write(InternalRow.fromSeq(
+      (0 until r.length).map(i => UTF8String.fromString(r.getString(i))))))
+    gen.close()
+    fs.mkdirs(path)
+    ChunkFeeder.publish(fs, path, s"part-00000-${java.util.UUID.randomUUID()}-c000.csv",
+      csv.toString.getBytes(StandardCharsets.UTF_8))
+    fs.create(new Path(path, "_SUCCESS"), false).close()
   }
 
   /** Distributed per-epoch detection sink (scale mode and the native

@@ -61,17 +61,13 @@ class NativeStatePipeline(
 
   private val lowWeight = Patterns.streamLowWeightPairs(importanceDim, cfg)
 
-  private def named[T](step: String)(body: => T): T =
-    CallSite.named(spark, s"NativeStatePipeline.$step")(body)
-
   /** Per-epoch detection pass over the stateful operator's output. */
   private[graft] def processStateBatch(out: DataFrame, epochId: Long): Unit = {
-    // persisted before the empty probe, so the stateful operator runs
-    // once per epoch, inside the persisted pass
+    // persisted so the stateful operator runs once per epoch, not once per
+    // state frame below. No empty probe: a NoTimeout / TimeMode.None chunk
+    // stream runs no data-less epoch, and writeDetections skips an empty write
     out.persist()
     try {
-      if (named("processStateBatch: empty probe")(out.isEmpty)) return
-
       val ms = out.filter(col("rowType") === "m")
         .select(col("merchant_id"), col("c1").as("total_transactions"))
       val cms = out.filter(col("rowType") === "cm")
@@ -90,9 +86,10 @@ class NativeStatePipeline(
           col("merchant_id").as("merchant"), col("category"))
 
       val now = clock()
-      named("processStateBatch: detections")(MicroBatchRunner.writeDetections(
-        Patterns.detections(Patterns.patId1(ms, cms, lowWeight(pairs), cfg, now),
-          cms, gs, cfg, now), outDir, epochId))
+      CallSite.named(spark, "NativeStatePipeline.processStateBatch: detections")(
+        MicroBatchRunner.writeDetections(
+          Patterns.detections(Patterns.patId1(ms, cms, lowWeight(pairs), cfg, now),
+            cms, gs, cfg, now), outDir, epochId))
     } finally out.unpersist()
   }
 

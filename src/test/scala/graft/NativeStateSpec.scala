@@ -233,9 +233,9 @@ class NativeStateSpec extends AnyFunSuite {
     }
   }
 
-  test("native epoch: at most 6 Spark jobs in every epoch of a run of 18 or more one-chunk epochs") {
+  test("native epoch: at most 5 Spark jobs in every epoch of a run of 18 or more one-chunk epochs") {
     for ((api, byBatch) <- runJobs; (batchId, jobs) <- byBatch)
-      assert(jobs.length <= 6, s"$api epoch $batchId ran ${jobs.length} jobs: $jobs")
+      assert(jobs.length <= 5, s"$api epoch $batchId ran ${jobs.length} jobs: $jobs")
   }
 
   test("readout on a checkpoint with no committed batch fails and names the checkpoint") {

@@ -273,10 +273,12 @@ class StreamingSpec extends AnyFunSuite {
 
   /** One parity `processBatch` over the whole of `refTx()` on a fresh
     * store: the call site of every Spark job it starts, in submission
-    * order, and the executed plan of every action.
+    * order, the executed plan of every action, and the number of
+    * detection dirs it wrote.
     * The batch is cached and counted first, so its own lineage starts
     * no job inside the window. */
-  private def parityBatchJobs(): (Seq[String], Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+  private def parityBatchJobs()
+      : (Seq[String], Seq[org.apache.spark.sql.execution.SparkPlan], Int) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
@@ -323,7 +325,8 @@ class StreamingSpec extends AnyFunSuite {
             .getOrElse(fail("listener bus stalled")))
           .takeWhile(!isBarrier(_)).toList
       (drain(jobs)(_._1 == barrier).map(_._2),
-        drain(plans)(_.analyzed.output.exists(_.name == barrier)).map(_.executedPlan))
+        drain(plans)(_.analyzed.output.exists(_.name == barrier)).map(_.executedPlan),
+        Option(new java.io.File(s"$base/out").listFiles()).fold(0)(_.count(_.isDirectory)))
     } finally {
       batch.unpersist()
       store.close()
@@ -331,22 +334,64 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("parity processBatch: every Spark job names the runner or the store as its call site") {
-    val (jobs, _) = parityBatchJobs()
+    val (jobs, _, _) = parityBatchJobs()
     assert(jobs.nonEmpty)
     val unnamed = jobs.filterNot(n =>
       n.startsWith("MicroBatchRunner.") || n.startsWith("JdbcUpsertStore."))
     assert(unnamed.isEmpty, s"jobs without a graft call site: $unnamed")
   }
 
-  test("parity processBatch: at most 3 Spark jobs besides its flush writes, no sort-merge join") {
+  test("parity processBatch: at most 3 Spark jobs, its flush writes included, no sort-merge join") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-    val (jobs, plans) = parityBatchJobs()
-    val nonFlush = jobs.filterNot(_.startsWith("MicroBatchRunner.flush"))
-    assert(nonFlush.length <= 3, s"${nonFlush.length} jobs besides the flush writes: $nonFlush")
+    val (jobs, plans, detectionDirs) = parityBatchJobs()
+    assert(detectionDirs >= 1, "the batch flushed no detection file, so the bound covers no flush")
+    assert(jobs.length <= 3, s"${jobs.length} jobs: $jobs")
     object Aqe extends AdaptiveSparkPlanHelper
     val smj = plans.flatMap(p => Aqe.collect(p) { case j: SortMergeJoinExec => j })
     assert(smj.isEmpty, smj.mkString("\n"))
+  }
+
+  /** 50 detection rows over every value kind the CSV writer treats
+    * specially: empty, null, separator, quote, newline, backslash,
+    * surrounding blanks, non-ASCII. */
+  private def awkwardDetections(): Seq[org.apache.spark.sql.Row] = {
+    val kinds = Seq("", null, "a,b", "say \"hi\"", "line1\nline2", "back\\slash",
+      "  padded  ", "caf\u00e9 \u20ac \u4e2d", "\\\"", "PatId1")
+    (0 until 50).map(i => org.apache.spark.sql.Row.fromSeq(
+      (0 until 6).map(c => kinds((i + c) % kinds.length))))
+  }
+
+  test("parity detection file: driver-written bytes == Spark's coalesce(1).write.csv for the same rows") {
+    val base = Files.createTempDirectory("graft-detfile").toString
+    val rows = awkwardDetections()
+    val ours = s"$base/ours"; val sparks = s"$base/spark"
+    MicroBatchRunner.writeDetectionFile(spark, rows, ours)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), MicroBatchRunner.detectionSchema)
+      .coalesce(1).write.option("header", "true").csv(sparks)
+    def visible(dir: String) =
+      new java.io.File(dir).listFiles().map(_.getName).filterNot(_.startsWith(".")).sorted.toSeq
+    def part(dir: String) = visible(dir).filter(_.startsWith("part-"))
+    // one part file in Spark's name shape, plus _SUCCESS, nothing else
+    assert(visible(ours).length == 2 && visible(ours).contains("_SUCCESS"), visible(ours))
+    assert(part(ours).head.matches("part-00000-[0-9a-f-]{36}-c000\\.csv"), part(ours))
+    def bytes(dir: String) =
+      Files.readAllBytes(java.nio.file.Paths.get(dir, part(dir).head)).toSeq
+    def text(dir: String) = new String(bytes(dir).toArray, "UTF-8")
+    assert(bytes(sparks).length > 0)
+    assert(bytes(ours) == bytes(sparks), s"ours:\n${text(ours)}\nSpark's:\n${text(sparks)}")
+    def back(dir: String) = spark.read.option("header", "true").option("multiLine", "true")
+      .csv(dir).collect().toSeq
+    assert(back(ours).length == 50)
+    assert(back(ours) == back(sparks))
+  }
+
+  test("parity detection file: writing into an existing dir fails and names the path") {
+    val dir = Files.createTempDirectory("graft-detfile-exists").toString
+    val e = intercept[java.io.IOException](
+      MicroBatchRunner.writeDetectionFile(spark, awkwardDetections(), dir))
+    assert(e.getMessage.contains(dir), e.getMessage)
+    assert(new java.io.File(dir).list().isEmpty, "the failed write left files behind")
   }
 
   test("scale mode: detections write distributed (no driver buffer), files sized to the batch contract") {
