@@ -14,15 +14,14 @@ import org.apache.spark.sql.functions._
   * Mechanism Y streams them through the micro-batch detector with an
   * embedded-Derby state store and writes 50-row detection CSVs.
   *
-  *   sbt "runMain graft.PipelineDemo [sfDir] [chunkSize] [rate-ms] [scale|native|tws]"
+  *   sbt "runMain graft.PipelineDemo [sfDir] [chunkSize] [rate-ms] [scale|native]"
   *
   * Fourth arg: `scale` switches the runner to scale mode (keyed state
   * reads + distributed detection sink); `native` replaces the external
   * store entirely with [[NativeStatePipeline]] (state in Spark's own
-  * checkpointed state store via flatMapGroupsWithState); `tws` is the
-  * same pipeline on the `transformWithState` API (per-entry MapState on
-  * RocksDB) — the modes give an apples-to-apples throughput ladder. The
-  * native modes read their state tables back from the query's checkpoint.
+  * checkpointed state store via flatMapGroupsWithState) and reads its
+  * state tables back from the query's checkpoint — the modes give an
+  * apples-to-apples throughput ladder.
   *
   * Prints per-batch progress, final state-table sizes, detection file
   * inventory, and end-to-end throughput.
@@ -34,9 +33,7 @@ object PipelineDemo {
     val rateMs = if (args.length > 2) args(2).toLong else 0L
     val mode = if (args.length > 3) args(3) else "parity"
     val scaleMode = mode == "scale"
-    val nativeMode = mode == "native" || mode == "tws"
-    val api = if (mode == "tws") NativeStatePipeline.TransformWithStateApi
-      else NativeStatePipeline.FlatMapGroups
+    val nativeMode = mode == "native"
 
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
@@ -79,7 +76,7 @@ object PipelineDemo {
 
     println(s"[mechanism-y] mode: $mode")
     val secs = if (nativeMode) {
-      val pipeline = new NativeStatePipeline(spark, importanceDim, s"$base/out", api = api)
+      val pipeline = new NativeStatePipeline(spark, importanceDim, s"$base/out")
       val q = pipeline.start(s"$base/in", s"$base/cp", triggerInterval = "1 second")
       q.processAllAvailable()
       q.stop()
@@ -97,9 +94,9 @@ object PipelineDemo {
     println(f"[mechanism-y] processed $nRows rows in $secs%.1f s " +
       f"(${nRows / secs}%.0f rows/s end-to-end incl. feed + state round-trips)")
     val stateTables = if (nativeMode) Seq(
-        "merchant_summary" -> NativeStatePipeline.merchantSummary(spark, s"$base/cp", api),
-        "customer_merchant_summary" -> NativeStatePipeline.custMerchantSummary(spark, s"$base/cp", api),
-        "merchant_gender_summary" -> NativeStatePipeline.genderSummary(spark, s"$base/cp", api))
+        "merchant_summary" -> NativeStatePipeline.merchantSummary(spark, s"$base/cp"),
+        "customer_merchant_summary" -> NativeStatePipeline.custMerchantSummary(spark, s"$base/cp"),
+        "merchant_gender_summary" -> NativeStatePipeline.genderSummary(spark, s"$base/cp"))
       else Seq(
         "merchant_summary" -> store.merchantSummary(spark),
         "customer_merchant_summary" -> store.custMerchantSummary(spark),

@@ -216,10 +216,9 @@ object ScaleTechniques {
     * session: the runtime-filter rule reads session conf at EXECUTION
     * time, and a registered query is consumed lazily long after a
     * save/restore block would have reverted the conf — the clone scopes
-    * the arming to this query without perturbing the shared session
-    * (same move as NativeStatePipeline's provider conf). Result parity
-    * with the plain join is the oracle; ScaleTechniquesSpec plan-asserts
-    * the injected might_contain probe. */
+    * the arming to this query without perturbing the shared session.
+    * Result parity with the plain join is the oracle; ScaleTechniquesSpec
+    * plan-asserts the injected might_contain probe. */
   def bloomJoinQuery(spark: SparkSession, dir: String): DataFrame = {
     val s = spark.newSession()
     s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")

@@ -54,16 +54,17 @@ import scala.jdk.CollectionConverters._
   * Kept reference semantics: PatId2/3 re-emit all qualifying state every
   * batch; detections are collected to the driver (bounded by state size,
   * a reference parity choice — SURVEY.md §2.11). The batch is collected
-  * too: a batch is one chunk file. Fixed vs the reference:
-  * upserts can be epoch-fenced (idempotent = true), and `scaleMode`
-  * switches the three per-batch state reads from full-table to keyed
-  * ([[StateStore.merchantSummaryFor]] etc., pruned to the merchants the
-  * batch touched) — per-batch state IO becomes O(batch keys) instead of
-  * the reference's O(state) re-read (SURVEY.md §4). In scale mode the
-  * PatId2/3 re-emit is keyed to the batch's merchants too: for touched
-  * merchants the detections are identical to parity mode; untouched
-  * merchants simply aren't re-announced every batch. Scale mode also
-  * replaces the driver-side detection buffer with the distributed sink
+  * too: a batch is one chunk file. The upserts pass no epoch, so a
+  * replayed batch double-counts, as the reference's does (README.md:232).
+  * Fixed vs the reference: `scaleMode` switches the three per-batch
+  * state reads from full-table to keyed ([[StateStore.merchantSummaryFor]]
+  * etc., pruned to the merchants the batch touched) — per-batch state
+  * IO becomes O(batch keys) instead of the reference's O(state) re-read
+  * (SURVEY.md §4). In scale mode the PatId2/3 re-emit is keyed to the
+  * batch's merchants too: for touched merchants the detections are
+  * identical to parity mode; untouched merchants simply aren't
+  * re-announced every batch. Scale mode also replaces the driver-side
+  * detection buffer with the distributed sink
   * [[MicroBatchRunner.writeDetections]] (the native backend's too):
   * detections write straight from executors, so neither state size nor
   * detection volume ever funnels through the driver.
@@ -75,7 +76,6 @@ class MicroBatchRunner(
     outDir: String,
     cfg: Patterns.Config = Patterns.DefaultConfig,
     clock: () => Patterns.Clock = () => MicroBatchRunner.wallClock(),
-    idempotent: Boolean = false,
     scaleMode: Boolean = false) {
 
   import MicroBatchRunner._
@@ -118,7 +118,6 @@ class MicroBatchRunner(
         lowWeight.keySchema.map(f => col(f.name).cast(f.dataType)): _*).collect())
     if (rows.isEmpty) return                          // empty-batch guard
     currentEpoch = epochId
-    val epoch = if (idempotent) Some(epochId) else None
 
     // The reference aggregates the batch three times ("Mechanism
     // Y.py":142, 167, 187); here the three state deltas roll up from the
@@ -128,7 +127,7 @@ class MicroBatchRunner(
     // itself is oracle-checked in RelOps.aggGenderPivot.
     val (mDelta, cmDelta, gDelta) = rollUp(rows)
     store.applyDeltas(local(mDelta, merchantStateSchema),
-      local(cmDelta, custMerchantStateSchema), local(gDelta, genderStateSchema), epoch)
+      local(cmDelta, custMerchantStateSchema), local(gDelta, genderStateSchema))
 
     // J1/J2: the batch's (customer, merchant) pairs whose triple is in
     // the low-weight set, looked up on the driver

@@ -5,7 +5,6 @@ import graft.ingest.ChunkFeeder
 import graft.ops.Patterns
 import graft.state.JdbcUpsertStore
 import graft.streaming.{MicroBatchRunner, NativeStatePipeline}
-import graft.streaming.NativeStatePipeline.{FlatMapGroups, TransformWithStateApi}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -68,91 +67,61 @@ class NativeStateSpec extends AnyFunSuite {
 
       // state parity, all three tables
       assert(sameRows(
-        NativeStatePipeline.merchantSummary(spark, s"$base/cp-native", FlatMapGroups),
+        NativeStatePipeline.merchantSummary(spark, s"$base/cp-native"),
         store.merchantSummary(spark)))
       val castAmt = (df: DataFrame) => df.withColumn("total_amount_sum",
         col("total_amount_sum").cast(DecimalType(28, 2)))
       assert(sameRows(
-        castAmt(NativeStatePipeline.custMerchantSummary(spark, s"$base/cp-native", FlatMapGroups)),
+        castAmt(NativeStatePipeline.custMerchantSummary(spark, s"$base/cp-native")),
         castAmt(store.custMerchantSummary(spark))))
       assert(sameRows(
-        NativeStatePipeline.genderSummary(spark, s"$base/cp-native", FlatMapGroups),
+        NativeStatePipeline.genderSummary(spark, s"$base/cp-native"),
         store.genderSummary(spark)))
     } finally store.close()
   }
 
-  test("transformWithState backend (MapState per customer) == flatMapGroupsWithState backend") {
-    val base = Files.createTempDirectory("graft-tws").toString
-    val tx = refTx().cache()
-    ChunkFeeder.feed(tx, s"$base/in", chunkSize = 2000)
+  test("a chunk row with no amount: native state == JDBC store state, the pair adds 0") {
+    import org.apache.spark.sql.Row
+    val base = Files.createTempDirectory("graft-native-null-amount").toString
+    val ref = refTx()
+    val rows = ref.limit(999).collect()
+    val noAmount = (r: Row) => Row.fromSeq(r.toSeq.updated(ref.schema.fieldIndex("amount"), null))
+    // a row with no amount in a pair that may have others, and one pair
+    // whose only row has no amount
+    val chunk = (noAmount(rows.head) +: rows.tail) :+ Row.fromSeq(
+      noAmount(rows.head).toSeq.updated(ref.schema.fieldIndex("customer"), "900000001"))
+    ChunkFeeder.feed(spark.createDataFrame(
+      java.util.Arrays.asList(chunk: _*), ref.schema), s"$base/in", chunkSize = 1000)
 
-    val fmgws = new NativeStatePipeline(spark, Tables.importance(spark, sf),
-      s"$base/out-fmgws", clock = () => Patterns.FixedClock)
-    val q1 = fmgws.start(s"$base/in", s"$base/cp-fmgws", "1 second")
-    q1.processAllAvailable(); q1.stop()
+    val store = JdbcUpsertStore.derby(s"$base/derby")
+    try {
+      val runner = new MicroBatchRunner(spark, store, Tables.importance(spark, sf),
+        s"$base/out-jdbc", clock = () => Patterns.FixedClock)
+      val q1 = runner.start(s"$base/in", s"$base/cp-jdbc", "1 second")
+      q1.processAllAvailable(); q1.stop()
 
-    val tws = new NativeStatePipeline(spark, Tables.importance(spark, sf),
-      s"$base/out-tws", clock = () => Patterns.FixedClock,
-      api = NativeStatePipeline.TransformWithStateApi)
-    val q2 = tws.start(s"$base/in", s"$base/cp-tws", "1 second")
-    q2.processAllAvailable(); q2.stop()
+      val native = new NativeStatePipeline(spark, Tables.importance(spark, sf),
+        s"$base/out-native", clock = () => Patterns.FixedClock)
+      val q2 = native.start(s"$base/in", s"$base/cp-native", "1 second")
+      q2.processAllAvailable(); q2.stop()
+      assert(q2.exception.isEmpty, q2.exception)
 
-    assert(detections(s"$base/out-fmgws").nonEmpty)
-    assert(detections(s"$base/out-tws") == detections(s"$base/out-fmgws"))
-    assert(sameRows(
-      NativeStatePipeline.merchantSummary(spark, s"$base/cp-tws", TransformWithStateApi),
-      NativeStatePipeline.merchantSummary(spark, s"$base/cp-fmgws", FlatMapGroups)))
-    assert(sameRows(
-      NativeStatePipeline.custMerchantSummary(spark, s"$base/cp-tws", TransformWithStateApi),
-      NativeStatePipeline.custMerchantSummary(spark, s"$base/cp-fmgws", FlatMapGroups)))
-    assert(sameRows(
-      NativeStatePipeline.genderSummary(spark, s"$base/cp-tws", TransformWithStateApi),
-      NativeStatePipeline.genderSummary(spark, s"$base/cp-fmgws", FlatMapGroups)))
-  }
-
-  test("TWS pipeline does not leak the RocksDB provider conf into the caller's session") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val before = spark.conf.getOption(key)
-    val base = Files.createTempDirectory("graft-tws-conf").toString
-    val tx = refTx().limit(1000).cache()
-    ChunkFeeder.feed(tx, s"$base/in", chunkSize = 1000)
-    val tws = new NativeStatePipeline(spark, Tables.importance(spark, sf),
-      s"$base/out", clock = () => Patterns.FixedClock,
-      api = NativeStatePipeline.TransformWithStateApi)
-    val q = tws.start(s"$base/in", s"$base/cp", "1 second")
-    q.processAllAvailable(); q.stop()
-    assert(spark.conf.getOption(key) == before,
-      "starting a TWS query must not mutate the shared session conf")
-    // state actually landed (the cloned session really ran RocksDB)
-    assert(NativeStatePipeline.merchantSummary(spark, s"$base/cp", TransformWithStateApi)
-      .agg(sum(col("total_transactions"))).collect()(0).getLong(0) == tx.count())
-  }
-
-  test("checkpoint restart restores transformWithState state (RocksDB)") {
-    val base = Files.createTempDirectory("graft-tws-restart").toString
-    val tx = refTx().cache()
-    val half = tx.limit((tx.count() / 2).toInt).cache()
-
-    ChunkFeeder.feed(half, s"$base/in", chunkSize = 1000)
-    val p1 = new NativeStatePipeline(spark, Tables.importance(spark, sf),
-      s"$base/out", clock = () => Patterns.FixedClock,
-      api = NativeStatePipeline.TransformWithStateApi)
-    val q1 = p1.start(s"$base/in", s"$base/cp", "1 second")
-    q1.processAllAvailable(); q1.stop()
-    val afterFirst = NativeStatePipeline.merchantSummary(spark, s"$base/cp", TransformWithStateApi)
-      .agg(sum(col("total_transactions"))).collect()(0).getLong(0)
-    assert(afterFirst == half.count())
-
-    // a BRAND-NEW pipeline on the same checkpoint resumes RocksDB state
-    ChunkFeeder.feed(tx, s"$base/in", chunkSize = 1000)
-    val p2 = new NativeStatePipeline(spark, Tables.importance(spark, sf),
-      s"$base/out", clock = () => Patterns.FixedClock,
-      api = NativeStatePipeline.TransformWithStateApi)
-    val q2 = p2.start(s"$base/in", s"$base/cp", "1 second")
-    q2.processAllAvailable(); q2.stop()
-    val afterSecond = NativeStatePipeline.merchantSummary(spark, s"$base/cp", TransformWithStateApi)
-      .agg(sum(col("total_transactions"))).collect()(0).getLong(0)
-    assert(afterSecond == afterFirst + tx.count())
+      val cp = s"$base/cp-native"
+      val castAmt = (df: DataFrame) => df.withColumn("total_amount_sum",
+        col("total_amount_sum").cast(DecimalType(28, 2)))
+      assert(sameRows(NativeStatePipeline.merchantSummary(spark, cp),
+        store.merchantSummary(spark)))
+      assert(sameRows(castAmt(NativeStatePipeline.custMerchantSummary(spark, cp)),
+        castAmt(store.custMerchantSummary(spark))))
+      assert(sameRows(NativeStatePipeline.genderSummary(spark, cp),
+        store.genderSummary(spark)))
+      val pair = NativeStatePipeline.custMerchantSummary(spark, cp)
+        .filter(col("customer_id") === "900000001").collect()
+      assert(pair.map(r => (r.getLong(2), r.getDecimal(3))).toSeq ==
+        Seq((1L, new java.math.BigDecimal("0.00"))))
+      assert(NativeStatePipeline.merchantSummary(spark, cp)
+        .agg(sum(col("total_transactions"))).collect()(0).getLong(0) == chunk.length)
+    } finally store.close()
   }
 
   test("checkpoint restart restores fMGWS state (no loss, no double count)") {
@@ -165,7 +134,7 @@ class NativeStateSpec extends AnyFunSuite {
       s"$base/out", clock = () => Patterns.FixedClock)
     val q1 = p1.start(s"$base/in", s"$base/cp", "1 second")
     q1.processAllAvailable(); q1.stop()
-    val afterFirst = NativeStatePipeline.merchantSummary(spark, s"$base/cp", FlatMapGroups)
+    val afterFirst = NativeStatePipeline.merchantSummary(spark, s"$base/cp")
       .agg(sum(col("total_transactions"))).collect()(0).getLong(0)
     assert(afterFirst == half.count())
 
@@ -175,7 +144,7 @@ class NativeStateSpec extends AnyFunSuite {
       s"$base/out", clock = () => Patterns.FixedClock)
     val q2 = p2.start(s"$base/in", s"$base/cp", "1 second")
     q2.processAllAvailable(); q2.stop()
-    val afterSecond = NativeStatePipeline.merchantSummary(spark, s"$base/cp", FlatMapGroups)
+    val afterSecond = NativeStatePipeline.merchantSummary(spark, s"$base/cp")
       .agg(sum(col("total_transactions"))).collect()(0).getLong(0)
     assert(afterSecond == afterFirst + tx.count())
   }
@@ -183,7 +152,7 @@ class NativeStateSpec extends AnyFunSuite {
   /** The Spark jobs the stream itself starts in one native run of at
     * least 18 one-chunk epochs: the call site of each job carrying
     * `streaming.sql.batchId`, by batch id. */
-  private def nativeRunJobs(api: NativeStatePipeline.StateApi): Map[Long, Seq[String]] = {
+  private lazy val runJobs: Map[Long, Seq[String]] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
     val sc = spark.sparkContext
@@ -203,7 +172,7 @@ class NativeStateSpec extends AnyFunSuite {
     val tx = refTx().cache()
     val chunks = ChunkFeeder.feed(tx, s"$base/in", chunkSize = (tx.count() / 18).toInt)
     val p = new NativeStatePipeline(spark, Tables.importance(spark, sf),
-      s"$base/out", clock = () => Patterns.FixedClock, api = api)
+      s"$base/out", clock = () => Patterns.FixedClock)
     sc.addSparkListener(listener)
     try {
       val q = p.start(s"$base/in", s"$base/cp", "0 seconds")
@@ -223,28 +192,21 @@ class NativeStateSpec extends AnyFunSuite {
     byBatch
   }
 
-  private lazy val runJobs = Seq(FlatMapGroups, TransformWithStateApi)
-    .map(api => api -> nativeRunJobs(api)).toMap
-
   test("native epoch: every Spark job of the stream names NativeStatePipeline as its call site") {
-    for ((api, byBatch) <- runJobs) {
-      val unnamed = byBatch.values.flatten.filterNot(_.startsWith("NativeStatePipeline."))
-      assert(unnamed.isEmpty, s"$api: jobs without a NativeStatePipeline call site: $unnamed")
-    }
+    val unnamed = runJobs.values.flatten.filterNot(_.startsWith("NativeStatePipeline."))
+    assert(unnamed.isEmpty, s"jobs without a NativeStatePipeline call site: $unnamed")
   }
 
   test("native epoch: at most 5 Spark jobs in every epoch of a run of 18 or more one-chunk epochs") {
-    for ((api, byBatch) <- runJobs; (batchId, jobs) <- byBatch)
-      assert(jobs.length <= 5, s"$api epoch $batchId ran ${jobs.length} jobs: $jobs")
+    for ((batchId, jobs) <- runJobs)
+      assert(jobs.length <= 5, s"epoch $batchId ran ${jobs.length} jobs: $jobs")
   }
 
   test("readout on a checkpoint with no committed batch fails and names the checkpoint") {
     val cp = Files.createTempDirectory("graft-native-nocommit").toString
-    for (api <- Seq(FlatMapGroups, TransformWithStateApi)) {
-      val e = intercept[Exception](
-        NativeStatePipeline.merchantSummary(spark, cp, api).collect())
-      assert(e.getMessage.contains("STDS_COMMITTED_BATCH_UNAVAILABLE"), e.getMessage)
-      assert(e.getMessage.contains(cp), e.getMessage)
-    }
+    val e = intercept[Exception](
+      NativeStatePipeline.merchantSummary(spark, cp).collect())
+    assert(e.getMessage.contains("STDS_COMMITTED_BATCH_UNAVAILABLE"), e.getMessage)
+    assert(e.getMessage.contains(cp), e.getMessage)
   }
 }

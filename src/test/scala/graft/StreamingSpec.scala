@@ -308,25 +308,27 @@ class StreamingSpec extends AnyFunSuite {
       batch.count()
       val runner = new MicroBatchRunner(spark, store, Tables.importance(spark, sf),
         s"$base/out", clock = () => Patterns.FixedClock)
+      def drain[T](q: LinkedBlockingQueue[T])(isBarrier: T => Boolean): List[T] =
+        Iterator.continually(Option(q.poll(60, TimeUnit.SECONDS))
+            .getOrElse(fail("listener bus stalled")))
+          .takeWhile(!isBarrier(_)).toList
       sc.addSparkListener(jobListener)
       spark.listenerManager.register(planListener)
       try {
         runner.processBatch(batch, 0L)
         // the listener buses deliver in order: once the barrier shows,
-        // every job and action of processBatch has too
+        // every job and action of processBatch has too. Both queues drain
+        // to their barrier before the listeners go: delivery is
+        // asynchronous, so a listener removed earlier can miss it
         sc.setJobGroup(barrier, barrier)
         try spark.range(1).toDF(barrier).collect() finally sc.clearJobGroup()
+        (drain(jobs)(_._1 == barrier).map(_._2),
+          drain(plans)(_.analyzed.output.exists(_.name == barrier)).map(_.executedPlan),
+          Option(new java.io.File(s"$base/out").listFiles()).fold(0)(_.count(_.isDirectory)))
       } finally {
         sc.removeSparkListener(jobListener)
         spark.listenerManager.unregister(planListener)
       }
-      def drain[T](q: LinkedBlockingQueue[T])(isBarrier: T => Boolean): List[T] =
-        Iterator.continually(Option(q.poll(60, TimeUnit.SECONDS))
-            .getOrElse(fail("listener bus stalled")))
-          .takeWhile(!isBarrier(_)).toList
-      (drain(jobs)(_._1 == barrier).map(_._2),
-        drain(plans)(_.analyzed.output.exists(_.name == barrier)).map(_.executedPlan),
-        Option(new java.io.File(s"$base/out").listFiles()).fold(0)(_.count(_.isDirectory)))
     } finally {
       batch.unpersist()
       store.close()
