@@ -45,71 +45,75 @@ object PipelineDemo {
     spark.sparkContext.setLogLevel("WARN")
 
     val base = Files.createTempDirectory("graft-pipeline").toString
-    println(s"[pipeline] working dir: $base")
-    val store = if (nativeMode) null
-      else JdbcUpsertStore.derbyMemory("pipeline-demo")
+    try {
+      println(s"[pipeline] working dir: $base")
+      val store = if (nativeMode) null
+        else JdbcUpsertStore.derbyMemory("pipeline-demo")
 
-    // the reference's full 10-column CSV shape (txStreamSchema order);
-    // constant filler mirrors BankSim's mostly-constant columns
-    val tx = Tables.transactions(spark, sfDir).select(
-      lit(0).as("step"),
-      col("customer").cast("string").as("customer"),
-      lit("3").as("age"),
-      col("gender"),
-      lit("28007").as("zipcodeOri"),
-      col("merchant").cast("string").as("merchant"),
-      lit("28007").as("zipMerchant"),
-      col("category"),
-      col("amount").cast("double").as("amount"),
-      lit(0).as("fraud"))
-    val nRows = tx.count()
+      // the reference's full 10-column CSV shape (txStreamSchema order);
+      // constant filler mirrors BankSim's mostly-constant columns
+      val tx = Tables.transactions(spark, sfDir).select(
+        lit(0).as("step"),
+        col("customer").cast("string").as("customer"),
+        lit("3").as("age"),
+        col("gender"),
+        lit("28007").as("zipcodeOri"),
+        col("merchant").cast("string").as("merchant"),
+        lit("28007").as("zipMerchant"),
+        col("category"),
+        col("amount").cast("double").as("amount"),
+        lit(0).as("fraud"))
+      val nRows = tx.count()
 
-    val t0 = System.nanoTime()
-    val nChunks = ChunkFeeder.feed(tx, s"$base/in", chunkSize, rateMs)
-    println(s"[mechanism-x] fed $nChunks chunk files ($nRows rows)")
+      val t0 = System.nanoTime()
+      val nChunks = ChunkFeeder.feed(tx, s"$base/in", chunkSize, rateMs)
+      println(s"[mechanism-x] fed $nChunks chunk files ($nRows rows)")
 
-    // static dim via the reference's CSV path (S2): export once, read
-    // back with the explicit schema, cache inside the runner
-    Tables.importance(spark, sfDir).coalesce(1)
-      .write.option("header", "true").csv(s"$base/importance_csv")
-    val importanceDim = Tables.importanceFromCsv(spark, s"$base/importance_csv")
+      // static dim via the reference's CSV path (S2): export once, read
+      // back with the explicit schema, cache inside the runner
+      Tables.importance(spark, sfDir).coalesce(1)
+        .write.option("header", "true").csv(s"$base/importance_csv")
+      val importanceDim = Tables.importanceFromCsv(spark, s"$base/importance_csv")
 
-    println(s"[mechanism-y] mode: $mode")
-    val secs = if (nativeMode) {
-      val pipeline = new NativeStatePipeline(spark, importanceDim, s"$base/out")
-      val q = pipeline.start(s"$base/in", s"$base/cp", triggerInterval = "1 second")
-      q.processAllAvailable()
-      q.stop()
-      (System.nanoTime() - t0) / 1e9
-    } else {
-      val runner = new MicroBatchRunner(spark, store, importanceDim, s"$base/out",
-        scaleMode = scaleMode)
-      val q = runner.start(s"$base/in", s"$base/cp", triggerInterval = "1 second")
-      q.processAllAvailable()
-      q.stop()
-      runner.flushRemainder()
-      (System.nanoTime() - t0) / 1e9
+      println(s"[mechanism-y] mode: $mode")
+      val secs = if (nativeMode) {
+        val pipeline = new NativeStatePipeline(spark, importanceDim, s"$base/out")
+        val q = pipeline.start(s"$base/in", s"$base/cp", triggerInterval = "1 second")
+        q.processAllAvailable()
+        q.stop()
+        (System.nanoTime() - t0) / 1e9
+      } else {
+        val runner = new MicroBatchRunner(spark, store, importanceDim, s"$base/out",
+          scaleMode = scaleMode)
+        val q = runner.start(s"$base/in", s"$base/cp", triggerInterval = "1 second")
+        q.processAllAvailable()
+        q.stop()
+        runner.flushRemainder()
+        (System.nanoTime() - t0) / 1e9
+      }
+
+      println(f"[mechanism-y] processed $nRows rows in $secs%.1f s " +
+        f"(${nRows / secs}%.0f rows/s end-to-end incl. feed + state round-trips)")
+      val stateTables = if (nativeMode) Seq(
+          "merchant_summary" -> NativeStatePipeline.merchantSummary(spark, s"$base/cp"),
+          "customer_merchant_summary" -> NativeStatePipeline.custMerchantSummary(spark, s"$base/cp"),
+          "merchant_gender_summary" -> NativeStatePipeline.genderSummary(spark, s"$base/cp"))
+        else Seq(
+          "merchant_summary" -> store.merchantSummary(spark),
+          "customer_merchant_summary" -> store.custMerchantSummary(spark),
+          "merchant_gender_summary" -> store.genderSummary(spark))
+      for ((name, df) <- stateTables)
+        println(s"[state] $name: ${df.count()} rows")
+      val outDirs = Option(new java.io.File(s"$base/out").listFiles()).getOrElse(Array())
+        .filter(_.isDirectory)
+      val detections = if (outDirs.isEmpty) 0L
+        else spark.read.option("header", "true")
+          .csv(outDirs.map(_.toString): _*).count()
+      println(s"[detections] ${outDirs.length} files, $detections rows")
+      if (store != null) store.close()
+    } finally {
+      spark.stop()
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(base))
     }
-
-    println(f"[mechanism-y] processed $nRows rows in $secs%.1f s " +
-      f"(${nRows / secs}%.0f rows/s end-to-end incl. feed + state round-trips)")
-    val stateTables = if (nativeMode) Seq(
-        "merchant_summary" -> NativeStatePipeline.merchantSummary(spark, s"$base/cp"),
-        "customer_merchant_summary" -> NativeStatePipeline.custMerchantSummary(spark, s"$base/cp"),
-        "merchant_gender_summary" -> NativeStatePipeline.genderSummary(spark, s"$base/cp"))
-      else Seq(
-        "merchant_summary" -> store.merchantSummary(spark),
-        "customer_merchant_summary" -> store.custMerchantSummary(spark),
-        "merchant_gender_summary" -> store.genderSummary(spark))
-    for ((name, df) <- stateTables)
-      println(s"[state] $name: ${df.count()} rows")
-    val outDirs = Option(new java.io.File(s"$base/out").listFiles()).getOrElse(Array())
-      .filter(_.isDirectory)
-    val detections = if (outDirs.isEmpty) 0L
-      else spark.read.option("header", "true")
-        .csv(outDirs.map(_.toString): _*).count()
-    println(s"[detections] ${outDirs.length} files, $detections rows")
-    if (store != null) store.close()
-    spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import graft.Tables
+import graft.{Published, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,53 +40,14 @@ object OrcSource {
 
   /** The registered round-trip query: documents → partitioned ORC →
     * pruned single-language scan; the scan touches only `lang=en/`.
-    *
-    * The mirror is PUBLISHED IMMUTABLY: each builder writes to a unique
-    * `v_<uuid>` dir and atomically renames it into place, so a reader
-    * in another session can never observe a half-overwritten mirror
-    * (mode(overwrite) on a shared path deletes files under a
-    * concurrent scan). The rename loser just deletes its attempt and
-    * reads the winner's complete mirror. The path is keyed by the
-    * SOURCE file's content stamp, so a regenerated documents table
-    * builds a fresh mirror instead of serving stale rows.
-    *
-    * SCOPE: this publish protocol leans on FileContext's strict
-    * no-overwrite rename, i.e. an FS with ATOMIC rename (local, HDFS).
-    * An object store cannot provide it (rename is copy+delete there —
-    * see [[ObjectStoreFileSystem]]); mirroring onto S3 would swap the
-    * rename for a conditional PUT of a manifest object (If-None-Match)
-    * or an external lock, with readers resolving the manifest. The
-    * mirror is a node-local derived artifact here, so the atomic-rename
-    * assumption holds by construction. */
+    * The mirror is a [[graft.Published]] artifact of the documents
+    * table. */
   def orcScan(spark: SparkSession, dir: String, lang: String = "en"): DataFrame = {
-    val stamp = Tables.fileStamp(spark, s"$dir/documents.parquet")
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_orc_mirror/" +
-      s"${dir.replaceAll("[^A-Za-z0-9]", "_")}_$stamp"
-    val fin = new org.apache.hadoop.fs.Path(s"$base/final")
-    val fs = fin.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$base/final/_SUCCESS"))) {
-      val attempt = new org.apache.hadoop.fs.Path(
-        s"$base/v_${java.util.UUID.randomUUID().toString.take(8)}")
-      writePartitioned(Tables.documents(spark, dir), attempt.toString)
-      // FileContext.rename has STRICT no-overwrite semantics (throws if
-      // dst exists) unlike FileSystem.rename's FS-dependent merge
-      // behavior; a loser's complete-but-unpublished attempt is dropped
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        fin.toUri, spark.sparkContext.hadoopConfiguration)
-      try fc.rename(attempt, fin)
-      catch {
-        case e: java.io.IOException =>
-          // dst-exists means another builder won the publish race and a
-          // complete mirror is readable; any OTHER IOException (a
-          // transient FS fault) must surface — silently dropping the
-          // attempt would leave NO published mirror and the read below
-          // would fail with an unrelated path-not-found.
-          fs.delete(attempt, true)
-          if (!fs.exists(new org.apache.hadoop.fs.Path(s"$base/final/_SUCCESS")))
-            throw e
-      }
+    val fin = Published.publish(spark,
+        Published.cachePath(spark, "orc_mirror", dir, "documents.parquet")) {
+      writePartitioned(Tables.documents(spark, dir), _)
     }
-    read(spark, fin.toString)
+    read(spark, fin)
       .filter(col("lang") === lang)
       .select(col("doc_id"), col("source"), col("n_chars"))
   }

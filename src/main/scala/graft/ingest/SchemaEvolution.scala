@@ -1,6 +1,6 @@
 package graft.ingest
 
-import graft.Tables
+import graft.{Published, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,43 +25,20 @@ import org.apache.spark.sql.functions._
 object SchemaEvolution {
 
   /** Write the documents table as a two-epoch history: epoch 0 predates
-    * the `lang` column (an early crawl), epoch 1 carries it. Idempotent
-    * per mirror path, and SAFE UNDER CONCURRENT BUILDERS: each writer
-    * assembles its history under a unique `v_<uuid>` dir and atomically
-    * renames it to `<path>/final` (FileContext's strict no-overwrite
-    * rename) — the old check-`_done`-then-overwrite-in-place had a
-    * window where a second session clobbered epoch files mid-scan.
-    * Returns the published history path. */
-  def writeEpochs(spark: SparkSession, dir: String, path: String): String = {
-    val fin = new org.apache.hadoop.fs.Path(s"$path/final")
-    val fs = fin.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/final/_done")))
-      return fin.toString
-    val attempt = new org.apache.hadoop.fs.Path(
-      s"$path/v_${java.util.UUID.randomUUID().toString.take(8)}")
-    val docs = Tables.documents(spark, dir)
-    docs.filter(col("doc_id") % 2 === 0)
-      .select(col("doc_id"), col("text"), col("source"), col("n_chars"))
-      .write.mode("overwrite").parquet(s"$attempt/epoch=0")
-    docs.filter(col("doc_id") % 2 === 1)
-      .select(col("doc_id"), col("text"), col("lang"), col("source"),
-        col("n_chars"))
-      .write.mode("overwrite").parquet(s"$attempt/epoch=1")
-    fs.create(new org.apache.hadoop.fs.Path(s"$attempt/_done"), true).close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fin.toUri, spark.sparkContext.hadoopConfiguration)
-    try fc.rename(attempt, fin)
-    catch {
-      case e: java.io.IOException =>
-        // same contract as OrcSource.orcScan: only a lost publish race
-        // (dst exists, winner's _done visible) may be swallowed — a
-        // transient rename fault with no published history must rethrow.
-        fs.delete(attempt, true)
-        if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/final/_done")))
-          throw e
+    * the `lang` column (an early crawl), epoch 1 carries it. Published
+    * once at `path` ([[graft.Published.publish]]); returns the published
+    * history dir. */
+  def writeEpochs(spark: SparkSession, dir: String, path: String): String =
+    Published.publish(spark, path) { attempt =>
+      val docs = Tables.documents(spark, dir)
+      docs.filter(col("doc_id") % 2 === 0)
+        .select(col("doc_id"), col("text"), col("source"), col("n_chars"))
+        .write.parquet(s"$attempt/epoch=0")
+      docs.filter(col("doc_id") % 2 === 1)
+        .select(col("doc_id"), col("text"), col("lang"), col("source"),
+          col("n_chars"))
+        .write.parquet(s"$attempt/epoch=1")
     }
-    fin.toString
-  }
 
   /** Union-schema scan over the full history: files written before
     * `lang` existed surface it as null. */
@@ -73,12 +50,8 @@ object SchemaEvolution {
     * aggregate a curation dashboard keeps running across the schema
     * change. */
   def schemaEvolutionScan(spark: SparkSession, dir: String): DataFrame = {
-    // keyed by the source file's stamp: a regenerated documents table
-    // rebuilds the history instead of serving stale epochs
-    val stamp = Tables.fileStamp(spark, s"$dir/documents.parquet")
-    val mirror = s"${System.getProperty("java.io.tmpdir")}/graft_evo_mirror/" +
-      s"${dir.replaceAll("[^A-Za-z0-9]", "_")}_$stamp"
-    val published = writeEpochs(spark, dir, mirror)
+    val published = writeEpochs(spark, dir,
+      Published.cachePath(spark, "evo_mirror", dir, "documents.parquet"))
     readMerged(spark, published)
       .select(col("doc_id"), coalesce(col("lang"), lit("unknown")).as("lang_eff"),
         col("n_chars"))

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.Tables
+import graft.{Published, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,28 +24,25 @@ import org.apache.spark.sql.functions._
   * The registered query `export_manifest` returns the
   * (split, shard_id, n_docs, n_tokens) manifest — plain-SQL-expressible,
   * so the whole assignment (split draw + balance math) is
-  * DuckDB-oracled — and, like the ORC mirror, publishes the parquet
-  * tree ONCE per source-table stamp under java.io.tmpdir (atomic
-  * rename publish; a re-run against unchanged data reads the marker
-  * and skips the write, so cold bench passes time the manifest math,
-  * not repeated IO).
+  * DuckDB-oracled — and publishes the parquet tree ONCE per
+  * source-table stamp as a [[graft.Published]] artifact (a re-run
+  * against unchanged data skips the write, so cold bench passes time
+  * the manifest math, not repeated IO).
   */
 object CorpusExport {
 
   /** Where the published tree for `dir`'s current documents table
-    * lives (stamp-keyed: a regenerated table re-exports). */
+    * lives (stamp-keyed: a regenerated table re-exports). The key
+    * carries EVERY assignment-shaping parameter, not just the shard
+    * count: a tree published at one split fraction must never serve a
+    * different fraction (the manifest would silently disagree with the
+    * published artifact). The "s1" token versions the salted split
+    * draw. */
   def exportPath(spark: SparkSession, dir: String, nShards: Int,
-      trainFrac: Double = 0.8, valFrac: Double = 0.1): String = {
-    val stamp = Tables.fileStamp(spark, s"$dir/documents.parquet")
-    // the key carries EVERY assignment-shaping parameter, not just the
-    // shard count: a tree published at one split fraction must never
-    // satisfy the marker check for a different fraction (the manifest
-    // would silently disagree with the published artifact). The "s1"
-    // token versions the salted split draw.
-    val fracs = s"${trainFrac}_$valFrac".replace('.', 'p')
-    s"${System.getProperty("java.io.tmpdir")}/graft_export/" +
-      s"${dir.replaceAll("[^A-Za-z0-9]", "_")}_${nShards}_${fracs}_s1_$stamp"
-  }
+      trainFrac: Double = 0.8, valFrac: Double = 0.1): String =
+    Published.cachePath(spark, "export", dir, "documents.parquet",
+      nShards, s"$trainFrac".replace('.', 'p'), s"$valFrac".replace('.', 'p'),
+      "s1")
 
   /** (doc_id, source, n_toks, split, shard_id) — the full assignment. */
   def assignments(spark: SparkSession, dir: String, nShards: Int = 4,
@@ -115,78 +112,12 @@ object CorpusExport {
     * manifest. */
   def exportManifest(spark: SparkSession, dir: String, nShards: Int = 4,
       trainFrac: Double = 0.8, valFrac: Double = 0.1): DataFrame = {
-    val base = exportPath(spark, dir, nShards, trainFrac, valFrac)
-    val fin = new org.apache.hadoop.fs.Path(s"$base/final")
-    val fs = fin.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // GC superseded trees (the containmentProbeIdx discipline): every
-    // rewrite of the source table mints a new stamp, orphaning the old
-    // stamp's corpus-sized tree — and, because the key also carries the
-    // shard count / split fractions / draw version, every tree built
-    // under an older key shape. Any sibling for the same dir whose name
-    // lacks the CURRENT stamp is stale by definition; siblings that DO
-    // carry the stamp are live trees for other (nShards, fracs) configs
-    // of the same data and are kept.
-    try {
-      val stamp = Tables.fileStamp(spark, s"$dir/documents.parquet")
-      val dirPrefix = dir.replaceAll("[^A-Za-z0-9]", "_") + "_"
-      // prefix alone is AMBIGUOUS: a nested corpus dir (/data/x/y)
-      // normalizes to a name that EXTENDS the parent's prefix
-      // (_data_x_y_…), so a startsWith-only match would GC the nested
-      // dir's LIVE trees every time the parent exports. A sibling
-      // belongs to THIS dir only if the text after the prefix is
-      // exactly the key shape exportPath mints:
-      // <nShards>_<trainFrac>_<valFrac>_s1_<len>_<mtime>_<crcHex>
-      // (fracs are doubles with '.'→'p'; stamp per Tables.fileStamp).
-      // A nested dir's remainder carries its extra path segment first
-      // and cannot parse as that shape.
-      val keyShape = "\\d+_[0-9pE\\-]+_[0-9pE\\-]+_s1_\\d+_\\d+_[0-9a-f]+".r
-      val parent = new org.apache.hadoop.fs.Path(base).getParent
-      if (fs.exists(parent)) fs.listStatus(parent).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith(dirPrefix) &&
-            keyShape.matches(n.substring(dirPrefix.length)) &&
-            !n.contains(stamp))
-          fs.delete(st.getPath, true)
-      }
-    } catch { case _: java.io.IOException => () } // GC is best-effort
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$base/final/_SUCCESS"))) {
-      val attempt = new org.apache.hadoop.fs.Path(
-        s"$base/v_${java.util.UUID.randomUUID().toString.take(8)}")
+    Published.publish(spark, exportPath(spark, dir, nShards, trainFrac, valFrac)) { at =>
       assignments(spark, dir, nShards, trainFrac, valFrac)
         .join(Tables.documents(spark, dir).select(col("doc_id"), col("text")),
           Seq("doc_id"))
         .repartition(col("split"), col("shard_id"))
-        .write.partitionBy("split", "shard_id").parquet(attempt.toString)
-      // rename-FIRST publish (the containmentProbeIdx discipline): the
-      // loser of a concurrent race drops its attempt, and a final/ dir
-      // WITHOUT the marker (a torn publish, or a committer configured
-      // to skip _SUCCESS) is swapped out atomically and retried once --
-      // previously that state wedged every call into a full
-      // write-and-rethrow cycle forever
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        fin.toUri, spark.sparkContext.hadoopConfiguration)
-      def markerOk() =
-        fs.exists(new org.apache.hadoop.fs.Path(s"$base/final/_SUCCESS"))
-      def tryRename(): Boolean =
-        try { fc.rename(attempt, fin); true }
-        catch { case _: java.io.IOException => false }
-      if (!tryRename()) {
-        if (markerOk()) fs.delete(attempt, true)
-        else {
-          val trash = new org.apache.hadoop.fs.Path(
-            s"$base/trash_${java.util.UUID.randomUUID().toString.take(8)}")
-          try fc.rename(fin, trash)
-          catch { case _: java.io.IOException => () }
-          fs.delete(trash, true)
-          if (!tryRename()) {
-            val ok = markerOk()
-            fs.delete(attempt, true)
-            if (!ok) throw new IllegalStateException(
-              s"exportManifest: could not publish $fin (rename failed " +
-                "twice and no complete tree is present)")
-          }
-        }
-      }
+        .write.partitionBy("split", "shard_id").parquet(at)
     }
     assignments(spark, dir, nShards, trainFrac, valFrac)
       .groupBy(col("split"), col("shard_id"))

@@ -494,8 +494,8 @@ object Dedup {
 
   /** The PERSISTED-index form of [[containmentProbe]] as a registered
     * query: builds the full [[DedupIndex]] (buckets + sets + postings)
-    * over the standing carve ONCE per source-table stamp under
-    * java.io.tmpdir, then probes the batch through
+    * over the standing carve ONCE per source-table stamp (a
+    * [[graft.Published]] artifact), then probes the batch through
     * [[DedupIndex.containmentProbe]]'s partition-pruned postings scan.
     * Output equals the memoized operator by construction (same df-cap
     * math over the same corpus-so-far), so it shares
@@ -505,76 +505,10 @@ object Dedup {
       threshold: Double = 0.5, maxDf: Int = 64, batchMod: Int = 10): DataFrame =
    graft.Caches.memo(spark,
        s"containmentProbeIdx:$dir:$threshold:$maxDf:$batchMod") {
-    val stamp = graft.Tables.fileStamp(spark, s"$dir/documents.parquet")
-    val keyPrefix = s"${dir.replaceAll("[^A-Za-z0-9]", "_")}_${batchMod}_"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_contain_index/" +
-      keyPrefix + stamp
-    val fin = new org.apache.hadoop.fs.Path(path)
-    val fs = fin.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // GC superseded stamps: every rewrite of the source table mints a
-    // new stamp and a fresh corpus-sized index; without cleanup the old
-    // stamps' complete indexes accumulate under tmpdir forever. Any
-    // sibling for the same (dir, batchMod) whose name does not carry
-    // the CURRENT stamp is stale by definition (the stamp is derived
-    // from the current file's content) — including its attempt/trash
-    // leftovers from crashed runs.
-    try {
-      val parent = fin.getParent
-      if (fs.exists(parent)) fs.listStatus(parent).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith(keyPrefix) && !n.contains(stamp))
-          fs.delete(st.getPath, true)
-      }
-    } catch { case _: java.io.IOException => () } // GC is best-effort
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    // attempt-dir + atomic-rename publish (the CorpusExport pattern): a
-    // bare in-place overwrite build fenced by a _SUCCESS existence check
-    // lets a session racing a completed one transiently expose a
-    // marker-present index with a half-rewritten buckets/ or sets/
-    // component; with the rename, the published path only ever appears
-    // fully built. Rename-FIRST discipline: a complete (marker-present)
-    // index is never deleted in place — a torn or older-layout dir is
-    // swapped OUT via its own atomic rename before the retry, and the
-    // loser of a concurrent publish race drops its attempt (the builds
-    // are deterministic over the same corpus, so either winner's index
-    // is the same index).
-    // complete AND readable: an index left by a pre-layout-2 build (no
-    // _meta / flat sets) reads as "not built" here, so the swap-out
-    // rename path below replaces it — this is a stamp-keyed cached
-    // artifact, not user data, so rebuild beats the refusal
-    // DedupIndex.checkLayout reserves for durable caller-owned paths
-    val markerOk = () => fs.exists(
-      new org.apache.hadoop.fs.Path(s"$path/postings/_SUCCESS")) &&
-      DedupIndex.layoutOk(spark, path)
-    if (!markerOk()) {
-      val attempt = new org.apache.hadoop.fs.Path(
-        s"${path}_attempt_${java.util.UUID.randomUUID().toString.take(8)}")
-      DedupIndex.build(docs.filter(col("doc_id") % batchMod =!= 0),
-        attempt.toString)
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        fin.toUri, spark.sparkContext.hadoopConfiguration)
-      def tryRename(): Boolean =
-        try { fc.rename(attempt, fin); true }
-        catch { case _: java.io.IOException => false }
-      if (!tryRename()) {
-        if (markerOk()) fs.delete(attempt, true) // racer published a complete index
-        else {
-          // torn/older-layout dir at the final path: swap it out
-          // atomically, drop it, retry once
-          val trash = new org.apache.hadoop.fs.Path(
-            s"${path}_trash_${java.util.UUID.randomUUID().toString.take(8)}")
-          try fc.rename(fin, trash)
-          catch { case _: java.io.IOException => () }
-          fs.delete(trash, true)
-          if (!tryRename()) {
-            val ok = markerOk()
-            fs.delete(attempt, true)
-            if (!ok) throw new IllegalStateException(
-              s"containmentProbeIdx: could not publish index at $path " +
-                "(rename failed twice and no complete index is present)")
-          }
-        }
-      }
+    val path = graft.Published.publish(spark, graft.Published.cachePath(spark,
+        "contain_index", dir, "documents.parquet", batchMod)) {
+      DedupIndex.build(docs.filter(col("doc_id") % batchMod =!= 0), _)
     }
     DedupIndex.containmentProbe(spark, path,
       docs.filter(col("doc_id") % batchMod === 0), threshold, maxDf)

@@ -123,16 +123,6 @@ object DedupIndex {
     text
   }
 
-  /** True iff a marker-complete index at `path` has a layout this
-    * reader can serve. Owners of CACHED indexes (stamp-keyed tmpdir
-    * artifacts) use this to treat an unreadable layout as "not built"
-    * and rebuild in place of the loud [[checkLayout]] refusal — which
-    * stays the right behavior for USER-SUPPLIED durable paths, where
-    * silently discarding the index would destroy data the caller owns. */
-  def layoutOk(spark: SparkSession, path: String): Boolean =
-    try { checkLayout(spark, path); true }
-    catch { case _: IllegalStateException => false }
-
   /** Refuse banding parameters that differ from the ones the index was
     * built with — a probe under different banding would silently return
     * near-zero collisions, which reads as "no duplicates", not as an

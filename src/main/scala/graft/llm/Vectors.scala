@@ -309,16 +309,19 @@ object Vectors {
   }
 
   /** Index location for [[ivfIndexTopK]] — every model-shaping knob
-    * plus the source-table stamp, the [[ivfPqIndexPath]] discipline:
+    * plus the source-table stamp ([[graft.Published.cachePath]]):
     * differently-knobbed or regenerated corpora build disjoint
-    * indexes, never collide. */
+    * indexes, never collide. This is the published dir. */
   def ivfIndexPath(spark: SparkSession, dir: String, nCells: Int = 16,
       trainSample: Int = 2048): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_ivf_index/" +
-      s"${dir.replaceAll("[^A-Za-z0-9]", "_")}_${nCells}_${trainSample}_" +
-      graft.Tables.fileStamp(spark, s"$dir/embeddings.parquet")
+    graft.Published.finalDir(ivfIndexKey(spark, dir, nCells, trainSample))
 
-  /** Build a PERSISTED plain-IVF (IVF-Flat) index — the
+  private def ivfIndexKey(spark: SparkSession, dir: String, nCells: Int,
+      trainSample: Int): String =
+    graft.Published.cachePath(spark, "ivf_index", dir, "embeddings.parquet",
+      nCells, trainSample)
+
+  /** Build a PERSISTED plain-IVF (IVF-Flat) index at `path` — the
     * [[buildIvfPqIndex]] pattern minus the codes: `path/assignment` is
     * the corpus re-laid-out by cell (vec_id, embedding, nrm), written
     * `partitionBy("cell")` so a partial probe is a PARTITION-PRUNED
@@ -326,21 +329,11 @@ object Vectors {
     * reads, which is the inverted-list property that makes IVF an
     * index at 100 TB rather than a full-scan annotation (FAISS
     * IVF-Flat stores full vectors in its lists for the same reason).
-    * `path/centroids.txt` (one `c v,v,…` line, written LAST within the
-    * attempt) is the probe-side model; Double.toString round-trips
-    * exactly, so the reloaded quantizer is bit-identical and the
-    * persisted path shares the inline form's results and oracle.
-    * Publication is attempt-dir + atomic rename: racing builders each
-    * assemble a private sibling and the first rename wins whole. */
+    * `path/centroids.txt` ([[writeModel]]) is the probe-side model,
+    * reloaded bit-identical, so the persisted path shares the inline
+    * form's results and oracle. */
   def buildIvfIndex(spark: SparkSession, dir: String, path: String,
       nCells: Int = 16, trainSample: Int = 2048): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fin = new Path(path)
-    val marker = new Path(s"$path/centroids.txt")
-    val fs = fin.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) return
-    val attempt = new Path(
-      s"${path}_v_${java.util.UUID.randomUUID().toString.take(8)}")
     val emb = withNorm(Tables.fanOut(Tables.embeddings(spark, dir)),
       "embedding", "nrm")
     val cents = coarseCentroids(spark, dir, nCells, trainSample)
@@ -350,28 +343,14 @@ object Vectors {
     emb.select(col("vec_id"), col("embedding"), col("nrm"),
         cellOf(cents).as("cell"))
       .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$attempt/assignment")
+      .write.partitionBy("cell")
+      .parquet(s"$path/assignment")
     // rule decisions persist WITH the index (see [[indexMetaTightness]]):
     // tightness is a build-time corpus statistic — computing it here
     // reuses the session memo the caller's promotion rule already built
-    val metaText = "tightness " +
-      assignmentTightness(spark, dir, nCells, trainSample).toString
-    val metaOut = fs.create(new Path(s"$attempt/meta.txt"), true)
-    metaOut.write(metaText.getBytes("UTF-8")); metaOut.close()
-    val ctText = cents.zipWithIndex
-      .map { case (c, i) => s"$i ${c.mkString(",")}" }.mkString("\n")
-    val ctOut = fs.create(new Path(s"$attempt/centroids.txt"), true)
-    ctOut.write(ctText.getBytes("UTF-8")); ctOut.close()
-    if (fs.exists(fin) && !fs.exists(marker)) fs.delete(fin, true)
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fin.toUri, spark.sparkContext.hadoopConfiguration)
-    try fc.rename(attempt, fin)
-    catch {
-      case e: java.io.IOException =>
-        fs.delete(attempt, true)
-        if (!fs.exists(marker)) throw e // a racer published; else real
-    }
+    writeModel(spark, s"$path/meta.txt", Seq("tightness" ->
+      Array(assignmentTightness(spark, dir, nCells, trainSample))))
+    writeModel(spark, s"$path/centroids.txt", centroidRows(cents))
   }
 
   /** Query a persisted plain-IVF index (building it first if absent):
@@ -385,19 +364,11 @@ object Vectors {
   def ivfIndexTopK(spark: SparkSession, dir: String, nQueries: Int = 10,
       k: Int = 5, nCells: Int = 16, trainSample: Int = 2048,
       nProbe: Int = Int.MaxValue): DataFrame = {
-    val path = ivfIndexPath(spark, dir, nCells, trainSample)
-    buildIvfIndex(spark, dir, path, nCells, trainSample)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(s"$path/centroids.txt"))
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.split("\n")
-      finally in.close()
-    val cents = new Array[Array[Double]](nCells)
-    lines.foreach { line =>
-      val parts = line.split(" ")
-      cents(parts(0).toInt) = parts(1).split(",").map(_.toDouble)
+    val path = graft.Published.publish(spark,
+        ivfIndexKey(spark, dir, nCells, trainSample)) {
+      buildIvfIndex(spark, dir, _, nCells, trainSample)
     }
+    val cents = readCentroids(spark, path, nCells)
     // session-memoized like the inline form's assignment: a serving
     // process keeps its hot index resident — without this, every warm
     // query re-lists the per-cell partition directories, which at
@@ -1071,33 +1042,21 @@ object Vectors {
         col("cos").as("cosine"))
   }
 
-  /** Build a PERSISTED PQ index: the encoded corpus lands in
+  /** Build a PERSISTED PQ index at `path`: the encoded corpus lands in
     * `path/codes` (parquet: vec_id, nrm, codes) and the codebooks in
-    * `path/codebooks.txt` (one `j c v,v,…` line per codeword —
-    * Double.toString round-trips exactly, so a reloaded codebook is
-    * bit-identical to the trained one). This is the production ANN
-    * shape [[simTopKPq]]'s inline form only simulates: encode the
-    * corpus ONCE, then every query session reads the ~12-byte/vector
-    * codes table and never re-derives codes — the same build-once/
-    * probe-many contract as [[DedupIndex]]. Idempotent: an existing
-    * index is left untouched. */
+    * `path/codebooks.txt` ([[writeModel]], reloaded bit-identical).
+    * This is the production ANN shape [[simTopKPq]]'s inline form only
+    * simulates: encode the corpus ONCE, then every query session reads
+    * the ~12-byte/vector codes table and never re-derives codes — the
+    * same build-once/probe-many contract as [[DedupIndex]]. */
   def buildPqIndex(spark: SparkSession, dir: String, path: String,
       m: Int = 8, nCodes: Int = 64, dim: Int = 64,
       trainSample: Int = 2048): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(s"$path/codebooks.txt")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) return
-    val sub = dim / m
     val emb = withNorm(Tables.fanOut(Tables.embeddings(spark, dir)),
       "embedding", "nrm")
     val codebooks = pqCodebooks(spark, dir, m, nCodes, dim, trainSample)
-    pqEncode(emb, codebooks, m, sub)
-      .write.mode("overwrite").parquet(s"$path/codes")
-    val text = (for (j <- 0 until m; c <- 0 until nCodes)
-      yield s"$j $c ${codebooks(j)(c).mkString(",")}").mkString("\n")
-    val out = fs.create(marker, true)
-    out.write(text.getBytes("UTF-8"))
-    out.close()
+    pqEncode(emb, codebooks, m, dim / m).write.parquet(s"$path/codes")
+    writeModel(spark, s"$path/codebooks.txt", codebookRows(codebooks))
   }
 
   /** Where [[pqIndexTopK]] caches its index for the given parameters.
@@ -1111,9 +1070,12 @@ object Vectors {
     * stale when the nCodes default moved 16 → 64. */
   def pqIndexPath(spark: SparkSession, dir: String, m: Int = 8,
       nCodes: Int = 64, dim: Int = 64, trainSample: Int = 2048): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_pq_index/" +
-      s"${dir.replaceAll("[^A-Za-z0-9]", "_")}_${m}_${nCodes}_${dim}_${trainSample}_" +
-      graft.Tables.fileStamp(spark, s"$dir/embeddings.parquet")
+    graft.Published.finalDir(pqIndexKey(spark, dir, m, nCodes, dim, trainSample))
+
+  private def pqIndexKey(spark: SparkSession, dir: String, m: Int,
+      nCodes: Int, dim: Int, trainSample: Int): String =
+    graft.Published.cachePath(spark, "pq_index", dir, "embeddings.parquet",
+      m, nCodes, dim, trainSample)
 
   /** Query a persisted PQ index (building it first if absent): the ADC
     * scan reads the codes parquet — not the embeddings — and only
@@ -1129,27 +1091,18 @@ object Vectors {
   def pqIndexTopK(spark: SparkSession, dir: String, nQueries: Int = 10,
       k: Int = 5, m: Int = 8, nCodes: Int = 64, refine: Int = 32,
       dim: Int = 64, trainSample: Int = 2048): DataFrame = {
-    val path = pqIndexPath(spark, dir, m, nCodes, dim, trainSample)
-    buildPqIndex(spark, dir, path, m, nCodes, dim, trainSample)
-    val marker = new org.apache.hadoop.fs.Path(s"$path/codebooks.txt")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(marker)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val sub = dim / m
-    val codebooks = Array.fill(m)(new Array[Array[Double]](nCodes))
-    text.split("\n").foreach { line =>
-      val parts = line.split(" ")
-      codebooks(parts(0).toInt)(parts(1).toInt) =
-        parts(2).split(",").map(_.toDouble)
+    val path = graft.Published.publish(spark,
+        pqIndexKey(spark, dir, m, nCodes, dim, trainSample)) {
+      buildPqIndex(spark, dir, _, m, nCodes, dim, trainSample)
     }
+    val codebooks = readCodebooks(spark, path, m, nCodes)
     val emb = withNorm(Tables.fanOut(Tables.embeddings(spark, dir)),
       "embedding", "nrm")
     // hot-index memo, the [[ivfIndexTopK]] discipline (stamp-keyed path)
     val encoded = graft.Caches.memo(spark, s"pqIdxCodes:$path") {
       spark.read.parquet(s"$path/codes")
     }
-    adcQuery(encoded, emb, codebooks, nQueries, k, refine, m, nCodes, sub)
+    adcQuery(encoded, emb, codebooks, nQueries, k, refine, m, nCodes, dim / m)
   }
 
   /** RESIDUAL IVF-PQ top-k (IVFADC, Jégou et al. 2011 §III) — the rung
@@ -1310,20 +1263,56 @@ object Vectors {
     * ships it with the index; the query path then reads two small text
     * files and the assignment parquet, nothing else. */
   private[graft] def indexMetaTightness(spark: SparkSession,
-      path: String): Option[Double] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/meta.txt")
+      path: String): Option[Double] =
+    readModel(spark, s"$path/meta.txt").get("tightness").map(_(0))
+
+  /** Index model files: one `<id> v,v,…` line per vector (centroid `c`,
+    * codeword `j c`, meta `tightness`). Double.toString round-trips
+    * exactly, so a reloaded model is bit-identical to the trained one. */
+  private def writeModel(spark: SparkSession, file: String,
+      rows: Seq[(String, Array[Double])]): Unit = {
+    val p = new org.apache.hadoop.fs.Path(file)
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(p, true)
+    try out.write(rows.map { case (id, v) => s"$id ${v.mkString(",")}" }
+      .mkString("\n").getBytes("UTF-8"))
+    finally out.close()
+  }
+
+  /** [[writeModel]]'s reader, by id; empty when `file` is absent. */
+  private def readModel(spark: SparkSession,
+      file: String): Map[String, Array[Double]] = {
+    val p = new org.apache.hadoop.fs.Path(file)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
+    if (!fs.exists(p)) Map.empty
     else {
       val in = fs.open(p)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
         finally in.close()
-      text.split("\n").collectFirst {
-        case line if line.startsWith("tightness ") =>
-          line.stripPrefix("tightness ").toDouble
-      }
+      text.split("\n").map { line =>
+        val sp = line.lastIndexOf(' ')
+        line.take(sp) -> line.drop(sp + 1).split(",").map(_.toDouble)
+      }.toMap
     }
+  }
+
+  private def centroidRows(cents: Array[Array[Double]]) =
+    cents.indices.map(c => s"$c" -> cents(c))
+
+  private def codebookRows(codebooks: Array[Array[Array[Double]]]) =
+    for (j <- codebooks.indices; c <- codebooks(j).indices)
+      yield s"$j $c" -> codebooks(j)(c)
+
+  private def readCentroids(spark: SparkSession, path: String,
+      nCells: Int): Array[Array[Double]] = {
+    val rows = readModel(spark, s"$path/centroids.txt")
+    Array.tabulate(nCells)(c => rows(s"$c"))
+  }
+
+  private def readCodebooks(spark: SparkSession, path: String, m: Int,
+      nCodes: Int): Array[Array[Array[Double]]] = {
+    val rows = readModel(spark, s"$path/codebooks.txt")
+    Array.tabulate(m, nCodes)((j, c) => rows(s"$j $c"))
   }
 
   /** The SERVING configuration the sizing + promotion rules pick
@@ -1487,63 +1476,28 @@ object Vectors {
         col("cos").as("cosine"))
   }
 
-  /** Build a PERSISTED residual IVF-PQ index — [[buildPqIndex]]'s shape
-    * at the residual rung: `path/codes` (vec_id, nrm, cell, codes),
-    * `path/centroids.txt` (one `c v,v,…` line per coarse centroid) and
-    * `path/codebooks.txt` (the PQ layout). Double.toString round-trips
-    * exactly, so a reloaded model is bit-identical to the trained one
-    * and the persisted path shares the inline form's oracle. */
+  /** Build a PERSISTED residual IVF-PQ index at `path` —
+    * [[buildPqIndex]]'s shape at the residual rung: `path/codes`
+    * (vec_id, nrm, cell, codes), `path/centroids.txt` and
+    * `path/codebooks.txt` ([[writeModel]]), reloaded bit-identical, so
+    * the persisted path shares the inline form's oracle. */
   def buildIvfPqIndex(spark: SparkSession, dir: String, path: String,
       nCells: Int = 16, m: Int = 8, nCodes: Int = 64, dim: Int = 64,
       trainSample: Int = 2048): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fin = new Path(path)
-    val marker = new Path(s"$path/centroids.txt")
-    val fs = fin.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) return
-    // attempt-dir + atomic-rename publish (the wmChunkDir discipline):
-    // racing builders each assemble a private sibling and the FIRST
-    // rename wins whole — no interleaving of one process's codes with
-    // another's models, which the in-place marker-last convention
-    // allowed
-    val attempt = new Path(
-      s"${path}_v_${java.util.UUID.randomUUID().toString.take(8)}")
-    val sub = dim / m
     val emb = withNorm(Tables.fanOut(Tables.embeddings(spark, dir)),
       "embedding", "nrm")
     val cents = coarseCentroids(spark, dir, nCells, trainSample)
     val codebooks = ivfPqCodebooks(spark, dir, nCells, m, nCodes, dim,
       trainSample)
-    ivfPqEncode(emb, cents, codebooks, m, sub)
-      .write.mode("overwrite").parquet(s"$attempt/codes")
-    val cbText = (for (j <- 0 until m; c <- 0 until nCodes)
-      yield s"$j $c ${codebooks(j)(c).mkString(",")}").mkString("\n")
-    val cbOut = fs.create(new Path(s"$attempt/codebooks.txt"), true)
-    cbOut.write(cbText.getBytes("UTF-8")); cbOut.close()
+    ivfPqEncode(emb, cents, codebooks, m, dim / m)
+      .write.parquet(s"$path/codes")
+    writeModel(spark, s"$path/codebooks.txt", codebookRows(codebooks))
     // rule decisions persist WITH the index ([[indexMetaTightness]]):
     // the scaled query path reads this instead of re-deriving the
     // corpus statistic (and the Lloyd retrain behind it) per cold run
-    val metaText = "tightness " +
-      assignmentTightness(spark, dir, nCells, trainSample).toString
-    val metaOut = fs.create(new Path(s"$attempt/meta.txt"), true)
-    metaOut.write(metaText.getBytes("UTF-8")); metaOut.close()
-    // centroids LAST within the attempt: even a torn ATTEMPT (crash
-    // mid-build) reads as "no index" should anything look inside it
-    val ctText = cents.zipWithIndex
-      .map { case (c, i) => s"$i ${c.mkString(",")}" }.mkString("\n")
-    val ctOut = fs.create(new Path(s"$attempt/centroids.txt"), true)
-    ctOut.write(ctText.getBytes("UTF-8")); ctOut.close()
-    // a pre-publish torn final dir (old in-place builds) reads as "no
-    // index" — clear it so the rename can land
-    if (fs.exists(fin) && !fs.exists(marker)) fs.delete(fin, true)
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fin.toUri, spark.sparkContext.hadoopConfiguration)
-    try fc.rename(attempt, fin)
-    catch {
-      case e: java.io.IOException =>
-        fs.delete(attempt, true)
-        if (!fs.exists(marker)) throw e // a racer published; else real
-    }
+    writeModel(spark, s"$path/meta.txt", Seq("tightness" ->
+      Array(assignmentTightness(spark, dir, nCells, trainSample))))
+    writeModel(spark, s"$path/centroids.txt", centroidRows(cents))
   }
 
   /** Index location for [[ivfPqIndexTopK]] — every model-shaping
@@ -1551,9 +1505,13 @@ object Vectors {
   def ivfPqIndexPath(spark: SparkSession, dir: String, nCells: Int = 16,
       m: Int = 8, nCodes: Int = 64, dim: Int = 64,
       trainSample: Int = 2048): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_ivfpq_index/" +
-      s"${dir.replaceAll("[^A-Za-z0-9]", "_")}_${nCells}_${m}_${nCodes}_${dim}_${trainSample}_" +
-      graft.Tables.fileStamp(spark, s"$dir/embeddings.parquet")
+    graft.Published.finalDir(
+      ivfPqIndexKey(spark, dir, nCells, m, nCodes, dim, trainSample))
+
+  private def ivfPqIndexKey(spark: SparkSession, dir: String, nCells: Int,
+      m: Int, nCodes: Int, dim: Int, trainSample: Int): String =
+    graft.Published.cachePath(spark, "ivfpq_index", dir, "embeddings.parquet",
+      nCells, m, nCodes, dim, trainSample)
 
   /** Query a persisted residual IVF-PQ index (building it first if
     * absent): the ADC scan reads the codes parquet — never the float
@@ -1564,26 +1522,12 @@ object Vectors {
       k: Int = 5, nCells: Int = 16, m: Int = 8, nCodes: Int = 64,
       refine: Int = 32, dim: Int = 64, trainSample: Int = 2048,
       nProbe: Int = Int.MaxValue): DataFrame = {
-    val path = ivfPqIndexPath(spark, dir, nCells, m, nCodes, dim, trainSample)
-    buildIvfPqIndex(spark, dir, path, nCells, m, nCodes, dim, trainSample)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def readLines(name: String): Array[String] = {
-      val in = fs.open(new org.apache.hadoop.fs.Path(s"$path/$name"))
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.split("\n")
-      finally in.close()
+    val path = graft.Published.publish(spark,
+        ivfPqIndexKey(spark, dir, nCells, m, nCodes, dim, trainSample)) {
+      buildIvfPqIndex(spark, dir, _, nCells, m, nCodes, dim, trainSample)
     }
-    val cents = new Array[Array[Double]](nCells)
-    readLines("centroids.txt").foreach { line =>
-      val parts = line.split(" ")
-      cents(parts(0).toInt) = parts(1).split(",").map(_.toDouble)
-    }
-    val codebooks = Array.fill(m)(new Array[Array[Double]](nCodes))
-    readLines("codebooks.txt").foreach { line =>
-      val parts = line.split(" ")
-      codebooks(parts(0).toInt)(parts(1).toInt) =
-        parts(2).split(",").map(_.toDouble)
-    }
+    val cents = readCentroids(spark, path, nCells)
+    val codebooks = readCodebooks(spark, path, m, nCodes)
     val emb = withNorm(Tables.fanOut(Tables.embeddings(spark, dir)),
       "embedding", "nrm")
     // hot-index memo, the [[ivfIndexTopK]] discipline (stamp-keyed path)

@@ -433,20 +433,15 @@ object StreamingNearDup extends Serializable {
     * index seconds (FileStreamSource orders by mtime; with
     * maxFilesPerTrigger = parts every trigger consumes exactly one
     * chunk's files, and the per-trigger scan is parts-parallel with no
-    * fan-out exchange — the r22 layout). fileStamp-keyed like the ORC
-    * mirror so a regenerated table rebuilds the feed; atomic-rename
-    * publish for racing builders. */
+    * fan-out exchange — the r22 layout). A [[graft.Published]] artifact
+    * of the documents table; its marker is `_`-prefixed, so the file
+    * stream reads the published dir as is. */
   private def wmChunkDir(spark: SparkSession, dir: String,
       nChunks: Int, parts: Int): String = {
     import org.apache.hadoop.fs.Path
-    val stamp = graft.Tables.fileStamp(spark, s"$dir/documents.parquet")
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_snd_wm/" +
-      s"${dir.replaceAll("[^A-Za-z0-9]", "_")}_${stamp}_${nChunks}_p$parts"
-    val fin = new Path(s"$base/final")
-    val fs = fin.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(s"$base/final/_PUBLISHED"))) {
-      val attempt = new Path(
-        s"$base/v_${java.util.UUID.randomUUID().toString.take(8)}")
+    graft.Published.publish(spark, graft.Published.cachePath(spark, "snd_wm",
+        dir, "documents.parquet", nChunks, s"p$parts")) { attempt =>
+      val fs = new Path(attempt).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val docs = graft.Tables.documents(spark, dir)
         .select(col("doc_id"), col("text"))
       // the oracle's watermark formula needs maxTs(batch k−1) =
@@ -498,17 +493,7 @@ object StreamingNearDup extends Serializable {
         }
         fs.delete(w, true)
       }
-      fs.create(new Path(s"$attempt/_PUBLISHED")).close()
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        fin.toUri, spark.sparkContext.hadoopConfiguration)
-      try fc.rename(attempt, fin)
-      catch {
-        case e: java.io.IOException =>
-          fs.delete(attempt, true)
-          if (!fs.exists(new Path(s"$base/final/_PUBLISHED"))) throw e
-      }
     }
-    fin.toString
   }
 
   /** Oracle twin of [[streamingNearDupWatermarkedQuery]]: the

@@ -1643,16 +1643,14 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("corpus export GC: reclaims this dir's stale trees, never a nested dir's live tree") {
     import graft.llm.CorpusExport
-    val parent = new java.io.File(
-      s"${System.getProperty("java.io.tmpdir")}/graft_export")
-    parent.mkdirs()
-    val dirPrefix = sf.replaceAll("[^A-Za-z0-9]", "_") + "_"
     // a LIVE export tree of the NESTED dir s"$sf/y" — its normalized
     // name extends this dir's prefix; the old startsWith-only GC
     // deleted it on every parent export
-    val nested = new java.io.File(parent, dirPrefix + "y_4_0p8_0p1_s1_9_9_ab")
+    val nested = new java.io.File(
+      Published.pathFor("export", s"$sf/y", "9_9_ab", 4, "0p8", "0p1", "s1"))
     // a STALE tree of THIS dir (key-shaped remainder, dead stamp)
-    val stale = new java.io.File(parent, dirPrefix + "4_0p8_0p1_s1_9_9_ab")
+    val stale = new java.io.File(
+      Published.pathFor("export", sf, "9_9_ab", 4, "0p8", "0p1", "s1"))
     nested.mkdirs(); stale.mkdirs()
     try {
       CorpusExport.exportManifest(spark, sf, 4).collect()

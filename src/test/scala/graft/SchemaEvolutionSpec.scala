@@ -42,7 +42,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
   test("writeEpochs publishes once: a rebuilt attempt never disturbs the published history") {
     val base = Files.createTempDirectory("graft-evo-pub").toString
     val p1 = SchemaEvolution.writeEpochs(spark, sf, base)
-    val marker = new java.io.File(s"$p1/_done")
+    val marker = new java.io.File(s"$p1/${Published.Marker}")
     assert(marker.exists())
     val mtime = marker.lastModified()
     val p2 = SchemaEvolution.writeEpochs(spark, sf, base)
