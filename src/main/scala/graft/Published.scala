@@ -2,6 +2,7 @@ package graft
 
 import java.io.IOException
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.regex.Pattern
 
 import org.apache.hadoop.fs.{FileContext, Path}
 import org.apache.spark.sql.SparkSession
@@ -48,20 +49,31 @@ object Published {
     * orphan one corpus-sized copy. A sibling is this dir's only if the
     * text after `<dir-key>_<key…>_` is exactly a stamp; the name of a
     * nested dir (`dir/y`) or of a suffixed one (`dir_10`) extends the
-    * prefix by at least one more token and is never matched. */
+    * prefix by at least one more token and is never matched.
+    *
+    * The same sweep drops what the layouts before this module left,
+    * each by its exact name: a crashed `<dir-key>_<key…>_<stamp>` sibling
+    * ending in `_v_`, `_attempt_` or `_trash_<uuid8>`; the wm feed's
+    * stamp-first `<dir-key>_<stamp>_<key…>`; and the flat index files
+    * an index kept beside `final/` in its own dir. */
   def cachePath(spark: SparkSession, kind: String, dir: String,
       table: String, key: Any*): String = {
     val stamp = Tables.fileStamp(spark, s"$dir/$table")
     val path = new Path(pathFor(kind, dir, stamp, key: _*))
     val prefix = path.getName.stripSuffix(stamp)
+    val dirKey = dir.replaceAll("[^A-Za-z0-9]", "_") + "_"
+    val stampFirst = s"${stampShape}_${Pattern.quote(key.mkString("_"))}".r
+    def stale(n: String) = n != path.getName &&
+      (n.startsWith(prefix) && orphanShape.matches(n.substring(prefix.length)) ||
+        stampFirstKinds(kind) && n.startsWith(dirKey) &&
+          stampFirst.matches(n.substring(dirKey.length)))
     try {
       val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(path.getParent)) fs.listStatus(path.getParent).foreach { st =>
-        val n = st.getPath.getName
-        if (n != path.getName && n.startsWith(prefix) &&
-            stampShape.matches(n.substring(prefix.length)))
-          fs.delete(st.getPath, true)
-      }
+      def sweep(d: Path)(drop: String => Boolean): Unit =
+        if (fs.exists(d)) fs.listStatus(d).filter(st => drop(st.getPath.getName))
+          .foreach(st => fs.delete(st.getPath, true))
+      sweep(path.getParent)(stale)
+      sweep(path)(flatIndexFile.matches)
     } catch { case _: IOException => () } // GC is best-effort
     path.toString
   }
@@ -74,7 +86,15 @@ object Published {
         .mkString("_")
 
   // Tables.fileStamp: <length>_<mtime>_<crc32 hex>
-  private val stampShape = "\\d+_\\d+_[0-9a-f]+".r
+  private val stampShape = "\\d+_\\d+_[0-9a-f]+"
+  // a stamp, or a pre-publish attempt or trash dir beside one
+  private val orphanShape = s"$stampShape(_(v|attempt|trash)_[0-9a-f]{8})?".r
+  // kinds whose pre-publish names put the stamp before the key
+  private val stampFirstKinds = Set("snd_wm")
+  // what the pre-publish IVF, PQ, IVF-PQ and containment indexes wrote
+  // into their dir
+  private val flatIndexFile =
+    "assignment|codes|(meta|centroids|codebooks)\\.txt|buckets|sets|postings|_meta".r
 
   /** Where the artifact at `path` is read once published. */
   def finalDir(path: String): String = s"$path/final"

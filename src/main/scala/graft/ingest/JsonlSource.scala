@@ -30,15 +30,6 @@ object JsonlSource {
     StructField("n_chars", LongType),
     StructField("_corrupt_record", StringType)))
 
-  /** Raw read: every input line becomes a row — parsed fields, or nulls
-    * plus the original line in `_corrupt_record` when parsing failed. */
-  def readDocuments(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .schema(documentsSchema)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(path)
-
   private val corruptOpts: Map[String, String] =
     Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt_record")
 

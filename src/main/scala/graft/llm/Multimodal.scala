@@ -140,9 +140,6 @@ object Multimodal {
       .toDF()
   }
 
-  def mediaHashes(spark: SparkSession, dir: String): DataFrame =
-    mediaHashesOf(spark, mediaTable(spark, dir))
-
   /** Visual near-duplicate pairs: dHash-64 per payload, then the EXACT
     * banded-Hamming self-join shared with SimHash text dedup
     * ([[Dedup.bandedHammingPairs]] — pigeonhole full recall at distance

@@ -387,9 +387,8 @@ object Sampling {
   }
 
   /** The sources-bounded (source, weight, tokens_total, target_share,
-    * accept_rate) rate table — the mix's trained-constant frame, shared
-    * by [[tokenBudgetMix]]'s collected path and
-    * [[tokenBudgetMixFromDocs]]' fully-distributed form. */
+    * accept_rate) rate table — the mix's trained-constant frame, which
+    * [[tokenBudgetMix]] collects. */
   private def mixRates(perDoc: DataFrame, budget: Long): DataFrame = {
     val weight = (lit(1L) + length(col("source")).cast("long") % 3L)
       .cast("double").as("weight")
@@ -418,23 +417,6 @@ object Sampling {
       col("doc_id"), col("source"),
       size(TextOps.tokens(col("text"))).cast("long").as("n_toks"),
       u52(col("doc_id").cast("string")).as("u"))
-
-  def tokenBudgetMixFromDocs(docs: DataFrame, budget: Long,
-      preCounted: Boolean = false): DataFrame = {
-    val perDoc = if (preCounted) docs else perDocTokens(docs)
-    val totals = mixRates(perDoc, budget)
-    val kept = perDoc
-      .join(broadcast(totals.select(col("source"), col("accept_rate"))),
-        Seq("source"))
-      .filter(col("u") < col("accept_rate"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_kept"), sum(col("n_toks")).as("tokens_kept"))
-    totals.join(kept, Seq("source"), "left")
-      .select(col("source"), col("weight"), col("tokens_total"),
-        col("target_share"), col("accept_rate"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(col("tokens_kept"), lit(0L)).as("tokens_kept"))
-  }
 
   def tokenBudgetMixSql(budget: Long = 20000L): String =
     s"""WITH d AS (SELECT doc_id, source,

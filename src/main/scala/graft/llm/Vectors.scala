@@ -23,8 +23,6 @@ object Vectors {
   def dotF32(a: Column, b: Column): Column =
     graft.functions.FloatDot.float_dot(a, b)
 
-  val dotSql: String = "CAST(list_dot_product(%s, %s) AS DOUBLE)"
-
   def cosine(a: Column, b: Column): Column =
     dotF32(a, b) / (clampNorm(sqrt(dotF32(a, a))) * clampNorm(sqrt(dotF32(b, b))))
 

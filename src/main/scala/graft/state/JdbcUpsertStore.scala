@@ -1,23 +1,25 @@
 package graft.state
 
-import java.sql.{Connection, DriverManager}
+import java.sql.{Connection, DriverManager, SQLException, Timestamp}
 import java.util.Properties
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.util.sketch.BloomFilter
 
 /** JDBC-backed state store mirroring the reference's PostgreSQL channel
-  * ("Mechanism Y.py":136-218): per batch, (K2) batch-insert the
-  * aggregate delta into a temp table and (K3) merge it into the target
-  * with one set-based additive upsert statement — both on the driver's
-  * own JDBC connection, all three tables in one transaction, no Spark
-  * job ([[applyDeltas]]) — and (S4) read state back with
-  * spark.read.jdbc. The store makes no Spark JDBC writes.
+  * ("Mechanism Y.py":136-218): per batch, (K2/K3) upsert each aggregate
+  * delta additively on the driver's own JDBC connection, all three
+  * tables in one transaction, no Spark job ([[applyDeltas]]), and (S4)
+  * read state back with spark.read.jdbc. The store makes no Spark JDBC
+  * writes.
   *
   * Runs on embedded Derby (ships with Spark — no extra dependency) with
-  * ANSI `MERGE INTO`; a `jdbc:postgresql:` URL selects the reference's
-  * own `INSERT … ON CONFLICT DO UPDATE` statement shape instead
-  * ([[UpsertDialect]] — PG14 has no MERGE). DDL shapes per
-  * sql/postgres_tables.sql: VARCHAR keys, BIGINT counts, DECIMAL(18,2)
-  * sums, TIMESTAMP last_updated.
+  * plain keyed statements: a Bloom filter of the keys each table has
+  * committed splits a delta into a batched keyed `UPDATE` and a batched
+  * `INSERT` — no temp table and no `MERGE`. A `jdbc:postgresql:` URL
+  * selects the reference's own temp table + `INSERT … ON CONFLICT DO
+  * UPDATE` shape instead ([[UpsertDialect]] — PG14 has no MERGE). DDL
+  * shapes per sql/postgres_tables.sql: VARCHAR keys, BIGINT counts,
+  * DECIMAL(18,2) sums, TIMESTAMP last_updated.
   *
   * Scale notes vs the reference (SURVEY.md §4 anti-patterns, fixed here):
   *   - reads accept a key predicate (pruned read) instead of full-table;
@@ -27,6 +29,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 class JdbcUpsertStore(url: String, driverClass: String =
     "org.apache.derby.jdbc.EmbeddedDriver",
     semiJoinKeyThreshold: Int = 1000) extends StateStore {
+  import JdbcUpsertStore.UpsertTable
 
   Class.forName(driverClass)
 
@@ -48,35 +51,21 @@ class JdbcUpsertStore(url: String, driverClass: String =
     try st.executeUpdate(sql) finally st.close()
   }
 
-  /** Case-fold-tolerant existence check: Derby folds unquoted
-    * identifiers to UPPERCASE in its catalog, PostgreSQL to lowercase —
-    * probing only the uppercase form made [[init]] see "missing" tables
-    * on the reference's own PG stack and fail on the re-CREATE. */
+  /** Whether `name` exists: a probe that reads no row, so the name
+    * folds exactly as the DDL's unquoted name did (Derby: uppercase,
+    * PostgreSQL: lowercase). */
   private def tableExists(c: Connection, name: String): Boolean = {
-    val md = c.getMetaData
-    // getTables takes a LIKE pattern: a literal `_` matches any single
-    // char, so "graft_state" would false-positive on "graftXstate" and
-    // skip the CREATE. Escape with the driver's escape string.
-    val esc = Option(md.getSearchStringEscape).filter(_.nonEmpty)
-    def lit(n: String): String = esc match {
-      case Some(e) => n.flatMap {
-        case c if c == '_' || c == '%' => e + c
-        case c => c.toString
-      }
-      case None => n
-    }
-    def probe(n: String): Boolean = {
-      val rs = md.getTables(null, null, lit(n), null)
-      try rs.next() finally rs.close()
-    }
-    probe(name.toUpperCase) || probe(name.toLowerCase)
+    val st = c.createStatement()
+    try { st.executeQuery(s"SELECT 1 FROM $name WHERE 1 = 0").close(); true }
+    catch { case _: SQLException => false } finally st.close()
   }
 
-  /** DDL per sql/postgres_tables.sql:3-25 (types mapped to Derby), plus
-    * each missing temp table, with its target's column types and the
-    * quoted lowercase column names [[UpsertDialect]]'s merge expects. */
+  /** DDL per sql/postgres_tables.sql:3-25 (types mapped to Derby), plus,
+    * on PostgreSQL, each missing temp table, with its target's column
+    * types and the quoted lowercase column names the ON CONFLICT
+    * statement selects. */
   def init(): Unit = withConn { c =>
-    if (!tableExists(c, "MERCHANT_SUMMARY")) {
+    if (!tableExists(c, "merchant_summary")) {
       exec(c, """CREATE TABLE merchant_summary (
         merchant_id VARCHAR(255) NOT NULL PRIMARY KEY,
         total_transactions BIGINT NOT NULL,
@@ -98,50 +87,52 @@ class JdbcUpsertStore(url: String, driverClass: String =
         epoch_id BIGINT NOT NULL,
         PRIMARY KEY (table_name, epoch_id))""")
     }
-    for (t <- JdbcUpsertStore.tables if !tableExists(c, t.temp)) {
-      val cols = t.keys.map(k => s"${q2(k)} VARCHAR(255)") ++
-        t.adds.map { case (a, ddl) => s"${q2(a)} $ddl" } :+ s"${q2("last_updated")} TIMESTAMP"
-      exec(c, s"CREATE TABLE ${t.temp} (${cols.mkString(", ")})")
-    }
+    if (dialect == UpsertDialect.PgOnConflict)
+      for (t <- JdbcUpsertStore.tables if !tableExists(c, t.temp)) {
+        val cols = t.keys.map(k => s""""$k" VARCHAR(255)""") ++
+          t.adds.map { case (a, ddl) => s""""$a" $ddl""" } :+ "\"last_updated\" TIMESTAMP"
+        exec(c, s"CREATE TABLE ${t.temp} (${cols.mkString(", ")})")
+      }
   }
 
   /** Idempotence fence: record (table, epoch) via the dialect's
     * conditional insert; false if already applied. Runs in the SAME
-    * transaction as the merge — see [[applyDeltas]]. */
+    * transaction as the upsert — see [[applyDeltas]]. */
   private def fence(c: Connection, table: String, epoch: Option[Long]): Boolean =
     epoch.forall(e => exec(c, dialect.fenceSql(table, e)) == 1)
 
-  /** The merge statement this store will execute — dialect-selected from
-    * the URL (Derby/ANSI → MERGE INTO; jdbc:postgresql: → the reference's
-    * INSERT … ON CONFLICT DO UPDATE). Exposed for golden-string tests
-    * since Postgres itself isn't available in CI. */
+  /** The statement that adds a delta onto existing keys — dialect-selected
+    * from the URL (jdbc:postgresql: → the reference's INSERT … ON
+    * CONFLICT DO UPDATE from `temp`; anything else → the keyed UPDATE,
+    * which reads no temp table). Exposed for golden-string tests since
+    * Postgres itself isn't available in CI. */
   private[graft] def upsertSql(target: String, temp: String,
-      keys: Seq[String], adds: Seq[String]): String =
-    dialect.mergeSql(target, temp, keys, adds)
+      keys: Seq[String], adds: Seq[String]): String = dialect match {
+    case UpsertDialect.PgOnConflict => UpsertDialect.PgOnConflict.mergeSql(target, temp, keys, adds)
+    case UpsertDialect.Ansi => UpsertDialect.Ansi.updateSql(target, keys, adds)
+  }
 
   private[graft] def fenceStatement(table: String, epoch: Long): String =
     dialect.fenceSql(table, epoch)
 
-  /** One connection, one transaction: commits if `f` returns, rolls back
-    * and rethrows if it throws. */
-  private def inTransaction(f: Connection => Unit): Unit = withConn { c =>
+  /** One connection, one transaction: returns `f`'s result once the
+    * commit returns; rolls back and rethrows if anything throws. */
+  private def inTransaction[A](f: Connection => A): A = withConn { c =>
     c.setAutoCommit(false)
-    try { f(c); c.commit() }
+    try { val a = f(c); c.commit(); a }
     catch {
       case e: Throwable =>
-        try c.rollback() catch { case _: java.sql.SQLException => () }
+        try c.rollback() catch { case _: SQLException => () }
         throw e
     }
   }
 
-  /** Batched INSERT of `rows` (values in `cols` order, quoted column
-    * names) into `table`, one round trip per 10k rows. A null binds as a
-    * VARCHAR null: only key values can be null here. */
-  private def insertRows(c: Connection, table: String, cols: Seq[String],
-      rows: Seq[Seq[Any]]): Unit = {
-    val ps = c.prepareStatement(s"INSERT INTO $table (${cols.map(q2).mkString(", ")}) " +
-      s"VALUES (${cols.map(_ => "?").mkString(", ")})")
-    try rows.grouped(10000).foreach { group =>
+  /** `sql` executed once per row of `rows` (values in parameter order),
+    * batched one round trip per 10k rows; the update count of each row.
+    * A null binds as a VARCHAR null: only key values can be null here. */
+  private def batched(c: Connection, sql: String, rows: Seq[Seq[Any]]): Seq[Int] = {
+    val ps = c.prepareStatement(sql)
+    try rows.grouped(10000).flatMap { group =>
       group.foreach { values =>
         values.zipWithIndex.foreach {
           case (null, i) => ps.setNull(i + 1, java.sql.Types.VARCHAR)
@@ -150,41 +141,105 @@ class JdbcUpsertStore(url: String, driverClass: String =
         ps.addBatch()
       }
       ps.executeBatch()
-    } finally ps.close()
+    }.toSeq finally ps.close()
+  }
+
+  /** Batched INSERT of `rows` (values in `cols` order) into `table`. */
+  private def insertRows(c: Connection, table: String, cols: Seq[String],
+      rows: Seq[Seq[Any]]): Unit =
+    batched(c, s"INSERT INTO $table (${cols.mkString(", ")}) " +
+      s"VALUES (${cols.map(_ => "?").mkString(", ")})", rows)
+
+  /** Per target table: a Bloom filter of the keys this store has seen
+    * committed, sized for `capacity` keys, and how many it holds. */
+  private final class KeyFilter(val bloom: BloomFilter, val capacity: Long, var count: Long)
+  private val filters = scala.collection.mutable.Map.empty[String, KeyFilter]
+  @volatile private[graft] var duplicateRetries = 0
+  private def filterKey(key: Seq[Any]): String = key.mkString("\u0000") // a clash is a false positive
+
+  /** A fresh filter of every key in `t`, from one key-only scan, sized
+    * at twice the keys found (so a rebuild at least doubles it). */
+  private def scanKeys(c: Connection, t: UpsertTable): KeyFilter = {
+    val st = c.createStatement()
+    val keys = scala.collection.mutable.ArrayBuffer.empty[String]
+    try {
+      val rs = st.executeQuery(s"SELECT ${t.keys.mkString(", ")} FROM ${t.target}")
+      while (rs.next()) keys += filterKey(t.keys.indices.map(i => rs.getString(i + 1)))
+    } finally st.close()
+    val capacity = math.max(JdbcUpsertStore.MinFilterKeys, 2L * keys.size)
+    val bloom = BloomFilter.create(capacity, JdbcUpsertStore.FilterFpp)
+    keys.foreach(bloom.putString)
+    new KeyFilter(bloom, capacity, keys.size)
+  }
+
+  /** Test hook: mark `key` as committed in `target`'s built filter. */
+  private[graft] def addToFilter(target: String, key: Seq[String]): Unit =
+    filters(target).bloom.putString(filterKey(key))
+
+  /** One delta (rows of keys ++ adds) into `t`: keys the filter may know
+    * take the batched keyed UPDATE; the rest, and any UPDATE that hit no
+    * row (a false positive), take one batched INSERT. Returns the
+    * inserted keys. */
+  private def upsertKeyed(c: Connection, t: UpsertTable, rows: Seq[Seq[Any]],
+      at: Timestamp): Seq[String] = {
+    val nk = t.keys.size
+    val filter = filters.getOrElseUpdate(t.target, scanKeys(c, t))
+    val (known, fresh) = rows.partition(r => filter.bloom.mightContainString(filterKey(r.take(nk))))
+    val counts = if (known.isEmpty) Nil else batched(c,
+      UpsertDialect.Ansi.updateSql(t.target, t.keys, t.adds.map(_._1)),
+      known.map(r => (r.drop(nk) :+ at) ++ r.take(nk)))
+    val inserts = fresh ++ known.zip(counts).collect { case (r, 0) => r }
+    if (inserts.nonEmpty) insertRows(c, t.target, t.columns, inserts.map(_ :+ at))
+    inserts.map(r => filterKey(r.take(nk)))
   }
 
   /** One batch's three upserts on the caller's thread, over one
     * connection in ONE transaction. Each delta is collected first (the
-    * runner's driver-local frames collect without a Spark job); then, per
-    * non-empty delta: the epoch fence, (K2) clear the temp table and
-    * batch-insert the rows with one `last_updated` per batch, (K3) the
-    * additive merge. A null additive value binds as 0, the reference's
-    * `COALESCE(…, 0)` ("Mechanism Y.py":178), so a pair whose amounts are
-    * all null cannot fail the NOT NULL sum. One commit makes the batch
-    * all-or-nothing across the three tables, so a replayed epoch applies
-    * all of it. */
+    * runner's driver-local frames collect without a Spark job), a null
+    * additive value as 0, the reference's `COALESCE(…, 0)` ("Mechanism
+    * Y.py":178); then, per non-empty delta, the epoch fence and the
+    * upsert, with one `last_updated` per batch. One commit makes the
+    * batch all-or-nothing, so a replayed epoch applies all of it.
+    *
+    * On PostgreSQL the upsert goes through the temp table; otherwise it
+    * is [[upsertKeyed]], whose inserted keys join the filters once the
+    * commit returns. A filter past its capacity is dropped, to be rebuilt
+    * on next use. A duplicate key (SQLState 23505: another writer
+    * committed a key the filter lacks) rolls back, drops the filters and
+    * retries once. */
   override def applyDeltas(merchantDelta: DataFrame,
       custMerchantDelta: DataFrame, genderDelta: DataFrame,
       epochId: Option[Long] = None): Unit = {
     val staged = JdbcUpsertStore.tables.zip(Seq(merchantDelta, custMerchantDelta, genderDelta))
       .map { case (t, delta) =>
-        (t, delta.schema, graft.CallSite.named(delta.sparkSession,
-          s"JdbcUpsertStore.applyDeltas: ${t.target} delta")(delta.collect()))
+        val keyIdx = t.keys.map(delta.schema.fieldIndex)
+        val addIdx = t.adds.map(a => delta.schema.fieldIndex(a._1))
+        t -> graft.CallSite.named(delta.sparkSession,
+          s"JdbcUpsertStore.applyDeltas: ${t.target} delta")(delta.collect()).toSeq.map { r =>
+          keyIdx.map(r.get) ++ addIdx.map(i => if (r.isNullAt(i)) 0 else r.get(i))
+        }
       }
-      .filter(_._3.nonEmpty)
+      .filter(_._2.nonEmpty)
     if (staged.isEmpty) return
-    val lastUpdated = new java.sql.Timestamp(System.currentTimeMillis())
-    inTransaction { c =>
-      for ((t, schema, rows) <- staged if fence(c, t.target, epochId)) {
+    val lastUpdated = new Timestamp(System.currentTimeMillis())
+    if (dialect == UpsertDialect.PgOnConflict) inTransaction { c =>
+      for ((t, rows) <- staged if fence(c, t.target, epochId)) {
         exec(c, s"DELETE FROM ${t.temp}")
-        val keyIdx = t.keys.map(schema.fieldIndex)
-        val addIdx = t.adds.map(a => schema.fieldIndex(a._1))
-        insertRows(c, t.temp, t.columns, rows.toSeq.map { r =>
-          keyIdx.map(r.get) ++ addIdx.map(i => if (r.isNullAt(i)) 0 else r.get(i)) :+
-            lastUpdated
-        })
-        exec(c, dialect.mergeSql(t.target, t.temp, t.keys, t.adds.map(_._1)))
+        insertRows(c, t.temp, t.columns, rows.map(_ :+ lastUpdated))
+        exec(c, upsertSql(t.target, t.temp, t.keys, t.adds.map(_._1)))
       }
+    } else filters.synchronized {
+      def attempt() = inTransaction { c =>
+        for ((t, rows) <- staged if fence(c, t.target, epochId))
+          yield t.target -> upsertKeyed(c, t, rows, lastUpdated)
+      }
+      val inserted = try attempt() catch {
+        case e: SQLException if e.getSQLState == "23505" =>
+          filters.clear(); duplicateRetries += 1; attempt()
+      }
+      for ((target, keys) <- inserted; f <- filters.get(target))
+        if (f.count + keys.size > f.capacity) filters.remove(target)
+        else { keys.foreach(f.bloom.putString); f.count += keys.size }
     }
   }
 
@@ -234,14 +289,14 @@ class JdbcUpsertStore(url: String, driverClass: String =
       val keysTable = s"temp_read_keys_${keysTableSeq.incrementAndGet()}"
       dropKeysTable(keysTable) // left behind by an earlier store that was never closed
       inTransaction { c =>
-        exec(c, s"CREATE TABLE $keysTable (${q2("k")} VARCHAR(255))")
+        exec(c, s"CREATE TABLE $keysTable (k VARCHAR(255))")
         insertRows(c, keysTable, Seq("k"), distinctIds.map(Seq(_)))
       }
       keysTables.addFirst(keysTable)
       while (keysTables.size() > keysTableRetention)
         dropKeysTable(keysTables.pollLast())
       val q = s"(SELECT t.* FROM $table t " +
-        s"INNER JOIN $keysTable r ON t.$keyCol = r.${q2("k")}) sq"
+        s"INNER JOIN $keysTable r ON t.$keyCol = r.k) sq"
       spark.read.jdbc(url, q, props).drop("last_updated")
     }
   }
@@ -255,12 +310,8 @@ class JdbcUpsertStore(url: String, driverClass: String =
   private def dropKeysTable(name: String): Unit =
     if (name != null) withConn { c =>
       try exec(c, s"DROP TABLE $name")
-      catch { case _: java.sql.SQLException => () } // already gone
+      catch { case _: SQLException => () } // already gone
     }
-
-  // temp-table columns are created and inserted with quoted
-  // (case-preserved) identifiers — same quoting contract as the merge
-  private def q2(c: String): String = "\"" + c + "\""
 
   override def merchantSummaryFor(spark: SparkSession,
       merchantIds: Seq[String]): DataFrame =
@@ -277,7 +328,7 @@ class JdbcUpsertStore(url: String, driverClass: String =
   override def close(): Unit = {
     while (!keysTables.isEmpty) dropKeysTable(keysTables.pollLast())
     try DriverManager.getConnection(s"$url;shutdown=true").close()
-    catch { case _: java.sql.SQLException => () } // Derby signals shutdown via exception
+    catch { case _: SQLException => () } // Derby signals shutdown via exception
   }
 }
 
@@ -285,7 +336,7 @@ object JdbcUpsertStore {
 
   /** A state table's upsert shape: key columns, additive columns with
     * their DDL types (sql/postgres_tables.sql), and the temp table its
-    * deltas are staged in. */
+    * deltas are staged in on PostgreSQL. */
   private final case class UpsertTable(target: String, temp: String,
       keys: Seq[String], adds: Seq[(String, String)]) {
     def columns: Seq[String] = keys ++ adds.map(_._1) :+ "last_updated"
@@ -301,19 +352,28 @@ object JdbcUpsertStore {
     UpsertTable("merchant_gender_summary", "temp_mgs_updates", Seq("merchant_id"),
       Seq("male_transaction_count" -> "BIGINT", "female_transaction_count" -> "BIGINT")))
 
+  /** Key filters: the false-positive rate (a false positive costs one
+    * keyed UPDATE that hits no row) and the smallest capacity. */
+  private val FilterFpp = 0.01
+  private val MinFilterKeys = 16384L
+
+  /** In-memory Derby keeps its transaction log on the heap until a
+    * checkpoint covers it; checkpointing every 256 KiB of log bounds
+    * that tail (Derby's default is 10 MB). */
+  private val MemoryCheckpointBytes = 1 << 18
+
+  private def open(url: String): JdbcUpsertStore = { val s = new JdbcUpsertStore(url); s.init(); s }
+
   /** Embedded Derby store under the given directory. */
-  def derby(dir: String): JdbcUpsertStore = {
-    val s = new JdbcUpsertStore(s"jdbc:derby:$dir;create=true")
-    s.init()
-    s
-  }
+  def derby(dir: String): JdbcUpsertStore = open(s"jdbc:derby:$dir;create=true")
 
   /** In-memory Derby (no fsync per merge) — the right mode when state
     * durability is delegated to checkpoint + replay rather than the
     * store itself. */
   def derbyMemory(name: String): JdbcUpsertStore = {
-    val s = new JdbcUpsertStore(s"jdbc:derby:memory:$name;create=true")
-    s.init()
+    val s = open(s"jdbc:derby:memory:$name;create=true")
+    s.withConn(c => s.exec(c, "CALL SYSCS_UTIL.SYSCS_SET_DATABASE_PROPERTY(" +
+      s"'derby.storage.checkpointInterval', '$MemoryCheckpointBytes')"))
     s
   }
 }

@@ -4,48 +4,33 @@ package graft.state
   * production stack is PostgreSQL 14 (/root/reference/README.md:141-144),
   * whose upsert form is `INSERT … ON CONFLICT (pk) DO UPDATE SET
   * col = target.col + EXCLUDED.col` ("Mechanism Y.py":152-160) — PG14
-  * has no `MERGE` (that arrived in PG15). Embedded Derby (the test
-  * store) speaks the ANSI `MERGE INTO` form instead. The dialect is
-  * selected from the JDBC URL so pointing the store at the reference's
-  * RDS emits the reference's exact statement shape.
-  *
-  * Column references on the temp-table side are quoted:
-  * [[JdbcUpsertStore.init]] creates the temp tables with quoted
-  * (case-preserved, lowercase) column names, so unquoted refs would
-  * canonicalize differently (Derby: uppercase) and miss.
+  * has no `MERGE` (that arrived in PG15). Every other database (embedded
+  * Derby, the test and bench store) gets plain ANSI keyed statements:
+  * [[JdbcUpsertStore]] splits each delta by the keys it has committed
+  * into one batched keyed `UPDATE` and one batched `INSERT`. The dialect
+  * is selected from the JDBC URL so pointing the store at the
+  * reference's RDS emits the reference's exact statement shape.
   */
 sealed trait UpsertDialect {
-  /** One set-based additive merge of `temp` into `target`: keys match →
-    * adds accumulate (+=) and last_updated refreshes; keys absent →
-    * insert. */
-  def mergeSql(target: String, temp: String, keys: Seq[String],
-      adds: Seq[String]): String
-
   /** Idempotence-fence insert for (table, epoch): update count is 1 if
     * the epoch was newly recorded, 0 if already applied. Expressed as a
     * conditional insert (not insert-then-catch) so it can run inside the
-    * same transaction as the merge without aborting it — PostgreSQL
+    * same transaction as the upsert without aborting it — PostgreSQL
     * aborts the whole transaction on any statement error, so the
-    * exception-based fence would poison the merge. */
+    * exception-based fence would poison the upsert. */
   def fenceSql(table: String, epoch: Long): String
-
-  protected final def q(c: String): String = "\"" + c + "\""
 }
 
 object UpsertDialect {
 
-  /** ANSI MERGE (Derby, also valid on PG15+/SQL Server/Oracle). */
-  case object Merge extends UpsertDialect {
-    override def mergeSql(target: String, temp: String, keys: Seq[String],
-        adds: Seq[String]): String = {
-      val on = keys.map(k => s"t.$k = s.${q(k)}").mkString(" AND ")
-      val sets = (adds.map(a => s"t.$a = t.$a + s.${q(a)}") :+
-        s"t.last_updated = s.${q("last_updated")}").mkString(", ")
-      val cols = (keys ++ adds :+ "last_updated").mkString(", ")
-      val vals = (keys ++ adds :+ "last_updated").map(x => s"s.${q(x)}").mkString(", ")
-      s"""MERGE INTO $target t USING $temp s ON ($on)
-         |WHEN MATCHED THEN UPDATE SET $sets
-         |WHEN NOT MATCHED THEN INSERT ($cols) VALUES ($vals)""".stripMargin
+  /** ANSI keyed statements (Derby; valid on any SQL database). */
+  case object Ansi extends UpsertDialect {
+    /** The additive update of one existing key, bound per row as
+      * (adds…, last_updated, keys…); its update count is 0 when the key
+      * is absent. */
+    def updateSql(target: String, keys: Seq[String], adds: Seq[String]): String = {
+      val sets = (adds.map(a => s"$a = $a + ?") :+ "last_updated = ?").mkString(", ")
+      s"UPDATE $target SET $sets WHERE ${keys.map(k => s"$k = ?").mkString(" AND ")}"
     }
 
     override def fenceSql(table: String, epoch: Long): String =
@@ -61,10 +46,14 @@ object UpsertDialect {
     * statement shape ("Mechanism Y.py":152-160; sql/postgres_tables.sql
     * PKs are the conflict targets). */
   case object PgOnConflict extends UpsertDialect {
-    override def mergeSql(target: String, temp: String, keys: Seq[String],
+    /** One set-based additive merge of `temp` into `target`: keys match →
+      * adds accumulate (+=) and last_updated refreshes; keys absent →
+      * insert. Temp-side columns are quoted: [[JdbcUpsertStore.init]]
+      * creates them with quoted lowercase names. */
+    def mergeSql(target: String, temp: String, keys: Seq[String],
         adds: Seq[String]): String = {
       val cols = (keys ++ adds :+ "last_updated").mkString(", ")
-      val sel = (keys ++ adds :+ "last_updated").map(q).mkString(", ")
+      val sel = (keys ++ adds :+ "last_updated").map(c => "\"" + c + "\"").mkString(", ")
       val conflict = keys.mkString(", ")
       // COALESCE on both sides per the reference's statement
       // ("Mechanism Y.py":178) — harmless under the NOT NULL DDL, kept
@@ -84,7 +73,7 @@ object UpsertDialect {
   }
 
   /** Dialect by JDBC URL: postgresql → ON CONFLICT, anything else →
-    * ANSI MERGE. */
+    * ANSI keyed statements. */
   def forUrl(url: String): UpsertDialect =
-    if (url.toLowerCase.startsWith("jdbc:postgresql")) PgOnConflict else Merge
+    if (url.toLowerCase.startsWith("jdbc:postgresql")) PgOnConflict else Ansi
 }

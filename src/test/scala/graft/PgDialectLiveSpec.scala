@@ -82,7 +82,7 @@ class PgDialectLiveSpec extends AnyFunSuite {
         ('c1', 'm1', 2, 4.50, now()),   -- conflict path: adds accumulate
         ('c3', 'm2', 7, 99.99, now())""") // insert path: new key
 
-      val merge = dialect.mergeSql("customer_merchant_summary", "temp_cms_updates",
+      val merge = UpsertDialect.PgOnConflict.mergeSql("customer_merchant_summary", "temp_cms_updates",
         Seq("customer_id", "merchant_id"),
         Seq("transaction_count", "total_amount_sum"))
       sqlOk(data, merge)

@@ -96,4 +96,41 @@ class PublishedSpec extends AnyFunSuite {
     } finally org.apache.hadoop.fs.FileUtil.fullyDelete(
       new File(stale).getParentFile)
   }
+
+  test("legacy GC: drops pre-publish orphans, stamp-first wm names and flat index files, keeps live artifacts") {
+    // the wm feed's kind under keys no query uses: the sweep runs in the
+    // shared tmpdir
+    val kind = "snd_wm"
+    val stamp = Tables.fileStamp(spark, s"$sf/documents.parquet")
+    val dead = "9_9_ab"
+    val live = Published.pathFor(kind, sf, stamp, 97, "p13")
+    val parent = new File(live).getParent
+    val dirKey = sf.replaceAll("[^A-Za-z0-9]", "_")
+    val legacy = Seq(
+      s"${dirKey}_${dead}_97_p13", s"${dirKey}_${stamp}_97_p13",   // stamp-first wm order
+      s"${Published.pathFor(kind, sf, dead, 97, "p13")}_v_1a2b3c4d",
+      s"${live}_attempt_0f0f0f0f", s"${live}_trash_deadbeef")
+      .map(n => if (n.startsWith("/")) n else s"$parent/$n")
+    // names that extend this dir's prefixes, or a live artifact's files
+    val kept = Seq(
+      Published.pathFor(kind, s"$sf/y", dead, 97, "p13"),
+      Published.pathFor(kind, s"${sf}_10", dead, 97, "p13"),
+      s"$parent/${dirKey}_10_${dead}_97_p13",
+      s"$parent/${dirKey}_y_${stamp}_97_p13",
+      Published.pathFor(kind, sf, stamp, 97, "p14"),
+      Published.finalDir(live))
+    (legacy ++ kept).foreach(p => Files.createDirectories(Paths.get(p)))
+    Seq("codes", "assignment", "buckets", "sets", "postings")
+      .foreach(d => Files.createDirectories(Paths.get(live, d)))
+    Seq("meta.txt", "centroids.txt", "codebooks.txt", "_meta").foreach(write(live, _, "old"))
+    write(Published.finalDir(live), Published.Marker, "")
+    try {
+      assert(Published.cachePath(spark, kind, sf, "documents.parquet", 97, "p13") == live)
+      legacy.foreach(p => assert(!new File(p).exists(), s"GC kept $p"))
+      kept.foreach(p => assert(new File(p).exists(), s"GC deleted $p"))
+      assert(names(live) == Set("final"))
+      assert(names(Published.finalDir(live)) == Set(Published.Marker))
+    } finally (Seq(live) ++ legacy ++ kept).foreach(p =>
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new File(p)))
+  }
 }

@@ -177,7 +177,94 @@ class StateSpec extends AnyFunSuite {
     finally next.close()
   }
 
-  test("dialect golden strings: postgresql URL → ON CONFLICT, Derby → MERGE INTO") {
+  /** The three tables as (keys…, adds…) strings, for whole-state equality. */
+  private def snapshot(store: JdbcUpsertStore): Seq[Set[String]] =
+    Seq(store.merchantSummary(spark), store.custMerchantSummary(spark), store.genderSummary(spark))
+      .map(_.collect().map(_.toSeq.mkString("|")).toSet)
+
+  test("cold key filter: a store reopened over state == one store fed every batch") {
+    val tx = txWithBucket(3).cache()
+    val batches = (0 until 3).map(b => deltas(tx.filter(col("b") === b)))
+    val one = freshStore("cold-one")
+    val dir = s"target/derby-test-cold-two-${System.nanoTime()}"
+    try {
+      batches.foreach { case (m, cm, g) => one.applyDeltas(m, cm, g) }
+      val first = JdbcUpsertStore.derby(dir)
+      batches.take(1).foreach { case (m, cm, g) => first.applyDeltas(m, cm, g) }
+      first.close()
+      // its filter starts from the table's keys: no duplicate-key retry
+      val reopened = JdbcUpsertStore.derby(dir)
+      try {
+        batches.drop(1).foreach { case (m, cm, g) => reopened.applyDeltas(m, cm, g) }
+        assert(reopened.duplicateRetries == 0)
+        assert(snapshot(reopened) == snapshot(one))
+      } finally reopened.close()
+    } finally one.close()
+  }
+
+  test("stale key filter: a key another store committed retries once on 23505, state == aggregation") {
+    val tx = txWithBucket(3).cache()
+    val Seq(b0, b1) = (0 until 2).map(b => deltas(tx.filter(col("b") === b)))
+    val dir = s"target/derby-test-stale-${System.nanoTime()}"
+    val a = JdbcUpsertStore.derby(dir)
+    val b = new JdbcUpsertStore(s"jdbc:derby:$dir")
+    try {
+      // b's filter is built after a's first commit; a's second batch
+      // then commits customer-merchant keys that b's filter lacks
+      for ((store, (m, cm, g)) <- Seq(a -> b0, b -> b0, a -> b1, b -> b1))
+        store.applyDeltas(m, cm, g)
+      assert(a.duplicateRetries == 0 && b.duplicateRetries == 1)
+      val both = tx.filter(col("b") < 2)
+      val (me, cme, ge) = deltas(both.unionAll(both))
+      val gotCm = b.custMerchantSummary(spark)
+        .withColumn("total_amount_sum", col("total_amount_sum").cast(DecimalType(28, 2)))
+      val wantCm = cme.withColumn("total_amount_sum",
+        col("total_amount_sum").cast(DecimalType(28, 2)))
+      for ((got, want) <- Seq(b.merchantSummary(spark) -> me, gotCm -> wantCm,
+          b.genderSummary(spark) -> ge))
+        assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    } finally { b.close(); a.close() }
+  }
+
+  test("a key filter false positive: a key the filter holds but the table lacks is inserted") {
+    import spark.implicits._
+    val store = freshStore("falsepos")
+    try {
+      val (m, _, g) = deltas(txWithBucket(2).filter(col("b") === 0).limit(1))
+      def cm(rows: (String, Long, String)*) = rows.map { case (c, n, sum) => (c, "m1", n, BigDecimal(sum)) }
+        .toDF("customer_id", "merchant_id", "transaction_count", "total_amount_sum")
+        .withColumn("total_amount_sum", col("total_amount_sum").cast(DecimalType(18, 2)))
+      store.applyDeltas(m, cm(("c0", 1L, "1.00")), g) // builds the filters
+      store.addToFilter("customer_merchant_summary", Seq("c1", "m1"))
+      store.applyDeltas(m, cm(("c1", 2L, "3.50"), ("c2", 1L, "1.25")), g)
+      assert(store.duplicateRetries == 0)
+      assert(store.custMerchantSummary(spark)
+        .select(col("customer_id"), col("transaction_count"), col("total_amount_sum").cast("string"))
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet ==
+        Set(("c0", 1L, "1.00"), ("c1", 2L, "3.50"), ("c2", 1L, "1.25")))
+    } finally store.close()
+  }
+
+  test("a key filter past its capacity is rebuilt from the table: every key adds, no retry") {
+    import graft.streaming.MicroBatchRunner.{custMerchantStateSchema, genderStateSchema, merchantStateSchema}
+    import scala.jdk.CollectionConverters._
+    def local(rows: Seq[Row], schema: StructType) = spark.createDataFrame(rows.asJava, schema)
+    // more keys than the smallest filter holds
+    val cm = local((0 until 20000).map(i =>
+      Row(s"c$i", "m1", 1L, new java.math.BigDecimal("1.00"))), custMerchantStateSchema)
+    val m = local(Nil, merchantStateSchema)
+    val g = local(Nil, genderStateSchema)
+    val store = freshStore("capacity")
+    try {
+      for (_ <- 0 until 2) store.applyDeltas(m, cm, g)
+      assert(store.duplicateRetries == 0)
+      assert(store.custMerchantSummary(spark).filter(col("transaction_count") =!= 2L ||
+        col("total_amount_sum") =!= 2).count() == 0)
+      assert(store.custMerchantSummary(spark).count() == 20000)
+    } finally store.close()
+  }
+
+  test("dialect golden strings: postgresql URL → ON CONFLICT, Derby → keyed UPDATE") {
     // a jdbc:postgresql: store must emit the reference's upsert form —
     // PG14 has no MERGE ("Mechanism Y.py":152-160); constructing the
     // store does not connect, so the SQL shape is testable without PG
@@ -192,13 +279,19 @@ class StateSpec extends AnyFunSuite {
     assert(pg.fenceStatement("merchant_summary", 7L)
       .contains("ON CONFLICT (table_name, epoch_id) DO NOTHING"))
 
+    // Derby: a keyed UPDATE that reads no temp table; absent keys take
+    // a plain INSERT (JdbcUpsertStore.upsertKeyed)
     val derby = freshStore("dialect")
     try {
-      val dSql = derby.upsertSql("merchant_summary", "temp_mts_updates",
-        Seq("merchant_id"), Seq("total_transactions"))
-      assert(dSql.contains("MERGE INTO merchant_summary"))
-      assert(dSql.contains("t.total_transactions = t.total_transactions + s.\"total_transactions\""))
-      assert(!dSql.contains("ON CONFLICT"))
+      assert(derby.upsertSql("merchant_summary", "temp_mts_updates",
+        Seq("merchant_id"), Seq("total_transactions")) ==
+        "UPDATE merchant_summary SET total_transactions = total_transactions + ?, " +
+          "last_updated = ? WHERE merchant_id = ?")
+      assert(derby.upsertSql("customer_merchant_summary", "temp_cms_updates",
+        Seq("customer_id", "merchant_id"), Seq("transaction_count", "total_amount_sum")) ==
+        "UPDATE customer_merchant_summary SET transaction_count = transaction_count + ?, " +
+          "total_amount_sum = total_amount_sum + ?, last_updated = ? " +
+          "WHERE customer_id = ? AND merchant_id = ?")
       assert(derby.fenceStatement("merchant_summary", 7L).contains("WHERE NOT EXISTS"))
     } finally derby.close()
   }
