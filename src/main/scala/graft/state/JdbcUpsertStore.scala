@@ -12,14 +12,14 @@ import org.apache.spark.util.sketch.BloomFilter
   * read state back with spark.read.jdbc. The store makes no Spark JDBC
   * writes.
   *
-  * Runs on embedded Derby (ships with Spark — no extra dependency) with
-  * plain keyed statements: a Bloom filter of the keys each table has
-  * committed splits a delta into a batched keyed `UPDATE` and a batched
-  * `INSERT` — no temp table and no `MERGE`. A `jdbc:postgresql:` URL
-  * selects the reference's own temp table + `INSERT … ON CONFLICT DO
-  * UPDATE` shape instead ([[UpsertDialect]] — PG14 has no MERGE). DDL
-  * shapes per sql/postgres_tables.sql: VARCHAR keys, BIGINT counts,
-  * DECIMAL(18,2) sums, TIMESTAMP last_updated.
+  * One statement set for every JDBC URL, in plain ANSI SQL: a Bloom
+  * filter of the keys each table has committed splits a delta into a
+  * batched keyed `UPDATE` and a batched `INSERT` — no temp table and no
+  * vendor upsert statement. The same text runs on embedded Derby
+  * (ships with Spark — no extra dependency; the test and bench store)
+  * and on PostgreSQL, the reference's database (PgUpsertLiveSpec runs it
+  * there). DDL shapes per sql/postgres_tables.sql: VARCHAR keys, BIGINT
+  * counts, DECIMAL(18,2) sums, TIMESTAMP last_updated.
   *
   * Scale notes vs the reference (SURVEY.md §4 anti-patterns, fixed here):
   *   - reads accept a key predicate (pruned read) instead of full-table;
@@ -27,13 +27,10 @@ import org.apache.spark.util.sketch.BloomFilter
   *     the reference's at-least-once semantics for parity).
   */
 class JdbcUpsertStore(url: String, driverClass: String =
-    "org.apache.derby.jdbc.EmbeddedDriver",
-    semiJoinKeyThreshold: Int = 1000) extends StateStore {
-  import JdbcUpsertStore.UpsertTable
+    "org.apache.derby.jdbc.EmbeddedDriver") extends StateStore {
+  import JdbcUpsertStore.{UpsertTable, fenceSql, insertSql, probeSql}
 
   Class.forName(driverClass)
-
-  private val dialect = UpsertDialect.forUrl(url)
 
   private def props: Properties = {
     val p = new Properties()
@@ -51,69 +48,24 @@ class JdbcUpsertStore(url: String, driverClass: String =
     try st.executeUpdate(sql) finally st.close()
   }
 
-  /** Whether `name` exists: a probe that reads no row, so the name
-    * folds exactly as the DDL's unquoted name did (Derby: uppercase,
-    * PostgreSQL: lowercase). */
+  /** Whether `name` exists ([[JdbcUpsertStore.probeSql]]). */
   private def tableExists(c: Connection, name: String): Boolean = {
     val st = c.createStatement()
-    try { st.executeQuery(s"SELECT 1 FROM $name WHERE 1 = 0").close(); true }
+    try { st.executeQuery(probeSql(name)).close(); true }
     catch { case _: SQLException => false } finally st.close()
   }
 
-  /** DDL per sql/postgres_tables.sql:3-25 (types mapped to Derby), plus,
-    * on PostgreSQL, each missing temp table, with its target's column
-    * types and the quoted lowercase column names the ON CONFLICT
-    * statement selects. */
+  /** The state tables and the fence table ([[JdbcUpsertStore.ddl]]),
+    * unless they exist. */
   def init(): Unit = withConn { c =>
-    if (!tableExists(c, "merchant_summary")) {
-      exec(c, """CREATE TABLE merchant_summary (
-        merchant_id VARCHAR(255) NOT NULL PRIMARY KEY,
-        total_transactions BIGINT NOT NULL,
-        last_updated TIMESTAMP)""")
-      exec(c, """CREATE TABLE customer_merchant_summary (
-        customer_id VARCHAR(255) NOT NULL,
-        merchant_id VARCHAR(255) NOT NULL,
-        transaction_count BIGINT NOT NULL,
-        total_amount_sum DECIMAL(18,2) NOT NULL,
-        last_updated TIMESTAMP,
-        PRIMARY KEY (customer_id, merchant_id))""")
-      exec(c, """CREATE TABLE merchant_gender_summary (
-        merchant_id VARCHAR(255) NOT NULL PRIMARY KEY,
-        male_transaction_count BIGINT NOT NULL,
-        female_transaction_count BIGINT NOT NULL,
-        last_updated TIMESTAMP)""")
-      exec(c, """CREATE TABLE applied_epochs (
-        table_name VARCHAR(64) NOT NULL,
-        epoch_id BIGINT NOT NULL,
-        PRIMARY KEY (table_name, epoch_id))""")
-    }
-    if (dialect == UpsertDialect.PgOnConflict)
-      for (t <- JdbcUpsertStore.tables if !tableExists(c, t.temp)) {
-        val cols = t.keys.map(k => s""""$k" VARCHAR(255)""") ++
-          t.adds.map { case (a, ddl) => s""""$a" $ddl""" } :+ "\"last_updated\" TIMESTAMP"
-        exec(c, s"CREATE TABLE ${t.temp} (${cols.mkString(", ")})")
-      }
+    if (!tableExists(c, "merchant_summary")) JdbcUpsertStore.ddl.foreach(exec(c, _))
   }
 
-  /** Idempotence fence: record (table, epoch) via the dialect's
-    * conditional insert; false if already applied. Runs in the SAME
-    * transaction as the upsert — see [[applyDeltas]]. */
+  /** Idempotence fence: record (table, epoch) via [[JdbcUpsertStore.fenceSql]];
+    * false if already applied. Runs in the SAME transaction as the
+    * upsert — see [[applyDeltas]]. */
   private def fence(c: Connection, table: String, epoch: Option[Long]): Boolean =
-    epoch.forall(e => exec(c, dialect.fenceSql(table, e)) == 1)
-
-  /** The statement that adds a delta onto existing keys — dialect-selected
-    * from the URL (jdbc:postgresql: → the reference's INSERT … ON
-    * CONFLICT DO UPDATE from `temp`; anything else → the keyed UPDATE,
-    * which reads no temp table). Exposed for golden-string tests since
-    * Postgres itself isn't available in CI. */
-  private[graft] def upsertSql(target: String, temp: String,
-      keys: Seq[String], adds: Seq[String]): String = dialect match {
-    case UpsertDialect.PgOnConflict => UpsertDialect.PgOnConflict.mergeSql(target, temp, keys, adds)
-    case UpsertDialect.Ansi => UpsertDialect.Ansi.updateSql(target, keys, adds)
-  }
-
-  private[graft] def fenceStatement(table: String, epoch: Long): String =
-    dialect.fenceSql(table, epoch)
+    epoch.forall(e => exec(c, fenceSql(table, e)) == 1)
 
   /** One connection, one transaction: returns `f`'s result once the
     * commit returns; rolls back and rethrows if anything throws. */
@@ -147,8 +99,7 @@ class JdbcUpsertStore(url: String, driverClass: String =
   /** Batched INSERT of `rows` (values in `cols` order) into `table`. */
   private def insertRows(c: Connection, table: String, cols: Seq[String],
       rows: Seq[Seq[Any]]): Unit =
-    batched(c, s"INSERT INTO $table (${cols.mkString(", ")}) " +
-      s"VALUES (${cols.map(_ => "?").mkString(", ")})", rows)
+    batched(c, insertSql(table, cols), rows)
 
   /** Per target table: a Bloom filter of the keys this store has seen
     * committed, sized for `capacity` keys, and how many it holds. */
@@ -185,8 +136,7 @@ class JdbcUpsertStore(url: String, driverClass: String =
     val nk = t.keys.size
     val filter = filters.getOrElseUpdate(t.target, scanKeys(c, t))
     val (known, fresh) = rows.partition(r => filter.bloom.mightContainString(filterKey(r.take(nk))))
-    val counts = if (known.isEmpty) Nil else batched(c,
-      UpsertDialect.Ansi.updateSql(t.target, t.keys, t.adds.map(_._1)),
+    val counts = if (known.isEmpty) Nil else batched(c, t.updateSql,
       known.map(r => (r.drop(nk) :+ at) ++ r.take(nk)))
     val inserts = fresh ++ known.zip(counts).collect { case (r, 0) => r }
     if (inserts.nonEmpty) insertRows(c, t.target, t.columns, inserts.map(_ :+ at))
@@ -201,19 +151,19 @@ class JdbcUpsertStore(url: String, driverClass: String =
     * upsert, with one `last_updated` per batch. One commit makes the
     * batch all-or-nothing, so a replayed epoch applies all of it.
     *
-    * On PostgreSQL the upsert goes through the temp table; otherwise it
-    * is [[upsertKeyed]], whose inserted keys join the filters once the
-    * commit returns. A filter past its capacity is dropped, to be rebuilt
-    * on next use. A duplicate key (SQLState 23505: another writer
-    * committed a key the filter lacks) rolls back, drops the filters and
-    * retries once. */
+    * The upsert is [[upsertKeyed]], whose inserted keys join the filters
+    * once the commit returns. A filter past its capacity is dropped, to
+    * be rebuilt on next use. A duplicate key (SQLState 23505: another
+    * writer committed a key the filter lacks, or, on PostgreSQL, the
+    * same epoch's fence row) rolls back, drops the filters and retries
+    * once. */
   override def applyDeltas(merchantDelta: DataFrame,
       custMerchantDelta: DataFrame, genderDelta: DataFrame,
       epochId: Option[Long] = None): Unit = {
     val staged = JdbcUpsertStore.tables.zip(Seq(merchantDelta, custMerchantDelta, genderDelta))
       .map { case (t, delta) =>
         val keyIdx = t.keys.map(delta.schema.fieldIndex)
-        val addIdx = t.adds.map(a => delta.schema.fieldIndex(a._1))
+        val addIdx = t.adds.map(delta.schema.fieldIndex)
         t -> graft.CallSite.named(delta.sparkSession,
           s"JdbcUpsertStore.applyDeltas: ${t.target} delta")(delta.collect()).toSeq.map { r =>
           keyIdx.map(r.get) ++ addIdx.map(i => if (r.isNullAt(i)) 0 else r.get(i))
@@ -222,13 +172,7 @@ class JdbcUpsertStore(url: String, driverClass: String =
       .filter(_._2.nonEmpty)
     if (staged.isEmpty) return
     val lastUpdated = new Timestamp(System.currentTimeMillis())
-    if (dialect == UpsertDialect.PgOnConflict) inTransaction { c =>
-      for ((t, rows) <- staged if fence(c, t.target, epochId)) {
-        exec(c, s"DELETE FROM ${t.temp}")
-        insertRows(c, t.temp, t.columns, rows.map(_ :+ lastUpdated))
-        exec(c, upsertSql(t.target, t.temp, t.keys, t.adds.map(_._1)))
-      }
-    } else filters.synchronized {
+    filters.synchronized {
       def attempt() = inTransaction { c =>
         for ((t, rows) <- staged if fence(c, t.target, epochId))
           yield t.target -> upsertKeyed(c, t, rows, lastUpdated)
@@ -257,7 +201,7 @@ class JdbcUpsertStore(url: String, driverClass: String =
     * (shows up as a WHERE on the remote side), so per-batch state IO is
     * O(batch keys), not O(state). Two forms by key count:
     *
-    *   - ≤ [[semiJoinKeyThreshold]] keys: IN-lists split into ~250-key
+    *   - ≤ [[JdbcUpsertStore.SemiJoinKeys]] keys: IN-lists split into ~250-key
     *     groups, one scan partition each — a 1k-merchant batch reads
     *     over 4 parallel connections without building a giant statement.
     *   - wider batches: the key set is batch-inserted into a keys temp
@@ -270,7 +214,7 @@ class JdbcUpsertStore(url: String, driverClass: String =
     val distinctIds = ids.distinct
     if (distinctIds.isEmpty)
       spark.read.jdbc(url, table, Array("1=0"), props).drop("last_updated")
-    else if (distinctIds.size <= semiJoinKeyThreshold) {
+    else if (distinctIds.size <= JdbcUpsertStore.SemiJoinKeys) {
       val preds = distinctIds.grouped(250).map { g =>
         val in = g.map(id => s"'${id.replace("'", "''")}'").mkString(",")
         s"$keyCol IN ($in)"
@@ -334,23 +278,80 @@ class JdbcUpsertStore(url: String, driverClass: String =
 
 object JdbcUpsertStore {
 
-  /** A state table's upsert shape: key columns, additive columns with
-    * their DDL types (sql/postgres_tables.sql), and the temp table its
-    * deltas are staged in on PostgreSQL. */
-  private final case class UpsertTable(target: String, temp: String,
-      keys: Seq[String], adds: Seq[(String, String)]) {
-    def columns: Seq[String] = keys ++ adds.map(_._1) :+ "last_updated"
+  /** A state table's upsert shape: key columns and additive columns. A
+    * delta's new keys take [[insertSql]] over [[columns]]. */
+  private[graft] final case class UpsertTable(target: String, keys: Seq[String],
+      adds: Seq[String]) {
+    def columns: Seq[String] = keys ++ adds :+ "last_updated"
+
+    /** The additive update of one existing key, bound per row as
+      * (adds…, last_updated, keys…); its update count is 0 when the key
+      * is absent. Each `?` takes the target column's type, so a delta
+      * wider than DECIMAL(18,2) keeps its cents. */
+    val updateSql: String = {
+      val sets = (adds.map(a => s"$a = $a + ?") :+ "last_updated = ?").mkString(", ")
+      s"UPDATE $target SET $sets WHERE ${keys.map(k => s"$k = ?").mkString(" AND ")}"
+    }
   }
 
   /** The three state tables, in [[StateStore.applyDeltas]] argument order. */
-  private val tables: Seq[UpsertTable] = Seq(
-    UpsertTable("merchant_summary", "temp_mts_updates", Seq("merchant_id"),
-      Seq("total_transactions" -> "BIGINT")),
-    UpsertTable("customer_merchant_summary", "temp_cms_updates",
-      Seq("customer_id", "merchant_id"),
-      Seq("transaction_count" -> "BIGINT", "total_amount_sum" -> "DECIMAL(18,2)")),
-    UpsertTable("merchant_gender_summary", "temp_mgs_updates", Seq("merchant_id"),
-      Seq("male_transaction_count" -> "BIGINT", "female_transaction_count" -> "BIGINT")))
+  private[graft] val tables: Seq[UpsertTable] = Seq(
+    UpsertTable("merchant_summary", Seq("merchant_id"), Seq("total_transactions")),
+    UpsertTable("customer_merchant_summary", Seq("customer_id", "merchant_id"),
+      Seq("transaction_count", "total_amount_sum")),
+    UpsertTable("merchant_gender_summary", Seq("merchant_id"),
+      Seq("male_transaction_count", "female_transaction_count")))
+
+  /** DDL per sql/postgres_tables.sql:3-25, plus the epoch fence table. */
+  private[graft] val ddl: Seq[String] = Seq(
+    """CREATE TABLE merchant_summary (
+        merchant_id VARCHAR(255) NOT NULL PRIMARY KEY,
+        total_transactions BIGINT NOT NULL,
+        last_updated TIMESTAMP)""",
+    """CREATE TABLE customer_merchant_summary (
+        customer_id VARCHAR(255) NOT NULL,
+        merchant_id VARCHAR(255) NOT NULL,
+        transaction_count BIGINT NOT NULL,
+        total_amount_sum DECIMAL(18,2) NOT NULL,
+        last_updated TIMESTAMP,
+        PRIMARY KEY (customer_id, merchant_id))""",
+    """CREATE TABLE merchant_gender_summary (
+        merchant_id VARCHAR(255) NOT NULL PRIMARY KEY,
+        male_transaction_count BIGINT NOT NULL,
+        female_transaction_count BIGINT NOT NULL,
+        last_updated TIMESTAMP)""",
+    """CREATE TABLE applied_epochs (
+        table_name VARCHAR(64) NOT NULL,
+        epoch_id BIGINT NOT NULL,
+        PRIMARY KEY (table_name, epoch_id))""")
+
+  /** The insert of one row, bound in `cols` order. */
+  private[graft] def insertSql(table: String, cols: Seq[String]): String =
+    s"INSERT INTO $table (${cols.mkString(", ")}) VALUES (${cols.map(_ => "?").mkString(", ")})"
+
+  /** Whether `table` exists: a probe that reads no row, so the name folds
+    * exactly as the DDL's unquoted name did (Derby: uppercase,
+    * PostgreSQL: lowercase). */
+  private[graft] def probeSql(table: String): String = s"SELECT 1 FROM $table WHERE 1 = 0"
+
+  /** Idempotence fence for (table, epoch): its update count is 1 if the
+    * epoch was newly recorded, 0 if already applied. A conditional insert
+    * over a one-row derived table, not insert-then-catch, so it runs
+    * inside the upsert's transaction without aborting it (PostgreSQL
+    * aborts the whole transaction on any statement error). Two writers
+    * racing on one epoch on PostgreSQL both pass the NOT EXISTS; the
+    * primary key makes the later one fail with 23505, and it rolls back
+    * and retries once ([[JdbcUpsertStore.applyDeltas]]), when its fence
+    * sees the committed epoch and skips. */
+  private[graft] def fenceSql(table: String, epoch: Long): String =
+    s"""INSERT INTO applied_epochs (table_name, epoch_id)
+       |SELECT '$table', $epoch FROM (VALUES (1)) AS one(x)
+       |WHERE NOT EXISTS (SELECT 1 FROM applied_epochs
+       |  WHERE table_name = '$table' AND epoch_id = $epoch)""".stripMargin
+
+  /** Pruned reads of more keys than this semi-join a keys table instead
+    * of listing them in IN-lists ([[JdbcUpsertStore.prunedRead]]). */
+  private val SemiJoinKeys = 1000
 
   /** Key filters: the false-positive rate (a false positive costs one
     * keyed UPDATE that hits no row) and the smallest capacity. */

@@ -10,8 +10,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Delta frames carry the PER-BATCH aggregates; implementations merge
   * additively (count += delta, sum += delta), inserting absent keys —
-  * exactly the reference's `ON CONFLICT (pk) DO UPDATE SET x = x + EXCLUDED.x`
-  * semantics ("Mechanism Y.py":152-160).
+  * the semantics of the reference's per-batch upsert ("Mechanism
+  * Y.py":152-160).
   *
   * Delivery semantics: [[applyDeltas]] with `epochId = None` reproduces
   * the reference's at-least-once double-count on replay (README.md:232);

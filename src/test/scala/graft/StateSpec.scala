@@ -51,10 +51,10 @@ class StateSpec extends AnyFunSuite {
   }
 
   test("a wide-decimal delta keeps its cents (DerbyDialect precision>31 cap)") {
-    // sum(sum(DECIMAL(18,2))) = DECIMAL(38,2): the temp table takes the
-    // DDL's DECIMAL(18,2) from init, not the delta's type (a temp column
-    // typed from the delta through Spark's DerbyDialect was
-    // DECIMAL(31,0), and the cents vanished)
+    // sum(sum(DECIMAL(18,2))) = DECIMAL(38,2): the keyed UPDATE's `?` and
+    // the INSERT's column take the target's DECIMAL(18,2) from init, not
+    // the delta's type (a column typed from the delta through Spark's
+    // DerbyDialect was DECIMAL(31,0), and the cents vanished)
     val store = freshStore("widecents")
     try {
       import spark.implicits._
@@ -141,22 +141,26 @@ class StateSpec extends AnyFunSuite {
     } finally store.close()
   }
 
+  /** 1000 merchant ids with no state: with any present id, a pruned read
+    * of them lists more than 1000 keys. */
+  private val absentIds = (0 until 1000).map(i => s"absent-$i")
+
   test("semi-join pruned read (wide batches) returns the same rows as the IN-list form") {
-    // threshold 0 forces every pruned read through the keys-temp-table
-    // semi-join — the O(1)-statement path wide batches take
+    // more than 1000 ids (the present ones plus absent ones) take every
+    // pruned read through the keys-temp-table semi-join — the
+    // O(1)-statement path wide batches take
     val dir = s"target/derby-test-semijoin-${System.nanoTime()}"
-    val store = new graft.state.JdbcUpsertStore(
-      s"jdbc:derby:$dir;create=true", semiJoinKeyThreshold = 0)
+    val store = new graft.state.JdbcUpsertStore(s"jdbc:derby:$dir;create=true")
     store.init()
     try {
       val (m, cm, g) = deltas(txWithBucket(1))
       store.applyDeltas(m, cm, g)
       val keys = m.select("merchant_id").collect().map(_.getString(0)).toSeq
       val some = keys.take(7)
-      val gotM = store.merchantSummaryFor(spark, some)
+      val gotM = store.merchantSummaryFor(spark, some ++ absentIds)
       val wantM = m.filter(col("merchant_id").isin(some: _*))
       assert(gotM.exceptAll(wantM).isEmpty && wantM.exceptAll(gotM).isEmpty)
-      val gotCm = store.custMerchantSummaryFor(spark, some)
+      val gotCm = store.custMerchantSummaryFor(spark, some ++ absentIds)
       assert(gotCm.select("merchant_id").distinct().collect()
         .map(_.getString(0)).toSet == some.toSet)
       assert(store.merchantSummaryFor(spark, Nil).isEmpty)
@@ -165,13 +169,13 @@ class StateSpec extends AnyFunSuite {
 
   test("semi-join keys tables left by a store that was never closed do not break the next one") {
     val url = s"jdbc:derby:target/derby-test-keysleft-${System.nanoTime()};create=true"
-    val first = new JdbcUpsertStore(url, semiJoinKeyThreshold = 0)
+    val first = new JdbcUpsertStore(url)
     first.init()
     val (m, cm, g) = deltas(txWithBucket(1))
     first.applyDeltas(m, cm, g)
-    val some = m.select("merchant_id").collect().map(_.getString(0)).toSeq.take(3)
+    val some = m.select("merchant_id").collect().map(_.getString(0)).toSeq.take(3) ++ absentIds
     assert(first.merchantSummaryFor(spark, some).count() == 3) // its keys table stays
-    val next = new JdbcUpsertStore(url, semiJoinKeyThreshold = 0) // same key-table names
+    val next = new JdbcUpsertStore(url) // same key-table names
     next.init()
     try assert(next.merchantSummaryFor(spark, some).count() == 3)
     finally next.close()
@@ -264,36 +268,54 @@ class StateSpec extends AnyFunSuite {
     } finally store.close()
   }
 
-  test("dialect golden strings: postgresql URL → ON CONFLICT, Derby → keyed UPDATE") {
-    // a jdbc:postgresql: store must emit the reference's upsert form —
-    // PG14 has no MERGE ("Mechanism Y.py":152-160); constructing the
-    // store does not connect, so the SQL shape is testable without PG
-    val pg = new JdbcUpsertStore("jdbc:postgresql://host/db")
-    val pgSql = pg.upsertSql("customer_merchant_summary", "temp_cms_updates",
-      Seq("customer_id", "merchant_id"), Seq("transaction_count", "total_amount_sum"))
-    assert(pgSql.contains("ON CONFLICT (customer_id, merchant_id) DO UPDATE"))
-    assert(pgSql.contains(
-      "total_amount_sum = COALESCE(customer_merchant_summary.total_amount_sum, 0) " +
-        "+ COALESCE(EXCLUDED.total_amount_sum, 0)"))
-    assert(!pgSql.contains("MERGE INTO"))
-    assert(pg.fenceStatement("merchant_summary", 7L)
-      .contains("ON CONFLICT (table_name, epoch_id) DO NOTHING"))
-
-    // Derby: a keyed UPDATE that reads no temp table; absent keys take
-    // a plain INSERT (JdbcUpsertStore.upsertKeyed)
-    val derby = freshStore("dialect")
+  /** Every statement text in the statement cache of the database at `url`. */
+  private def statementCache(url: String): Set[String] = {
+    val c = java.sql.DriverManager.getConnection(url)
     try {
-      assert(derby.upsertSql("merchant_summary", "temp_mts_updates",
-        Seq("merchant_id"), Seq("total_transactions")) ==
-        "UPDATE merchant_summary SET total_transactions = total_transactions + ?, " +
-          "last_updated = ? WHERE merchant_id = ?")
-      assert(derby.upsertSql("customer_merchant_summary", "temp_cms_updates",
-        Seq("customer_id", "merchant_id"), Seq("transaction_count", "total_amount_sum")) ==
-        "UPDATE customer_merchant_summary SET transaction_count = transaction_count + ?, " +
-          "total_amount_sum = total_amount_sum + ?, last_updated = ? " +
-          "WHERE customer_id = ? AND merchant_id = ?")
-      assert(derby.fenceStatement("merchant_summary", 7L).contains("WHERE NOT EXISTS"))
-    } finally derby.close()
+      val rs = c.createStatement().executeQuery("SELECT SQL_TEXT FROM SYSCS_DIAG.STATEMENT_CACHE")
+      Iterator.continually(rs).takeWhile(_.next()).map(_.getString(1)).toSet
+    } finally c.close()
+  }
+
+  test("golden strings: a postgresql URL and a Derby URL run the same UPDATE, INSERT and fence text") {
+    val Seq(ms, cms, _) = JdbcUpsertStore.tables
+    val cmsInsert = JdbcUpsertStore.insertSql(cms.target, cms.columns)
+    assert(ms.updateSql ==
+      "UPDATE merchant_summary SET total_transactions = total_transactions + ?, " +
+        "last_updated = ? WHERE merchant_id = ?")
+    assert(cms.updateSql ==
+      "UPDATE customer_merchant_summary SET transaction_count = transaction_count + ?, " +
+        "total_amount_sum = total_amount_sum + ?, last_updated = ? " +
+        "WHERE customer_id = ? AND merchant_id = ?")
+    assert(cmsInsert == "INSERT INTO customer_merchant_summary (customer_id, merchant_id, " +
+      "transaction_count, total_amount_sum, last_updated) VALUES (?, ?, ?, ?, ?)")
+    assert(JdbcUpsertStore.fenceSql("merchant_summary", 7L) ==
+      "INSERT INTO applied_epochs (table_name, epoch_id)\n" +
+        "SELECT 'merchant_summary', 7 FROM (VALUES (1)) AS one(x)\n" +
+        "WHERE NOT EXISTS (SELECT 1 FROM applied_epochs\n" +
+        "  WHERE table_name = 'merchant_summary' AND epoch_id = 7)")
+
+    // a jdbc:postgresql: store (served by Derby through PgUrlOnDerby) and
+    // a Derby store take one delta as epochs 0, 1 and 1 again (inserts,
+    // keyed updates, a fenced-off replay); each database's statement
+    // cache then holds exactly the text its store sent
+    java.sql.DriverManager.registerDriver(PgUrlOnDerby)
+    try {
+      val (m, cm, g) = deltas(txWithBucket(3).filter(col("b") === 0))
+      val tag = System.nanoTime()
+      val Seq(pg, derby) = Seq(s"jdbc:postgresql:golden-pg-$tag",
+          s"jdbc:derby:memory:golden-derby-$tag").map { url =>
+        val store = new JdbcUpsertStore(s"$url;create=true")
+        store.init()
+        try {
+          Seq(0L, 1L, 1L).foreach(e => store.applyDeltas(m, cm, g, Some(e)))
+          statementCache(url)
+        } finally store.close()
+      }
+      assert(pg == derby)
+      assert(Set(ms.updateSql, cms.updateSql, cmsInsert,
+        JdbcUpsertStore.fenceSql(cms.target, 1L)).subsetOf(pg))
+    } finally java.sql.DriverManager.deregisterDriver(PgUrlOnDerby)
   }
 
   test("fence + merge are one transaction: a failed merge leaves the epoch replayable") {
@@ -411,4 +433,21 @@ class StateSpec extends AnyFunSuite {
       store.close()
     }
   }
+}
+
+/** Serves `jdbc:postgresql:<name>…` URLs from the in-memory Derby
+  * database `<name>`, so a store built for a PostgreSQL URL runs in a
+  * test without a PostgreSQL JDBC driver. */
+private object PgUrlOnDerby extends java.sql.Driver {
+  private val prefix = "jdbc:postgresql:"
+  override def acceptsURL(url: String): Boolean = url.startsWith(prefix)
+  override def connect(url: String, info: java.util.Properties): java.sql.Connection =
+    if (!acceptsURL(url)) null
+    else java.sql.DriverManager.getConnection("jdbc:derby:memory:" + url.stripPrefix(prefix), info)
+  override def getPropertyInfo(url: String, info: java.util.Properties) =
+    Array.empty[java.sql.DriverPropertyInfo]
+  override def getMajorVersion: Int = 1
+  override def getMinorVersion: Int = 0
+  override def jdbcCompliant: Boolean = false
+  override def getParentLogger = throw new java.sql.SQLFeatureNotSupportedException()
 }
