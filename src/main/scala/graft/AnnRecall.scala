@@ -21,15 +21,7 @@ object AnnRecall {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val outPath = sys.env.getOrElse("SPARK_GRAFT_ANN_OUT", "ANN_RECALL.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     spark.read.parquet(s"$sfDir/embeddings.parquet").count() // untimed IO warmup
 
     import graft.llm.Vectors
@@ -39,7 +31,7 @@ object AnnRecall {
     // ladder references — the scaladoc fences them): a reader of either
     // the stdout ladder or the committed JSON sees what the engine
     // would actually serve with at this corpus size next to what the
-    // fixed rungs measured (AnnSweep's RULE-line pattern)
+    // fixed rungs measured (the `rule` field and the RULE line)
     val nVec = Vectors.nVectors(spark, sfDir)
     val rCells = Vectors.scaledCells(nVec)
     val rTs = Vectors.trainSampleFor(rCells)

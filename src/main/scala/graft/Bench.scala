@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR (sf0.1 in the driver's run) and prints ONE JSON
   * line. A small untimed warmup first so the first query doesn't absorb
@@ -28,16 +26,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val mode = sys.env.getOrElse("SPARK_GRAFT_BENCH_MODE", "both")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cores
+    val spark = GraftSession(cpus)
 
     // warmup: touch the fact table once so the first timed query doesn't
     // absorb IO/codegen initialization
@@ -52,10 +43,10 @@ object Bench {
     // before-mark can never again be attributed to JVM warmup.
     locally {
       import org.apache.spark.sql.functions.{col, expr, xxhash64}
-      spark.range(0L, 1000000000L, 1L, cpus.toInt)
+      spark.range(0L, 1000000000L, 1L, cpus)
         .select(xxhash64(col("id")).as("h"))
         .agg(expr("bit_xor(h)")).queryExecution.toRdd.count()
-      spark.sparkContext.parallelize(0 until cpus.toInt, cpus.toInt)
+      spark.sparkContext.parallelize(0 until cpus, cpus)
         .map(_ + 1).count()
     }
 
@@ -72,7 +63,7 @@ object Bench {
       val runs = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
         // bit_xor, not sum: 1G hash values overflow a Long under ANSI
-        spark.range(0L, 1000000000L, 1L, cpus.toInt)
+        spark.range(0L, 1000000000L, 1L, cpus)
           .select(xxhash64(col("id")).as("h"))
           .agg(expr("bit_xor(h)")).queryExecution.toRdd.count()
         (System.nanoTime() - t0) / 1e9
@@ -88,7 +79,7 @@ object Bench {
     def canaryJobs(): Double = {
       val t0 = System.nanoTime()
       (1 to 20).foreach { _ =>
-        spark.sparkContext.parallelize(0 until cpus.toInt, cpus.toInt)
+        spark.sparkContext.parallelize(0 until cpus, cpus)
           .map(_ + 1).count()
       }
       (System.nanoTime() - t0) / 1e9 / 20.0

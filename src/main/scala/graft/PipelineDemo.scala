@@ -5,7 +5,6 @@ import graft.ingest.ChunkFeeder
 import graft.ops.Patterns
 import graft.state.JdbcUpsertStore
 import graft.streaming.{MicroBatchRunner, NativeStatePipeline}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Runnable replica of the reference's two-process pipeline
@@ -35,14 +34,7 @@ object PipelineDemo {
     val scaleMode = mode == "scale"
     val nativeMode = mode == "native"
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val base = Files.createTempDirectory("graft-pipeline").toString
     try {

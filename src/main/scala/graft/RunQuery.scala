@@ -1,56 +1,67 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
-/** Runs ONE registered query end to end and prints the row count — the
-  * single-query debugging loop Bench can't give (it swallows stacks):
+/** Runs registered queries one by one and prints one line per query —
+  * the single-query debugging and job-audit loop Bench can't give (it
+  * swallows stacks and counts no jobs):
   *
-  *   sbt "runMain graft.RunQuery <name> [sfDir] [outDir]"
+  *   sbt "runMain graft.RunQuery <name>[,<name>…|all] [sfDir]"
   *
-  * With a third arg, also writes the result to <outDir>/<name> and the
-  * query's oracle SQL to <outDir>/oracle_sql.json so tools/check.py can
-  * compare just this query against DuckDB.
+  * Each query runs twice. The cold pass builds its memos; the warm pass
+  * runs with them hot, the steady-state shape. Both times cover plan
+  * execution only: eager work in the query builder (model fits,
+  * index writes) happens before t0, so use Bench for per-query cost.
+  * The job and stage counts cover the whole warm pass, builder
+  * included: on a host whose per-job scheduler floor swings with steal,
+  * a query's time there is about compute + jobs × floor, so the job
+  * count is the lever. A query that throws prints `FAILED: <class>`
+  * and the run goes on.
+  *
+  * SPARK_GRAFT_EXPLAIN=1 also prints each query's formatted physical
+  * plan (exchange count, PushedFilters, WholeStageCodegen spans).
+  * Oracle checks of single queries go through `Verify <sf> <out> <names>`
+  * and `tools/check.py`.
   */
 object RunQuery {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
+    val names = args(0) match {
+      case "all" => SparkEntry.queries.keys.toSeq.sorted
+      case list  => list.split(",").toSeq
+    }
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val outDir = if (args.length > 2) Some(args(2)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val df = SparkEntry.queries(name)(spark, sfDir)
-    // SPARK_GRAFT_EXPLAIN=1: dump the formatted physical plan before
-    // executing — the per-operator plan-audit loop (exchange count,
-    // PushedFilters, WholeStageCodegen spans)
-    if (sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1"))
-      println(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-    outDir match {
-      case Some(out) =>
-        df.coalesce(1).write.mode("overwrite").parquet(s"$out/$name")
-        // evaluate ONLY this query's oracle: each dynamic thunk trains
-        // its own model, and a one-query run should not pay the other
-        // six driver-side fits
-        val sql = SparkEntry.dynamicOracles.get(name)
-          .map(f => f(spark, sfDir))
-          .orElse(SparkEntry.oracleSql.get(name)).map(s =>
-          "{\"" + name + "\": \"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-            .replace("\n", "\\n").replace("\t", "\\t") + "\"}").getOrElse("{}")
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$out/oracle_sql.json"), sql)
-        println(s"[runquery] $name: written to $out")
-      case None =>
-        val t0 = System.nanoTime()
-        val n = df.queryExecution.toRdd.count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"[runquery] $name: $n rows in $sec%.2f s")
+    val spark = GraftSession()
+    @volatile var jobs = 0
+    @volatile var stages = 0
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        jobs += 1; stages += j.stageInfos.size
+      }
+    })
+    val explain = sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1")
+    // times plan execution only: the builder has already returned
+    def exec(name: String, showPlan: Boolean): (Long, Double) = {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      if (showPlan)
+        println(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
+      val t0 = System.nanoTime()
+      val n = df.queryExecution.toRdd.count()
+      (n, (System.nanoTime() - t0) / 1e9)
+    }
+
+    println(f"${"query"}%-34s ${"rows"}%9s ${"cold_s"}%8s ${"warm_s"}%8s ${"jobs"}%5s ${"stages"}%7s")
+    for (name <- names) {
+      try {
+        val (n, coldSec) = exec(name, explain)
+        Thread.sleep(50) // let listener events drain
+        val (j0, s0) = (jobs, stages)
+        val (_, warmSec) = exec(name, showPlan = false)
+        Thread.sleep(50)
+        println(f"$name%-34s $n%9d $coldSec%8.3f $warmSec%8.3f ${jobs - j0}%5d ${stages - s0}%7d")
+      } catch { case e: Throwable =>
+        println(s"$name FAILED: ${e.getClass.getSimpleName}")
+      }
     }
     spark.stop()
   }

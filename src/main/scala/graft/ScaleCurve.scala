@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling-curve evidence for the heavy dedup/span pipeline: cold
   * per-query seconds at two corpus scales, so the 100-TB design claims
   * ("one df-capped posting shuffle", "O(candidates) verify, never
@@ -30,15 +28,7 @@ object ScaleCurve {
     val names = (if (args.length > 2) args(2).split(",").toSeq
       else Seq("dup_span_scrub", "dedup_clusters", "containment_pairs",
         "streaming_neardup"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     // Run tag: the jsonl is append-only (see the artifact-mirror note
     // below), so a re-run of the same (query, dir) leg would otherwise
     // append rows indistinguishable from the ones they supersede.

@@ -506,10 +506,9 @@ object SparkEntry {
       TextOps.learnedMergeTable(s, d))),
   )
 
-  /** All dynamic oracles, evaluated — [[Verify]]'s full-suite path.
-    * Single-query callers ([[RunQuery]]) should evaluate just
-    * `dynamicOracles(name)` instead: each thunk trains its own model
-    * (Lloyd, PQ, PCA, logistic), and one query should not pay six
+  /** All dynamic oracles, evaluated — the full-suite path. Each thunk
+    * trains its own model (Lloyd, PQ, PCA, logistic), so a caller that
+    * wants a few names uses the `selected` overload below and pays no
     * unrelated driver-side fits. */
   def dynamicOracleSql(spark: SparkSession, sfDir: String)
       : Map[String, String] = dynamicOracleSql(spark, sfDir, _ => true)

@@ -1546,9 +1546,9 @@ object TextOps {
     * dup_span_scrub, dup_spans_maximal and dup_span_scrub_maximal all
     * derive from the same (doc_id, dps) frame at (k, minDf) — without
     * the memo each query re-paid the two gram-keyed exchanges over the
-    * corpus-sized window-gram frame plus the doc_id rollup (JobAudit:
-    * ~10 jobs each); with it the family pays them once per suite and
-    * each consumer reads a doc-count-sized cached frame. */
+    * corpus-sized window-gram frame plus the doc_id rollup (~10 warm
+    * jobs each); with it the family pays them once per suite and each
+    * consumer reads a doc-count-sized cached frame. */
   private def dupPositionsMemo(spark: SparkSession, dir: String,
       grams: DataFrame, k: Int, minDf: Int): DataFrame = {
     // scoped set/restore (the StreamingNearDup conf pattern): by default

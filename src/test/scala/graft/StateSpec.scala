@@ -4,16 +4,36 @@ import graft.state.JdbcUpsertStore
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, StructType}
+import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Derby-backed state store: additive merge semantics (K2/K3/J5/A7) and
   * the batch-vs-stream parity invariant (SURVEY.md §5.3): state after N
   * incremental batches equals a one-shot whole-table aggregation. */
-class StateSpec extends AnyFunSuite {
+class StateSpec extends AnyFunSuite with BeforeAndAfterEach {
   import SparkTestSession.{sf, spark}
 
-  private def freshStore(tag: String) =
-    JdbcUpsertStore.derby(s"target/derby-test-$tag-${System.nanoTime()}")
+  /** The on-disk Derby databases the running test created. */
+  private val derbyDirs = scala.collection.mutable.ArrayBuffer.empty[String]
+
+  private def derbyDir(tag: String): String = {
+    val dir = s"target/derby-test-$tag-${System.nanoTime()}"
+    derbyDirs += dir
+    dir
+  }
+
+  /** Shuts down each database the test created (a store it left open
+    * included), then deletes its dir. */
+  override def afterEach(): Unit = try super.afterEach() finally {
+    for (dir <- derbyDirs) {
+      try java.sql.DriverManager.getConnection(s"jdbc:derby:$dir;shutdown=true").close()
+      catch { case _: java.sql.SQLException => () } // shutdown signals by exception
+      scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
+    }
+    derbyDirs.clear()
+  }
+
+  private def freshStore(tag: String) = JdbcUpsertStore.derby(derbyDir(tag))
 
   private def txWithBucket(n: Int) =
     Tables.transactions(spark, sf).withColumn("b", pmod(col("customer"), lit(n)))
@@ -149,7 +169,7 @@ class StateSpec extends AnyFunSuite {
     // more than 1000 ids (the present ones plus absent ones) take every
     // pruned read through the keys-temp-table semi-join — the
     // O(1)-statement path wide batches take
-    val dir = s"target/derby-test-semijoin-${System.nanoTime()}"
+    val dir = derbyDir("semijoin")
     val store = new graft.state.JdbcUpsertStore(s"jdbc:derby:$dir;create=true")
     store.init()
     try {
@@ -168,7 +188,7 @@ class StateSpec extends AnyFunSuite {
   }
 
   test("semi-join keys tables left by a store that was never closed do not break the next one") {
-    val url = s"jdbc:derby:target/derby-test-keysleft-${System.nanoTime()};create=true"
+    val url = s"jdbc:derby:${derbyDir("keysleft")};create=true"
     val first = new JdbcUpsertStore(url)
     first.init()
     val (m, cm, g) = deltas(txWithBucket(1))
@@ -190,7 +210,7 @@ class StateSpec extends AnyFunSuite {
     val tx = txWithBucket(3).cache()
     val batches = (0 until 3).map(b => deltas(tx.filter(col("b") === b)))
     val one = freshStore("cold-one")
-    val dir = s"target/derby-test-cold-two-${System.nanoTime()}"
+    val dir = derbyDir("cold-two")
     try {
       batches.foreach { case (m, cm, g) => one.applyDeltas(m, cm, g) }
       val first = JdbcUpsertStore.derby(dir)
@@ -209,7 +229,7 @@ class StateSpec extends AnyFunSuite {
   test("stale key filter: a key another store committed retries once on 23505, state == aggregation") {
     val tx = txWithBucket(3).cache()
     val Seq(b0, b1) = (0 until 2).map(b => deltas(tx.filter(col("b") === b)))
-    val dir = s"target/derby-test-stale-${System.nanoTime()}"
+    val dir = derbyDir("stale")
     val a = JdbcUpsertStore.derby(dir)
     val b = new JdbcUpsertStore(s"jdbc:derby:$dir")
     try {
@@ -319,7 +339,7 @@ class StateSpec extends AnyFunSuite {
   }
 
   test("fence + merge are one transaction: a failed merge leaves the epoch replayable") {
-    val dir = s"target/derby-test-atomic-${System.nanoTime()}"
+    val dir = derbyDir("atomic")
     val store = JdbcUpsertStore.derby(dir)
     def raw(sql: String): Unit = {
       val c = java.sql.DriverManager.getConnection(s"jdbc:derby:$dir")
