@@ -10,27 +10,27 @@ import org.apache.spark.sql.types._
   * merchant / category / amount / gender — /root/reference/mechanism_y/
   * "Mechanism Y.py":35-41) on top of the TPC-H-ish tables.
   *
-  * All loaders are plain parquet scans: explicit column pruning + filter
-  * pushdown stay available to Catalyst (the plans show PushedFilters /
-  * ReadSchema), and at cluster scale these become distributed columnar
-  * scans with partition pruning for free.
+  * All loaders are plain parquet scans ([[parquet]]): explicit column
+  * pruning + filter pushdown stay available to Catalyst (the plans show
+  * PushedFilters / ReadSchema), and at cluster scale these become
+  * distributed columnar scans with partition pruning for free.
   */
 object Tables {
 
   def lineitem(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/lineitem.parquet")
+    parquet(spark, s"$dir/lineitem.parquet")
   def orders(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/orders.parquet")
+    parquet(spark, s"$dir/orders.parquet")
   def customer(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/customer.parquet")
+    parquet(spark, s"$dir/customer.parquet")
   def supplier(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/supplier.parquet")
+    parquet(spark, s"$dir/supplier.parquet")
   def part(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/part.parquet")
+    parquet(spark, s"$dir/part.parquet")
   def nation(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/nation.parquet")
+    parquet(spark, s"$dir/nation.parquet")
   def region(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/region.parquet")
+    parquet(spark, s"$dir/region.parquet")
   /** Schema-drift-tolerant events loader. The generator has shipped `ts`
     * both as TIMESTAMP(NANOS) (which Spark's parquet reader surfaces as
     * LongType only under the legacy nanosAsLong flag) and as plain
@@ -41,7 +41,11 @@ object Tables {
     * runs UTC, so casting an NTZ timestamp changes no wall-clock value. */
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/events.parquet")
+    normalizeTs(parquet(spark, s"$dir/events.parquet"))
+  }
+  /** The events `ts` as TIMESTAMP, whatever the file declared; shared
+    * with [[graft.streaming.EventStreams.eventsStream]]. */
+  def normalizeTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
       case LongType => // TIMESTAMP(NANOS) read as raw nanos
         df.withColumn("ts",
@@ -50,11 +54,39 @@ object Tables {
       case _ => // TimestampNTZType or future drift: normalize to TIMESTAMP
         df.withColumn("ts", col("ts").cast(TimestampType))
     }
-  }
   def documents(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+    parquet(spark, s"$dir/documents.parquet")
   def embeddings(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/embeddings.parquet")
+    parquet(spark, s"$dir/embeddings.parquet")
+
+  /** The SQL confs Spark's parquet schema converter reads: the same file
+    * resolves to a different schema under a different value of any. */
+  private val schemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  /** (path, schema confs) → (file stamp, schema); a new stamp replaces
+    * the old entry. Left alone by [[Caches.release]]: like [[Published]]
+    * artifacts it is metadata keyed by content, not data. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, Seq[String]), (String, StructType)]()
+
+  /** A parquet scan of `path` with its schema resolved once per file
+    * stamp: a bare `spark.read.parquet` runs one schema-inference Spark
+    * job on every call, a read with the schema declared runs none. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val key = (path, schemaConfs.map(k => spark.conf.getOption(k).orNull))
+    val stamp = fileStamp(spark, path)
+    val schema = Option(schemas.get(key)).collect { case (`stamp`, s) => s }
+      .getOrElse {
+        val s = spark.read.parquet(path).schema
+        schemas.put(key, (stamp, s))
+        s
+      }
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** Content fingerprint of a source file, for keying derived artifacts
     * (ORC mirrors, PQ/dedup indexes) so a REGENERATED source never

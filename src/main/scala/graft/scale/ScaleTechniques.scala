@@ -209,6 +209,24 @@ object ScaleTechniques {
        |  round(CAST(sum(CAST(amount AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_amount
        |FROM tx GROUP BY 1""".stripMargin
 
+  /** One armed clone per parent session, reused: Spark's codegen cache
+    * does not serve a fresh clone, so a clone per call compiled the
+    * query's ~19 classes again each time. Weak keys; a stopped one is
+    * rebuilt. */
+  private val armedSessions = new java.util.WeakHashMap[SparkSession, SparkSession]()
+
+  private def armedSession(spark: SparkSession): SparkSession = armedSessions.synchronized {
+    Option(armedSessions.get(spark)).filterNot(_.sparkContext.isStopped).getOrElse {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+      s.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "10GB")
+      s.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
+      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      armedSessions.put(spark, s)
+      s
+    }
+  }
+
   /** Registered query exercising [[withRuntimeBloomFilter]] end-to-end:
     * a selective orders filter joined to lineitem as a SHUFFLE join
     * (broadcast disabled), with Catalyst's runtime bloom filter armed so
@@ -220,11 +238,7 @@ object ScaleTechniques {
     * Result parity with the plain join is the oracle; ScaleTechniquesSpec
     * plan-asserts the injected might_contain probe. */
   def bloomJoinQuery(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "10GB")
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val s = armedSession(spark)
     val sel = graft.Tables.orders(s, dir)
       .filter(col("o_orderpriority") === "1-URGENT")
     graft.Tables.lineitem(s, dir)

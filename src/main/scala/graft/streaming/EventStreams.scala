@@ -30,23 +30,15 @@ object EventStreams {
     * stream source wants a directory, so the sf dir is the base path
     * with a glob pinned to the events table). A file stream needs its
     * schema declared up front, but the generator has shipped `ts` as
-    * both TIMESTAMP(NANOS)→Long and plain timestamp[us]; probe the
-    * actual file schema with a (metadata-only) batch read and declare
-    * THAT, then normalize `ts` exactly as [[Tables.events]] does. */
+    * both TIMESTAMP(NANOS)→Long and plain timestamp[us]; declare the
+    * file's actual schema (resolved by [[Tables.parquet]]), then
+    * normalize `ts` exactly as [[Tables.events]] does. */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val raw = spark.readStream.schema(fileSchema)
+    val fileSchema = Tables.parquet(spark, s"$dir/events.parquet").schema
+    Tables.normalizeTs(spark.readStream.schema(fileSchema)
       .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    fileSchema("ts").dataType match {
-      case LongType => // raw nanos
-        raw.withColumn("ts",
-          timestamp_micros((col("ts") / lit(1000L)).cast("long")))
-      case TimestampType => raw
-      case _ => raw.withColumn("ts", col("ts").cast(TimestampType))
-    }
+      .parquet(dir))
   }
 
   /** Watermarked tumbling-window aggregation: 10-minute lateness bound,

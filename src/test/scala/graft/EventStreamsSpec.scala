@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Drives the event-time streaming operators from the bounded events
   * parquet via a file stream + memory sink (spark_guide pattern), and
   * checks them against batch-mode recomputation. */
-class EventStreamsSpec extends AnyFunSuite {
+class EventStreamsSpec extends AnyFunSuite with TempDirs {
   import SparkTestSession.{sf, spark}
 
   private def runToMemory(df: org.apache.spark.sql.DataFrame, name: String,
@@ -163,8 +163,7 @@ class EventStreamsSpec extends AnyFunSuite {
     // rewound end_ts to T0+30; batch 2's event 2h later closes the
     // session. The one emitted summary must carry the monotone extent
     // [T0, T0+60] with all three events folded in.
-    val dir = java.nio.file.Files.createTempDirectory("graft-ooo-sessions")
-      .toString
+    val dir = tempDir("graft-ooo-sessions").toString
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
     def ts(offsetSec: Long) = new java.sql.Timestamp(t0 + offsetSec * 1000L)
     import spark.implicits._

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** LLM-pipeline operators verified against brute-force / plain-Scala
   * truth at sf0.001 (the approximate operators have no SQL oracle —
   * this suite is their correctness gate). */
-class LlmOpsSpec extends AnyFunSuite {
+class LlmOpsSpec extends AnyFunSuite with TempDirs {
   import SparkTestSession.{sf, spark}
 
   test("prefix-filtered jaccard join equals the naive inverted-index join") {
@@ -101,7 +101,7 @@ class LlmOpsSpec extends AnyFunSuite {
   }
 
   test("persisted dedup index: N sequential foldIns == one full rebuild; probe == in-session incremental") {
-    val base = java.nio.file.Files.createTempDirectory("graft-dedupidx").toString
+    val base = tempDir("graft-dedupidx").toString
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
 
     // three sequential folds vs a one-shot build over the same corpus
@@ -163,7 +163,7 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("iterative loops under a reliable checkpoint dir: same results, checkpoints written") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-reliable-chk").toString
+    val dir = tempDir("graft-reliable-chk").toString
     val localClusters = Dedup.dedupClusters(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val chain = (0L until 50L).map(i => (i, i + 1)).toDF("u", "v")
@@ -486,8 +486,7 @@ class LlmOpsSpec extends AnyFunSuite {
       (id, c.map(x => (x + noise * rng.nextGaussian()).toFloat).toSeq)
     }
     import SparkTestSession.spark.implicits._
-    val cdir = java.nio.file.Files
-      .createTempDirectory("graft_clustered_fixture").toString
+    val cdir = tempDir("graft_clustered_fixture").toString
     vecs.toDF("vec_id", "embedding").write.mode("overwrite")
       .parquet(s"$cdir/embeddings.parquet")
     val cluTight = Vectors.assignmentTightness(spark, cdir, 16)
@@ -993,7 +992,7 @@ class LlmOpsSpec extends AnyFunSuite {
         maxFrac = 0.25, blockChars = 2, sortChars = 24)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(!miss.contains((1L, 2L)), "pass 1 alone must miss the cross-block pair")
-    val dir = java.nio.file.Files.createTempDirectory("editdist").toString
+    val dir = tempDir("editdist").toString
     docs.withColumn("lang", lit("en")).withColumn("source", lit("test"))
       .withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -1293,19 +1292,12 @@ class LlmOpsSpec extends AnyFunSuite {
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length(col("text")))
     // reuse the registered shape over a temp dir
-    val tmp = java.nio.file.Files.createTempDirectory("tent").toFile
-    try {
-      synth.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-      val m = TextOps.tokenEntropy(spark, tmp.toString).collect()
-        .map(r => (r.getLong(0), r.getDouble(4))).toMap
-      assert(math.abs(m(1L) - math.log(4.0)) < 1e-6)
-      assert(m(2L) == 0.0)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(tmp)
-    }
+    val tmp = tempDir("tent").toFile
+    synth.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    val m = TextOps.tokenEntropy(spark, tmp.toString).collect()
+      .map(r => (r.getLong(0), r.getDouble(4))).toMap
+    assert(math.abs(m(1L) - math.log(4.0)) < 1e-6)
+    assert(m(2L) == 0.0)
   }
 
   test("ngram novelty: matches a driver-side first-occurrence refold; boundary laws") {

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.ingest.ChunkFeeder
 import graft.ops.Patterns
 import graft.state.JdbcUpsertStore
@@ -14,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * state tables in Spark's own checkpointed state store must behave
   * exactly like the JDBC-externalized backend — identical detections,
   * identical reconstructed state — and survive a checkpoint restart. */
-class NativeStateSpec extends AnyFunSuite {
+class NativeStateSpec extends AnyFunSuite with TempDirs {
   import SparkTestSession.{sf, spark}
 
   private def refTx(): DataFrame =
@@ -42,7 +41,7 @@ class NativeStateSpec extends AnyFunSuite {
     a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
   test("N batches through the native backend == the JDBC scale-mode backend (detections + state)") {
-    val base = Files.createTempDirectory("graft-native").toString
+    val base = tempDir("graft-native").toString
     val tx = refTx().cache()
     ChunkFeeder.feed(tx, s"$base/in", chunkSize = 2000)
 
@@ -82,7 +81,7 @@ class NativeStateSpec extends AnyFunSuite {
 
   test("a chunk row with no amount: native state == JDBC store state, the pair adds 0") {
     import org.apache.spark.sql.Row
-    val base = Files.createTempDirectory("graft-native-null-amount").toString
+    val base = tempDir("graft-native-null-amount").toString
     val ref = refTx()
     val rows = ref.limit(999).collect()
     val noAmount = (r: Row) => Row.fromSeq(r.toSeq.updated(ref.schema.fieldIndex("amount"), null))
@@ -125,7 +124,7 @@ class NativeStateSpec extends AnyFunSuite {
   }
 
   test("checkpoint restart restores fMGWS state (no loss, no double count)") {
-    val base = Files.createTempDirectory("graft-native-restart").toString
+    val base = tempDir("graft-native-restart").toString
     val tx = refTx().cache()
     val half = tx.limit((tx.count() / 2).toInt).cache()
 
@@ -168,7 +167,7 @@ class NativeStateSpec extends AnyFunSuite {
           prop("callSite.short").getOrElse(e.stageInfos.maxBy(_.stageId).name)))
       }
     }
-    val base = Files.createTempDirectory("graft-native-jobs").toString
+    val base = tempDir("graft-native-jobs").toString
     val tx = refTx().cache()
     val chunks = ChunkFeeder.feed(tx, s"$base/in", chunkSize = (tx.count() / 18).toInt)
     val p = new NativeStatePipeline(spark, Tables.importance(spark, sf),
@@ -203,7 +202,7 @@ class NativeStateSpec extends AnyFunSuite {
   }
 
   test("readout on a checkpoint with no committed batch fails and names the checkpoint") {
-    val cp = Files.createTempDirectory("graft-native-nocommit").toString
+    val cp = tempDir("graft-native-nocommit").toString
     val e = intercept[Exception](
       NativeStatePipeline.merchantSummary(spark, cp).collect())
     assert(e.getMessage.contains("STDS_COMMITTED_BATCH_UNAVAILABLE"), e.getMessage)

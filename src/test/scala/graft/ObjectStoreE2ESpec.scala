@@ -22,7 +22,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * this is the honest way to prove the engine never leans on a POSIX
   * behavior an object store won't give it; on a cluster the same code
   * takes s3a:// URIs unchanged. */
-class ObjectStoreE2ESpec extends AnyFunSuite {
+class ObjectStoreE2ESpec extends AnyFunSuite with TempDirs {
   import SparkTestSession.{sf, spark}
 
   private def hconf = spark.sparkContext.hadoopConfiguration
@@ -157,7 +157,7 @@ class ObjectStoreE2ESpec extends AnyFunSuite {
     val inDir = "s3g://pipeline/landing"
     val outDir = "s3g://pipeline/detections"
     val cp = "s3g://pipeline/checkpoint"
-    val local = java.nio.file.Files.createTempDirectory("graft-s3g").toString
+    val local = tempDir("graft-s3g").toString
     val store = JdbcUpsertStore.derby(s"$local/derby")
     try {
       val tx = refTx().cache()

@@ -6,11 +6,11 @@ import graft.ingest.OrcSource
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class OrcSourceSpec extends AnyFunSuite {
+class OrcSourceSpec extends AnyFunSuite with TempDirs {
   import SparkTestSession.{sf, spark}
 
   test("ORC round-trip is value-lossless on the documents table") {
-    val base = Files.createTempDirectory("graft-orc").toString
+    val base = tempDir("graft-orc").toString
     val docs = Tables.documents(spark, sf)
     OrcSource.writePartitioned(docs, base)
     val back = OrcSource.read(spark, base)
@@ -21,7 +21,7 @@ class OrcSourceSpec extends AnyFunSuite {
   }
 
   test("lang filter prunes to the one partition directory") {
-    val base = Files.createTempDirectory("graft-orc-prune").toString
+    val base = tempDir("graft-orc-prune").toString
     OrcSource.writePartitioned(Tables.documents(spark, sf), base)
     val langs = Tables.documents(spark, sf)
       .select(col("lang")).distinct().collect().map(_.getString(0))

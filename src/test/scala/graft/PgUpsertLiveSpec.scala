@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.regex.Matcher
 import graft.state.JdbcUpsertStore
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,7 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the suite CANCELS (assume) rather than fails, so the pin remains the
   * golden strings and this is additional evidence where available.
   */
-class PgUpsertLiveSpec extends AnyFunSuite {
+class PgUpsertLiveSpec extends AnyFunSuite with TempDirs {
 
   private val port = "54329"
 
@@ -64,7 +63,7 @@ class PgUpsertLiveSpec extends AnyFunSuite {
     val bins = run(Seq("bash", "-c", "command -v initdb && command -v pg_ctl && command -v psql"))
     assume(bins._1 == 0, "PostgreSQL binaries not on PATH")
     if (isRoot) run(Seq("bash", "-c", "id -u pguser >/dev/null 2>&1 || useradd -m pguser"))
-    val base = Files.createTempDirectory("graft-pg").toString
+    val base = tempDir("graft-pg").toString
     val data = s"$base/db"
     if (isRoot) run(Seq("chown", "-R", "pguser", base))
     val (ic, iout) = run(serverCmd(s"initdb -D $data -U graft --no-sync -A trust"))

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * semantics on crafted text the synthetic corpus can't exercise
   * (emails, SSNs, IPs, phones) plus the distribution laws of the
   * resampler. */
-class PiiQualitySpec extends AnyFunSuite {
+class PiiQualitySpec extends AnyFunSuite with TempDirs {
   import SparkTestSession.{sf, spark}
   import spark.implicits._
 
@@ -59,7 +59,7 @@ class PiiQualitySpec extends AnyFunSuite {
       (5L, ("the of " + Seq.fill(20)("x9").mkString(" ")), "non-alpha tokens"),
       (6L, ("the of one " + Seq.fill(27)("dup").mkString(" ")), "repetition"))
       .toDF("doc_id", "text", "why")
-    val dir = java.nio.file.Files.createTempDirectory("graft_quality").toString
+    val dir = tempDir("graft_quality").toString
     docs.withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length(col("text")).cast("long"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")

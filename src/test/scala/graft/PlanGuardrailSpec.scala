@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * slowdown on a cluster. Deliberate exceptions are pinned per query
   * with the reason — the list can only shrink or be consciously grown.
   */
-class PlanGuardrailSpec extends AnyFunSuite {
+class PlanGuardrailSpec extends AnyFunSuite with TempDirs {
   import SparkTestSession.{sf, spark}
 
   /** Queries whose plan legitimately contains a BroadcastNestedLoopJoin:
@@ -139,7 +139,7 @@ class PlanGuardrailSpec extends AnyFunSuite {
     // reordering), the probe silently full-scans the corpus-sized
     // buckets/ and sets/ components at 100 TB. Pin it: both scans must
     // carry a dynamicpruning expression in their PartitionFilters.
-    val base = java.nio.file.Files.createTempDirectory("graft-dpp").toString
+    val base = tempDir("graft-dpp").toString
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"))
     graft.llm.DedupIndex.build(

@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * generators with fixed seeds (scalatest's forAll bridge isn't in the
   * offline cache, so generators are sampled explicitly — same coverage,
   * deterministic replay). */
-class PropertySpec extends AnyFunSuite {
+class PropertySpec extends AnyFunSuite with TempDirs {
   import SparkTestSession.spark
 
   private def sample[A](g: Gen[A], seed: Long): A =
@@ -30,7 +30,7 @@ class PropertySpec extends AnyFunSuite {
       Gen.const("trailing,"), Gen.const(",,\"\","))
     for (seed <- 1L to 8L) {
       val vals = sample(Gen.listOfN(30, nastyVal), seed)
-      val dir = java.nio.file.Files.createTempDirectory("graft-prop").toString
+      val dir = tempDir("graft-prop").toString
       val df = vals.zipWithIndex.map { case (v, i) => (i.toLong, v) }
         .toDF("id", "payload")
       ChunkFeeder.feed(df, dir, chunkSize = 7)
@@ -137,7 +137,7 @@ class PropertySpec extends AnyFunSuite {
       StructType(Seq(StructField("customer", StringType), StructField("merchant", StringType),
         StructField("category", StringType), StructField("weight", DoubleType))))
     new MicroBatchRunner(spark, store, importance,
-      java.nio.file.Files.createTempDirectory("graft-rollup").toString,
+      tempDir("graft-rollup").toString,
       clock = () => Patterns.FixedClock, scaleMode = scale)
   }
 
@@ -301,7 +301,7 @@ class PropertySpec extends AnyFunSuite {
       }
 
       val store = JdbcUpsertStore.derbyMemory(s"detect$seed-$longKeys-${System.nanoTime()}")
-      val outDir = java.nio.file.Files.createTempDirectory("graft-detect").toString
+      val outDir = tempDir("graft-detect").toString
       try {
         val runner = new MicroBatchRunner(spark, store, dim, outDir, cfg, () => clock)
         val seen = scala.collection.mutable.Set.empty[String]
@@ -495,13 +495,12 @@ class PropertySpec extends AnyFunSuite {
         rs.sortBy(r => (-r._3, r._1)).take(cap)
           .zipWithIndex.map { case (r, i) => (r._1, r._2, r._3, i + 1) }
       }.toSet
-      val dir = java.nio.file.Files.createTempDirectory("graft-cap").toString
+      val dir = tempDir("graft-cap").toString
       rows.toDF("doc_id", "source", "n_chars")
         .withColumn("text", lit("x")).withColumn("lang", lit("en"))
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
       val got = graft.llm.Sampling.sourceCap(spark, dir, cap, fanout)
         .as[(Long, String, Long, Int)].collect().toSet
-      rmTree(new java.io.File(dir))
       assert(got == brute, s"sourceCap != brute, seed $seed fanout $fanout")
     }
   }
@@ -514,17 +513,13 @@ class PropertySpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
   }
 
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-  }
-
   test("epoch shuffle == naive global (md5, doc_id) ordinal on random corpora, any stratum width") {
     import spark.implicits._
     val word = Gen.oneOf("alpha", "beta", "gamma", "delta", "eps")
     for (seed <- 1L to 3L; nibbles <- Seq(1, 2, 3, 8)) {
       val texts = sample(Gen.listOfN(50, Gen.listOfN(4, word).map(_.mkString(" "))), seed)
       val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong * 7, t, "s") }
-      val dir = java.nio.file.Files.createTempDirectory("graft-ep").toString
+      val dir = tempDir("graft-ep").toString
       writeDocs(rows, dir)
       // brute: the permutation is sort by (md5(doc_id), doc_id)
       val md5 = java.security.MessageDigest.getInstance("MD5")
@@ -534,7 +529,6 @@ class PropertySpec extends AnyFunSuite {
         .zipWithIndex.map { case (id, i) => id -> (i + 1).toLong }.toMap
       val got = graft.llm.Sampling.epochShuffle(spark, dir, nibbles)
         .select("doc_id", "epoch_pos").as[(Long, Long)].collect().toMap
-      rmTree(new java.io.File(dir))
       assert(got == brute, s"seed $seed nibbles $nibbles")
     }
   }
@@ -546,12 +540,11 @@ class PropertySpec extends AnyFunSuite {
       val texts = sample(Gen.listOfN(60,
         Gen.choose(1, 12).flatMap(n => Gen.listOfN(n, word).map(_.mkString(" ")))), seed)
       val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong, t, "s") }
-      val dir = java.nio.file.Files.createTempDirectory("graft-sh").toString
+      val dir = tempDir("graft-sh").toString
       writeDocs(rows, dir)
       val nShards = 8
       val manifest = graft.llm.Sampling.corpusShards(spark, dir, nShards)
         .as[(Int, Long, Long)].collect().sortBy(_._1)
-      rmTree(new java.io.File(dir))
       val totalDocs = manifest.map(_._2).sum
       val totalToks = manifest.map(_._3).sum
       val bruteToks = texts.map(_.split("\\s+").count(_.nonEmpty).toLong).sum
@@ -606,24 +599,22 @@ class PropertySpec extends AnyFunSuite {
         Seq((i.toLong * 2, ts.mkString(" "), "s"),
           (i.toLong * 2 + 1, rng.shuffle(ts).mkString(" "), "s"))
       }
-      val dir = java.nio.file.Files.createTempDirectory("entprop").toFile
-      try {
-        writeDocs(rows, dir.toString)
-        val m = graft.llm.TextOps.tokenEntropy(SparkTestSession.spark,
-            dir.toString).collect()
-          .map(r => (r.getLong(0),
-            (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
-        docs.indices.foreach { i =>
-          val a = m(i.toLong * 2)
-          val b = m(i.toLong * 2 + 1)
-          assert(a == b, s"seed $seed doc $i: permutation changed entropy")
-          val (n, types, _, ent) = a
-          assert(types <= n)
-          assert(ent >= 0.0, s"seed $seed doc $i: negative entropy $ent")
-          assert(ent <= math.log(types.toDouble) + 1e-6,
-            s"seed $seed doc $i: entropy $ent above ln(types)")
-        }
-      } finally rmTree(dir)
+      val dir = tempDir("entprop").toFile
+      writeDocs(rows, dir.toString)
+      val m = graft.llm.TextOps.tokenEntropy(SparkTestSession.spark,
+          dir.toString).collect()
+        .map(r => (r.getLong(0),
+          (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
+      docs.indices.foreach { i =>
+        val a = m(i.toLong * 2)
+        val b = m(i.toLong * 2 + 1)
+        assert(a == b, s"seed $seed doc $i: permutation changed entropy")
+        val (n, types, _, ent) = a
+        assert(types <= n)
+        assert(ent >= 0.0, s"seed $seed doc $i: negative entropy $ent")
+        assert(ent <= math.log(types.toDouble) + 1e-6,
+          s"seed $seed doc $i: entropy $ent above ln(types)")
+      }
     }
   }
 
@@ -638,17 +629,15 @@ class PropertySpec extends AnyFunSuite {
         texts.zipWithIndex.map { case (t, i) => (i.toLong, t, "sa") } ++
           texts.zipWithIndex.map { case (t, i) => (100L + i, t, "sb") } ++
           other.zipWithIndex.map { case (t, i) => (200L + i, t, "sc") }
-      val dir = java.nio.file.Files.createTempDirectory("driftprop").toFile
-      try {
-        writeDocs(rows, dir.toString)
-        val psi = graft.llm.TextOps.sourceDrift(SparkTestSession.spark,
-            dir.toString).collect()
-          .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
-        // identical token multisets ⇒ identical counts ⇒ identical PSI bits
-        assert(psi("sa") == psi("sb"),
-          s"seed $seed: replicated source diverged: ${psi("sa")} vs ${psi("sb")}")
-        psi.values.foreach { case (_, p) => assert(p >= 0.0) }
-      } finally rmTree(dir)
+      val dir = tempDir("driftprop").toFile
+      writeDocs(rows, dir.toString)
+      val psi = graft.llm.TextOps.sourceDrift(SparkTestSession.spark,
+          dir.toString).collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
+      // identical token multisets ⇒ identical counts ⇒ identical PSI bits
+      assert(psi("sa") == psi("sb"),
+        s"seed $seed: replicated source diverged: ${psi("sa")} vs ${psi("sb")}")
+      psi.values.foreach { case (_, p) => assert(p >= 0.0) }
     }
   }
 

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The one publish path for derived artifacts ([[Published]]): racing
   * builders, torn final dirs, failing builds, and the stamp GC. */
-class PublishedSpec extends AnyFunSuite {
+class PublishedSpec extends AnyFunSuite with TempDirs {
   import SparkTestSession.{sf, spark}
 
   private def write(dir: String, name: String, text: String): Unit = {
@@ -26,7 +26,7 @@ class PublishedSpec extends AnyFunSuite {
   test("racing publishers: both return the path, one payload published whole, no attempt left") {
     // the losing rename's window is narrow: race many times
     for (round <- 0 until 100) {
-      val base = Files.createTempDirectory("graft-pub-race").toString
+      val base = tempDir("graft-pub-race").toString
       // both builders pass the completeness check before either renames
       val bothBuilding = new CyclicBarrier(2)
       val got = new Array[String](2)
@@ -53,7 +53,7 @@ class PublishedSpec extends AnyFunSuite {
   }
 
   test("a final dir without the marker is swapped out and rebuilt") {
-    val base = Files.createTempDirectory("graft-pub-torn").toString
+    val base = tempDir("graft-pub-torn").toString
     val fin = Published.finalDir(base)
     write(fin, "torn.txt", "half")
     assert(Published.publish(spark, base)(write(_, "ok.txt", "whole")) == fin)
@@ -64,7 +64,7 @@ class PublishedSpec extends AnyFunSuite {
   }
 
   test("a build that throws publishes nothing, leaves no attempt, and surfaces") {
-    val base = Files.createTempDirectory("graft-pub-fail").toString
+    val base = tempDir("graft-pub-fail").toString
     val e = intercept[IllegalStateException] {
       Published.publish(spark, base) { at =>
         write(at, "part.txt", "partial")

@@ -4,7 +4,7 @@ import graft.scale.ScaleTechniques
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class ScaleTechniquesSpec extends AnyFunSuite {
+class ScaleTechniquesSpec extends AnyFunSuite with TempDirs {
   import SparkTestSession.{sf, spark}
 
   private def dropTable(name: String): Unit = {
@@ -40,7 +40,7 @@ class ScaleTechniquesSpec extends AnyFunSuite {
   }
 
   test("partitioned layout prunes directories at planning time") {
-    val base = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val base = tempDir("graft-part").toString
     ScaleTechniques.writePartitioned(
       Tables.events(spark, sf).select("event_id", "user_id", "event_type"),
       s"$base/events_by_type", "event_type")
@@ -70,7 +70,7 @@ class ScaleTechniquesSpec extends AnyFunSuite {
   }
 
   test("z-order layout skips files on the non-leading dimension; rows survive") {
-    val base = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+    val base = tempDir("graft-zorder").toString
     val li = Tables.lineitem(spark, sf)
       .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
     // z-order on (partkey, suppkey) vs a linear sort on partkey only
@@ -150,7 +150,7 @@ class ScaleTechniquesSpec extends AnyFunSuite {
 
   test("compact merges a fragmented table with row parity") {
     import graft.scale.Compaction
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val dir = tempDir("graft_compact").toString
     // fragment: 24 tiny files
     Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity")
       .repartition(24).write.mode("overwrite").parquet(s"$dir/in")
@@ -172,7 +172,7 @@ class ScaleTechniquesSpec extends AnyFunSuite {
 
   test("partition-recursive compaction preserves rows and partition columns") {
     import graft.scale.Compaction
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_part").toString
+    val dir = tempDir("graft_compact_part").toString
     // fragment a hive-partitioned table: 6 appends × 4 files per partition
     val src = Tables.lineitem(spark, sf)
       .select(col("l_orderkey"), col("l_quantity"),
@@ -230,6 +230,15 @@ class ScaleTechniquesSpec extends AnyFunSuite {
     assert(df.count() > 0)
     // the shared session's conf must be untouched by the clone
     assert(spark.conf.getOption("spark.sql.optimizer.runtime.bloomFilter.enabled") == before)
+  }
+
+  test("bloom_join reuses its armed session: a second call compiles no class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    ScaleTechniques.bloomJoinQuery(spark, sf).collect()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    ScaleTechniques.bloomJoinQuery(spark, sf).collect()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled == 0, s"$compiled classes compiled on the second call")
   }
 
   test("salted aggregation equals plain aggregation") {

@@ -1,16 +1,14 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.ingest.SchemaEvolution
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class SchemaEvolutionSpec extends AnyFunSuite {
+class SchemaEvolutionSpec extends AnyFunSuite with TempDirs {
   import SparkTestSession.{sf, spark}
 
   test("mergeSchema surfaces the evolved column; pre-evolution rows read null") {
-    val base = Files.createTempDirectory("graft-evo").toString
+    val base = tempDir("graft-evo").toString
     val published = SchemaEvolution.writeEpochs(spark, sf, base)
     val merged = SchemaEvolution.readMerged(spark, published)
     val docs = Tables.documents(spark, sf)
@@ -25,7 +23,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
   }
 
   test("an explicit union schema reads the history identically without footer merging") {
-    val base = Files.createTempDirectory("graft-evo-schema").toString
+    val base = tempDir("graft-evo-schema").toString
     val published = SchemaEvolution.writeEpochs(spark, sf, base)
     val merged = SchemaEvolution.readMerged(spark, published)
       .select("doc_id", "lang", "n_chars")
@@ -40,7 +38,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
   }
 
   test("writeEpochs publishes once: a rebuilt attempt never disturbs the published history") {
-    val base = Files.createTempDirectory("graft-evo-pub").toString
+    val base = tempDir("graft-evo-pub").toString
     val p1 = SchemaEvolution.writeEpochs(spark, sf, base)
     val marker = new java.io.File(s"$p1/${Published.Marker}")
     assert(marker.exists())

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Streaming drift monitor: counts restricted to the pinned reference
   * vocabulary accumulate as exact longs, so the converged PSI equals
   * the batch `source_drift` bit for bit — single batch or split. */
-class StreamingDriftSpec extends AnyFunSuite {
+class StreamingDriftSpec extends AnyFunSuite with TempDirs {
   import SparkTestSession.{sf, spark}
 
   private def psiMap(rows: Array[org.apache.spark.sql.Row]) =
@@ -22,26 +22,19 @@ class StreamingDriftSpec extends AnyFunSuite {
 
     // split the corpus into 3 files fed one per trigger: the per-term
     // count state must merge across batches to the same exact totals
-    val tmp = java.nio.file.Files.createTempDirectory("sdrift_split").toFile
-    try {
-      graft.Tables.documents(spark, sf).repartition(3)
-        .write.mode("overwrite").parquet(s"$tmp/docs")
-      val stream = spark.readStream
-        .schema(graft.Tables.documents(spark, sf).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$tmp/docs")
-        .select(col("source"), col("text"))
-      val top = graft.llm.TextOps.topTerms(spark, sf)
-      val sources = graft.Tables.documents(spark, sf)
-        .select(col("source")).distinct()
-      val multi = psiMap(graft.streaming.StreamingDrift
-        .driftOfStream(stream, top, sources).collect())
-      assert(multi == batch)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(tmp)
-    }
+    val tmp = tempDir("sdrift_split").toFile
+    graft.Tables.documents(spark, sf).repartition(3)
+      .write.mode("overwrite").parquet(s"$tmp/docs")
+    val stream = spark.readStream
+      .schema(graft.Tables.documents(spark, sf).schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(s"$tmp/docs")
+      .select(col("source"), col("text"))
+    val top = graft.llm.TextOps.topTerms(spark, sf)
+    val sources = graft.Tables.documents(spark, sf)
+      .select(col("source")).distinct()
+    val multi = psiMap(graft.streaming.StreamingDrift
+      .driftOfStream(stream, top, sources).collect())
+    assert(multi == batch)
   }
 }

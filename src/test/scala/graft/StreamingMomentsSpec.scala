@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * stream state must be BIT-IDENTICAL to the batch aggregate — exact
   * long sums are order-free, so any micro-batch split merges to the
   * same state. */
-class StreamingMomentsSpec extends AnyFunSuite {
+class StreamingMomentsSpec extends AnyFunSuite with TempDirs {
   import SparkTestSession.{sf, spark}
 
   private def covMap(rows: Array[org.apache.spark.sql.Row]) =
@@ -23,22 +23,15 @@ class StreamingMomentsSpec extends AnyFunSuite {
 
     // split the table into 3 files and feed them one per trigger: three
     // complete-mode merges must converge to the same exact state
-    val tmp = java.nio.file.Files.createTempDirectory("smom_split").toFile
-    try {
-      graft.Tables.embeddings(spark, sf).repartition(3)
-        .write.mode("overwrite").parquet(s"$tmp/emb")
-      val stream = spark.readStream
-        .schema(graft.Tables.embeddings(spark, sf).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$tmp/emb")
-      val multi = covMap(
-        graft.streaming.StreamingMoments.covarianceOfStream(stream).collect())
-      assert(multi == batch)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(tmp)
-    }
+    val tmp = tempDir("smom_split").toFile
+    graft.Tables.embeddings(spark, sf).repartition(3)
+      .write.mode("overwrite").parquet(s"$tmp/emb")
+    val stream = spark.readStream
+      .schema(graft.Tables.embeddings(spark, sf).schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(s"$tmp/emb")
+    val multi = covMap(
+      graft.streaming.StreamingMoments.covarianceOfStream(stream).collect())
+    assert(multi == batch)
   }
 }

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * across micro-batches and pins stream truth == batch truth — at radii
   * on BOTH sides of the multi-probe banding boundary — plus the
   * watermarked pipeline's eviction and exactly-once contracts. */
-class StreamingNearDupSpec extends AnyFunSuite {
+class StreamingNearDupSpec extends AnyFunSuite with TempDirs {
   import SparkTestSession.{sf, spark}
 
   test("per-row simhash64 equals the registered signature frame (token-less docs excluded on both sides)") {
@@ -39,7 +39,7 @@ class StreamingNearDupSpec extends AnyFunSuite {
   // pair set exactly in every regime
   for (maxDist <- Seq(3, 6, 14))
     test(s"streamed near-dup pairs across micro-batches == batch dedup_simhash at maxDist=$maxDist") {
-      val dir = java.nio.file.Files.createTempDirectory("graft-snd").toString
+      val dir = tempDir("graft-snd").toString
       val docs = Tables.documents(spark, sf).select("doc_id", "text")
       // three files -> three micro-batches with maxFilesPerTrigger=1, so
       // most pairs must be found against STATE from an earlier batch

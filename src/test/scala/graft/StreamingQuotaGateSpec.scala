@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * micro-batches == the SQL window truth; state carries totals across
   * batches; an overflowing source stays closed; arrival-order semantics
   * on out-of-order feeds match a plain fold. */
-class StreamingQuotaGateSpec extends AnyFunSuite {
+class StreamingQuotaGateSpec extends AnyFunSuite with TempDirs {
   import SparkTestSession.{sf, spark}
 
   private def windowTruth(quota: Long): Map[Long, (String, Long, Long)] = {
@@ -28,7 +28,7 @@ class StreamingQuotaGateSpec extends AnyFunSuite {
 
   test("gate across doc_id-ordered micro-batches == SQL window truth; overflowed sources stay closed") {
     val quota = 800L
-    val dir = java.nio.file.Files.createTempDirectory("graft-sqg").toString
+    val dir = tempDir("graft-sqg").toString
     val docs = Tables.documents(spark, sf)
       .select("doc_id", "source", "text")
     // RANGE split (not residue): micro-batches must arrive in doc_id

@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Asserts the SURVEY.md §5.3 invariants: state parity with a batch-mode
   * recomputation, 50-row detection files, and the 6-string-column
   * contract. */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
   import SparkTestSession.{sf, spark}
 
   /** Transactions in the reference's full 10-column CSV shape
@@ -35,7 +35,7 @@ class StreamingSpec extends AnyFunSuite {
       lit(0).as("fraud"))
 
   test("chunked stream end-to-end: state parity + detection file contract") {
-    val base = Files.createTempDirectory("graft-stream").toString
+    val base = tempDir("graft-stream").toString
     val inDir = s"$base/in"; val outDir = s"$base/out"; val cp = s"$base/cp"
     val store = JdbcUpsertStore.derby(s"$base/derby")
     try {
@@ -72,7 +72,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("checkpoint restart (new runner) resumes without reprocessing or clobbering") {
-    val base = Files.createTempDirectory("graft-restart").toString
+    val base = tempDir("graft-restart").toString
     val inDir = s"$base/in"; val outDir = s"$base/out"; val cp = s"$base/cp"
     val store = JdbcUpsertStore.derby(s"$base/derby")
     try {
@@ -117,7 +117,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("distributed feeder: executor-written chunks stream to the same state as the driver feed") {
-    val base = Files.createTempDirectory("graft-dist-feed").toString
+    val base = tempDir("graft-dist-feed").toString
     val inDir = s"$base/in"
     val store = JdbcUpsertStore.derby(s"$base/derby")
     try {
@@ -150,7 +150,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("chunk names follow the reference scheme with an IST timestamp") {
-    val base = Files.createTempDirectory("graft-names").toString
+    val base = tempDir("graft-names").toString
     ChunkFeeder.feed(refTx().limit(10), s"$base/in", chunkSize = 1000)
     val names = new java.io.File(s"$base/in").listFiles().map(_.getName)
     assert(names.nonEmpty)
@@ -167,7 +167,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("empty batch is a no-op (guard)") {
-    val base = Files.createTempDirectory("graft-empty").toString
+    val base = tempDir("graft-empty").toString
     val store = JdbcUpsertStore.derby(s"$base/derby")
     try {
       val runner = new MicroBatchRunner(spark, store, Tables.importance(spark, sf),
@@ -181,7 +181,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("S5: a state-read failure falls back to empty frames; the batch survives") {
-    val base = Files.createTempDirectory("graft-s5").toString
+    val base = tempDir("graft-s5").toString
     val store = JdbcUpsertStore.derby(s"$base/derby")
     // reads fail (simulating a transient DB blip at read time); writes work
     val blipped = new graft.state.StateStore {
@@ -204,7 +204,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("scale mode: keyed state reads yield the same detections when the batch touches all merchants") {
-    val base = Files.createTempDirectory("graft-scale").toString
+    val base = tempDir("graft-scale").toString
     val batch = refTx().cache()
     def run(scale: Boolean): Set[Seq[String]] = {
       val tag = if (scale) "scale" else "parity"
@@ -238,7 +238,7 @@ class StreamingSpec extends AnyFunSuite {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.put(qe)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.put(qe)
     }
-    val base = Files.createTempDirectory("graft-plan").toString
+    val base = tempDir("graft-plan").toString
     val store = JdbcUpsertStore.derby(s"$base/derby")
     spark.listenerManager.register(listener)
     val executed = try {
@@ -301,7 +301,7 @@ class StreamingSpec extends AnyFunSuite {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.put(qe)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.put(qe)
     }
-    val base = Files.createTempDirectory("graft-jobs").toString
+    val base = tempDir("graft-jobs").toString
     val store = JdbcUpsertStore.derby(s"$base/derby")
     val batch = refTx().cache()
     try {
@@ -365,7 +365,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("parity detection file: driver-written bytes == Spark's coalesce(1).write.csv for the same rows") {
-    val base = Files.createTempDirectory("graft-detfile").toString
+    val base = tempDir("graft-detfile").toString
     val rows = awkwardDetections()
     val ours = s"$base/ours"; val sparks = s"$base/spark"
     MicroBatchRunner.writeDetectionFile(spark, rows, ours)
@@ -389,7 +389,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("parity detection file: writing into an existing dir fails and names the path") {
-    val dir = Files.createTempDirectory("graft-detfile-exists").toString
+    val dir = tempDir("graft-detfile-exists").toString
     val e = intercept[java.io.IOException](
       MicroBatchRunner.writeDetectionFile(spark, awkwardDetections(), dir))
     assert(e.getMessage.contains(dir), e.getMessage)
@@ -397,7 +397,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("scale mode: detections write distributed (no driver buffer), files sized to the batch contract") {
-    val base = Files.createTempDirectory("graft-scale-sink").toString
+    val base = tempDir("graft-scale-sink").toString
     val store = JdbcUpsertStore.derby(s"$base/derby")
     try {
       val outDir = s"$base/out"
@@ -422,7 +422,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("jsonl source: documents round-trip losslessly; corrupt lines quarantine, not fail") {
     import graft.ingest.JsonlSource
-    val base = Files.createTempDirectory("graft-jsonl").toString
+    val base = tempDir("graft-jsonl").toString
     def key(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id", "text", "lang", "source", "n_chars").collect()
         .map(r => r.getLong(0) ->
@@ -461,7 +461,7 @@ class StreamingSpec extends AnyFunSuite {
   test("curation loop: streamed micro-batches == batch-mode pipeline; index grows only by kept docs") {
     import graft.streaming.CurationPipeline
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-curate").toString
+    val base = tempDir("graft-curate").toString
 
     val textA = "the river flows gently through a green valley where tall trees stand in quiet morning light"
     val textB = "bright stars fill the night sky and a cool wind moves softly over sleeping hills far away"
@@ -579,8 +579,8 @@ class StreamingSpec extends AnyFunSuite {
         .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
       (kept, m)
     }
-    val baseOff = Files.createTempDirectory("graft-curate-cont-off").toString
-    val baseOn = Files.createTempDirectory("graft-curate-cont-on").toString
+    val baseOff = tempDir("graft-curate-cont-off").toString
+    val baseOn = tempDir("graft-curate-cont-on").toString
     // WITHOUT the screen, nothing else catches the quote: the banded
     // probe never candidates a low-Jaccard subset pair
     val (keptOff, mOff) = run(baseOff, None)
@@ -600,7 +600,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.llm.Dedup
     import graft.streaming.CurationPipeline
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-curate-nfc").toString
+    val base = tempDir("graft-curate-nfc").toString
     val composed = "the café stands in a quiet résumé valley " +
       "where naïve travelers walk to the old stone bridge daily"
     val decomposed = composed
@@ -624,7 +624,7 @@ class StreamingSpec extends AnyFunSuite {
   test("curation loop: reference-LM gate drops reference-unlike survivors") {
     import graft.streaming.CurationPipeline
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-curate-lm").toString
+    val base = tempDir("graft-curate-lm").toString
     val refSentences = Seq(
       "the river flows gently through a green valley where tall trees stand in quiet morning light",
       "bright stars fill the night sky and a cool wind moves softly over sleeping hills far away",
@@ -674,7 +674,7 @@ class StreamingSpec extends AnyFunSuite {
     // sequential r12 gauntlet produced by construction.
     import graft.streaming.CurationPipeline
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-curate-prio").toString
+    val base = tempDir("graft-curate-prio").toString
     val corpusX =
       "the tall ships sail across a wide ocean and traders carry spice to distant ports in the warm season of calm winds " +
       "while gulls circle high above the masts and the crew watches the far horizon for the first thin line of land"
@@ -728,7 +728,7 @@ class StreamingSpec extends AnyFunSuite {
     // r12 gauntlet did.
     import graft.streaming.CurationPipeline
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-curate-dfcap").toString
+    val base = tempDir("graft-curate-dfcap").toString
     val phrase = "the ancient map shows a hidden path to the lost temple of gold"
     val docZ = phrase +
       " and travelers speak of it in the old taverns where sailors trade stories about the distant northern coast"
@@ -763,7 +763,7 @@ class StreamingSpec extends AnyFunSuite {
     // every kept doc against its own folded copy.
     import graft.streaming.CurationPipeline
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-curate-replay").toString
+    val base = tempDir("graft-curate-replay").toString
     val d1 = "the river flows gently through a green valley where tall trees stand in quiet morning light"
     val d2 = "bright stars fill the night sky and a cool wind moves softly over sleeping hills far away"
     val d3 = d2.replace("cool", "cold") // near-dup pair within the batch
@@ -797,7 +797,7 @@ class StreamingSpec extends AnyFunSuite {
     // overwrite mode.
     import graft.streaming.CurationPipeline
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-curate-torn").toString
+    val base = tempDir("graft-curate-torn").toString
     val d1 = "the river flows gently through a green valley where tall trees stand in quiet morning light"
     val pipeline = new CurationPipeline(spark, s"$base/idx", s"$base/out")
     val batch = Seq((1L, d1)).toDF("doc_id", "text")
