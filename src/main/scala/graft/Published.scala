@@ -54,8 +54,10 @@ object Published {
     * The same sweep drops what the layouts before this module left,
     * each by its exact name: a crashed `<dir-key>_<key…>_<stamp>` sibling
     * ending in `_v_`, `_attempt_` or `_trash_<uuid8>`; the wm feed's
-    * stamp-first `<dir-key>_<stamp>_<key…>`; and the flat index files
-    * an index kept beside `final/` in its own dir. */
+    * stamp-first `<dir-key>_<stamp>_<key…>`; the flat index files
+    * an index kept beside `final/` in its own dir; and, under every
+    * stamp, the artifact of a kind that [[movedKinds]] folded into this
+    * one, at this key minus its leading token. */
   def cachePath(spark: SparkSession, kind: String, dir: String,
       table: String, key: Any*): String = {
     val stamp = Tables.fileStamp(spark, s"$dir/$table")
@@ -74,6 +76,12 @@ object Published {
           .foreach(st => fs.delete(st.getPath, true))
       sweep(path.getParent)(stale)
       sweep(path)(flatIndexFile.matches)
+      for (head <- key.headOption; was <- movedKinds.get((kind, head.toString))) {
+        val old = new Path(pathFor(was, dir, stamp, key.tail: _*))
+        val oldPrefix = old.getName.stripSuffix(stamp)
+        sweep(old.getParent)(n => n.startsWith(oldPrefix) &&
+          orphanShape.matches(n.substring(oldPrefix.length)))
+      }
     } catch { case _: IOException => () } // GC is best-effort
     path.toString
   }
@@ -91,6 +99,11 @@ object Published {
   private val orphanShape = s"$stampShape(_(v|attempt|trash)_[0-9a-f]{8})?".r
   // kinds whose pre-publish names put the stamp before the key
   private val stampFirstKinds = Set("snd_wm")
+  // (kind, leading key token) -> the kind that artifact was published
+  // under before, keyed without that token: vanilla PQ's index became
+  // the IVF-PQ index of the origin quantizer, and the old layout (codes
+  // with no cell column, no centroids.txt) must never be read as one
+  private val movedKinds = Map(("ivfpq_index", "origin") -> "pq_index")
   // what the pre-publish IVF, PQ, IVF-PQ and containment indexes wrote
   // into their dir
   private val flatIndexFile =

@@ -403,6 +403,22 @@ object SparkEntry {
     "quantile_sketch"   -> graft.functions.KllSketch.quantileSketchSql,
   )
 
+  /** The oracle of a rule-driven serving or index rung that replays it
+    * as probe-all: the rule's decision on the corpus is asserted rather
+    * than assumed, so a testdata regeneration that flips the promotion
+    * rule fails loudly here instead of as an opaque hash mismatch. */
+  private def probeAll(name: String)(sql: (SparkSession, String) => String)
+      : (SparkSession, String) => String = (s, d) => {
+    val cells = Vectors.scaledCells(Vectors.nVectors(s, d))
+    val probe = Vectors.promotedProbe(s, d, cells,
+      Vectors.trainSampleFor(cells))
+    require(probe >= cells,
+      s"$name oracle assumes probe-all on this corpus, but the " +
+        s"promotion rule picked nProbe=$probe of $cells cells — " +
+        "the partial-probe replay is not SQL-registered")
+    sql(s, d)
+  }
+
   /** Oracles whose SQL embeds TRAINED driver-side constants — Lloyd
     * centroids, PQ codebooks, PCA eigenvectors, the whitening factor,
     * logistic coefficients — as literals, replaying the same
@@ -427,73 +443,39 @@ object SparkEntry {
     // pure id arithmetic on top of the shared brute-Hamming pair SQL
     "streaming_neardup_wm" -> ((s, d) => graft.streaming.StreamingNearDup
       .streamingNearDupWatermarkedSql(s, d)),
+    // vanilla PQ runs as IVF-PQ against the origin quantizer: its
+    // codebooks embed, and the replay is PQ's own independent SQL
     "similarity_topk_pq" -> ((s, d) => Vectors.simTopKPqSql(
-      Vectors.pqCodebooks(s, d))),
+      Vectors.ivfPqCodebooks(s, d, Vectors.origin()))),
     // residual IVF-PQ: the run's own coarse centroids AND residual
     // codebooks embed; assignment, residual encode, ADC fold, refine
     // cut, and final rank all replay
-    "similarity_topk_ivfpq" -> ((s, d) => Vectors.simTopKIvfPqSql(
-      Vectors.coarseCentroids(s, d, nCells = 16),
-      Vectors.ivfPqCodebooks(s, d))),
+    "similarity_topk_ivfpq" -> ((s, d) => {
+      val q = Vectors.coarseQuantizer(s, d, nCells = 16)
+      Vectors.simTopKIvfPqSql(q.cents, Vectors.ivfPqCodebooks(s, d, q))
+    }),
     "similarity_topk_ivfpq_scaled" -> ((s, d) =>
       Vectors.simTopKIvfPqScaledSql(s, d)),
     // tightness on the isotropic testdata is ≲0.5 < τ=0.7 → probe-all →
-    // serving ≡ scaled; the generator asserts that decision rather than
-    // assuming it, so a testdata regeneration that flips the rule fails
-    // loudly here instead of as an opaque hash mismatch
-    "similarity_topk_ivfpq_serving" -> ((s, d) => {
-      val cells = Vectors.scaledCells(Vectors.nVectors(s, d))
-      val probe = Vectors.promotedProbe(s, d, cells,
-        Vectors.trainSampleFor(cells))
-      require(probe >= cells,
-        s"ivfpq_serving oracle assumes probe-all on this corpus, but " +
-          s"the promotion rule picked nProbe=$probe of $cells cells — " +
-          "the partial-probe replay is not SQL-registered")
-      Vectors.simTopKIvfPqScaledSql(s, d)
-    }),
+    // serving ≡ scaled
+    "similarity_topk_ivfpq_serving" -> probeAll("ivfpq_serving")(
+      Vectors.simTopKIvfPqScaledSql(_, _)),
     // the persisted rule-driven index shares the inline scaled replay
-    // (Double.toString-exact model round-trip); like _serving, the
-    // generator asserts the probe-all decision rather than assuming it
-    "similarity_topk_ivfpq_idx" -> ((s, d) => {
-      val cells = Vectors.scaledCells(Vectors.nVectors(s, d))
-      val probe = Vectors.promotedProbe(s, d, cells,
-        Vectors.trainSampleFor(cells))
-      require(probe >= cells,
-        s"ivfpq_idx oracle assumes probe-all on this corpus, but the " +
-          s"promotion rule picked nProbe=$probe of $cells cells — " +
-          "the partial-probe replay is not SQL-registered")
-      Vectors.simTopKIvfPqScaledSql(s, d)
-    }),
-    // probe-all plain IVF with exact in-cell cosine IS the brute scan;
-    // the assert keeps a testdata regeneration that flips the promotion
-    // rule failing loudly instead of as an opaque hash mismatch
-    "similarity_topk_ivf_serving" -> ((s, d) => {
-      val cells = Vectors.scaledCells(Vectors.nVectors(s, d))
-      val probe = Vectors.promotedProbe(s, d, cells,
-        Vectors.trainSampleFor(cells))
-      require(probe >= cells,
-        s"ivf_serving oracle assumes probe-all on this corpus, but the " +
-          s"promotion rule picked nProbe=$probe of $cells cells — " +
-          "the partial-probe replay is not SQL-registered")
-      Vectors.simTopKSql()
-    }),
-    // the persisted plain-IVF index shares the brute replay under the
-    // same asserted probe-all decision (reloaded centroids are
-    // Double.toString-exact; the probe/score tail is the same code)
-    "similarity_topk_ivf_idx" -> ((s, d) => {
-      val cells = Vectors.scaledCells(Vectors.nVectors(s, d))
-      val probe = Vectors.promotedProbe(s, d, cells,
-        Vectors.trainSampleFor(cells))
-      require(probe >= cells,
-        s"ivf_idx oracle assumes probe-all on this corpus, but the " +
-          s"promotion rule picked nProbe=$probe of $cells cells — " +
-          "the partial-probe replay is not SQL-registered")
-      Vectors.simTopKSql()
-    }),
+    // (Double.toString-exact model round-trip)
+    "similarity_topk_ivfpq_idx" -> probeAll("ivfpq_idx")(
+      Vectors.simTopKIvfPqScaledSql(_, _)),
+    // probe-all plain IVF with exact in-cell cosine IS the brute scan
+    "similarity_topk_ivf_serving" -> probeAll("ivf_serving")(
+      (_, _) => Vectors.simTopKSql()),
+    // the persisted plain-IVF index shares the brute replay (reloaded
+    // centroids are Double.toString-exact; the probe/score tail is the
+    // same code)
+    "similarity_topk_ivf_idx" -> probeAll("ivf_idx")(
+      (_, _) => Vectors.simTopKSql()),
     // the persisted index round-trips the same codebooks through
     // Double.toString (exact), so it shares the inline replay
     "similarity_topk_pq_idx" -> ((s, d) => Vectors.simTopKPqSql(
-      Vectors.pqCodebooks(s, d))),
+      Vectors.ivfPqCodebooks(s, d, Vectors.origin()))),
     "emb_pca_project" -> ((s, d) => Vectors.embPcaProjectSql(
       Vectors.pcaModelFor(s, d))),
     "emb_outliers" -> ((s, d) => Vectors.embOutliersSql(

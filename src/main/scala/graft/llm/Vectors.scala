@@ -52,17 +52,31 @@ object Vectors {
     val q = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"),
         col("nrm").as("qnrm"))
-    val joined = emb.join(broadcast(q), col("vec_id") =!= col("query_id"))
+    exactTopK(emb.join(broadcast(q), col("vec_id") =!= col("query_id")), k)
+  }
+
+  /** The exact tail every top-k rung ends in, over (query_id, qvec,
+    * qnrm, vec_id, embedding, nrm) candidate rows: float-accumulated
+    * cosine rounded to 6 places, ranked per query on (cos desc,
+    * vec_id), the top k kept — the arithmetic every SQL oracle
+    * replays. */
+  private def exactTopK(cands: DataFrame, k: Int): DataFrame =
+    cands
       .withColumn("cos", round(
         dotF32(col("qvec"), col("embedding")) / (col("qnrm") * col("nrm")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    joined
-      .withColumn("rank", row_number().over(w))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
         col("cos").as("cosine"))
-  }
+
+  /** The refine cut of the approximate rungs: each query's top `n`
+    * candidates by `ascore`, ties broken by vec_id. */
+  private def refineCut(scored: DataFrame, n: Int): DataFrame =
+    scored
+      .withColumn("ark", row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(col("ascore").desc, col("vec_id"))))
+      .filter(col("ark") <= n)
 
   def simTopKSql(nQueries: Int = 10, k: Int = 5): String =
     s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qvec
@@ -171,12 +185,34 @@ object Vectors {
   def coarseCentroids(spark: SparkSession, dir: String, nCells: Int,
       trainSample: Int = 2048): Array[Array[Double]] =
     graft.Caches.memoObj(spark, s"coarseCents:$dir:$nCells:$trainSample") {
-      val sample = Tables.fanOut(Tables.embeddings(spark, dir))
+      lloyd(trainingSample(spark, dir, trainSample), nCells, iters = 5)
+    }
+
+  /** The pinned sample every driver-side model of `dir` trains on: the
+    * first `trainSample` vectors in vec_id order, collected once per
+    * session ([[graft.Caches.release]] drops it with the models). */
+  private def trainingSample(spark: SparkSession, dir: String,
+      trainSample: Int): Array[Array[Double]] =
+    graft.Caches.memoObj(spark, s"trainSample:$dir:$trainSample") {
+      Tables.fanOut(Tables.embeddings(spark, dir))
         .orderBy(col("vec_id")).limit(trainSample)
         .select(col("embedding")).collect()
         .map(_.getSeq[Float](0).toArray.map(_.toDouble))
-      lloyd(sample, nCells, iters = 5)
     }
+
+  /** [[cellOf]] on the driver: the first-minimum squared-distance cell
+    * of `v`, each distance a left-associated double fold. */
+  private def nearestCell(v: Array[Double], cents: Array[Array[Double]]): Int = {
+    var best = 0; var bestD = Double.MaxValue
+    var c = 0
+    while (c < cents.length) {
+      var s = 0.0; var i = 0
+      while (i < v.length) { val t = v(i) - cents(c)(i); s += t * t; i += 1 }
+      if (s < bestD) { bestD = s; best = c } // strict <: first min
+      c += 1
+    }
+    best
+  }
 
   /** Nearest-centroid cell id: squared distance to each centroid as a
     * left-associated double fold (identical order to [[lloyd]]'s `sq`
@@ -250,16 +286,8 @@ object Vectors {
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"),
         col("nrm").as("qnrm"))
     val probes = probesOpt.getOrElse(ivfProbes(spark, q, cents, nProbe))
-    val joined = assigned.join(broadcast(probes),
-        col("cell") === col("pcell") && col("vec_id") =!= col("query_id"))
-      .withColumn("cos", round(
-        dotF32(col("qvec"), col("embedding")) / (col("qnrm") * col("nrm")), 6))
-    joined
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        col("cos").as("cosine"))
+    exactTopK(assigned.join(broadcast(probes),
+      col("cell") === col("pcell") && col("vec_id") =!= col("query_id")), k)
   }
 
   /** Probe selection over a (query_id, qvec, qnrm) frame: rank cells
@@ -366,7 +394,7 @@ object Vectors {
         ivfIndexKey(spark, dir, nCells, trainSample)) {
       buildIvfIndex(spark, dir, _, nCells, trainSample)
     }
-    val cents = readCentroids(spark, path, nCells)
+    val cents = readCentroids(spark, path)
     // session-memoized like the inline form's assignment: a serving
     // process keeps its hot index resident — without this, every warm
     // query re-lists the per-cell partition directories, which at
@@ -709,21 +737,11 @@ object Vectors {
     val qq = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"),
         col("nrm").as("qnrm"), col("s").as("qs"), col("q8").as("qq8"))
-    val approx = emb.join(broadcast(qq), col("vec_id") =!= col("query_id"))
+    val scored = emb.join(broadcast(qq), col("vec_id") =!= col("query_id"))
       .withColumn("ascore",
         col("qs") * col("s") * int8_dot(col("qq8"), col("q8")) /
           (col("qnrm") * col("nrm")))
-      .withColumn("ark", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("ascore").desc, col("vec_id"))))
-      .filter(col("ark") <= k * refine)
-    approx
-      .withColumn("cos", round(
-        dotF32(col("qvec"), col("embedding")) / (col("qnrm") * col("nrm")), 6))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        col("cos").as("cosine"))
+    exactTopK(refineCut(scored, k * refine), k)
   }
 
   /** DuckDB oracle for [[simTopKSq8]] — possible because SQ8 is the one
@@ -779,13 +797,14 @@ object Vectors {
 
   /** DuckDB oracle for [[simTopKPq]] / [[pqIndexTopK]] — possible via
     * the trained-constant-embedding recipe: the codebooks are driver
-    * constants ([[pqCodebooks]], deterministic from the pinned
-    * vec_id-ordered sample and memoized, so the verify session's oracle
-    * embeds the run's own doubles), and every downstream step is plain
-    * IEEE arithmetic. The SQL replays the SAME approximate algorithm —
-    * per-subspace argmin encode (each squared-distance a left-assoc
-    * double chain, the [[cellDistsSql]] discipline), the ADC lookup dot
-    * rebuilt with identical multiply/accumulate order as the driver's
+    * constants (the [[origin]] quantizer's [[ivfPqCodebooks]],
+    * deterministic from the pinned vec_id-ordered sample and memoized,
+    * so the verify session's oracle embeds the run's own doubles), and
+    * every downstream step is plain IEEE arithmetic. The SQL replays
+    * the SAME approximate algorithm — per-subspace argmin encode (each
+    * squared-distance a left-assoc double chain, the [[cellDistsSql]]
+    * discipline), the ADC lookup dot rebuilt with identical
+    * multiply/accumulate order as the driver's
     * LUT loop, the refine cut on (ascore desc, vec_id), and the exact
     * float-accumulated cosine re-rank — so the refine boundary itself
     * is pinned, not just the final neighbors. [[pqIndexTopK]] shares
@@ -877,15 +896,12 @@ object Vectors {
     * `refine·k` by approximate score re-rank with the exact float
     * cosine, so survivors carry true cosines.
     *
-    * 100 TB shape: codebooks train DRIVER-SIDE on a bounded sample (m
-    * in-memory Lloyd runs — the codebook saturates on thousands of
-    * points however big the corpus is, so training costs zero cluster
-    * barriers), encoding is literal-codeword argmin inside the one scan,
-    * the encoded corpus is the only thing the query scan reads (codes +
-    * norm ≈ 12 bytes/vector), LUTs ride the broadcast with the queries,
-    * and float vectors are fetched for ~refine·k rows per query. Approximate by construction ⇒ no SQL
-    * oracle; LlmOpsSpec pins recall@k vs [[simTopK]] and bit-exact
-    * survivor cosines (the SQ8 laws, one compression rung further).
+    * Vanilla PQ is IVFADC with one cell at the [[origin]]: the residual
+    * v − 0.0 ≡ v bit for bit (same Lloyd inputs ⇒ same codebooks, same
+    * codes), the cell term ⟨q, 0⟩ is +0.0 (0.0 + s ranks as s), and the
+    * one cell admits every row. So it runs the IVF-PQ path
+    * ([[ivfPqTopK]]) against that one-row zero centroid set, and
+    * [[simTopKPqSql]] stays its independent replay.
     *
     * FIXED-CONFIG LADDER RUNG — not a serving path. The compact
     * defaults (m=8, 64 codes, refine 32) are sized to the verify-SF
@@ -902,183 +918,25 @@ object Vectors {
     * artifact itself steers a scale user there. */
   def simTopKPq(spark: SparkSession, dir: String, nQueries: Int = 10,
       k: Int = 5, m: Int = 8, nCodes: Int = 64, refine: Int = 32,
-      dim: Int = 64, trainSample: Int = 2048): DataFrame = {
-    require(dim % m == 0, s"dim=$dim not divisible by m=$m")
-    val sub = dim / m
-    val emb = withNorm(Tables.fanOut(Tables.embeddings(spark, dir)),
-      "embedding", "nrm")
-    // codebooks train DRIVER-SIDE on a bounded sample (the FAISS shape:
-    // an m·nCodes codebook saturates on thousands of points however big
-    // the corpus is, and m tiny in-memory Lloyd runs cost no cluster
-    // barriers at all — at 100 TB this is the difference between 0 and
-    // 8·maxIter scheduled jobs before the scan starts). The sample is
-    // the first trainSample ids — deterministic, and id order is
-    // uncorrelated with vector geometry in any hash-sharded corpus.
-    // Codebooks and the encoded corpus are session-memoized: encode
-    // once, probe many — the inline rung's analogue of the persisted
-    // index's build-once contract.
-    val codebooks = pqCodebooks(spark, dir, m, nCodes, dim, trainSample)
-    val encoded = graft.Caches.memo(spark,
-        s"pqEncoded:$dir:$m:$nCodes:$dim:$trainSample") {
-      pqEncode(emb, codebooks, m, sub)
-    }
-    adcQuery(encoded, emb, codebooks, nQueries, k, refine, m, nCodes, sub)
-  }
+      dim: Int = 64, trainSample: Int = 2048): DataFrame =
+    ivfPqTopK(spark, dir, origin(dim), nQueries, k, m, nCodes, refine,
+      dim, trainSample, Int.MaxValue)
 
-  /** The m per-subspace PQ codebooks, trained driver-side on the first
-    * `trainSample` vectors in vec_id order (deterministic [[lloyd]]) and
-    * session-memoized. Public so the oracle generator can embed the SAME
-    * trained doubles the engine quantizes with into its replay SQL. */
-  def pqCodebooks(spark: SparkSession, dir: String, m: Int = 8,
-      nCodes: Int = 64, dim: Int = 64, trainSample: Int = 2048)
-      : Array[Array[Array[Double]]] =
-    graft.Caches.memoObj(spark,
-        s"pqCodebooks:$dir:$m:$nCodes:$dim:$trainSample") {
-      val sub = dim / m
-      val sample = Tables.fanOut(Tables.embeddings(spark, dir))
-        .orderBy(col("vec_id")).limit(trainSample)
-        .select(col("embedding")).collect()
-        .map(_.getSeq[Float](0).toArray)
-      Array.tabulate(m) { j =>
-        val pts = sample.map { v =>
-          val p = new Array[Double](sub)
-          var i = 0; while (i < sub) { p(i) = v(j * sub + i); i += 1 }
-          p
-        }
-        lloyd(pts, nCodes, iters = 5)
-      }
-    }
-
-  /** Encode vectors to PQ codes IN the scan: per subspace, squared
-    * distance to each of the nCodes codewords, argmin — one pass, the
-    * output carries codes + norm ONLY. Since round 18 this is the
-    * native [[graft.functions.IvfPqEncode]] kernel at its degenerate
-    * single-ZERO-centroid rung: residual v − 0.0 ≡ v bit-for-bit, so
-    * vanilla PQ is exactly residual PQ against the origin, and the
-    * codes are unchanged (PropertySpec-era HOF twin kept as
-    * [[pqEncodeHof]], parity-pinned in FunctionsSpec). The interpreted
-    * HOF chain it replaces measured 36 s cold for a 200k-vector encode
-    * where the kernel reads ~2 s. */
-  private def pqEncode(emb: DataFrame, codebooks: Array[Array[Array[Double]]],
-      m: Int, sub: Int): DataFrame = {
-    val zeroCent = Array(Array.fill(m * sub)(0.0))
-    emb
-      .withColumn("enc",
-        graft.functions.IvfPqEncode.ivfpq_encode(col("embedding"), zeroCent,
-          codebooks))
-      .select(col("vec_id"), col("nrm"), slice(col("enc"), 2, m).as("codes"))
-  }
-
-  /** The pre-r18 HOF formulation of [[pqEncode]] — spec-only twin. */
-  private[graft] def pqEncodeHof(emb: DataFrame,
-      codebooks: Array[Array[Array[Double]]], m: Int, sub: Int): DataFrame = {
-    val codeCols = (0 until m).map { j =>
-      val subCol = slice(col("embedding"), j * sub + 1, sub)
-      val cbLit = array(codebooks(j).map(cw => array(cw.map(lit): _*)): _*)
-      val dists = transform(cbLit, cw =>
-        aggregate(
-          zip_with(subCol, cw,
-            (x, y) => (x.cast("double") - y) * (x.cast("double") - y)),
-          lit(0.0), (acc, x) => acc + x))
-      (array_position(dists, array_min(dists)) - 1).cast("int")
-    }
-    emb.select(col("vec_id"), col("nrm"), array(codeCols: _*).as("codes"))
-  }
-
-  /** The ADC scan + exact refine shared by the inline and persisted-
-    * index PQ paths: per-query lookup tables ride the broadcast, the
-    * encoded frame is the only full scan, float vectors rejoin for the
-    * refine survivors alone. */
-  private def adcQuery(encoded: DataFrame, emb: DataFrame,
-      codebooks: Array[Array[Array[Double]]], nQueries: Int, k: Int,
-      refine: Int, m: Int, nCodes: Int, sub: Int): DataFrame = {
-    val spark = emb.sparkSession
-    // ADC lookup tables: queries are a broadcast-sized set, so their
-    // m×nCodes dot tables are computed driver-side from the codebooks
-    // and ride along as one flat literal array per query
-    val queryRows = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding"), col("nrm")).collect()
-    import spark.implicits._
-    val luts = queryRows.map { r =>
-      val qid = r.getLong(0)
-      val q = r.getSeq[Float](1).toArray
-      val qnrm = r.getDouble(2)
-      val flat = new Array[Double](m * nCodes)
-      for (j <- 0 until m; c <- 0 until nCodes) {
-        val cw = codebooks(j)(c)
-        var s = 0.0
-        var i = 0
-        while (i < sub) { s += q(j * sub + i) * cw(i); i += 1 }
-        flat(j * nCodes + c) = s
-      }
-      (qid, q, qnrm, flat)
-    }.toSeq.toDF("query_id", "qvec", "qnrm", "lut")
-    // scan: approximate dot = m lookups per row via the native ADC fold
-    // (Σ_j lut[j·nCodes + codes_j] ascending from 0.0 — bit-identical
-    // to the aggregate(zip_with(…)) chain it replaces)
-    val approx = encoded.join(broadcast(luts),
-        col("vec_id") =!= col("query_id"))
-      .withColumn("ascore",
-        graft.functions.AdcScore.adc_score(col("codes"), col("lut"))
-          / (col("qnrm") * col("nrm")))
-      .withColumn("ark", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("ascore").desc, col("vec_id"))))
-      .filter(col("ark") <= k * refine)
-      .select(col("query_id"), col("qvec"), col("qnrm"),
-        col("vec_id"), col("nrm"))
-    // refine: only the survivors touch float vectors (at scale: a
-    // broadcast of ~nQueries·refine·k survivor ids against the vector
-    // store, never a second full scan)
-    approx
-      .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .withColumn("cos", round(
-        dotF32(col("qvec"), col("embedding")) / (col("qnrm") * col("nrm")), 6))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        col("cos").as("cosine"))
-  }
-
-  /** Build a PERSISTED PQ index at `path`: the encoded corpus lands in
-    * `path/codes` (parquet: vec_id, nrm, codes) and the codebooks in
-    * `path/codebooks.txt` ([[writeModel]], reloaded bit-identical).
-    * This is the production ANN shape [[simTopKPq]]'s inline form only
-    * simulates: encode the corpus ONCE, then every query session reads
-    * the ~12-byte/vector codes table and never re-derives codes — the
-    * same build-once/probe-many contract as [[DedupIndex]]. */
-  def buildPqIndex(spark: SparkSession, dir: String, path: String,
-      m: Int = 8, nCodes: Int = 64, dim: Int = 64,
-      trainSample: Int = 2048): Unit = {
-    val emb = withNorm(Tables.fanOut(Tables.embeddings(spark, dir)),
-      "embedding", "nrm")
-    val codebooks = pqCodebooks(spark, dir, m, nCodes, dim, trainSample)
-    pqEncode(emb, codebooks, m, dim / m).write.parquet(s"$path/codes")
-    writeModel(spark, s"$path/codebooks.txt", codebookRows(codebooks))
-  }
-
-  /** Where [[pqIndexTopK]] caches its index for the given parameters.
-    * The key carries EVERY codebook-shaping parameter — a cached index
-    * built under a different dim/trainSample must never be silently
-    * reused (wrong-shape codebooks would crash the ADC scan) — plus the
-    * source file's stamp, so a regenerated embeddings table re-encodes
-    * instead of serving codes for rows that no longer exist. The ONE
-    * shared constructor of this path (LlmOpsSpec's reuse check derives
-    * the expected location from it too): a spec-side copy silently went
-    * stale when the nCodes default moved 16 → 64. */
+  /** Where [[pqIndexTopK]] publishes its index: the IVF-PQ index of the
+    * [[origin]] quantizer, keyed by every codebook-shaping parameter and
+    * the source stamp ([[ivfPqIndexKey]]). The ONE shared constructor of
+    * this path (LlmOpsSpec's reuse check derives the expected location
+    * from it too): a spec-side copy silently went stale when the nCodes
+    * default moved 16 → 64. */
   def pqIndexPath(spark: SparkSession, dir: String, m: Int = 8,
       nCodes: Int = 64, dim: Int = 64, trainSample: Int = 2048): String =
-    graft.Published.finalDir(pqIndexKey(spark, dir, m, nCodes, dim, trainSample))
+    graft.Published.finalDir(
+      ivfPqIndexKey(spark, dir, origin(dim), m, nCodes, dim, trainSample))
 
-  private def pqIndexKey(spark: SparkSession, dir: String, m: Int,
-      nCodes: Int, dim: Int, trainSample: Int): String =
-    graft.Published.cachePath(spark, "pq_index", dir, "embeddings.parquet",
-      m, nCodes, dim, trainSample)
-
-  /** Query a persisted PQ index (building it first if absent): the ADC
-    * scan reads the codes parquet — not the embeddings — and only
-    * refine survivors rejoin the vector table. Same codebooks ⇒ same
-    * results as the inline [[simTopKPq]] (LlmOpsSpec pins equality).
+  /** Query a persisted PQ index (building it first if absent): the
+    * persisted IVF-PQ index ([[ivfPqIndexedTopK]]) of the [[origin]]
+    * quantizer. Same codebooks ⇒ same results as the inline
+    * [[simTopKPq]] (LlmOpsSpec pins equality).
     *
     * FIXED-CONFIG LADDER RUNG — [[simTopKPq]]'s fence applies verbatim:
     * the explicit compact knobs collapse on large clustered corpora
@@ -1088,20 +946,9 @@ object Vectors {
     * promoted probe — 0.98 on the same fixture). */
   def pqIndexTopK(spark: SparkSession, dir: String, nQueries: Int = 10,
       k: Int = 5, m: Int = 8, nCodes: Int = 64, refine: Int = 32,
-      dim: Int = 64, trainSample: Int = 2048): DataFrame = {
-    val path = graft.Published.publish(spark,
-        pqIndexKey(spark, dir, m, nCodes, dim, trainSample)) {
-      buildPqIndex(spark, dir, _, m, nCodes, dim, trainSample)
-    }
-    val codebooks = readCodebooks(spark, path, m, nCodes)
-    val emb = withNorm(Tables.fanOut(Tables.embeddings(spark, dir)),
-      "embedding", "nrm")
-    // hot-index memo, the [[ivfIndexTopK]] discipline (stamp-keyed path)
-    val encoded = graft.Caches.memo(spark, s"pqIdxCodes:$path") {
-      spark.read.parquet(s"$path/codes")
-    }
-    adcQuery(encoded, emb, codebooks, nQueries, k, refine, m, nCodes, dim / m)
-  }
+      dim: Int = 64, trainSample: Int = 2048): DataFrame =
+    ivfPqIndexedTopK(spark, dir, origin(dim), nQueries, k, m, nCodes,
+      refine, dim, trainSample, Int.MaxValue)
 
   /** RESIDUAL IVF-PQ top-k (IVFADC, Jégou et al. 2011 §III) — the rung
     * vanilla PQ cannot serve on a clustered corpus: with tight clusters
@@ -1128,22 +975,52 @@ object Vectors {
   def simTopKIvfPq(spark: SparkSession, dir: String, nQueries: Int = 10,
       k: Int = 5, nCells: Int = 16, m: Int = 8, nCodes: Int = 64,
       refine: Int = 32, dim: Int = 64, trainSample: Int = 2048,
-      nProbe: Int = Int.MaxValue): DataFrame = {
+      nProbe: Int = Int.MaxValue): DataFrame =
+    ivfPqTopK(spark, dir, coarseQuantizer(spark, dir, nCells, trainSample),
+      nQueries, k, m, nCodes, refine, dim, trainSample, nProbe)
+
+  /** The coarse quantizer an IVF-PQ model encodes residuals against.
+    * `name` keys every memo and index path the model shapes; `cents`
+    * trains on first use, so a query against a published index never
+    * trains it. */
+  private[graft] final class Quantizer(val name: String,
+      train: => Array[Array[Double]]) {
+    lazy val cents: Array[Array[Double]] = train
+  }
+
+  /** The origin quantizer: one all-zero centroid, under which IVF-PQ is
+    * vanilla PQ ([[simTopKPq]]). Its name is not a cell count: a
+    * trained one-cell quantizer's centroid is the sample mean, not the
+    * origin, and must never share its codebooks or index. */
+  private[graft] def origin(dim: Int = 64): Quantizer =
+    new Quantizer("origin", Array(Array.fill(dim)(0.0)))
+
+  /** The trained [[coarseCentroids]] quantizer, named by its cell count
+    * (the sample width rides in every key beside it). */
+  private[graft] def coarseQuantizer(spark: SparkSession, dir: String,
+      nCells: Int, trainSample: Int = 2048): Quantizer =
+    new Quantizer(nCells.toString,
+      coarseCentroids(spark, dir, nCells, trainSample))
+
+  /** Inline IVF-PQ top-k against quantizer `q`: codebooks and the
+    * encoded corpus are session-memoized — encode once, probe many, the
+    * inline analogue of the persisted index's build-once contract. */
+  private def ivfPqTopK(spark: SparkSession, dir: String, q: Quantizer,
+      nQueries: Int, k: Int, m: Int, nCodes: Int, refine: Int, dim: Int,
+      trainSample: Int, nProbe: Int): DataFrame = {
     require(dim % m == 0, s"dim=$dim not divisible by m=$m")
-    val sub = dim / m
     val emb = graft.Caches.memo(spark, s"ivfEmb:$dir") {
       withNorm(Tables.fanOut(Tables.embeddings(spark, dir)),
         "embedding", "nrm")
     }
-    val cents = coarseCentroids(spark, dir, nCells, trainSample)
-    val codebooks = ivfPqCodebooks(spark, dir, nCells, m, nCodes, dim,
+    val codebooks = ivfPqCodebooks(spark, dir, q, m, nCodes, dim,
       trainSample)
     val encoded = graft.Caches.memo(spark,
-        s"ivfpqEncoded:$dir:$nCells:$m:$nCodes:$dim:$trainSample") {
-      ivfPqEncode(emb, cents, codebooks, m, sub)
+        s"ivfpqEncoded:$dir:${q.name}:$m:$nCodes:$dim:$trainSample") {
+      ivfPqEncode(emb, q.cents, codebooks, m)
     }
-    ivfPqAdcQuery(encoded, emb, cents, codebooks, nQueries, k, refine,
-      m, nCodes, sub, math.min(nProbe, nCells))
+    ivfPqAdcQuery(encoded, emb, q.cents, codebooks, nQueries, k, refine,
+      m, nCodes, dim / m, nProbe)
   }
 
   /** [[simTopKIvfPq]] with the cell count SCALED TO THE CORPUS
@@ -1185,8 +1062,8 @@ object Vectors {
     val cells = scaledCells(n)
     val (m, nCodes, refine) = scaledPqKnobs(n, dim)
     val ts = trainSampleFor(cells)
-    simTopKIvfPqSql(coarseCentroids(spark, dir, cells, ts),
-      ivfPqCodebooks(spark, dir, cells, m, nCodes, dim, ts),
+    val q = coarseQuantizer(spark, dir, cells, ts)
+    simTopKIvfPqSql(q.cents, ivfPqCodebooks(spark, dir, q, m, nCodes, dim, ts),
       nQueries, k, m, nCodes, refine, dim)
   }
 
@@ -1199,27 +1076,22 @@ object Vectors {
     * (≈0.3 at k=16, ≈0.5 even at k=1600 in 64 dims). */
   private[graft] def assignmentTightness(spark: SparkSession, dir: String,
       nCells: Int, trainSample: Int = 2048): Double =
+    tightness(spark, dir, coarseQuantizer(spark, dir, nCells, trainSample),
+      trainSample)
+
+  /** [[assignmentTightness]] of any quantizer (the [[origin]] reads 0:
+    * its one centroid has no direction). */
+  private def tightness(spark: SparkSession, dir: String, q: Quantizer,
+      trainSample: Int): Double =
     graft.Caches.memoObj[java.lang.Double](spark,
-        s"ivfTightness:$dir:$nCells:$trainSample") {
-      val cents = coarseCentroids(spark, dir, nCells, trainSample)
-      val dim = cents(0).length
-      val sample = Tables.fanOut(Tables.embeddings(spark, dir))
-        .orderBy(col("vec_id")).limit(trainSample)
-        .select(col("embedding")).collect()
-        .map(_.getSeq[Float](0).toArray.map(_.toDouble))
+        s"ivfTightness:$dir:${q.name}:$trainSample") {
+      val sample = trainingSample(spark, dir, trainSample)
       val cosSum = sample.map { v =>
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < nCells) {
-          var s = 0.0; var i = 0
-          while (i < dim) { val t = v(i) - cents(c)(i); s += t * t; i += 1 }
-          if (s < bestD) { bestD = s; best = c } // strict <: first min
-          c += 1
-        }
+        val c = q.cents(nearestCell(v, q.cents))
         var dot = 0.0; var vn = 0.0; var cn = 0.0; var i = 0
-        while (i < dim) {
-          dot += v(i) * cents(best)(i)
-          vn += v(i) * v(i); cn += cents(best)(i) * cents(best)(i)
+        while (i < v.length) {
+          dot += v(i) * c(i)
+          vn += v(i) * v(i); cn += c(i) * c(i)
           i += 1
         }
         dot / math.max(math.sqrt(vn) * math.sqrt(cn), 1e-12)
@@ -1301,10 +1173,10 @@ object Vectors {
     for (j <- codebooks.indices; c <- codebooks(j).indices)
       yield s"$j $c" -> codebooks(j)(c)
 
-  private def readCentroids(spark: SparkSession, path: String,
-      nCells: Int): Array[Array[Double]] = {
+  private def readCentroids(spark: SparkSession,
+      path: String): Array[Array[Double]] = {
     val rows = readModel(spark, s"$path/centroids.txt")
-    Array.tabulate(nCells)(c => rows(s"$c"))
+    Array.tabulate(rows.size)(c => rows(s"$c"))
   }
 
   private def readCodebooks(spark: SparkSession, path: String, m: Int,
@@ -1328,31 +1200,20 @@ object Vectors {
       nProbe = promotedProbe(spark, dir, cells, trainSampleFor(cells)))
   }
 
-  /** The m residual-PQ codebooks: assign each pinned sample vector to
-    * its coarse cell with the SAME first-min argmin the scan uses, then
-    * train each subspace's codebook on the residuals. Memoized and
-    * public so the oracle generator embeds the identical doubles. */
-  def ivfPqCodebooks(spark: SparkSession, dir: String, nCells: Int = 16,
+  /** The m residual-PQ codebooks of quantizer `q`: assign each pinned
+    * sample vector to its cell with the SAME first-min argmin the scan
+    * uses, then train each subspace's codebook on the residuals.
+    * Memoized and public so the oracle generator embeds the identical
+    * doubles. */
+  def ivfPqCodebooks(spark: SparkSession, dir: String, q: Quantizer,
       m: Int = 8, nCodes: Int = 64, dim: Int = 64, trainSample: Int = 2048)
       : Array[Array[Array[Double]]] =
     graft.Caches.memoObj(spark,
-        s"ivfpqCodebooks:$dir:$nCells:$m:$nCodes:$dim:$trainSample") {
+        s"ivfpqCodebooks:$dir:${q.name}:$m:$nCodes:$dim:$trainSample") {
       val sub = dim / m
-      val cents = coarseCentroids(spark, dir, nCells, trainSample)
-      val sample = Tables.fanOut(Tables.embeddings(spark, dir))
-        .orderBy(col("vec_id")).limit(trainSample)
-        .select(col("embedding")).collect()
-        .map(_.getSeq[Float](0).toArray.map(_.toDouble))
-      val resid = sample.map { v =>
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < nCells) {
-          var s = 0.0; var i = 0
-          while (i < dim) { val t = v(i) - cents(c)(i); s += t * t; i += 1 }
-          if (s < bestD) { bestD = s; best = c } // strict <: first min
-          c += 1
-        }
-        Array.tabulate(dim)(i => v(i) - cents(best)(i))
+      val resid = trainingSample(spark, dir, trainSample).map { v =>
+        val c = q.cents(nearestCell(v, q.cents))
+        Array.tabulate(dim)(i => v(i) - c(i))
       }
       Array.tabulate(m) { j =>
         val pts = resid.map { r =>
@@ -1374,7 +1235,7 @@ object Vectors {
     * interpreted HOF chain measured ~100× this expression's cost. */
   private def ivfPqEncode(emb: DataFrame,
       cents: Array[Array[Double]], codebooks: Array[Array[Array[Double]]],
-      m: Int, sub: Int): DataFrame =
+      m: Int): DataFrame =
     emb
       .withColumn("enc",
         graft.functions.IvfPqEncode.ivfpq_encode(col("embedding"), cents,
@@ -1447,7 +1308,7 @@ object Vectors {
         }.sorted.take(nProbe).map(_._2).sorted
       (qid, q, qnrm, qcent, flat, probed)
     }.toSeq.toDF("query_id", "qvec", "qnrm", "qcent", "lut", "probed")
-    val approx = encoded.join(broadcast(luts),
+    val scored = encoded.join(broadcast(luts),
         col("vec_id") =!= col("query_id") &&
           array_contains(col("probed"), col("cell")))
       .withColumn("ascore",
@@ -1457,83 +1318,93 @@ object Vectors {
           // it replaces, which paid 2m interpreted lambdas per row)
           graft.functions.AdcScore.adc_score(col("codes"), col("lut")))
           / (col("qnrm") * col("nrm")))
-      .withColumn("ark", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("ascore").desc, col("vec_id"))))
-      .filter(col("ark") <= k * refine)
-      .select(col("query_id"), col("qvec"), col("qnrm"),
-        col("vec_id"), col("nrm"))
-    approx
-      .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .withColumn("cos", round(
-        dotF32(col("qvec"), col("embedding")) / (col("qnrm") * col("nrm")), 6))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        col("cos").as("cosine"))
+    // refine: only the survivors touch float vectors (at scale: a
+    // broadcast of ~nQueries·refine·k survivor ids against the vector
+    // store, never a second full scan)
+    val survivors = refineCut(scored, k * refine).select(col("query_id"),
+      col("qvec"), col("qnrm"), col("vec_id"), col("nrm"))
+    exactTopK(survivors.join(emb.select(col("vec_id"), col("embedding")),
+      Seq("vec_id")), k)
   }
 
-  /** Build a PERSISTED residual IVF-PQ index at `path` —
-    * [[buildPqIndex]]'s shape at the residual rung: `path/codes`
-    * (vec_id, nrm, cell, codes), `path/centroids.txt` and
+  /** Build a PERSISTED IVF-PQ index of quantizer `q` at `path`:
+    * `path/codes` (vec_id, nrm, cell, codes), `path/centroids.txt` and
     * `path/codebooks.txt` ([[writeModel]]), reloaded bit-identical, so
-    * the persisted path shares the inline form's oracle. */
-  def buildIvfPqIndex(spark: SparkSession, dir: String, path: String,
-      nCells: Int = 16, m: Int = 8, nCodes: Int = 64, dim: Int = 64,
-      trainSample: Int = 2048): Unit = {
+    * the persisted path shares the inline form's oracle. This is the
+    * production ANN shape the inline form only simulates: encode the
+    * corpus ONCE, then every query session reads the ~13-byte/vector
+    * codes table and never re-derives codes — the same
+    * build-once/probe-many contract as [[DedupIndex]]. */
+  private def buildIvfPqIndex(spark: SparkSession, dir: String,
+      path: String, q: Quantizer, m: Int, nCodes: Int, dim: Int,
+      trainSample: Int): Unit = {
     val emb = withNorm(Tables.fanOut(Tables.embeddings(spark, dir)),
       "embedding", "nrm")
-    val cents = coarseCentroids(spark, dir, nCells, trainSample)
-    val codebooks = ivfPqCodebooks(spark, dir, nCells, m, nCodes, dim,
+    val codebooks = ivfPqCodebooks(spark, dir, q, m, nCodes, dim,
       trainSample)
-    ivfPqEncode(emb, cents, codebooks, m, dim / m)
-      .write.parquet(s"$path/codes")
+    ivfPqEncode(emb, q.cents, codebooks, m).write.parquet(s"$path/codes")
     writeModel(spark, s"$path/codebooks.txt", codebookRows(codebooks))
     // rule decisions persist WITH the index ([[indexMetaTightness]]):
     // the scaled query path reads this instead of re-deriving the
     // corpus statistic (and the Lloyd retrain behind it) per cold run
     writeModel(spark, s"$path/meta.txt", Seq("tightness" ->
-      Array(assignmentTightness(spark, dir, nCells, trainSample))))
-    writeModel(spark, s"$path/centroids.txt", centroidRows(cents))
+      Array(tightness(spark, dir, q, trainSample))))
+    writeModel(spark, s"$path/centroids.txt", centroidRows(q.cents))
   }
 
   /** Index location for [[ivfPqIndexTopK]] — every model-shaping
-    * parameter plus the source stamp, the [[pqIndexPath]] discipline. */
+    * parameter plus the source stamp ([[ivfPqIndexKey]]). */
   def ivfPqIndexPath(spark: SparkSession, dir: String, nCells: Int = 16,
       m: Int = 8, nCodes: Int = 64, dim: Int = 64,
       trainSample: Int = 2048): String =
-    graft.Published.finalDir(
-      ivfPqIndexKey(spark, dir, nCells, m, nCodes, dim, trainSample))
+    graft.Published.finalDir(ivfPqIndexKey(spark, dir,
+      coarseQuantizer(spark, dir, nCells, trainSample), m, nCodes, dim,
+      trainSample))
 
-  private def ivfPqIndexKey(spark: SparkSession, dir: String, nCells: Int,
+  /** The index of quantizer `q`: keyed by its name, every codebook-
+    * shaping parameter and the source file's stamp, so a differently
+    * knobbed index is never silently reused (wrong-shape codebooks
+    * would crash the ADC scan) and a regenerated embeddings table
+    * re-encodes instead of serving codes for rows that no longer
+    * exist. */
+  private def ivfPqIndexKey(spark: SparkSession, dir: String, q: Quantizer,
       m: Int, nCodes: Int, dim: Int, trainSample: Int): String =
     graft.Published.cachePath(spark, "ivfpq_index", dir, "embeddings.parquet",
-      nCells, m, nCodes, dim, trainSample)
+      q.name, m, nCodes, dim, trainSample)
 
   /** Query a persisted residual IVF-PQ index (building it first if
-    * absent): the ADC scan reads the codes parquet — never the float
-    * vectors — and only refine survivors rejoin the embedding table.
-    * Same reloaded-exact models ⇒ same results as [[simTopKIvfPq]]
+    * absent): [[ivfPqIndexedTopK]] over the trained quantizer. Same
+    * reloaded-exact models ⇒ same results as [[simTopKIvfPq]]
     * (LlmOpsSpec pins equality), so it shares the inline oracle. */
   def ivfPqIndexTopK(spark: SparkSession, dir: String, nQueries: Int = 10,
       k: Int = 5, nCells: Int = 16, m: Int = 8, nCodes: Int = 64,
       refine: Int = 32, dim: Int = 64, trainSample: Int = 2048,
-      nProbe: Int = Int.MaxValue): DataFrame = {
+      nProbe: Int = Int.MaxValue): DataFrame =
+    ivfPqIndexedTopK(spark, dir,
+      coarseQuantizer(spark, dir, nCells, trainSample), nQueries, k, m,
+      nCodes, refine, dim, trainSample, nProbe)
+
+  /** Query quantizer `q`'s persisted IVF-PQ index, building it first if
+    * absent: the ADC scan reads the codes parquet — never the float
+    * vectors — and only refine survivors rejoin the embedding table.
+    * The models come from the index, so a query against a published
+    * one never trains `q`. */
+  private def ivfPqIndexedTopK(spark: SparkSession, dir: String,
+      q: Quantizer, nQueries: Int, k: Int, m: Int, nCodes: Int,
+      refine: Int, dim: Int, trainSample: Int, nProbe: Int): DataFrame = {
     val path = graft.Published.publish(spark,
-        ivfPqIndexKey(spark, dir, nCells, m, nCodes, dim, trainSample)) {
-      buildIvfPqIndex(spark, dir, _, nCells, m, nCodes, dim, trainSample)
+        ivfPqIndexKey(spark, dir, q, m, nCodes, dim, trainSample)) {
+      buildIvfPqIndex(spark, dir, _, q, m, nCodes, dim, trainSample)
     }
-    val cents = readCentroids(spark, path, nCells)
-    val codebooks = readCodebooks(spark, path, m, nCodes)
     val emb = withNorm(Tables.fanOut(Tables.embeddings(spark, dir)),
       "embedding", "nrm")
     // hot-index memo, the [[ivfIndexTopK]] discipline (stamp-keyed path)
     val encoded = graft.Caches.memo(spark, s"ivfpqIdxCodes:$path") {
       spark.read.parquet(s"$path/codes")
     }
-    ivfPqAdcQuery(encoded, emb, cents, codebooks, nQueries, k, refine,
-      m, nCodes, dim / m, math.min(nProbe, nCells))
+    ivfPqAdcQuery(encoded, emb, readCentroids(spark, path),
+      readCodebooks(spark, path, m, nCodes), nQueries, k, refine, m,
+      nCodes, dim / m, nProbe)
   }
 
   /** [[ivfPqIndexTopK]] under the FULL RULE STACK — the persisted
@@ -1699,14 +1570,7 @@ object Vectors {
       val sums = Array.fill(k)(new Array[Double](d))
       val counts = new Array[Int](k)
       pts.foreach { p =>
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < k) {
-          var s = 0.0; var i = 0
-          while (i < d) { val t = p(i) - cents(c)(i); s += t * t; i += 1 }
-          if (s < bestD) { bestD = s; best = c }
-          c += 1
-        }
+        val best = nearestCell(p, cents)
         var i = 0
         while (i < d) { sums(best)(i) += p(i); i += 1 }
         counts(best) += 1

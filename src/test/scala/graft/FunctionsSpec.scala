@@ -125,7 +125,8 @@ class FunctionsSpec extends AnyFunSuite {
     import graft.functions.AdcScore.adc_score
     val m = 8; val dim = 64; val sub = dim / m; val nCodes = 64
     val cents = Vectors.coarseCentroids(spark, sf, 16)
-    val books = Vectors.ivfPqCodebooks(spark, sf, 16, m, nCodes, dim)
+    val books = Vectors.ivfPqCodebooks(spark, sf,
+      Vectors.coarseQuantizer(spark, sf, 16), m, nCodes, dim)
     val emb = Tables.embeddings(spark, sf)
       .withColumn("nrm", lit(1.0)) // encode ignores nrm; HOF twin carries it
     // the parity the residual IVF-PQ oracles rely on: native one-pass
@@ -143,10 +144,11 @@ class FunctionsSpec extends AnyFunSuite {
 
     // vanilla PQ = the kernel's degenerate single-zero-centroid rung
     // (residual v − 0.0 ≡ v): codes equal the HOF twin's bit for bit
-    val pqBooks = Vectors.pqCodebooks(spark, sf, m, nCodes, dim)
-    val pqHof = Vectors.pqEncodeHof(emb, pqBooks, m, sub).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Int](2).toList).toMap
     val zero = Array(Array.fill(dim)(0.0))
+    val pqBooks = Vectors.ivfPqCodebooks(spark, sf, Vectors.origin(dim),
+      m, nCodes, dim)
+    val pqHof = Vectors.ivfPqEncodeHof(emb, zero, pqBooks, m, sub).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Int](3).toList).toMap
     val pqNative = emb.select(col("vec_id"),
         ivfpq_encode(col("embedding"), zero, pqBooks).as("enc")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Int](1).tail.toList).toMap

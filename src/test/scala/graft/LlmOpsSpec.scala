@@ -698,6 +698,54 @@ class LlmOpsSpec extends AnyFunSuite with TempDirs {
     assert(path.lastModified() == mtime, "index was rebuilt on re-query")
   }
 
+  test("origin quantizer and a trained one-cell quantizer never share codebooks or an index") {
+    // a one-cell Lloyd centroid is the sample mean, not the origin: a
+    // model keyed by its cell count alone would serve one for the other
+    val one = Vectors.coarseQuantizer(spark, sf, 1)
+    assert(one.cents.length == 1 && one.cents(0).exists(_ != 0.0))
+    val oneBooks = Vectors.ivfPqCodebooks(spark, sf, one)
+    val originBooks = Vectors.ivfPqCodebooks(spark, sf, Vectors.origin())
+    assert(oneBooks.map(_.map(_.toSeq).toSeq).toSeq !=
+      originBooks.map(_.map(_.toSeq).toSeq).toSeq,
+      "origin codebooks served from the one-cell model")
+    assert(Vectors.ivfPqIndexPath(spark, sf, nCells = 1) !=
+      Vectors.pqIndexPath(spark, sf))
+    assert(Vectors.ivfPqIndexTopK(spark, sf, nQueries = 5, k = 3, nCells = 1)
+      .collect().nonEmpty)
+    assert(new java.io.File(
+      s"${Vectors.ivfPqIndexPath(spark, sf, nCells = 1)}/centroids.txt").exists())
+  }
+
+  test("a PQ index left in the old pq_index layout is dropped, never read as an IVF-PQ index") {
+    import java.nio.file.{Files, Paths}
+    // the old layout: graft_pq_index/<dir-key>_<m>_<nCodes>_<dim>_<sample>
+    // _<stamp>/final, codes with no cell column, no centroids.txt
+    val stamp = Tables.fileStamp(spark, s"$sf/embeddings.parquet")
+    val live = Published.pathFor("pq_index", sf, stamp, 8, 64, 64, 2048)
+    val dead = Published.pathFor("pq_index", sf, "9_9_ab", 8, 64, 64, 2048)
+    val other = Published.pathFor("pq_index", sf, stamp, 8, 64, 64, 4096)
+    val fin = Published.finalDir(live)
+    spark.range(3).select(col("id").as("vec_id"), lit(1.0).as("nrm"),
+        array(Seq.fill(8)(lit(0)): _*).as("codes"))
+      .write.parquet(s"$fin/codes")
+    Files.write(Paths.get(fin, "codebooks.txt"), "0 0 0.0".getBytes("UTF-8"))
+    Files.createFile(Paths.get(fin, Published.Marker))
+    Seq(dead, other).foreach(p => Files.createDirectories(Paths.get(p, "final")))
+    try {
+      val viaIdx = Vectors.pqIndexTopK(spark, sf, nQueries = 5, k = 3).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
+      val inline = Vectors.simTopKPq(spark, sf, nQueries = 5, k = 3).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
+      assert(viaIdx == inline && inline.nonEmpty)
+      assert(!new java.io.File(live).exists(), "old layout left in place")
+      assert(!new java.io.File(dead).exists(), "old layout under a dead stamp kept")
+      assert(new java.io.File(other).exists(), "another key's artifact dropped")
+      assert(new java.io.File(s"${Vectors.pqIndexPath(spark, sf)}/centroids.txt")
+        .exists())
+    } finally Seq(live, dead, other).foreach(p =>
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(p)))
+  }
+
   test("SQ8 quantization maps a zero vector to all-zero codes, not nulls") {
     import SparkTestSession.spark.implicits._
     val rows = Vectors.sq8Codes(Seq(
